@@ -43,6 +43,7 @@ def parse_sf(sf_dir: str) -> float:
 
 
 def main():
+    run_start = time.time()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     cache = os.environ.get("DUMPSTER_BENCH_CACHE", "/tmp/dumpster_bench_cache")
@@ -117,16 +118,14 @@ def main():
         return len(ts) >= 2 and sorted(ts)[1] <= 1.25 * sorted(ts)[0]
 
     enc_trials, dec_trials, local_trials, ref_trials = [], [], [], []
-    pre_trials = []
     out = None
-    local_bytes = ref_bytes = pre_bytes = None
+    local_bytes = ref_bytes = None
     for t in range(trials):
         # early stop: two mutually-confirming trials for every measured
         # phase mean no noise window — more rounds add wall, not info
         if settled(enc_trials) and settled(dec_trials) \
                 and (minimal or (settled(local_trials)
-                                 and settled(ref_trials)
-                                 and settled(pre_trials))):
+                                 and settled(ref_trials))):
             break
         if out is not None:
             shutil.rmtree(out, ignore_errors=True)
@@ -165,23 +164,6 @@ def main():
         local_bytes = int(encode_summary(man_l)["encoded_bytes"])
         shutil.rmtree(local_out, ignore_errors=True)
 
-        # pre-encoded shuffle (mode='salted_pre', round 5): the SAME
-        # global host-grouped layout as the headline salted path, but
-        # the exchange carries zstd'd Arrow-IPC blobs packed per
-        # (split, bucket) instead of full rows — the full-row shuffle's
-        # per-row ser/deser floor alone exceeded 2x the reference
-        # writer (floor_shuffled_passthrough below)
-        pre_out = tempfile.mkdtemp(prefix="dumpster_bench_encp_")
-        t0 = time.perf_counter()
-        man_p = encode_table(pages, pre_out, url_col="url",
-                             n_buckets=N_BUCKETS, salt_k=4,
-                             chunk_rows=65536, mode="salted_pre",
-                             table_id="bench_pages_pre",
-                             num_partitions=int(np_env) if np_env else None)
-        pre_trials.append(time.perf_counter() - t0)
-        pre_bytes = int(encode_summary(man_p)["encoded_bytes"])
-        shutil.rmtree(pre_out, ignore_errors=True)
-
         # reference sink: Parquet with the reference writer settings
         # (RecordWriter.java:29-32)
         ref_dir = tempfile.mkdtemp(prefix="dumpster_bench_ref_")
@@ -200,7 +182,6 @@ def main():
     timings["decode_pages"] = min(dec_trials)
     if not minimal:
         timings["encode_pages_local"] = min(local_trials)
-        timings["encode_pages_pre"] = min(pre_trials)
         timings["reference_parquet_write"] = min(ref_trials)
 
     # column-pruned decode: only `lang` is read AND decompressed — ranged
@@ -361,37 +342,38 @@ def main():
         result["encoded_bytes_sink_salted"] = sink_salted_bytes
         result["sink_salted_size_ratio_vs_reference"] = round(
             sink_salted_bytes / ref_bytes, 4)
-        result["encode_pre_gb_per_sec"] = round(
-            logical_bytes / timings["encode_pages_pre"] / 1e9, 4)
-        result["encoded_bytes_pre"] = pre_bytes
         # sf1 same-window anatomy (bench/anatomy_sf1.py) is summarized in
         # the printed line and written IN FULL to bench/BENCH_full_latest
         # .json — round 4 embedded the whole anatomy object here and the
         # driver's tail capture truncated the line mid-object, leaving
         # BENCH_r04.json unparsed (VERDICT r4 #2).  The printed line must
-        # stay compact.
+        # stay compact.  Only an anatomy stamped with its host nproc and
+        # measured during THIS run is embedded: an unstamped or older file
+        # is a figure from another window, possibly another host
+        # (VERDICT r5 #3).
         bench_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                  "bench")
         anat = os.path.join(bench_dir, "anatomy_sf1_latest.json")
         full = dict(result)
-        if os.path.exists(anat):
-            try:
-                with open(anat) as f:
-                    a = json.load(f)
-                full["sf1_anatomy"] = a
-                best = a.get("best", {})
-                result["sf1_summary"] = {
-                    "ref_write_sec": best.get("ref_write"),
-                    "salted_encode_sec": best.get("salted_encode"),
-                    "local_encode_sec": best.get("local_encode"),
-                    "sink_salted_sec": best.get("sink_salted"),
-                    "size_ratio_vs_reference":
-                        a.get("size_ratio_vs_reference"),
-                    "encode_sink_salted_gb_per_sec":
-                        a.get("encode_sink_salted_gb_per_sec"),
-                }
-            except Exception:
-                pass
+        try:
+            with open(anat) as f:
+                a = json.load(f)
+        except (OSError, ValueError):
+            a = {}
+        if "nproc" in a and a.get("measured_at", 0) >= run_start:
+            full["sf1_anatomy"] = a
+            best = a.get("best", {})
+            result["sf1_summary"] = {
+                "nproc": a["nproc"],
+                "ref_write_sec": best.get("ref_write"),
+                "salted_encode_sec": best.get("salted_encode"),
+                "local_encode_sec": best.get("local_encode"),
+                "sink_salted_sec": best.get("sink_salted"),
+                "size_ratio_vs_reference":
+                    a.get("size_ratio_vs_reference"),
+                "encode_sink_salted_gb_per_sec":
+                    a.get("encode_sink_salted_gb_per_sec"),
+            }
         try:
             with open(os.path.join(bench_dir,
                                    "BENCH_full_latest.json"), "w") as f:

@@ -167,6 +167,7 @@ def main():
     result = {
         "metric": "sf1 encode anatomy (adjacent-pair interleaved)",
         "rows": ROWS, "rounds": ROUNDS, "cpus": CPUS,
+        "nproc": os.cpu_count(), "measured_at": time.time(),
         "logical_bytes": int(logical_bytes),
         "trials": {k: [round(x, 2) for x in v] for k, v in trials.items()},
         "best": {k: round(v, 2) for k, v in best.items()},

@@ -95,8 +95,7 @@ def _rebuild_df(df: DataFrame, logical: StructType) -> DataFrame:
 
 from . import fs as fslib
 from .chunk import decode_chunk_file, encode_chunk_pieces
-from .pipeline import (default_encode_partitions, prep_for_encode,
-                       prep_for_encode_local, salted_layout_cols)
+from .pipeline import prep_for_encode, prep_for_encode_local
 
 DEFAULT_CHUNK_ROWS = 65536
 
@@ -294,147 +293,12 @@ def _make_encoder(out_dir: str, table_id: str, chunk_rows: int,
     return encode_partition
 
 
-# pre-encoded shuffle (mode="salted_pre"): the exchange carries zstd'd
-# Arrow-IPC blobs, one per (input split, bucket) run, instead of full rows
-_PACK_DDL = "__bucket int, n_rows long, blob binary"
-
-# map-side blob caps: bound packer memory per open run, independent of how
-# hot a (split, bucket) cell is — a run larger than either cap is split
-# into several blobs (the reduce-side merge re-sorts, so splitting is free)
-_PACK_MAX_ROWS = 1 << 20
-_PACK_MAX_BYTES = 128 * 1024 * 1024
-
-
-def _make_packer(ipc_zstd_level: int = 1):
-    """Map-side stage of the pre-encoded shuffle.
-
-    Input: split-local batches sorted by (__bucket, merge keys).  Each
-    contiguous __bucket run is serialized to ONE Arrow IPC stream with
-    buffer-level zstd (level 1 — this compression exists only to cross
-    the wire; the real codecs run reduce-side) and emitted as a single
-    (bucket, n_rows, blob) row.  At 100 TB this is the difference
-    between shuffling the table and shuffling ~0.25× the table with
-    ~1/500th the row count: the full-row exchange's per-row
-    UnsafeRow ser/deser floor alone exceeded the 2× ref-writer bar
-    (bench/BENCH.md sf1: 19.5 s no-op shuffle vs 7.6 s reference).
-    """
-    def pack_partition(batches):
-        try:
-            pa.set_cpu_count(1)
-            pa.set_io_thread_count(1)
-        except Exception:
-            pass
-        opts = pa.ipc.IpcWriteOptions(
-            compression=pa.Codec("zstd", ipc_zstd_level))
-
-        def emit(bucket: int, tables: list) -> pa.RecordBatch:
-            tbl = pa.concat_tables(tables)
-            sink = pa.BufferOutputStream()
-            with pa.ipc.new_stream(sink, tbl.schema, options=opts) as w:
-                w.write_table(tbl)
-            return pa.RecordBatch.from_pylist(
-                [{"__bucket": bucket, "n_rows": tbl.num_rows,
-                  "blob": sink.getvalue().to_pybytes()}],
-                schema=pa.schema([("__bucket", pa.int32()),
-                                  ("n_rows", pa.int64()),
-                                  ("blob", pa.binary())]))
-
-        pend_bucket, pend, pend_rows, pend_bytes = None, [], 0, 0
-        for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            bcol = tbl.column("__bucket").to_numpy()
-            data = tbl.drop_columns(["__bucket"])
-            if len(bcol) == 0:
-                continue
-            change = np.flatnonzero(bcol[1:] != bcol[:-1]) + 1
-            bounds = np.concatenate(([0], change, [len(bcol)]))
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                b = int(bcol[s])
-                if b != pend_bucket and pend_rows:
-                    yield emit(pend_bucket, pend)
-                    pend, pend_rows, pend_bytes = [], 0, 0
-                pend_bucket = b
-                sl = data.slice(s, e - s)
-                pend.append(sl)
-                pend_rows += e - s
-                pend_bytes += sl.nbytes
-                if pend_rows >= _PACK_MAX_ROWS or pend_bytes >= _PACK_MAX_BYTES:
-                    yield emit(pend_bucket, pend)
-                    pend, pend_rows, pend_bytes = [], 0, 0
-        if pend_rows:
-            yield emit(pend_bucket, pend)
-
-    return pack_partition
-
-
-def _make_unpacker(encoder, merge_keys: tuple[str, ...],
-                   drop_cols: tuple[str, ...] = ("__host",)):
-    """Reduce-side stage of the pre-encoded shuffle.
-
-    Input: (bucket, n_rows, blob) rows, bucket-contiguous within the
-    task (sortWithinPartitions on __bucket after the exchange).  Per
-    bucket: decompress every blob, merge back into one table sorted by
-    ``merge_keys`` (each blob arrived pre-sorted, so this restores the
-    exact host-major global order the full-row salted path produces, up
-    to equal-key ties), drop the carried sort helper columns, and feed
-    the stream straight into the unchanged chunk encoder — chunk
-    boundaries, codec selection and manifest contract are byte-for-byte
-    the same code path as every other mode.
-
-    Memory bound: one decompressed bucket per task at a time (buckets
-    release as the encoder closes them).  Size n_buckets so a bucket's
-    raw bytes fit an executor core's share (~1-2 GiB) — the same sizing
-    rule the resume granularity already imposes (SCALE.md).
-    """
-    def merged(batches):
-        cur_bucket, blobs = None, []
-
-        def finish():
-            tables = [pa.ipc.open_stream(pa.BufferReader(b)).read_all()
-                      for b in blobs]
-            tbl = pa.concat_tables(tables)
-            if merge_keys:
-                # null_placement='at_start' — Spark's ascending sort is
-                # NULLS FIRST, Arrow's default is at_end; without this a
-                # NULL host/order key lands at the opposite end of the
-                # bucket and the layout diverges from mode='salted'
-                idx = pa.compute.sort_indices(
-                    tbl, sort_keys=[(k, "ascending") for k in merge_keys],
-                    null_placement="at_start")
-                tbl = tbl.take(idx)
-            dropped = [c for c in drop_cols if c in tbl.column_names]
-            if dropped:
-                tbl = tbl.drop_columns(dropped)
-            tbl = tbl.append_column(
-                "__bucket", pa.array(
-                    np.full(tbl.num_rows, cur_bucket, dtype=np.int32)))
-            yield from tbl.to_batches(max_chunksize=65536)
-
-        for batch in batches:
-            bcol = batch.column(batch.schema.get_field_index("__bucket"))
-            barr = batch.column(batch.schema.get_field_index("blob"))
-            for i in range(batch.num_rows):
-                b = bcol[i].as_py()
-                if b != cur_bucket and cur_bucket is not None:
-                    yield from finish()
-                    blobs = []
-                cur_bucket = b
-                blobs.append(barr[i].as_buffer())
-        if blobs:
-            yield from finish()
-
-    def unpack_partition(batches):
-        yield from encoder(merged(batches))
-
-    return unpack_partition
-
-
 def encode_table(df: DataFrame, out_dir: str, *, url_col: str | None = None,
                  bucket_expr=None, n_buckets: int = 32, salt_k: int = 4,
                  chunk_rows: int = DEFAULT_CHUNK_ROWS,
                  chunk_bytes: int = DEFAULT_CHUNK_BYTES,
                  table_id: str | None = None, allow_zlib: bool = True,
-                 resume: bool = True, locality_sort: bool = True,
+                 resume: bool = True,
                  host_major: bool = True,
                  order_cols: tuple[str, ...] = (),
                  mode: str = "salted",
@@ -458,23 +322,11 @@ def encode_table(df: DataFrame, out_dir: str, *, url_col: str | None = None,
     saved at the cost of split-local (not global) host grouping.  Resume
     in local mode assumes the same scan partitioning across runs (same
     files + same spark.sql.files.maxPartitionBytes).
-    ``mode="salted_pre"`` produces the SAME global host-grouped bucket
-    layout as ``salted`` but the exchange carries zstd-compressed Arrow
-    IPC blobs packed map-side per (input split, bucket) run instead of
-    full rows; the reduce side merges each bucket back into host-major
-    order and feeds the unchanged chunk encoder.  Same resume contract
-    as ``salted`` (bucket-level, deterministic bucket ids).  Shuffled
-    bytes drop to roughly the zstd'd size of the table and the per-row
-    shuffle ser/deser cost disappears — use it whenever the exact global
-    layout is wanted; plain ``salted`` remains the simple/spillable
-    reference path (its row sort spills via Spark's external sorter,
-    ``salted_pre`` instead needs one decompressed bucket in task memory
-    — size n_buckets so raw_bytes/n_buckets ≲ 1-2 GiB, SCALE.md).
     """
     spark = df.sparkSession
-    if mode not in ("salted", "local", "salted_pre"):
-        raise ValueError(f"unknown mode {mode!r}: expected 'salted', "
-                         f"'salted_pre' or 'local'")
+    if mode not in ("salted", "local"):
+        raise ValueError(f"unknown mode {mode!r}: expected 'salted' or "
+                         f"'local'")
     reserved = {"__bucket", "__host"} - {bucket_col}
     clash = reserved & set(df.columns)
     if clash:
@@ -535,54 +387,13 @@ def encode_table(df: DataFrame, out_dir: str, *, url_col: str | None = None,
 
     done = done_buckets(out_dir) if resume else set()
 
-    if mode == "salted_pre":
-        if bucket_col is not None:
-            raise ValueError(
-                "mode='salted_pre' does not combine with bucket_col (the "
-                "column already IS the bucket; use the default mode)")
-        out = df
-        if url_col is not None:
-            # the ONE shared salted-layout derivation (pipeline) — the
-            # byte-parity contract with mode='salted' depends on both
-            # paths deriving __host/__bucket/sort keys identically
-            out, mk = salted_layout_cols(df, url_col, n_buckets, salt_k,
-                                         order_cols, host_major)
-            merge_keys = mk if locality_sort else tuple(order_cols)
-        else:
-            be = bucket_expr if bucket_expr is not None else \
-                F.pmod(F.xxhash64(*df.columns), F.lit(n_buckets)).cast("int")
-            out = out.withColumn("__bucket", be)
-            merge_keys = tuple(order_cols) if locality_sort else ()
-        if done:
-            out = out.filter(
-                ~F.col("__bucket").isin([int(b) for b in done]))
-        # split-local sort only — bucket runs must be contiguous for the
-        # packer; merge keys ride along so blobs arrive pre-sorted
-        out = out.sortWithinPartitions("__bucket", *merge_keys)
-        num_partitions = default_encode_partitions(df, n_buckets,
-                                                   num_partitions)
-        packed = out.mapInArrow(_make_packer(), schema=_PACK_DDL)
-        shuffled = (packed.repartition(num_partitions, "__bucket")
-                    .sortWithinPartitions("__bucket"))
-        encoder = _make_encoder(out_dir, table_id, chunk_rows, chunk_bytes,
-                                allow_zlib, frozenset(done),
-                                sorted_input=True,
-                                bucket_subdirs=bucket_subdirs, fs=fs)
-        metrics = shuffled.mapInArrow(
-            _make_unpacker(encoder, merge_keys), schema=MANIFEST_DDL)
-        metrics.count()
-        return read_manifest(spark, out_dir)
-
     if bucket_col is not None:
-        prepped = df.repartition(n_buckets, "__bucket")
-        if locality_sort:
-            prepped = prepped.sortWithinPartitions("__bucket", *order_cols)
+        prepped = (df.repartition(n_buckets, "__bucket")
+                   .sortWithinPartitions("__bucket", *order_cols))
     elif mode == "local":
-        prepped = prep_for_encode_local(df, url_col, order_cols,
-                                        locality_sort=locality_sort)
+        prepped = prep_for_encode_local(df, url_col, order_cols)
     elif url_col is not None:
         prepped = prep_for_encode(df, url_col, n_buckets, salt_k, order_cols,
-                                  locality_sort=locality_sort,
                                   host_major=host_major,
                                   num_partitions=num_partitions)
     else:
@@ -590,16 +401,14 @@ def encode_table(df: DataFrame, out_dir: str, *, url_col: str | None = None,
             bucket_expr = F.pmod(F.xxhash64(*df.columns), F.lit(n_buckets)) \
                 .cast("int")
         prepped = (df.withColumn("__bucket", bucket_expr)
-                   .repartition(n_buckets, "__bucket"))
-        if locality_sort:
-            prepped = prepped.sortWithinPartitions("__bucket", *order_cols)
+                   .repartition(n_buckets, "__bucket")
+                   .sortWithinPartitions("__bucket", *order_cols))
 
     if done:
         prepped = prepped.filter(~F.col("__bucket").isin([int(b) for b in done]))
 
     encoder = _make_encoder(out_dir, table_id, chunk_rows, chunk_bytes,
                             allow_zlib, frozenset(done),
-                            sorted_input=locality_sort,
                             bucket_subdirs=bucket_subdirs, fs=fs)
     metrics = prepped.mapInArrow(encoder, schema=MANIFEST_DDL)
     # count() is the action: it aggregates executor-side, so manifest rows

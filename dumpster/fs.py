@@ -178,10 +178,24 @@ def file_lock(lock_path: str, timeout: float = 30.0, stale: float = 120.0):
                     os.close(bfd)
                 except FileExistsError:
                     # another waiter is mid-break; clear the breaker
-                    # itself only if ITS holder crashed
+                    # itself only if ITS holder crashed.  Stat-then-unlink
+                    # is a TOCTOU (ADVICE r5): between the two calls the
+                    # stale breaker can be cleared and a FRESH one created,
+                    # which the unlink would then delete.  Claim whatever
+                    # sits at `breaker` by renaming it to a unique victim
+                    # (the same trick as release below), re-check the
+                    # CLAIMED file's age, and put a fresh one back.  A
+                    # live breaker falls through to the deadline check and
+                    # the sleep below rather than spinning past `timeout`.
                     try:
                         if time.time() - os.path.getmtime(breaker) > stale:
-                            os.unlink(breaker)
+                            victim = f"{breaker}.brk.{os.urandom(6).hex()}"
+                            os.rename(breaker, victim)
+                            if (time.time() - os.path.getmtime(victim)
+                                    > stale):
+                                os.unlink(victim)
+                            else:
+                                os.rename(victim, breaker)
                     except OSError:
                         pass
                 else:
@@ -193,8 +207,11 @@ def file_lock(lock_path: str, timeout: float = 30.0, stale: float = 120.0):
                         except FileNotFoundError:
                             pass
                     finally:
-                        os.unlink(breaker)
-                continue
+                        try:
+                            os.unlink(breaker)
+                        except FileNotFoundError:
+                            pass
+                    continue
             if time.monotonic() > deadline:
                 try:
                     holder = open(lock_path).read()

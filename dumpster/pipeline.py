@@ -204,8 +204,7 @@ def union_evolving(dfs: list[DataFrame]) -> DataFrame:
 
 
 def prep_for_encode_local(df: DataFrame, url_col: str | None,
-                          order_cols: tuple[str, ...] = (),
-                          locality_sort: bool = True) -> DataFrame:
+                          order_cols: tuple[str, ...] = ()) -> DataFrame:
     """Zero-shuffle prep: bucket = the input split itself.
 
     ``__bucket = spark_partition_id()`` makes each scan task one encode
@@ -213,8 +212,8 @@ def prep_for_encode_local(df: DataFrame, url_col: str | None,
     output stream per Kafka partition, files {partition}_{firstOffset}
     .parquet, HourlyBasedRecordConsumer.java:157).  Input splits are
     byte-uniform (Parquet split planning), so there is no skew to salt
-    away; the optional sortWithinPartitions recovers host-major
-    compression locality *within* each split without moving a row.
+    away; the sortWithinPartitions recovers host-major compression
+    locality *within* each split without moving a row.
 
     Tradeoff vs prep_for_encode (the salted-shuffle path): at 100 TB the
     shuffle costs ~2× table size in cluster I/O; skipping it roughly
@@ -225,28 +224,25 @@ def prep_for_encode_local(df: DataFrame, url_col: str | None,
     """
     out = df
     sort_cols = list(order_cols)
-    if url_col is not None and locality_sort:
+    if url_col is not None:
         out = out.withColumn("__host", host_of(F.col(url_col)))
         sort_cols = ["__host", *order_cols]
     out = out.withColumn("__bucket", F.spark_partition_id())
-    if locality_sort and sort_cols:
+    if sort_cols:
         out = out.sortWithinPartitions(*sort_cols)
     return out.drop("__host") if "__host" in out.columns else out
 
 
 def prep_for_encode(df: DataFrame, url_col: str, n_buckets: int,
                     salt_k: int = 4, order_cols: tuple[str, ...] = (),
-                    locality_sort: bool = True,
                     host_major: bool = True,
                     num_partitions: int | None = None) -> DataFrame:
     """Full prep: salted bucket → explicit repartition → locality sort.
 
     One shuffle, keyed by the salted bucket.  The host is materialised
-    once and reused by both the bucket expression and the optional
+    once and reused by both the bucket expression and the
     sortWithinPartitions (a local sort, no extra exchange) that restores
-    host-major locality inside each partition so RLE/FSST/dict see runs —
-    a ratio/throughput knob: skipping it saves the row sort, costs
-    compression locality.
+    host-major locality inside each partition so RLE/FSST/dict see runs.
 
     ``num_partitions`` decouples TASK granularity from BUCKET granularity
     (default 2× cluster parallelism, capped at n_buckets): buckets stay
@@ -256,46 +252,19 @@ def prep_for_encode(df: DataFrame, url_col: str, n_buckets: int,
     than 128 single-bucket tasks (fewer task/worker round trips), and on
     a real cluster 2-3× total cores is the standard sizing.
     """
-    out, merge_keys = salted_layout_cols(df, url_col, n_buckets, salt_k,
-                                         order_cols, host_major)
-    num_partitions = default_encode_partitions(df, n_buckets, num_partitions)
-    out = out.repartition(num_partitions, "__bucket")
-    if locality_sort:
-        # host-major: host-vocabulary runs maximise RLE/FSST/dict ratio;
-        # order-major (host_major=False with order_cols=(ts,)): tight
-        # per-chunk zone maps for predicate-pruned decode — a layout
-        # tradeoff knob, like choosing a sort key at table-write time
-        out = out.sortWithinPartitions("__bucket", *merge_keys)
-    return out.drop("__host")
-
-
-def salted_layout_cols(df: DataFrame, url_col: str, n_buckets: int,
-                       salt_k: int = 4, order_cols: tuple[str, ...] = (),
-                       host_major: bool = True):
-    """The ONE definition of the salted layout, shared by
-    :func:`prep_for_encode` (full-row shuffle) and engine's
-    ``mode="salted_pre"`` (blob shuffle): ``__host``, the salted
-    ``__bucket``, and the in-bucket sort-key order.  Their byte-level
-    layout parity is load-bearing (tests/test_salted_pre.py asserts
-    encoded-byte EQUALITY), so the derivation must not be duplicated.
-    Returns ``(df + __host/__bucket, merge_keys)``; ``merge_keys``
-    excludes ``__bucket``.
-    """
     u = F.col(url_col)
     out = df.withColumn("__host", host_of(u))
     out = out.withColumn("__bucket", salted_bucket_of_host(
         F.col("__host"), u, n_buckets, salt_k))
-    merge_keys = (("__host", *order_cols) if host_major
-                  else (*order_cols, "__host"))
-    return out, merge_keys
-
-
-def default_encode_partitions(df: DataFrame, n_buckets: int,
-                              num_partitions: int | None = None) -> int:
-    """Shared task-granularity default (prep_for_encode and salted_pre):
-    2× cluster parallelism, capped at n_buckets — buckets stay the
-    salt/skew/resume unit, several per reduce task."""
-    if num_partitions is not None:
-        return num_partitions
-    par = df.sparkSession.sparkContext.defaultParallelism
-    return max(1, min(n_buckets, 2 * par))
+    if num_partitions is None:
+        par = df.sparkSession.sparkContext.defaultParallelism
+        num_partitions = max(1, min(n_buckets, 2 * par))
+    # host-major: host-vocabulary runs maximise RLE/FSST/dict ratio;
+    # order-major (host_major=False with order_cols=(ts,)): tight
+    # per-chunk zone maps for predicate-pruned decode — a layout
+    # tradeoff knob, like choosing a sort key at table-write time
+    sort_keys = (("__host", *order_cols) if host_major
+                 else (*order_cols, "__host"))
+    out = (out.repartition(num_partitions, "__bucket")
+           .sortWithinPartitions("__bucket", *sort_keys))
+    return out.drop("__host")

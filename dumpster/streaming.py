@@ -287,7 +287,9 @@ def stream_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     """All batches' lineage/metrics rows with their batch id.
 
     ONE multi-path parquet scan with the batch id parsed from the file
-    path — the same constant-size-plan discipline decode_stream_table
+    path (anchored to the store's own ``batch=N/manifest/`` components,
+    so a ``batch=`` directory higher up the root path is not taken for
+    the id) — the same constant-size-plan discipline decode_stream_table
     documents (a per-batch read_manifest chained through unionByName
     grew the plan linearly with batch count: a day of 1-minute
     micro-batches = 1440 relations and 1439 union nodes — round-5
@@ -303,7 +305,8 @@ def stream_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
             .filter(F.input_file_name().rlike(r"/b[0-9]+\.parquet$"))
             .withColumn("batch_id",
                         F.regexp_extract(F.input_file_name(),
-                                         r"batch=(\d+)/", 1).cast("long")))
+                                         r"batch=(\d+)/manifest/[^/]+$",
+                                         1).cast("long")))
 
 
 def _dedup_group(last: int, pdfs, partition_col: str, offset_col: str):

@@ -698,16 +698,19 @@ def pack_sequences_sql(src: str, seq_len: int,
                        token_expr: str = "n_tokens",
                        id_expr: str = "doc_id") -> str:
     """DuckDB oracle for :func:`pack_sequences` — the pure global-window
-    formulation the two-phase prefix sum is exactly equal to."""
+    formulation the two-phase prefix sum is exactly equal to.  DuckDB's
+    window ``sum`` over BIGINT is HUGEINT (``decimal128(38,0)`` through
+    Arrow), so all three outputs are cast back to the engine's BIGINT."""
     L = int(seq_len)
     return f"""
-        SELECT *, tok_offset // {L} AS seq_first,
-               greatest(tok_offset // {L},
-                        (tok_offset + {token_expr} - 1) // {L}) AS seq_last
+        SELECT *, CAST(tok_offset // {L} AS BIGINT) AS seq_first,
+               CAST(greatest(tok_offset // {L},
+                             (tok_offset + {token_expr} - 1) // {L})
+                    AS BIGINT) AS seq_last
         FROM (SELECT *,
-                     sum({token_expr}) OVER (ORDER BY {id_expr}
-                         ROWS UNBOUNDED PRECEDING) - {token_expr}
-                     AS tok_offset
+                     CAST(sum({token_expr}) OVER (ORDER BY {id_expr}
+                              ROWS UNBOUNDED PRECEDING) - {token_expr}
+                          AS BIGINT) AS tok_offset
               FROM {src} WHERE {token_expr} IS NOT NULL)
     """
 

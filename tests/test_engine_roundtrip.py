@@ -311,6 +311,12 @@ def test_reserved_column_names_rejected(spark, tmp_path):
         encode_table(df2, str(tmp_path / "enc2"), n_buckets=2)
 
 
+def test_unknown_mode_raises(pages, tmp_path):
+    with pytest.raises(ValueError, match="unknown mode"):
+        encode_table(pages, str(tmp_path / "x"), url_col="url",
+                     mode="bogus")
+
+
 def test_clean_orphans_reclaims_crash_garbage(spark, pages, out_dir):
     """K5 parity: .tmp partials and unreferenced chunks are reclaimed;
     referenced chunks and the decoded table are untouched."""

@@ -60,6 +60,24 @@ def test_pack_sequences_empty_input(spark):
     assert pack_sequences(df, seq_len=16).count() == 0
 
 
+def test_pack_sequences_oracle_arrow_types_are_int64():
+    """The DuckDB oracle must hand Arrow the engine's BIGINT columns: a
+    bare window sum over BIGINT is HUGEINT and arrives as
+    decimal128(38,0), which fails a typed comparison even though the
+    Python-int values agree."""
+    import duckdb
+    import pyarrow as pa
+
+    from dumpster.textops import pack_sequences_sql
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE docs AS SELECT i::BIGINT AS doc_id, "
+                "(i % 7)::BIGINT AS n_tokens FROM range(50) t(i)")
+    got = con.sql(pack_sequences_sql("docs", 16)).arrow()
+    for c in ("tok_offset", "seq_first", "seq_last"):
+        assert got.schema.field(c).type == pa.int64(), c
+
+
 def test_select_token_budget_int_strata(spark):
     from dumpster.textops import select_token_budget
     rows = [(i, i % 2, (i * 2654435761 % 100) / 100.0, 10)
@@ -416,6 +434,58 @@ def test_file_lock_contended_stale_break_stays_exclusive(tmp_path):
         [t.start() for t in ts]
         [t.join() for t in ts]
     assert not overlaps, f"{len(overlaps)} overlapping critical sections"
+
+
+def test_file_lock_stale_breaker_cleanup_keeps_fresh_breaker(tmp_path,
+                                                              monkeypatch):
+    """Force the breaker-cleanup interleaving: a waiter finds a stale
+    `.breaker`, and between its age check and its removal another waiter
+    clears that breaker and creates a FRESH one.  The old stat-then-unlink
+    deleted the fresh breaker, letting a third waiter break the lock
+    concurrently; claim-by-rename must leave the fresh breaker alone."""
+    import os
+
+    from dumpster import fs as fslib
+
+    lock = str(tmp_path / "b.lock")
+    breaker = lock + ".breaker"
+    for p in (lock, breaker):
+        with open(p, "w") as f:
+            f.write("dead@crashed-host:deadbeef")
+        os.utime(p, (1, 1))                # both left by a crashed holder
+    real_getmtime, real_unlink = os.path.getmtime, os.unlink
+    fresh_ino, stolen, breaker_stats = [], [], [0]
+
+    def getmtime(p):
+        if p == breaker:
+            breaker_stats[0] += 1
+            if breaker_stats[0] == 1:
+                t = real_getmtime(p)       # stale, then the race:
+                real_unlink(p)             # another waiter clears it ...
+                with open(p, "w"):         # ... and takes a fresh breaker
+                    pass
+                fresh_ino.append(os.stat(p).st_ino)
+                return t
+            if os.path.exists(p):          # that waiter finishes its break
+                real_unlink(p)
+                fresh_ino.clear()          # (its inode may be reused)
+        return real_getmtime(p)
+
+    def unlink(p):
+        if fresh_ino and os.path.exists(p) \
+                and os.stat(p).st_ino == fresh_ino[0]:
+            stolen.append(p)
+        real_unlink(p)
+
+    monkeypatch.setattr(os.path, "getmtime", getmtime)
+    monkeypatch.setattr(os, "unlink", unlink)
+    entered = []
+    with fslib.file_lock(lock, timeout=10, stale=120):
+        entered.append(1)
+    monkeypatch.undo()
+    assert entered
+    assert not stolen, "a fresh breaker was deleted by a stale cleanup"
+    assert not [f for f in os.listdir(tmp_path) if ".brk." in f]
 
 
 def test_chunk_list_uint64_extremes_roundtrip():

@@ -44,6 +44,23 @@ def test_stream_encode_decode_roundtrip(spark, tmp_path):
     assert man.agg(F.sum("n_rows")).collect()[0][0] == 1200
 
 
+def test_stream_manifest_batch_id_ignores_parent_batch_dir(spark, tmp_path):
+    """The batch id comes from the store's own ``batch=N`` directory, not
+    from the first ``batch=`` anywhere in the path: a store rooted under
+    a parent directory named ``batch=7/`` must still report 0 and 1."""
+    from dumpster.engine import encode_table
+    out = tmp_path / "batch=7" / "stream"
+    pages = synth_pages(spark, 200, seed=3)
+    for bid in (0, 1):
+        encode_table(pages, str(out / f"batch={bid}"), url_col="url",
+                     n_buckets=2, table_id=f"b{bid}")
+    man = stream_manifest(spark, str(out))
+    got = {r["batch_id"]: r["rows"] for r in
+           man.groupBy("batch_id").agg(F.sum("n_rows").alias("rows"))
+           .collect()}
+    assert got == {0: 200, 1: 200}
+
+
 def test_hourly_windowed_counts_with_watermark(spark, tmp_path):
     src = str(tmp_path / "wsrc")
     pages = synth_pages(spark, 800, seed=4)
