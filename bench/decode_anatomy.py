@@ -83,12 +83,9 @@ def main():
         obs.append(time.perf_counter() - t0)
 
     # (b) plan fixed cost — identical stages, no file opened.  Mirrors
-    # decode_table's SMALL-MANIFEST fast path exactly: driver-side
-    # pyarrow listing of the manifest → exchange-free spark.range feed
-    # (indices; the file list rides the closure) → mapInArrow that opens
-    # nothing → agg.  (The old replica modelled the distributed shape —
-    # manifest-scan job + repartition + dropDuplicates — which small
-    # manifests no longer pay.)
+    # decode_table's scan exactly: driver-side pyarrow listing of the
+    # manifest → exchange-free spark.range feed (indices; the file list
+    # rides the closure) → mapInArrow that opens nothing → agg.
     manifest = read_manifest(spark, out)
     par = max(spark.sparkContext.defaultParallelism, 1)
 

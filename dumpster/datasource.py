@@ -23,8 +23,10 @@ place Spark's own FileSourceScan does its file listing + packing.  At
 10^12 docs that is ~10^7 manifest rows of (file, stats); columnar-read of
 just those two columns keeps it in the low GBs, and the listing cost is
 paid once per query, against a scan that would otherwise decode the full
-table.  The fully-distributed alternative (manifest scan feeding
-mapInArrow) remains ``decode_table`` — the two paths share chunk readers.
+table.  ``engine.decode_table`` runs the same scan — driver-side listing
+(engine._manifest_files), the one zone-map rule
+(engine._chunk_may_match), task-side decode (engine._scan_chunk_files) —
+and differs only in how it feeds files to tasks.
 
 Column pruning: the Python DataSource API (4.1) has no
 SupportsPushDownRequiredColumns hook yet, so a plain ``SELECT lang``
@@ -64,6 +66,16 @@ from pyspark.sql.datasource import (DataSource, DataSourceArrowWriter,
                                     WriterCommitMessage)
 from pyspark.sql.types import StructType
 
+from . import fs as fslib
+from .bloom import bloom_rejects_file
+from .engine import (DEFAULT_CHUNK_BYTES, DEFAULT_CHUNK_ROWS, FLAT_SEP,
+                     _MANIFEST_ARROW, _arrow_schema, _as_bytes,
+                     _chunk_may_match, _col_stats, _evolve_schema,
+                     _fs_write_atomic, _has_structs, _make_encoder,
+                     _manifest_files, _manifest_path, _publish_table_schema,
+                     _scan_chunk_files, _stat_value, done_buckets,
+                     table_schema)
+
 _DEFAULT_TARGET_BYTES = 64 * 1024 * 1024
 
 
@@ -91,25 +103,9 @@ def _resolve_stores(path: str) -> list[str]:
 
 
 def _union_schema(stores: list[str]) -> StructType:
-    from .engine import _evolve_schema, table_schema
     out = table_schema(stores[0])
     for d in stores[1:]:
         out = _evolve_schema(out, table_schema(d))
-    return out
-
-
-def _manifest_files(stores: list[str]) -> list[str]:
-    """Every committed per-bucket manifest file across the stores, in
-    deterministic order (shared by the reader's planner and the
-    pushdown-sentinel scan so they can never disagree on which chunks
-    exist)."""
-    out = []
-    for store in stores:
-        mdir = os.path.join(store, "manifest")
-        if os.path.isdir(mdir):
-            from .engine import _is_manifest_name
-            out += [os.path.join(mdir, f) for f in sorted(os.listdir(mdir))
-                    if _is_manifest_name(f)]
     return out
 
 
@@ -229,7 +225,7 @@ class DumpsterReader(DataSourceReader):
                         self.null_preds.append((col, True))  # col <=> NULL
                         yield f
                         continue
-                    v = _zone_value(f.value)
+                    v = _stat_value(f.value)
                     if v is not None:
                         if isinstance(f, (EqualTo, EqualNullSafe)):
                             self._narrow(col, v, v)
@@ -256,7 +252,7 @@ class DumpsterReader(DataSourceReader):
                     self.null_preds.append(
                         (f.attribute[0], isinstance(f, IsNull)))
                 elif isinstance(f, In) and len(f.attribute) == 1:
-                    vs = [_zone_value(v) for v in f.value]
+                    vs = [_stat_value(v) for v in f.value]
                     if vs and all(v is not None for v in vs):
                         self._narrow(f.attribute[0], min(vs), max(vs))
                         if all(isinstance(v, (str, bytes)) for v in vs):
@@ -290,14 +286,13 @@ class DumpsterReader(DataSourceReader):
         if mfiles:
             tbl = ds.dataset(mfiles).to_table(
                 columns=["file", "encoded_bytes", "col_stats", "n_rows"])
-            need_stats = bool(self.zones or self.null_preds
-                              or self.sentinel)
+            zones = [(c, lo, hi) for c, (lo, hi) in self.zones.items()]
+            prune = bool(zones or self.null_preds)
             for fp, nb, cs, nr in zip(tbl.column(0).to_pylist(),
                                       tbl.column(1).to_pylist(),
                                       tbl.column(2).to_pylist(),
                                       tbl.column(3).to_pylist()):
-                stats = ({s["column"]: s for s in json.loads(cs)}
-                         if need_stats else None)
+                stats = _col_stats(cs) if prune or self.sentinel else None
                 if self.sentinel is not None and int(nr) > 0:
                     s = (stats or {}).get(self.sentinel)
                     nn = None if s is None else s.get("n_nulls")
@@ -314,8 +309,8 @@ class DumpsterReader(DataSourceReader):
                             f"register_decoded_view(..., pushdown=True) "
                             f"to pick a valid sentinel or fall back to "
                             f"the exact decode view.")
-                if (self.zones or self.null_preds) \
-                        and not self._survives(stats, int(nr)):
+                if prune and not _chunk_may_match(stats, int(nr), zones,
+                                                  self.null_preds):
                     continue
                 files_sizes.append((fp, int(nb)))
         # deterministic order, then greedy bin-pack to target_bytes
@@ -331,86 +326,23 @@ class DumpsterReader(DataSourceReader):
             parts.append(ChunkFilesPartition(cur))
         return parts or [ChunkFilesPartition([])]
 
-    def _survives(self, stats: dict, n_rows: int) -> bool:
-        for col, want_null in self.null_preds:
-            s = stats.get(col)
-            nn = None if s is None else s.get("n_nulls")
-            if nn is None:
-                continue
-            if want_null and nn == 0:
-                return False            # IS NULL, chunk has no nulls
-            if not want_null and nn >= n_rows > 0:
-                return False            # IS NOT NULL, chunk is all-null
-        for col, (lo, hi) in self.zones.items():
-            s = stats.get(col)
-            if s is None:
-                continue
-            if isinstance(lo, (str, bytes)) or isinstance(hi, (str, bytes)):
-                # string/binary predicate → truncated byte-bound zone test
-                from .engine import _str_zone_overlaps
-                if not _str_zone_overlaps(s, lo, hi):
-                    return False
-                continue
-            if s.get("vmin") is None:
-                continue  # no zone map for this column → cannot prune
-            if lo is not None and s["vmax"] < lo:
-                return False
-            if hi is not None and s["vmin"] > hi:
-                return False
-        return True
-
     # -- execution ---------------------------------------------------------
 
     def read(self, partition: ChunkFilesPartition) -> Iterator[pa.RecordBatch]:
-        from .chunk import decode_chunk_file
-        from pyspark.sql.pandas.types import to_arrow_type
-        arrow_types = {f.name: to_arrow_type(f.dataType)
-                       for f in self.schema.fields}
-        canon = pa.schema([pa.field(nm, arrow_types[nm])
-                           for nm in self.names])
         # ranged per-column reads only when the registration projected a
         # subset — a full read is one sequential pass (cheaper than
         # per-column seeks when every byte is needed anyway)
         columns = self.names if set(self.names) < set(self.full_names) \
             else None
-        # diagnostic seam: one "<bytes_read> <file_bytes>" line per chunk
-        # read from each worker — how tests prove column-ranged reads
-        # engaged from plain SQL (workers are separate processes, so a
-        # shared spool directory is the only observable)
-        trace_dir = self.io_trace
-        for fp in partition.files:
-            try:
-                if self.eq_sets and self._bloom_rejects(fp):
-                    continue  # value provably absent — exact skip
-                if trace_dir:
-                    br: list = []
-                    batch = decode_chunk_file(fp, columns=columns,
-                                              bytes_read=br)
-                    with open(os.path.join(
-                            trace_dir, f"io-{os.getpid()}.log"), "a") as tf:
-                        tf.write(f"{sum(br)} {os.path.getsize(fp)}\n")
-                else:
-                    batch = decode_chunk_file(fp, columns=columns)
-            except Exception:
-                if self.on_error == "skip":
-                    continue
-                raise
-            # one canonical Arrow schema across every chunk generation:
-            # older chunks may lack evolved columns (null-fill) and carry
-            # different nullability flags — Spark's reader requires every
-            # batch to share the exact declared schema
-            have = set(batch.schema.names)
-            cols = [batch.column(nm).cast(arrow_types[nm]) if nm in have
-                    else pa.nulls(batch.num_rows, type=arrow_types[nm])
-                    for nm in self.names]
-            yield pa.RecordBatch.from_arrays(cols, schema=canon)
+        return _scan_chunk_files(partition.files,
+                                 _arrow_schema(self.schema.fields), columns,
+                                 self.eq_sets, self.on_error, self.io_trace)
 
     def _bloom_rejects(self, fp: str) -> bool:
         """True iff some pushed membership predicate's ENTIRE value set is
-        provably absent from this chunk's bloom section (shared gate:
-        bloom.bloom_rejects_file).  Costs one tail ranged read per file,
+        provably absent from this chunk's bloom section (the gate
+        _scan_chunk_files applies).  Costs one tail ranged read per file,
         never the column data."""
-        from .bloom import bloom_rejects_file
         return bloom_rejects_file(fp, self.eq_sets)
 
 
@@ -484,10 +416,18 @@ class DumpsterWriter(DataSourceArrowWriter):
     non-atomic window is commit itself (a driver crash between
     truncate and publish leaves an empty store), the same window
     Spark's own static-overwrite file sinks have, minus their
-    delete-before-any-task-runs exposure.  Two concurrent overwrites:
-    last commit wins (as with Spark file sinks).  Structs are not
-    flattened on this path — use ``engine.encode_table`` for
-    struct-typed frames.
+    delete-before-any-task-runs exposure.
+
+    Concurrent writers: every commit holds the store's ``_commit.lock``
+    across its check, truncate and publish, and first checks that every
+    chunk its tasks reported still exists.  An overwrite's truncate
+    deletes the uncommitted chunks of any concurrent writer, so of two
+    concurrent overwrites the first to commit wins and the second fails
+    loudly with nothing published; an append that commits after a
+    concurrent overwrite fails the same way, and one that commits before
+    it is replaced by it.  A store's manifests never point at deleted
+    chunks.  Structs are not flattened on this path — use
+    ``engine.encode_table`` for struct-typed frames.
     """
 
     def __init__(self, options: dict, schema: StructType, overwrite: bool):
@@ -503,7 +443,6 @@ class DumpsterWriter(DataSourceArrowWriter):
         if self.bucket_col is None:
             self.bucket_base = _reserve_bucket_range(self.out_dir)
         else:
-            from .engine import done_buckets
             # two CONCURRENT bucket_col writers both see an empty store at
             # init, so their chunks are namespaced by a reserved job id
             # (no file clobbering); the commit-time existing-manifest check
@@ -536,19 +475,28 @@ class DumpsterWriter(DataSourceArrowWriter):
     # driver-side commit protocol ------------------------------------------
 
     def commit(self, messages) -> None:
-        if self.overwrite:
-            # all tasks succeeded — NOW drop the old table (see class
-            # docstring), keeping this job's freshly written chunks
-            keep = frozenset(
-                os.path.abspath(r["file"])
-                for m in messages if m is not None for r in m.rows)
-            _truncate_store(self.out_dir, keep_files=keep)
-            os.makedirs(os.path.join(self.out_dir, "manifest"),
-                        exist_ok=True)
-        _publish_batch(self.out_dir, messages, self.bucket_col,
-                       self.payload_schema,
-                       refuse_existing=(self.bucket_col is not None
-                                        and not self.overwrite))
+        files = [r["file"] for m in messages if m is not None
+                 for r in m.rows]
+        with fslib.file_lock(os.path.join(self.out_dir, "_commit.lock")):
+            lost = [f for f in files if not os.path.exists(f)]
+            if lost:
+                raise RuntimeError(
+                    f"{len(lost)} chunk file(s) this job wrote no longer "
+                    f"exist (first: {lost[0]!r}): a concurrent overwrite "
+                    f"committed first and truncated the store. Nothing "
+                    f"was published by this job; rerun it against the "
+                    f"store's current state.")
+            if self.overwrite:
+                # all tasks succeeded — NOW drop the old table (see class
+                # docstring), keeping this job's freshly written chunks
+                _truncate_store(self.out_dir, keep_files=frozenset(
+                    os.path.abspath(f) for f in files))
+                os.makedirs(os.path.join(self.out_dir, "manifest"),
+                            exist_ok=True)
+            _publish_batch(self.out_dir, messages, self.bucket_col,
+                           self.payload_schema,
+                           refuse_existing=(self.bucket_col is not None
+                                            and not self.overwrite))
 
     def abort(self, messages) -> None:
         _delete_reported_chunks(messages)
@@ -622,8 +570,6 @@ class DumpsterStreamWriter(DataSourceStreamArrowWriter):
 def _init_writer_common(w, options: dict, schema: StructType) -> None:
     """Shared option parsing + guard rails for the batch and stream sinks
     (runs on the driver at writer construction)."""
-    from .engine import (DEFAULT_CHUNK_BYTES, DEFAULT_CHUNK_ROWS,
-                         FLAT_SEP, _has_structs)
     w.out_dir = options.get("path")
     if not w.out_dir:
         raise ValueError("dumpster sink requires .option('path', out_dir) "
@@ -664,7 +610,6 @@ def _encode_task(w, iterator, out_dir: str, bucket_base: int) \
     chunk files under ``out_dir`` WITHOUT publishing manifests."""
     import numpy as np
     from pyspark import TaskContext
-    from .engine import _make_encoder
     tc = TaskContext.get()
     pid = tc.partitionId() if tc is not None else 0
     if w.bucket_col is None and pid >= _BUCKET_STRIDE:
@@ -739,8 +684,6 @@ def _publish_batch(out_dir: str, messages, bucket_col,
     BEFORE publishing anything instead of silently replacing the
     winner's manifests."""
     import pyarrow.parquet as pq
-    from .engine import (_MANIFEST_ARROW, _fs_write_atomic, _manifest_path,
-                         _publish_table_schema)
     by_bucket: dict[int, list] = {}
     owner: dict[int, int] = {}
     for m in messages:
@@ -810,8 +753,6 @@ def _reserve_bucket_range(out_dir: str,
     counter file advances under the store's lock, so every job gets a
     disjoint range; int32 buckets allow ~2000 reservations, far past any
     real append cadence before a compaction rewrite."""
-    from . import fs as fslib
-    from .engine import done_buckets
     alloc = os.path.join(out_dir, "_bucket_alloc.json")
     with fslib.file_lock(alloc + ".lock"):
         nxt = 0
@@ -828,9 +769,10 @@ def _reserve_bucket_range(out_dir: str,
             raise ValueError(
                 f"bucket-id namespace exhausted for {out_dir!r}: the "
                 f"next reservation would pass int32 "
-                f"(base={base}, stride={stride}). Compact the store "
-                f"(compact_stream / decode+re-encode) to reset bucket "
-                f"ids, or overwrite it.")
+                f"(base={base}, stride={stride}); an overwrite reserves "
+                f"a range too, so it fails the same way. Write to a "
+                f"fresh out_dir or compact into one (compact_stream / "
+                f"decode + re-encode).")
         tmp = alloc + ".tmp"
         with open(tmp, "w") as f:
             json.dump({"next": base + stride}, f)
@@ -882,25 +824,6 @@ def _truncate_store(out_dir: str,
                     os.remove(os.path.join(out_dir, f))
                 except OSError:
                     pass
-
-
-def _as_bytes(v) -> bytes:
-    return v.encode() if isinstance(v, str) else bytes(v)
-
-
-def _zone_value(v):
-    """Predicate literal → the manifest zone-map space: numerics map to
-    the int64/float zones, str/bytes stay as-is for the truncated string
-    bounds (smin/smax) and the bloom membership gate; None otherwise."""
-    import datetime
-    if isinstance(v, bool):
-        return int(v)
-    if isinstance(v, (datetime.datetime, datetime.date)):
-        from .engine import _stat_value
-        return _stat_value(v)   # µs for timestamps, epoch days for dates
-    if isinstance(v, (int, float, str, bytes)):
-        return v
-    return None
 
 
 def register_dumpster_source(spark) -> None:

@@ -594,9 +594,12 @@ def near_dup_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     # orderable id, and a hard cast("long") either aborted on string
     # doc ids (ANSI CAST_INVALID_INPUT) or — ANSI off — nulled every
     # edge and silently returned the corpus undeduplicated (round-5
-    # review finding)
-    edges = pairs.select(F.col("id_a").alias("src"),
-                         F.col("id_b").alias("dst"))
+    # review finding).  id_b takes id_a's type: the symmetric union below
+    # matches columns by position, and mismatched types (int vs long)
+    # would silently widen every returned id
+    edges = pairs.select(
+        F.col("id_a").alias("src"),
+        F.col("id_b").cast(pairs.schema["id_a"].dataType).alias("dst"))
     sym = edges.unionAll(edges.select(F.col("dst").alias("src"),
                                       F.col("src").alias("dst")))
     sym = _persist_tracked(sym)

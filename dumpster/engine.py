@@ -31,6 +31,7 @@ Scale notes (100 TB / 1000 executors):
 from __future__ import annotations
 
 import json
+import numbers
 import os
 import time
 
@@ -94,15 +95,12 @@ def _rebuild_df(df: DataFrame, logical: StructType) -> DataFrame:
                        for f in logical.fields])
 
 from . import fs as fslib
+from .bloom import bloom_rejects_file
 from .chunk import decode_chunk_file, encode_chunk_pieces
 from .pipeline import prep_for_encode, prep_for_encode_local
 
 DEFAULT_CHUNK_ROWS = 65536
 
-# decode_tables: manifests totalling less than this take the driver-side
-# listing fast path (no manifest-scan job, no exchange); bigger manifests
-# stay fully distributed.  Module-level so benchmarks can A/B both paths.
-_SMALL_MANIFEST_BYTES = 32 * 1024 * 1024
 DEFAULT_CHUNK_BYTES = 32 * 1024 * 1024
 
 MANIFEST_DDL = ("bucket int, chunk_seq int, file string, n_rows long, "
@@ -151,6 +149,21 @@ def _is_manifest_name(f: str) -> bool:
     as manifests (ADVICE r3)."""
     return (f.startswith("b") and f.endswith(".parquet")
             and f[1:-len(".parquet")].isdigit())
+
+
+def _manifest_files(stores: list[str]) -> list[str]:
+    """Every committed per-bucket manifest file across the stores, in
+    deterministic order — the one manifest lister behind decode_tables,
+    the dumpster DataSource planner and the pushdown-sentinel scan, so
+    they can never disagree on which chunks exist."""
+    out = []
+    for store in stores:
+        mdir = os.path.join(store, "manifest")
+        if os.path.isdir(mdir):
+            out += [os.path.join(mdir, f) for f in sorted(os.listdir(mdir))
+                    if _is_manifest_name(f)]
+    return out
+
 
 def done_buckets(out_dir: str) -> set[int]:
     mdir = os.path.join(out_dir, "manifest")
@@ -616,11 +629,9 @@ def encode_table_partitioned(df: DataFrame, out_dir: str, *,
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
-    mdir = os.path.join(out_dir, "manifest")
-    has_any = os.path.isdir(mdir) and any(
-        _is_manifest_name(f) for f in os.listdir(mdir))
-    if not has_any:
+    if not _manifest_files([out_dir]):
         return spark.createDataFrame([], MANIFEST_DDL)
+    mdir = os.path.join(out_dir, "manifest")
     # one directory listing, not N file paths: planning N separate relations
     # dominates decode setup once buckets number in the hundreds; the glob
     # filter keeps half-written *.tmp files (crash leftovers) out
@@ -700,17 +711,71 @@ def _evolve_schema(old: StructType, new: StructType) -> StructType:
 
 
 def _stat_value(v):
-    """Normalise a predicate bound to the manifest's int64/float stat space
-    (timestamps stored as int64 microseconds UTC — chunk stats normalize
-    ns/ms/s-unit columns to µs at encode; dates as days since epoch)."""
+    """Normalise a predicate bound (``zone_filter`` or a pushed filter) to
+    the manifest's zone-map space: timestamps → int64 µs UTC (chunk stats
+    normalize ns/ms/s-unit columns to µs at encode), dates → days since
+    epoch, bools → int, numbers/str/bytes as-is, anything else → None
+    (an open bound)."""
     import datetime
+    if isinstance(v, bool):
+        return int(v)
     if isinstance(v, datetime.datetime):
         if v.tzinfo is None:
             v = v.replace(tzinfo=datetime.timezone.utc)
         return int(v.timestamp() * 1_000_000)
     if isinstance(v, datetime.date):
         return (v - datetime.date(1970, 1, 1)).days
-    return v
+    if isinstance(v, (numbers.Number, str, bytes)):
+        return v
+    return None
+
+
+def _as_bytes(v) -> bytes:
+    return v.encode() if isinstance(v, str) else bytes(v)
+
+
+def _zone_filters(zone_filter) -> list[tuple]:
+    """``zone_filter`` — one ``(col, lo, hi)`` tuple or a list of them,
+    ANDed — as normalised ``(col, lo, hi)`` zones (None = open bound)."""
+    zf = [zone_filter] if isinstance(zone_filter, tuple) \
+        else list(zone_filter or [])
+    return [(c, _stat_value(lo), _stat_value(hi)) for c, lo, hi in zf]
+
+
+def _col_stats(cs: str) -> dict:
+    """A manifest row's ``col_stats`` JSON, keyed by column."""
+    return {s["column"]: s for s in json.loads(cs)}
+
+
+def _chunk_may_match(stats: dict, n_rows: int, zones,
+                     null_preds=()) -> bool:
+    """The one zone-map rule: may a chunk with ``stats`` (_col_stats) and
+    ``n_rows`` rows match every ``(col, lo, hi)`` zone (None = open
+    bound) and every ``(col, want_null)`` null predicate?  A column
+    without stats never prunes; callers re-apply the row predicate."""
+    for col, want_null in null_preds:
+        s = stats.get(col)
+        nn = None if s is None else s.get("n_nulls")
+        if nn is None:
+            continue
+        if want_null and nn == 0:
+            return False            # IS NULL, chunk has no nulls
+        if not want_null and nn >= n_rows > 0:
+            return False            # IS NOT NULL, chunk is all-null
+    for col, lo, hi in zones:
+        s = stats.get(col)
+        if s is None:
+            continue
+        if isinstance(lo, (str, bytes)) or isinstance(hi, (str, bytes)):
+            if not _str_zone_overlaps(s, lo, hi):
+                return False
+            continue
+        if s.get("vmin") is None:
+            continue  # no zone map for this column → cannot prune
+        if (lo is not None and s["vmax"] < lo) \
+                or (hi is not None and s["vmin"] > hi):
+            return False
+    return True
 
 
 def prune_manifest_files(manifest_rows, zone_filter) -> list[str]:
@@ -722,31 +787,10 @@ def prune_manifest_files(manifest_rows, zone_filter) -> list[str]:
     manifest-level analog of Parquet row-group min/max pruning under an
     AND of predicates.
     """
-    filters = [zone_filter] if isinstance(zone_filter, tuple) else list(zone_filter)
-    filters = [(c, _stat_value(lo), _stat_value(hi)) for c, lo, hi in filters]
-    keep = []
-    for r in manifest_rows:
-        stats = {s["column"]: s for s in json.loads(r["col_stats"])}
-        ok = True
-        for col, lo, hi in filters:
-            s = stats.get(col)
-            if s is None:
-                continue
-            if isinstance(lo, (str, bytes)) or isinstance(hi, (str, bytes)):
-                if not _str_zone_overlaps(s, lo, hi):
-                    ok = False
-                    break
-                continue
-            if s.get("vmin") is None:
-                continue  # no stats → cannot prune on this column
-            # None = open bound (same contract as the DataSource path)
-            if (lo is not None and s["vmax"] < lo) \
-                    or (hi is not None and s["vmin"] > hi):
-                ok = False
-                break
-        if ok:
-            keep.append(r["file"])
-    return sorted(set(keep))
+    zones = _zone_filters(zone_filter)
+    return sorted({r["file"] for r in manifest_rows
+                   if _chunk_may_match(_col_stats(r["col_stats"]), 0,
+                                       zones)})
 
 
 def _str_zone_overlaps(s: dict, lo, hi) -> bool:
@@ -768,6 +812,59 @@ def _str_zone_overlaps(s: dict, lo, hi) -> bool:
     if lo is not None and smax is not None and lo >= base64.b64decode(smax):
         return False
     return True
+
+
+def _arrow_schema(fields) -> pa.Schema:
+    """Declared Spark fields → the canonical all-nullable Arrow schema
+    every scanned batch is normalised to (_scan_chunk_files)."""
+    from pyspark.sql.pandas.types import to_arrow_type
+    return pa.schema([pa.field(f.name, to_arrow_type(f.dataType))
+                      for f in fields])
+
+
+def _scan_chunk_files(files, schema: pa.Schema,
+                      columns: list[str] | None = None, eq_sets=(),
+                      on_error: str = "raise", io_trace: str | None = None):
+    """The one executor-side chunk reader (decode_tables and the dumpster
+    DataSource): per file, the bloom gate (``eq_sets`` = ``(col, byte
+    values)``; a file whose blooms prove every value absent is skipped
+    exactly), the decode (ranged reads of ``columns`` only when a
+    projection is given), null-fill of columns older chunk generations
+    lack, and normalisation to ``schema`` — Spark pins the schema of the
+    first batch, while chunks keep per-generation types and nullability.
+    ``on_error="skip"`` scans around damaged files (verify_chunks names
+    them); ``io_trace`` spools one ``"<bytes_read> <file_bytes>"`` line
+    per chunk into that directory, per worker process."""
+    # same per-worker pool pinning as the encoder (see _make_encoder)
+    try:
+        pa.set_cpu_count(1)
+        pa.set_io_thread_count(1)
+    except Exception:
+        pass
+    for fp in files:
+        try:
+            if eq_sets and bloom_rejects_file(fp, eq_sets):
+                continue  # value provably absent — exact skip
+            br: list = []
+            batch = decode_chunk_file(fp, columns=columns, bytes_read=br)
+        except Exception:
+            if on_error == "skip":
+                continue
+            raise
+        if io_trace:
+            with open(os.path.join(io_trace, f"io-{os.getpid()}.log"),
+                      "a") as tf:
+                tf.write(f"{sum(br)} {os.path.getsize(fp)}\n")
+        if batch.schema.equals(schema):
+            yield batch
+            continue
+        have = set(batch.schema.names)
+        cols = []
+        for f in schema:
+            c = batch.column(f.name) if f.name in have \
+                else pa.nulls(batch.num_rows, type=f.type)
+            cols.append(c if c.type == f.type else c.cast(f.type))
+        yield pa.RecordBatch.from_arrays(cols, schema=schema)
 
 
 def _chunks_relpath(path: str, marker: str = f"{os.sep}chunks{os.sep}") -> str:
@@ -939,7 +1036,6 @@ def verify_chunks(spark: SparkSession, out_dir: str) -> DataFrame:
     """
     manifest = read_manifest(spark, out_dir)
     par = max(spark.sparkContext.defaultParallelism, 1)
-    # distributed file list — same rationale as decode_table
     fdf = manifest.select("file").distinct().repartition(par * 2)
 
     def checker(batches):
@@ -979,20 +1075,23 @@ def decode_tables(spark: SparkSession, dirs: list[str], *,
                   on_error: str = "raise") -> DataFrame:
     """Inverse of encode_table: manifest → DataFrame, bit-identical.
 
-    Parallel over chunk files (no data shuffle at all); column pruning
-    reaches the chunk container so unselected payloads are never
-    decompressed.  ``zone_filter=(col, lo, hi)`` — or a list of such
-    tuples, ANDed — prunes whole chunks via the manifest zone maps before
-    any file is opened — the reference's dt=/hr= partition pruning,
-    generalised; NOTE it prunes at chunk granularity, so callers still
-    apply the exact row filter (encode with ``order_cols=(col,)`` for
-    tight zones).  ``on_error="skip"`` scans around corrupt chunk files
-    (pair with verify_chunks to locate them).
+    The same chunk scan as the dumpster DataSource: the driver lists the
+    manifests and prunes the file list (``path_glob``, zone maps), tasks
+    decode the surviving chunk files (_scan_chunk_files) — no data
+    shuffle at all.  Column pruning reaches the chunk container so
+    unselected payloads are never read or decompressed.
+    ``zone_filter=(col, lo, hi)`` — or a list of such tuples, ANDed —
+    prunes whole chunks via the manifest zone maps before any file is
+    opened — the reference's dt=/hr= partition pruning, generalised;
+    NOTE it prunes at chunk granularity, so callers still apply the
+    exact row filter (encode with ``order_cols=(col,)`` for tight
+    zones).  ``on_error="skip"`` scans around corrupt chunk files (pair
+    with verify_chunks to locate them).
 
     Multiple ``dirs`` (same schema — e.g. the batch=N tables of a
-    streaming ingest) decode as ONE plan: manifests are read in a single
-    multi-path scan, so the plan stays constant-size however many tables
-    are unioned — no per-table unionByName chain.
+    streaming ingest) decode as ONE plan: their manifests are listed
+    together, so the plan stays constant-size however many tables are
+    unioned — no per-table unionByName chain.
     """
     full = table_schema(dirs[0])
     for d in dirs[1:]:
@@ -1060,189 +1159,42 @@ def decode_tables(spark: SparkSession, dirs: list[str], *,
     schema = StructType(fields)
     names = [f.name for f in fields]
 
-    # The file list stays DISTRIBUTED end-to-end: the manifest scan feeds
-    # the decode job directly, zone/path pruning runs inside mapInArrow.
-    # (At 10^12 docs the manifest holds ~10^7 chunk rows — collecting the
-    # paths to the driver would be a GB-scale single-point bottleneck.)
-    mdirs = [os.path.join(d, "manifest") for d in dirs]
-    mdirs = [m for m in mdirs if os.path.isdir(m) and any(
-        _is_manifest_name(f) for f in os.listdir(m))]
-
-    def _manifest_df():
-        # built ONLY on the big-manifest branch: constructing the parquet
-        # relation eagerly paid the driver-side InMemoryFileIndex listing
-        # even when the small-manifest fast path then ignored it — the
-        # very fixed cost that path exists to remove (round-5 review
-        # finding)
-        if not mdirs:
-            return spark.createDataFrame([], MANIFEST_DDL)
-        return (spark.read.option("pathGlobFilter", "b[0-9]*.parquet")
-                .schema(MANIFEST_DDL).parquet(*mdirs)
-                .filter(F.input_file_name()
-                        .rlike(r"/b[0-9]+\.parquet$")))
-    par = max(spark.sparkContext.defaultParallelism, 1)
-    filters = None
-    if zone_filter is not None or path_glob is not None:
-        filters = ([zone_filter] if isinstance(zone_filter, tuple)
-                   else list(zone_filter or []))
-        filters = [(c, _stat_value(lo), _stat_value(hi))
-                   for c, lo, hi in filters]
-
-    def _keep_file(fp: str, cs) -> bool:
+    # driver-side listing (where Spark's FileSourceScan lists too), then
+    # an exchange-free file feed: a JVM-only Range scan carries chunk
+    # INDICES and the file list rides the task closure
+    zones = _zone_filters(zone_filter)
+    mfiles = _manifest_files(dirs)
+    kept: set = set()
+    if mfiles:
         import fnmatch
-        if path_glob is not None and not fnmatch.fnmatch(fp, path_glob):
-            return False
-        if filters:
-            stats = {s["column"]: s for s in json.loads(cs)}
-            for col, lo, hi in filters:
-                s = stats.get(col)
-                if s is None:
-                    continue
-                if isinstance(lo, (str, bytes)) \
-                        or isinstance(hi, (str, bytes)):
-                    if not _str_zone_overlaps(s, lo, hi):
-                        return False
-                    continue
-                if s.get("vmin") is None:
-                    continue  # no stats → cannot prune
-                # None = open bound (prune_manifest_files parity)
-                if (lo is not None and s["vmax"] < lo) \
-                        or (hi is not None and s["vmin"] > hi):
-                    return False
-        return True
-
-    # SMALL manifests (≲10^5 chunks) take a driver-side listing — one
-    # pyarrow columnar read of the file/col_stats columns, pruned and
-    # parallelized with no manifest-scan job and no exchange.  This is
-    # exactly where Spark's own FileSourceScan does its file listing,
-    # and it removes the decode job's two fixed-cost stages (measured
-    # ~0.45 s at every core count — the N→4N decode-scaling cap,
-    # bench/decode_anatomy.py).  BIG manifests (10^12-doc tables hold
-    # ~10^7 chunk rows) keep the fully distributed shape: the manifest
-    # scan feeds the decode job directly and pruning runs in tasks —
-    # collecting those paths to the driver would be a GB-scale
-    # single-point bottleneck.
-    msize = sum(e.stat().st_size for m in mdirs
-                for e in os.scandir(m)
-                if e.is_file() and _is_manifest_name(e.name))
-    file_list = None          # set by the small-manifest fast path only
-    if mdirs and msize < _SMALL_MANIFEST_BYTES:
         import pyarrow.dataset as _ds
-        mfiles = [os.path.join(m, f) for m in mdirs
-                  for f in sorted(os.listdir(m)) if _is_manifest_name(f)]
-        want_cols = ["file"] + (["col_stats"] if filters or path_glob
-                                else [])
-        tbl = _ds.dataset(mfiles).to_table(columns=want_cols)
+        tbl = _ds.dataset(mfiles).to_table(
+            columns=["file", "col_stats"] if zones else ["file"])
         fps = tbl.column(0).to_pylist()
-        css = (tbl.column(1).to_pylist() if len(want_cols) > 1
-               else [None] * len(fps))
-        kept = sorted({fp for fp, cs in zip(fps, css)
-                       if _keep_file(fp, cs)})
-        # exchange-free file feed: a JVM-only Range scan carries chunk
-        # INDICES and the (bounded, small-manifest-path-only) file list
-        # rides the task closure — no LocalRelation serialization, no
-        # round-robin Exchange.  Measured ~0.4 s cheaper per decode
-        # query than createDataFrame+repartition at every core count
-        # (the no-op-plan probe in bench/decode_anatomy.py), which is
-        # the remaining fixed cost that capped N→4N decode scaling.
-        file_list = kept
-        fdf = spark.range(
-            0, len(kept),
-            numPartitions=max(1, min(par * 2, max(len(kept), 1))))
-    else:
-        manifest = _manifest_df()
-        if filters or path_glob:
-            def prune(batches):
-                for b in batches:
-                    keep = [fp for fp, cs in zip(b.column(0).to_pylist(),
-                                                 b.column(1).to_pylist())
-                            if _keep_file(fp, cs)]
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(keep, type=pa.string())], names=["file"])
+        css = tbl.column(1).to_pylist() if zones else [None] * len(fps)
+        kept = {fp for fp, cs in zip(fps, css)
+                if (path_glob is None or fnmatch.fnmatch(fp, path_glob))
+                and (not zones or _chunk_may_match(_col_stats(cs), 0,
+                                                   zones))}
+    file_list = sorted(kept)
+    par = max(spark.sparkContext.defaultParallelism, 1)
+    fdf = spark.range(0, len(file_list),
+                      numPartitions=max(1, min(par * 2, len(file_list))))
 
-            fdf = manifest.select("file", "col_stats") \
-                .mapInArrow(prune, schema="file string")
-        else:
-            fdf = manifest.select("file")
-        # ONE exchange, carrying only file-name strings: hash-repartition
-        # on the dedup key and let dropDuplicates reuse that distribution
-        # (distinct().repartition(n) was two back-to-back shuffles)
-        fdf = fdf.repartition(par * 2, F.col("file")) \
-            .dropDuplicates(["file"])
-
+    arrow_schema = _arrow_schema(fields)
     # pruned scans do ranged reads via the chunk footer index (I/O pruning,
     # not just decode pruning); full scans read each file once, sequentially
-    pruned = len(names) < len(full.fields)
-    skip_bad = on_error == "skip"
-
-    # arrow types for read-side schema evolution: chunks written before a
-    # column was added lack it — the reader fills nulls of the right type
-    try:
-        from pyspark.sql.pandas.types import to_arrow_type
-        arrow_types = {f.name: to_arrow_type(f.dataType) for f in fields}
-    except Exception:
-        arrow_types = {}
-
-    def _pad_missing(batch: pa.RecordBatch) -> pa.RecordBatch:
-        if batch.schema.names != names:
-            have = set(batch.schema.names)
-            cols = [batch.column(nm) if nm in have
-                    else pa.nulls(batch.num_rows, type=arrow_types[nm])
-                    for nm in names]
-            batch = pa.RecordBatch.from_arrays(cols, names=list(names))
-        # the Arrow IPC stream back to the JVM pins ONE schema from the
-        # first batch — but chunk files keep per-generation nullability
-        # (a column not-null in one generation is padded-null in an
-        # older one), so normalize every batch to all-nullable fields
-        if not all(f.nullable for f in batch.schema):
-            sch = pa.schema([pa.field(f.name, f.type)
-                             for f in batch.schema])
-            batch = pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(batch.num_columns)],
-                schema=sch)
-        return batch
-
+    columns = names if len(names) < len(full.fields) else None
     # string-equality predicates gate chunks task-side through the bloom
-    # sections (one small ranged read) BEFORE any column is decoded —
-    # Parquet-bloom-filter semantics: a negative proves absence, a
-    # positive falls through to the normal decode + row-level filter
-    eq_preds = []
-    if zone_filter is not None:
-        zf = ([zone_filter] if isinstance(zone_filter, tuple)
-              else list(zone_filter))
-        for c, lo, hi in zf:
-            if lo is not None and lo == hi and isinstance(lo, (str, bytes)):
-                eq_preds.append(
-                    (c, lo.encode() if isinstance(lo, str) else bytes(lo)))
+    # sections (one small ranged read) BEFORE any column is decoded
+    eq_sets = [(c, frozenset({_as_bytes(lo)})) for c, lo, hi in zones
+               if lo is not None and lo == hi
+               and isinstance(lo, (str, bytes))]
 
     def reader(batches):
-        try:  # same per-worker pool pinning as the encoder (see _make_encoder)
-            pa.set_cpu_count(1)
-            pa.set_io_thread_count(1)
-        except Exception:
-            pass
-        if eq_preds:
-            from .bloom import bloom_rejects_file
-        for b in batches:
-            col = b.column(0)
-            # fast path feeds int64 indices into the closure file list;
-            # the distributed path feeds file-path strings
-            fps = ([file_list[i] for i in col.to_pylist()]
-                   if pa.types.is_integer(col.type) else col.to_pylist())
-            for fp in fps:
-                try:
-                    if eq_preds and bloom_rejects_file(
-                            fp, [(c, (v,)) for c, v in eq_preds]):
-                        continue
-                    yield _pad_missing(decode_chunk_file(
-                        fp, columns=names if pruned else None))
-                except Exception:
-                    # on_error="skip": scan around a damaged chunk instead
-                    # of failing the job (the reference captures decode
-                    # errors inline rather than crashing, S3 parity);
-                    # verify_chunks() reports exactly which files are bad
-                    if not skip_bad:
-                        raise
+        yield from _scan_chunk_files(
+            (file_list[i] for b in batches for i in b.column(0).to_pylist()),
+            arrow_schema, columns, eq_sets, on_error)
 
     out = fdf.mapInArrow(reader, schema=schema)
     if logical is not None:
@@ -1257,7 +1209,7 @@ def _pushdown_sentinel(out_dir: str,
     old-generation chunks null-fills on decode, so it cannot carry the
     sentinel).  Returns None when no column qualifies."""
     import pyarrow.dataset as ds
-    from .datasource import _manifest_files, _resolve_stores, _union_schema
+    from .datasource import _resolve_stores, _union_schema
     try:
         stores = _resolve_stores(out_dir)
     except ValueError:

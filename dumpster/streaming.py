@@ -402,7 +402,10 @@ def stateful_sessionize(stream_df: DataFrame, user_col: str = "user_id",
     restarts session numbering at 1, so set the TTL well past the
     longest session gap you care about (≥ several × ``gap_seconds``);
     with no TTL, state lives for the stream's lifetime and numbering
-    never repeats.
+    never repeats.  With a TTL, Spark follows every micro-batch with a
+    no-data batch so idle state can time out: a
+    ``trigger(availableNow=True)`` query never terminates on its own and
+    ``processAllAvailable()`` never returns — stop the query explicitly.
     """
     import pandas as pd
 

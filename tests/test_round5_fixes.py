@@ -11,6 +11,8 @@
    semantics), matching the realigned DuckDB oracle.
 """
 
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -290,7 +292,15 @@ def test_stateful_sessionize_ttl_wires_timeout(spark, tmp_path):
          .outputMode("append")
          .option("checkpointLocation", str(tmp_path / "ttlck"))
          .trigger(availableNow=True).start())
-    q.awaitTermination(180)
+    # a processing-time timeout makes Spark follow every batch with a
+    # no-data batch (so idle state can expire), so neither availableNow
+    # termination nor processAllAvailable() ever comes: wait for the
+    # input batch's progress report, then stop the query
+    deadline = time.monotonic() + 180
+    while (not any(p["numInputRows"] for p in q.recentProgress)
+           and time.monotonic() < deadline):
+        time.sleep(0.2)
+    q.stop()
     got = {(r.user_id, r.ts_us, r.session_id)
            for r in spark.table("sess_ttl5").collect()}
     assert got == {("u1", 0, "u1-1"), ("u1", 600_000_000, "u1-1"),
@@ -545,3 +555,88 @@ def test_media_features_large_binary_and_nulls(spark):
     # and the Spark-path values agree with the kernel values
     assert [out[1], out[2], out[3]] == f_small
     assert _fake_features(large.slice(2, 1), 4).to_pylist() == [f_large[2]]
+
+
+# --- ADVICE r5: concurrent overwrite, overflow remedy, id-type union --------
+
+
+def _fake_commit_message(out, bucket):
+    """One chunk file on disk plus the commit message the write task that
+    wrote it would report (Spark-free: the writer's commit protocol only
+    reads these rows)."""
+    import os
+
+    from dumpster.datasource import DumpsterCommitMessage
+    from dumpster.engine import _chunk_path
+
+    path = _chunk_path(out, bucket, 0)
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    with open(path, "wb") as f:
+        f.write(b"chunk")
+    return DumpsterCommitMessage([{
+        "bucket": bucket, "chunk_seq": 0, "file": path, "n_rows": 1,
+        "raw_bytes": 8, "encoded_bytes": 5, "n_cols": 1, "encode_ms": 0.0,
+        "partition_id": 0, "col_stats": "[]"}], 0)
+
+
+def test_overwrite_commit_never_strands_concurrent_writers(tmp_path):
+    """An overwrite commit deletes every concurrent writer's uncommitted
+    chunks; a later commit of such a writer used to publish manifests
+    pointing at the deleted files (an unreadable store).  Now the first
+    commit wins and every later one fails loudly, publishing nothing."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from dumpster.datasource import DumpsterWriter
+    from dumpster.engine import done_buckets
+
+    out = str(tmp_path / "store")
+    schema = StructType([StructField("x", LongType())])
+    append = DumpsterWriter({"path": out}, schema, overwrite=False)
+    first = DumpsterWriter({"path": out}, schema, overwrite=True)
+    second = DumpsterWriter({"path": out}, schema, overwrite=True)
+    msgs = {w: _fake_commit_message(out, w.bucket_base)
+            for w in (append, first, second)}
+    first.commit([msgs[first]])
+    for late in (append, second):
+        with pytest.raises(RuntimeError, match="concurrent overwrite"):
+            late.commit([msgs[late]])
+    assert done_buckets(out) == {first.bucket_base}
+    for m in glob.glob(os.path.join(out, "manifest", "b*.parquet")):
+        assert all(os.path.exists(f)
+                   for f in pq.read_table(m).column("file").to_pylist())
+
+
+def test_bucket_range_exhausted_names_a_working_remedy(tmp_path):
+    """The int32 bucket-range error told users to overwrite the store, but
+    an overwrite writer reserves a range at init too and hits the same
+    error; the remedy is a fresh out_dir."""
+    import json
+
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from dumpster.datasource import DumpsterWriter
+
+    out = tmp_path / "full"
+    out.mkdir()
+    (out / "_bucket_alloc.json").write_text(json.dumps({"next": 2**31 - 5}))
+    schema = StructType([StructField("x", LongType())])
+    with pytest.raises(ValueError, match="fresh out_dir") as exc:
+        DumpsterWriter({"path": str(out)}, schema, overwrite=True)
+    assert "overwrite it" not in str(exc.value)
+
+
+def test_near_dup_components_int_long_ids_keep_id_a_type(spark):
+    """The symmetric union matches columns by position: int id_a with long
+    id_b used to widen every returned id and label to long."""
+    from dumpster.dedup import near_dup_components
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (7, 8)],
+                                  "id_a int, id_b long")
+    out = near_dup_components(pairs)
+    assert dict(out.dtypes) == {"id": "int", "component": "int"}
+    assert {r["id"]: r["component"] for r in out.collect()} == \
+        {1: 1, 2: 1, 3: 1, 7: 7, 8: 7}
