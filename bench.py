@@ -97,7 +97,8 @@ def main():
     # --- JIT/worker warmup: tiny encode+decode on a throwaway dir so the
     # timed runs measure steady-state throughput, not first-job compilation
     warm = tempfile.mkdtemp(prefix="dumpster_bench_warm_")
-    encode_table(pages.limit(2000), warm, url_col="url", n_buckets=4,
+    encode_table(pages.limit(2000), warm, url_col="url", mode="salted",
+                 n_buckets=4,
                  chunk_rows=1024, table_id="warmup")
     decode_table(spark, warm).count()
     shutil.rmtree(warm, ignore_errors=True)
@@ -137,7 +138,8 @@ def main():
         # only cores vary — the two-cluster-size comparison's invariant).
         # Headline runs keep the adaptive default (2x parallelism).
         np_env = os.environ.get("DUMPSTER_BENCH_NUM_PARTITIONS")
-        man = encode_table(pages, out, url_col="url", n_buckets=N_BUCKETS,
+        man = encode_table(pages, out, url_col="url", mode="salted",
+                           n_buckets=N_BUCKETS,
                            salt_k=4, chunk_rows=65536, table_id="bench_pages",
                            num_partitions=int(np_env) if np_env else None)
         enc_trials.append(time.perf_counter() - t0)
@@ -261,7 +263,7 @@ def main():
         # per task), so this path keeps the sort and drops the shuffle.
         from dumpster.pipeline import prep_for_encode_local
         best = None
-        sink_salted_bytes = None
+        sink_local_bytes = None
         for _ in range(2):
             sink_root = tempfile.mkdtemp(prefix="dumpster_bench_sinks_")
             tdir = os.path.join(sink_root, "t")
@@ -269,17 +271,17 @@ def main():
             (prep_for_encode_local(pages, "url")
              .write.format("dumpster").option("bucket_col", "__bucket")
              .option("chunk_rows", "65536")
-             .option("table_id", "bench_pages_sink_salted")
+             .option("table_id", "bench_pages_sink_local")
              .mode("append").save(tdir))
             w = time.perf_counter() - t0
             best = w if best is None else min(best, w)
-            if sink_salted_bytes is None:
+            if sink_local_bytes is None:
                 from dumpster.engine import read_manifest
-                sink_salted_bytes = int(
+                sink_local_bytes = int(
                     read_manifest(spark, tdir)
                     .agg(F.sum("encoded_bytes")).collect()[0][0])
             shutil.rmtree(sink_root, ignore_errors=True)
-        timings["encode_pages_sink_salted"] = best
+        timings["encode_pages_sink_local"] = best
     enc_bytes = int(s["encoded_bytes"])
 
     # --- representative operator queries on the driver sf tables ------------
@@ -339,9 +341,9 @@ def main():
         result["encoded_bytes_local_mode"] = local_bytes
         result["reference_parquet_bytes"] = ref_bytes
         result["size_ratio_vs_reference"] = round(enc_bytes / ref_bytes, 4)
-        result["encoded_bytes_sink_salted"] = sink_salted_bytes
-        result["sink_salted_size_ratio_vs_reference"] = round(
-            sink_salted_bytes / ref_bytes, 4)
+        result["encoded_bytes_sink_local"] = sink_local_bytes
+        result["sink_local_size_ratio_vs_reference"] = round(
+            sink_local_bytes / ref_bytes, 4)
         # sf1 same-window anatomy (bench/anatomy_sf1.py) is summarized in
         # the printed line and written IN FULL to bench/BENCH_full_latest
         # .json — round 4 embedded the whole anatomy object here and the
@@ -368,11 +370,11 @@ def main():
                 "ref_write_sec": best.get("ref_write"),
                 "salted_encode_sec": best.get("salted_encode"),
                 "local_encode_sec": best.get("local_encode"),
-                "sink_salted_sec": best.get("sink_salted"),
+                "sink_local_sec": best.get("sink_local"),
                 "size_ratio_vs_reference":
                     a.get("size_ratio_vs_reference"),
-                "encode_sink_salted_gb_per_sec":
-                    a.get("encode_sink_salted_gb_per_sec"),
+                "encode_sink_local_gb_per_sec":
+                    a.get("encode_sink_local_gb_per_sec"),
             }
         try:
             with open(os.path.join(bench_dir,

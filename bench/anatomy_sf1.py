@@ -71,15 +71,16 @@ def main():
 
     # warmup
     warm = tempfile.mkdtemp(prefix="anat_warm_")
-    encode_table(pages.limit(2000), warm, url_col="url", n_buckets=4,
+    encode_table(pages.limit(2000), warm, url_col="url", mode="salted",
+                 n_buckets=4,
                  chunk_rows=1024, table_id="warmup")
     shutil.rmtree(warm, ignore_errors=True)
 
     trials: dict[str, list] = {k: [] for k in
                                ["scan_floor", "shuffle_floor", "ref_write",
                                 "salted_encode", "local_encode",
-                                "sink_salted", "codec_cpu_sum"]}
-    sink_salted_bytes = None
+                                "sink_local", "codec_cpu_sum"]}
+    sink_local_bytes = None
     enc_bytes = ref_bytes = None
     # Host noise shifts within a single round (identical components vary
     # up to 2-7× minutes apart), so the floor→salted RATIO is only
@@ -116,7 +117,8 @@ def main():
 
         out = tempfile.mkdtemp(prefix="anat_enc_")
         t0 = time.perf_counter()
-        man = encode_table(pages, out, url_col="url", n_buckets=N_BUCKETS,
+        man = encode_table(pages, out, url_col="url", mode="salted",
+                           n_buckets=N_BUCKETS,
                            salt_k=4, chunk_rows=65536, table_id="anat_pages")
         salted = time.perf_counter() - t0
         trials["salted_encode"].append(salted)
@@ -150,11 +152,11 @@ def main():
         (prep_for_encode_local(pages, "url")
          .write.format("dumpster").option("bucket_col", "__bucket")
          .option("chunk_rows", "65536")
-         .option("table_id", "anat_sink_salted")
+         .option("table_id", "anat_sink_local")
          .mode("append").save(tdir))
-        trials["sink_salted"].append(time.perf_counter() - t0)
-        if sink_salted_bytes is None:
-            sink_salted_bytes = int(
+        trials["sink_local"].append(time.perf_counter() - t0)
+        if sink_local_bytes is None:
+            sink_local_bytes = int(
                 read_manifest(spark, tdir)
                 .agg(F.sum("encoded_bytes")).collect()[0][0])
         shutil.rmtree(out_s, ignore_errors=True)
@@ -183,11 +185,11 @@ def main():
         "encoded_bytes": enc_bytes,
         "reference_parquet_bytes": ref_bytes,
         "size_ratio_vs_reference": round(enc_bytes / ref_bytes, 4),
-        "encode_sink_salted_gb_per_sec": round(
-            logical_bytes / best["sink_salted"] / 1e9, 4),
-        "encoded_bytes_sink_salted": sink_salted_bytes,
-        "sink_salted_size_ratio_vs_reference": round(
-            sink_salted_bytes / ref_bytes, 4),
+        "encode_sink_local_gb_per_sec": round(
+            logical_bytes / best["sink_local"] / 1e9, 4),
+        "encoded_bytes_sink_local": sink_local_bytes,
+        "sink_local_size_ratio_vs_reference": round(
+            sink_local_bytes / ref_bytes, 4),
     }
     spark.stop()
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),

@@ -65,7 +65,8 @@ def main():
     pages = spark.read.parquet(materialize_pages(spark, rows, cache, seed=42))
 
     out = tempfile.mkdtemp(prefix="dec_anat_")
-    encode_table(pages, out, url_col="url", n_buckets=N_BUCKETS, salt_k=4,
+    encode_table(pages, out, url_col="url", mode="salted",
+                 n_buckets=N_BUCKETS, salt_k=4,
                  chunk_rows=65536, table_id="dec_anat",
                  num_partitions=N_BUCKETS)
 

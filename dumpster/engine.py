@@ -2,8 +2,10 @@
 
 This is the replacement for the reference's sink path
 (RecordWriter.java:27-34: rows → AvroParquetWriter with Snappy +
-dictionary): here the DataFrame is explicitly repartitioned on a salted
-host bucket (pipeline.prep_for_encode), each task walks its Arrow batches
+dictionary): here each input split is one bucket, host-sorted in place
+with no shuffle (pipeline.prep_for_encode_local; ``mode="salted"`` opts
+into an explicit repartition on a salted host bucket instead,
+pipeline.prep_for_encode), each task walks its Arrow batches
 bucket-contiguously, slices them into chunks, pushes every column through
 the codec auto-selector (chunk.encode_chunk), writes chunk blobs, and —
 mirroring the reference's crash-consistency ordering of "data upload
@@ -13,11 +15,16 @@ of its chunks are durably renamed.  Resume = skip buckets whose manifest
 file exists, so a relaunched job encodes only the remainder
 (the reference gets the same property from deterministic filenames
 {partition}_{firstOffset}.parquet + offset replay,
-HourlyBasedRecordConsumer.java:157).
+HourlyBasedRecordConsumer.java:157).  Because a bucket id only means the
+same rows under the same layout, the store records its layout
+(``_layout.json``: the split plan in local mode) and a resume under a
+different one raises before any task runs.
 
 Scale notes (100 TB / 1000 executors):
-* one shuffle total, keyed by the salted bucket; n_buckets is the unit of
-  both parallelism and resume granularity — size it ≥ 2-3× total cores.
+* no shuffle by default: the input split is the unit of both parallelism
+  and resume granularity (spark.sql.files.maxPartitionBytes); under
+  ``mode="salted"`` one shuffle keyed by the salted bucket, and n_buckets
+  is that unit — size it ≥ 2-3× total cores.
 * all Python execution is Arrow-vectorized whole batches; no per-row
   Python anywhere (input_hint requirement).
 * chunk files + manifests go through a pluggable filesystem seam
@@ -30,6 +37,7 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import hashlib
 import json
 import numbers
 import os
@@ -177,6 +185,67 @@ def done_buckets(out_dir: str) -> set[int]:
             if _is_manifest_name(f)}
 
 
+_LAYOUT_FILE = "_layout.json"
+
+
+def _split_plan(df: DataFrame) -> dict:
+    """The input split plan that split-local bucket ids number, read on
+    the driver from the physical plan without running a Spark job.
+
+    When every leaf is a file scan, the plan is each split's (path,
+    start, length) list — it moves with spark.sql.files.maxPartitionBytes,
+    the input files and defaultParallelism, and is stored as a digest so
+    the record stays small at any file count.  Any other input is
+    fingerprinted by its partition count plus DataFrame.semanticHash()
+    (stable for one DataFrame, so a resume from another process or
+    another DataFrame over the same data raises rather than guesses).
+    """
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        # executing an adaptive plan would run its shuffle stages
+        n = plan.executedPlan().outputPartitioning().numPartitions()
+    else:
+        n = plan.execute().getNumPartitions()
+    leaves = plan.collectLeaves()
+    leaves = [leaves.apply(i) for i in range(leaves.size())]
+    if leaves and all(leaf.getClass().getSimpleName() == "FileSourceScanExec"
+                      for leaf in leaves):
+        splits = [[[f.filePath().toString(), f.start(), f.length()]
+                   for f in part.files()]
+                  for leaf in leaves for part in leaf.inputRDD().partitions()]
+        digest = hashlib.sha256(json.dumps(splits).encode()).hexdigest()
+        return {"partitions": n, "splits_sha256": digest}
+    return {"partitions": n, "semantic_hash": df.semanticHash()}
+
+
+def _check_layout(out_dir: str, record: dict, resume: bool) -> None:
+    """Refuse a resume whose bucket ids would not mean what they meant in
+    the run that committed them, then publish ``record`` as the store's
+    layout.  Runs before any task, so a refused resume writes nothing."""
+    path = os.path.join(out_dir, _LAYOUT_FILE)
+    with fslib.file_lock(path + ".lock"):
+        old = None
+        if os.path.exists(path):
+            with open(path) as f:
+                old = json.load(f)
+        # a store from before the record existed was written salted or
+        # with caller-chosen bucket ids; only a split-local resume of it
+        # would have to guess its split plan
+        if (resume and old != record and done_buckets(out_dir)
+                and (old is not None or record["layout"] == "local")):
+            why = (f"it was written with layout {old}, this run resolves "
+                   f"to {record}" if old is not None else
+                   "it has no layout record, so its split plan is unknown")
+            raise ValueError(
+                f"cannot resume {out_dir}: {why}, so its committed bucket "
+                f"ids would name different rows.  Rerun with the original "
+                f"split settings (files, spark.sql.files.maxPartitionBytes, "
+                f"core count, mode/n_buckets/salt_k), or use resume=False "
+                f"into a fresh out_dir")
+        if old != record:
+            _fs_write_atomic(path, json.dumps(record, sort_keys=True).encode())
+
+
 def _make_encoder(out_dir: str, table_id: str, chunk_rows: int,
                   chunk_bytes: int, allow_zlib: bool, skip: frozenset,
                   sorted_input: bool = True,
@@ -307,34 +376,53 @@ def _make_encoder(out_dir: str, table_id: str, chunk_rows: int,
 
 
 def encode_table(df: DataFrame, out_dir: str, *, url_col: str | None = None,
-                 bucket_expr=None, n_buckets: int = 32, salt_k: int = 4,
+                 bucket_expr=None, n_buckets: int | None = None,
+                 salt_k: int | None = None,
                  chunk_rows: int = DEFAULT_CHUNK_ROWS,
                  chunk_bytes: int = DEFAULT_CHUNK_BYTES,
                  table_id: str | None = None, allow_zlib: bool = True,
                  resume: bool = True,
                  host_major: bool = True,
                  order_cols: tuple[str, ...] = (),
-                 mode: str = "salted",
+                 mode: str = "local",
                  bucket_col: str | None = None,
                  bucket_subdirs: dict | None = None,
                  fs=None,
                  num_partitions: int | None = None) -> DataFrame:
     """Encode ``df`` into chunk files + manifest under ``out_dir``.
 
-    Bucketing: pass ``url_col`` for web-page tables (salted host buckets,
-    pipeline.salted_bucket) or ``bucket_expr`` (any int Column) for other
-    tables; default falls back to hashing all columns.
     Returns the manifest as a DataFrame (one row per chunk =
     per-partition lineage + metrics, the north_rule requirement).
 
-    ``mode="salted"`` (default) repartitions on the salted host bucket —
-    the north_rule's explicit skew-handled, host-grouped layout.
-    ``mode="local"`` encodes each input split in place with NO shuffle
-    (pipeline.prep_for_encode_local): bucket = spark_partition_id(), so
-    resume granularity is the input split; ~2× table size of cluster I/O
-    saved at the cost of split-local (not global) host grouping.  Resume
-    in local mode assumes the same scan partitioning across runs (same
-    files + same spark.sql.files.maxPartitionBytes).
+    Layout — the first that applies decides the bucket id:
+
+    1. ``bucket_col``: the column's int value (routing metadata, not
+       stored); ``n_buckets`` sizes the repartition.
+    2. ``bucket_expr``: any int Column; ``n_buckets`` sizes the
+       repartition.
+    3. ``mode="local"`` (default): each input split is encoded in place
+       with NO shuffle (pipeline.prep_for_encode_local), bucket =
+       spark_partition_id(); ``url_col`` adds a host sort inside each
+       split.  Parallelism and resume granularity are the input split,
+       tuned with spark.sql.files.maxPartitionBytes; passing
+       ``n_buckets``, ``salt_k`` or ``num_partitions`` raises, because
+       they only size the salted layout.
+    4. ``mode="salted"``: one shuffle on the salted host bucket of
+       ``url_col`` (pipeline.prep_for_encode; ``n_buckets`` 32,
+       ``salt_k`` 4 and ``num_partitions`` auto by default) — an exact
+       global host-major layout; without ``url_col`` the bucket is a
+       hash of all columns.
+
+    Resume skips every bucket whose manifest file exists, so it is
+    correct only when a bucket id means the same rows as in the run
+    that wrote it.  The store's ``_layout.json`` records the layout
+    (for ``local`` the input split plan, for ``salted`` its sizing);
+    resuming a store that has committed buckets under a different
+    record — a changed split size or core count in local mode — raises
+    ValueError before any task runs.  A store written before the record
+    existed resumes only under ``mode="salted"``, ``bucket_expr`` or
+    ``bucket_col``.  The remedy is to rerun with the original settings,
+    or ``resume=False`` into a fresh ``out_dir``.
     """
     spark = df.sparkSession
     if mode not in ("salted", "local"):
@@ -352,8 +440,28 @@ def encode_table(df: DataFrame, out_dir: str, *, url_col: str | None = None,
             raise ValueError(
                 f"column name(s) {bad} contain {FLAT_SEP!r}, which is the "
                 f"struct-flattening separator; rename them before encoding")
+    layout = ("bucket_col" if bucket_col is not None
+              else "bucket_expr" if bucket_expr is not None else mode)
+    if layout == "local":
+        salted_only = [k for k, v in (("n_buckets", n_buckets),
+                                      ("salt_k", salt_k),
+                                      ("num_partitions", num_partitions))
+                       if v is not None]
+        if salted_only:
+            raise ValueError(
+                f"{', '.join(salted_only)} size the salted layout, but this "
+                f"encode uses the split-local layout (one bucket per input "
+                f"split); pass mode=\"salted\" to use them")
+    n_buckets = 32 if n_buckets is None else n_buckets
+    salt_k = 4 if salt_k is None else salt_k
+    record = {"layout": layout}
+    if layout == "salted":
+        record.update(url_col=url_col, n_buckets=n_buckets, salt_k=salt_k)
+    elif layout == "local":
+        record.update(_split_plan(df))
     os.makedirs(os.path.join(out_dir, "chunks"), exist_ok=True)
     os.makedirs(os.path.join(out_dir, "manifest"), exist_ok=True)
+    _check_layout(out_dir, record, resume)
     table_id = table_id or os.path.basename(os.path.normpath(out_dir))
 
     if bucket_col is not None:
@@ -400,12 +508,12 @@ def encode_table(df: DataFrame, out_dir: str, *, url_col: str | None = None,
 
     done = done_buckets(out_dir) if resume else set()
 
-    if bucket_col is not None:
+    if layout == "bucket_col":
         prepped = (df.repartition(n_buckets, "__bucket")
                    .sortWithinPartitions("__bucket", *order_cols))
-    elif mode == "local":
+    elif layout == "local":
         prepped = prep_for_encode_local(df, url_col, order_cols)
-    elif url_col is not None:
+    elif layout == "salted" and url_col is not None:
         prepped = prep_for_encode(df, url_col, n_buckets, salt_k, order_cols,
                                   host_major=host_major,
                                   num_partitions=num_partitions)

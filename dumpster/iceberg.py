@@ -69,8 +69,12 @@ def encode_iceberg(spark: SparkSession, table: str, out_dir: str, *,
                    loader=None,
                    **encode_kw) -> DataFrame:
     """Encode an Iceberg table into a dumpster store: the north-star
-    pipeline in one call (Iceberg snapshot scan → salted encode →
-    chunk manifests).  Returns the manifest DataFrame.
+    pipeline in one call (Iceberg snapshot scan → encode →
+    chunk manifests).  Returns the manifest DataFrame.  ``encode_kw`` is
+    passed to engine.encode_table, so the default layout is split-local
+    (one bucket per scan split, no shuffle) and ``mode="salted"`` opts
+    into the shuffled global layout; resuming needs the same snapshot
+    split plan.
 
     ``loader`` (spark, table) -> DataFrame overrides the Iceberg reader —
     the jarless-test seam, and open for any other table provider.

@@ -22,9 +22,12 @@ Example config::
 
     output:
       path: /data/encoded            # one sub-directory per table
-      mode: salted                   # salted | local | hourly
-      n_buckets: 64
-      salt_k: 4
+      mode: local                    # local (default: one bucket per
+                                     # input split, no shuffle; resume
+                                     # needs the same split plan) |
+                                     # salted | hourly
+      n_buckets: 64                  # salted tables only
+      salt_k: 4                      # salted tables only
       chunk_rows: 65536
     catalog:
       register_views: true
@@ -32,7 +35,8 @@ Example config::
     tables:
       - name: pages
         input: /data/pages.parquet
-        url_col: url                 # salted-mode host bucketing
+        url_col: url                 # host sort (local) or salted
+                                     # host bucketing (salted)
       - name: events
         input: /data/events.parquet
         mode: hourly                 # dt=/hr= reference tree
@@ -56,7 +60,7 @@ from pyspark.sql import SparkSession
 class TableJob:
     name: str
     input: str
-    mode: str = "salted"          # salted | local | hourly | stream_hourly
+    mode: str = "local"           # local | salted | hourly | stream_hourly
     url_col: str | None = None
     ts_col: str = "warc_ts"
     n_buckets: int | None = None
@@ -81,9 +85,9 @@ class TableJob:
 @dataclass
 class JobConfig:
     out_path: str
-    mode: str = "salted"
-    n_buckets: int = 32
-    salt_k: int = 4
+    mode: str = "local"
+    n_buckets: int | None = None    # salted tables only (engine default 32)
+    salt_k: int | None = None       # salted tables only (engine default 4)
     chunk_rows: int = 65536
     register_views: bool = False
     view_prefix: str = "dumpster_"
@@ -98,9 +102,9 @@ def load_config(path: str) -> JobConfig:
     cat = raw.get("catalog") or {}
     cfg = JobConfig(
         out_path=out["path"],
-        mode=out.get("mode", "salted"),
-        n_buckets=int(out.get("n_buckets", 32)),
-        salt_k=int(out.get("salt_k", 4)),
+        mode=out.get("mode", "local"),
+        n_buckets=out.get("n_buckets"),
+        salt_k=out.get("salt_k"),
         chunk_rows=int(out.get("chunk_rows", 65536)),
         register_views=bool(cat.get("register_views", False)),
         view_prefix=cat.get("prefix", "dumpster_"),
@@ -181,10 +185,14 @@ def run_jobs(spark: SparkSession, cfg: JobConfig) -> list[dict]:
                 df, out_dir, ts_col=t.ts_col, chunk_rows=chunk_rows,
                 table_id=t.name)
         else:
+            # the output-level sizing is a default for salted tables; a
+            # table-level one is passed as given, so a local table that
+            # sets it fails loudly instead of ignoring it
+            salted = t.mode == "salted"
             man = encode_table(
                 df, out_dir, url_col=t.url_col,
-                n_buckets=t.n_buckets or cfg.n_buckets,
-                salt_k=t.salt_k or cfg.salt_k,
+                n_buckets=t.n_buckets or (cfg.n_buckets if salted else None),
+                salt_k=t.salt_k or (cfg.salt_k if salted else None),
                 chunk_rows=chunk_rows, table_id=t.name, mode=t.mode)
         s = encode_summary(man)
         summary = {"table": t.name, "mode": t.mode, "out": out_dir,

@@ -217,10 +217,15 @@ def prep_for_encode_local(df: DataFrame, url_col: str | None,
 
     Tradeoff vs prep_for_encode (the salted-shuffle path): at 100 TB the
     shuffle costs ~2× table size in cluster I/O; skipping it roughly
-    doubles encode throughput, but chunks are host-grouped only within a
-    split, so the compression ratio and cross-file zone-map tightness of
-    the host-major global layout are partially lost.  Parallelism is
-    tuned with spark.sql.files.maxPartitionBytes, not n_buckets.
+    doubles encode throughput, and chunks are host-grouped only within a
+    split.  Measured, that costs no compression: encoded bytes are within
+    0.01% of the global salted layout at sf0.1 and sf1 (2,018,640,074
+    local vs 2,018,786,063 salted at sf1), and on the 6k-row ``pages``
+    benchmark the store is 0.970× the reference Parquet vs 0.973× salted,
+    in 4 chunks instead of 32.  What is lost is the cross-file zone-map
+    tightness of the global host-major layout.  Parallelism is tuned with
+    spark.sql.files.maxPartitionBytes, not n_buckets; this is
+    encode_table's default layout.
     """
     out = df
     sort_cols = list(order_cols)

@@ -10,6 +10,7 @@ The north_rule invariants:
 
 import glob
 import os
+import pathlib
 import shutil
 
 import pytest
@@ -39,7 +40,8 @@ def _assert_same(df_a, df_b):
 
 
 def test_roundtrip_bit_identical(spark, pages, out_dir):
-    man = encode_table(pages, out_dir, url_col="url", n_buckets=8,
+    man = encode_table(pages, out_dir, url_col="url", mode="salted",
+                       n_buckets=8,
                        chunk_rows=512)
     dec = decode_table(spark, out_dir)
     assert dec.count() == N_ROWS
@@ -51,7 +53,8 @@ def test_roundtrip_bit_identical(spark, pages, out_dir):
 
 
 def test_manifest_is_lineage_and_metrics(spark, pages, out_dir):
-    man = encode_table(pages, out_dir, url_col="url", n_buckets=8,
+    man = encode_table(pages, out_dir, url_col="url", mode="salted",
+                       n_buckets=8,
                        chunk_rows=512)
     s = encode_summary(man)
     assert s["rows"] == N_ROWS
@@ -64,14 +67,16 @@ def test_manifest_is_lineage_and_metrics(spark, pages, out_dir):
 
 
 def test_column_pruned_decode(spark, pages, out_dir):
-    encode_table(pages, out_dir, url_col="url", n_buckets=4, chunk_rows=512)
+    encode_table(pages, out_dir, url_col="url", mode="salted",
+                 n_buckets=4, chunk_rows=512)
     two = decode_table(spark, out_dir, columns=["url", "lang"])
     assert two.columns == ["url", "lang"]
     _assert_same(pages.select("url", "lang"), two)
 
 
 def test_resume_encodes_only_missing_buckets(spark, pages, out_dir):
-    encode_table(pages, out_dir, url_col="url", n_buckets=8, chunk_rows=512)
+    encode_table(pages, out_dir, url_col="url", mode="salted",
+                 n_buckets=8, chunk_rows=512)
     full_files = set(glob.glob(os.path.join(out_dir, "chunks", "*.dmc")))
 
     # simulate a crash that lost 3 buckets (manifest is the commit record)
@@ -86,7 +91,8 @@ def test_resume_encodes_only_missing_buckets(spark, pages, out_dir):
     surviving = {f: os.path.getmtime(f)
                  for f in glob.glob(os.path.join(out_dir, "chunks", "*.dmc"))}
 
-    man = encode_table(pages, out_dir, url_col="url", n_buckets=8,
+    man = encode_table(pages, out_dir, url_col="url", mode="salted",
+                       n_buckets=8,
                        chunk_rows=512, resume=True)
     assert len(done_buckets(out_dir)) == 8
     # untouched buckets were not re-encoded
@@ -97,10 +103,12 @@ def test_resume_encodes_only_missing_buckets(spark, pages, out_dir):
 
 
 def test_resume_noop_when_complete(spark, pages, out_dir):
-    encode_table(pages, out_dir, url_col="url", n_buckets=4, chunk_rows=512)
+    encode_table(pages, out_dir, url_col="url", mode="salted",
+                 n_buckets=4, chunk_rows=512)
     mtimes = {f: os.path.getmtime(f)
               for f in glob.glob(os.path.join(out_dir, "*", "*"))}
-    encode_table(pages, out_dir, url_col="url", n_buckets=4, chunk_rows=512,
+    encode_table(pages, out_dir, url_col="url", mode="salted",
+                 n_buckets=4, chunk_rows=512,
                  resume=True)
     after = {f: os.path.getmtime(f)
              for f in glob.glob(os.path.join(out_dir, "*", "*"))}
@@ -123,7 +131,7 @@ def test_size_le_reference_parquet(spark, pages, tmp_path):
                     for f in glob.glob(os.path.join(ref, "*.parquet")))
 
     out = str(tmp_path / "enc")
-    man = encode_table(pages, out, url_col="url", n_buckets=4,
+    man = encode_table(pages, out, url_col="url", mode="salted", n_buckets=4,
                        chunk_rows=4096)
     enc_bytes = sum(os.path.getsize(f)
                     for f in glob.glob(os.path.join(out, "chunks", "*.dmc")))
@@ -149,10 +157,12 @@ def test_synth_deterministic_across_parallelism(spark):
     assert b.exceptAll(a).count() == 0
 
 
-def test_local_mode_zero_shuffle_roundtrip(spark, pages, out_dir):
-    """mode='local': no exchange at all — bucket = input split.  Round-trip
-    must stay bit-identical and the physical plan must contain no shuffle
-    between the scan and the encode mapInArrow."""
+@pytest.mark.parametrize("layout", [{"mode": "local"}, {}],
+                         ids=["mode_local", "default"])
+def test_local_mode_zero_shuffle_roundtrip(spark, pages, out_dir, layout):
+    """mode='local' (also the default): no exchange at all — bucket = input
+    split.  Round-trip must stay bit-identical and the physical plan must
+    contain no shuffle between the scan and the encode mapInArrow."""
     from dumpster.pipeline import prep_for_encode_local
 
     plan = prep_for_encode_local(pages, "url")._jdf.queryExecution() \
@@ -160,7 +170,7 @@ def test_local_mode_zero_shuffle_roundtrip(spark, pages, out_dir):
     assert "Exchange" not in plan, plan
 
     man = encode_table(pages, out_dir, url_col="url", table_id="lm",
-                       mode="local", chunk_rows=512)
+                       chunk_rows=512, **layout)
     dec = decode_table(spark, out_dir)
     _assert_same(pages, dec)
     # lineage rows carry the split id as the bucket
@@ -183,6 +193,71 @@ def test_local_mode_resume_encodes_only_missing_split(spark, pages, out_dir):
     for f, mt in survivor_chunks.items():
         assert os.path.getmtime(f) == mt, f"untouched chunk rewritten: {f}"
     _assert_same(pages, decode_table(spark, out_dir))
+
+
+def _store_state(out_dir):
+    layout = pathlib.Path(out_dir, "_layout.json")
+    return (done_buckets(out_dir),
+            sorted(glob.glob(os.path.join(out_dir, "chunks", "*.dmc"))),
+            layout.read_text() if layout.exists() else None)
+
+
+def test_local_resume_refuses_changed_split_plan(spark, tmp_path):
+    """Split-local bucket ids number the input splits, so resuming under
+    another split plan would skip the wrong rows (a resume at a smaller
+    maxPartitionBytes used to decode 1.5x the source rows).  It must
+    raise before any task runs and publish nothing; the original split
+    settings still resume."""
+    src = str(tmp_path / "src")
+    synth_pages(spark, 1200, seed=11).repartition(3).write.parquet(src)
+    out = str(tmp_path / "enc")
+    encode_table(spark.read.parquet(src), out, url_col="url",
+                 chunk_rows=512)
+    mfiles = sorted(glob.glob(os.path.join(out, "manifest", "*.parquet")))
+    assert len(mfiles) >= 2
+    os.remove(mfiles[0])
+    before = _store_state(out)
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(256 * 1024))
+    try:
+        with pytest.raises(ValueError, match="cannot resume"):
+            encode_table(spark.read.parquet(src), out, url_col="url",
+                         chunk_rows=512)
+    finally:
+        spark.conf.set(key, prev)
+    assert _store_state(out) == before
+    encode_table(spark.read.parquet(src), out, url_col="url",
+                 chunk_rows=512)
+    _assert_same(spark.read.parquet(src), decode_table(spark, out))
+
+
+def test_default_resume_of_salted_store_raises(spark, pages, out_dir):
+    """A salted store — with its layout record, or written before the
+    record existed — is not resumed under the split-local default: the
+    salted bucket ids name other rows.  Explicit mode='salted' resumes."""
+    encode_table(pages, out_dir, url_col="url", mode="salted", n_buckets=4,
+                 chunk_rows=512)
+    with pytest.raises(ValueError, match="cannot resume"):
+        encode_table(pages, out_dir, url_col="url", chunk_rows=512)
+    os.remove(os.path.join(out_dir, "_layout.json"))
+    with pytest.raises(ValueError, match="no layout record"):
+        encode_table(pages, out_dir, url_col="url", chunk_rows=512)
+    assert not os.path.exists(os.path.join(out_dir, "_layout.json"))
+    encode_table(pages, out_dir, url_col="url", mode="salted", n_buckets=4,
+                 chunk_rows=512)
+    assert len(done_buckets(out_dir)) == 4
+    _assert_same(pages, decode_table(spark, out_dir))
+
+
+@pytest.mark.parametrize("sizing", [{"n_buckets": 8}, {"salt_k": 2},
+                                    {"num_partitions": 4}])
+def test_split_local_layout_rejects_salted_sizing(pages, out_dir, sizing):
+    """n_buckets / salt_k / num_partitions only size the salted layout; the
+    split-local default used to ignore them silently."""
+    with pytest.raises(ValueError, match='mode="salted"'):
+        encode_table(pages, out_dir, url_col="url", **sizing)
+    assert not glob.glob(os.path.join(out_dir, "manifest", "*.parquet"))
 
 
 def test_partitioned_encode_reference_layout(spark, pages, out_dir):
@@ -222,7 +297,8 @@ def test_verify_chunks_and_skip_on_error(spark, pages, out_dir):
     scans around it."""
     from dumpster.engine import verify_chunks
 
-    encode_table(pages, out_dir, url_col="url", n_buckets=4, chunk_rows=512)
+    encode_table(pages, out_dir, url_col="url", mode="salted",
+                 n_buckets=4, chunk_rows=512)
     v = verify_chunks(spark, out_dir)
     assert v.filter(~F.col("ok")).count() == 0
     assert v.agg(F.sum("n_rows")).collect()[0][0] == N_ROWS
@@ -250,7 +326,8 @@ def test_verify_chunks_and_skip_on_error(spark, pages, out_dir):
 def test_zone_filter_conjunction(spark, pages, out_dir):
     """AND of two zone ranges prunes at least as hard as either alone and
     never loses a matching row."""
-    encode_table(pages, out_dir, url_col="url", n_buckets=4, chunk_rows=256,
+    encode_table(pages, out_dir, url_col="url", mode="salted",
+                 n_buckets=4, chunk_rows=256,
                  order_cols=("warc_ts",), host_major=False)
     man_rows = read_manifest(spark, out_dir).select("file", "col_stats").collect()
     from dumpster.engine import prune_manifest_files
@@ -322,7 +399,8 @@ def test_clean_orphans_reclaims_crash_garbage(spark, pages, out_dir):
     referenced chunks and the decoded table are untouched."""
     from dumpster.engine import clean_orphans
 
-    encode_table(pages, out_dir, url_col="url", n_buckets=4, chunk_rows=512)
+    encode_table(pages, out_dir, url_col="url", mode="salted",
+                 n_buckets=4, chunk_rows=512)
     chunks_dir = os.path.join(out_dir, "chunks")
     # plant crash garbage: a partial .tmp and an orphaned chunk with no
     # manifest entry
@@ -353,7 +431,8 @@ def test_concurrent_duplicate_encode_is_safe(spark, pages, out_dir):
 
     def job():
         try:
-            encode_table(pages, out_dir, url_col="url", n_buckets=8,
+            encode_table(pages, out_dir, url_col="url", mode="salted",
+                         n_buckets=8,
                          chunk_rows=512, table_id="race", resume=True)
         except Exception as e:  # noqa: BLE001 - recorded for the assert
             errs.append(repr(e))
@@ -370,7 +449,8 @@ def test_concurrent_duplicate_encode_is_safe(spark, pages, out_dir):
 def test_all_decode_knobs_compose(spark, pages, out_dir):
     """zone_filter + columns + path_glob + on_error='skip' in one decode:
     the pruning layers and the error guard must compose, not interact."""
-    encode_table(pages, out_dir, url_col="url", n_buckets=4, chunk_rows=256,
+    encode_table(pages, out_dir, url_col="url", mode="salted",
+                 n_buckets=4, chunk_rows=256,
                  order_cols=("warc_ts",), host_major=False)
     lo, hi = pages.agg(F.min("warc_ts"), F.max("warc_ts")).collect()[0]
     cutoff = lo + (hi - lo) / 4
@@ -396,7 +476,8 @@ def test_clean_orphans_survives_out_dir_respelling(spark, pages, tmp_path):
     from dumpster.engine import clean_orphans
 
     out = str(tmp_path / "enc_respell")
-    encode_table(pages, out, url_col="url", n_buckets=4, chunk_rows=512)
+    encode_table(pages, out, url_col="url", mode="salted",
+                 n_buckets=4, chunk_rows=512)
     link = str(tmp_path / "alias")
     os.symlink(out, link)
     respelled = os.path.join(str(tmp_path), ".", "alias")
@@ -416,7 +497,8 @@ def test_clean_orphans_refuses_when_manifest_empty(spark, pages, tmp_path):
     from dumpster.engine import clean_orphans
 
     out = str(tmp_path / "enc_refuse")
-    encode_table(pages, out, url_col="url", n_buckets=4, chunk_rows=512)
+    encode_table(pages, out, url_col="url", mode="salted",
+                 n_buckets=4, chunk_rows=512)
     # simulate manifest loss
     for f in os.listdir(os.path.join(out, "manifest")):
         os.remove(os.path.join(out, "manifest", f))
@@ -434,7 +516,8 @@ def test_clean_orphans_never_collects_file_rows(spark, pages, tmp_path,
     from dumpster.engine import clean_orphans
 
     out = str(tmp_path / "enc_nocollect")
-    encode_table(pages, out, url_col="url", n_buckets=4, chunk_rows=512)
+    encode_table(pages, out, url_col="url", mode="salted",
+                 n_buckets=4, chunk_rows=512)
     open(os.path.join(out, "chunks", "b000099_c00000.dmc"), "wb") \
         .write(b"orphan")
 

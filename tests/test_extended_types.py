@@ -107,7 +107,8 @@ def test_engine_roundtrip_decimal_and_string_lists(spark, tmp_path):
                   .otherwise((F.col("id").cast("decimal(38,10)") * -3))
                   .alias("big")))
     out = str(tmp_path / "exttab")
-    encode_table(df, out, n_buckets=4, chunk_rows=512, table_id="ext")
+    encode_table(df, out, mode="salted",
+                 n_buckets=4, chunk_rows=512, table_id="ext")
     dec = decode_table(spark, out)
     # names/types identical; decode reports every field NULLABLE by
     # design (a later shrinking-schema writer's chunks may lack any

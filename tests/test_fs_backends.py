@@ -51,7 +51,7 @@ def _crashing_encode(spark, pages, out, fs):
     # ~= 500 rows -> ~8 chunks per bucket; the url->bucket hash is
     # fixed by seed=7, so the layout never varies run to run).
     with pytest.raises(Exception):
-        encode_table(pages, out, url_col="url", n_buckets=4,
+        encode_table(pages, out, url_col="url", mode="salted", n_buckets=4,
                      chunk_rows=64, table_id="t", fs=fs)
 
 
@@ -91,7 +91,7 @@ def test_directput_crash_then_resume_bit_identical(spark, pages, tmp_path,
     # resume overwrites uncommitted chunks by deterministic name; staging
     # garbage from cancelled sibling tasks (simulated multipart parts) is
     # never load-bearing and is swept by clean_orphans afterwards
-    encode_table(pages, out, url_col="url", n_buckets=4,
+    encode_table(pages, out, url_col="url", mode="salted", n_buckets=4,
                  chunk_rows=256, table_id="t", fs=DirectPutFS())
     _assert_same(pages, decode_table(spark, out))
     # crash leftovers (run-1 chunks the resume didn't overwrite, staging
@@ -114,14 +114,14 @@ def test_directput_crash_after_manifest_publish_resumes(spark, pages,
                          "manifest", "b")))
     from dumpster.engine import done_buckets
     assert done_buckets(out)   # at least one bucket committed before dying
-    encode_table(pages, out, url_col="url", n_buckets=4,
+    encode_table(pages, out, url_col="url", mode="salted", n_buckets=4,
                  chunk_rows=256, table_id="t", fs=DirectPutFS())
     _assert_same(pages, decode_table(spark, out))
 
 
 def test_directput_clean_run_no_rename_artifacts(spark, pages, tmp_path):
     out = str(tmp_path / "enc_clean")
-    encode_table(pages, out, url_col="url", n_buckets=4,
+    encode_table(pages, out, url_col="url", mode="salted", n_buckets=4,
                  chunk_rows=256, table_id="t", fs=DirectPutFS())
     _assert_same(pages, decode_table(spark, out))
     for root, _d, files in os.walk(out):
@@ -170,7 +170,7 @@ def test_clean_orphans_sweeps_inflight_staging(spark, pages, tmp_path):
     """A hard crash between DirectPutFS staging and publish leaves an
     .inflight file; clean_orphans must reclaim it like .tmp garbage."""
     out = str(tmp_path / "enc_inflight")
-    encode_table(pages, out, url_col="url", n_buckets=4,
+    encode_table(pages, out, url_col="url", mode="salted", n_buckets=4,
                  chunk_rows=256, table_id="t", fs=DirectPutFS())
     victim = os.path.join(out, "chunks",
                           "b000001_c00000.dmc.inflight-999-1-7")

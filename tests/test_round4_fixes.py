@@ -48,7 +48,8 @@ def test_done_buckets_ignores_foreign_manifest_files(spark, tmp_path):
     b*.parquet) in manifest/ must be ignored, not crash every resume."""
     out = str(tmp_path / "enc")
     pages = synth_pages(spark, 300, seed=3)
-    encode_table(pages, out, url_col="url", n_buckets=2, table_id="t")
+    encode_table(pages, out, url_col="url", mode="salted",
+                 n_buckets=2, table_id="t")
     before = done_buckets(out)
     n_manifest = read_manifest(spark, out).count()
     # foreign droppings: a backup copy and junk that matches b*.parquet
@@ -61,7 +62,8 @@ def test_done_buckets_ignores_foreign_manifest_files(spark, tmp_path):
     assert read_manifest(spark, out).count() == n_manifest
     assert decode_table(spark, out).count() == 300
     # resume path: all buckets done -> no-op, must not raise
-    encode_table(pages, out, url_col="url", n_buckets=2, table_id="t",
+    encode_table(pages, out, url_col="url", mode="salted",
+                 n_buckets=2, table_id="t",
                  resume=True)
 
 

@@ -90,7 +90,8 @@ def pages_view(spark, tmp_path_factory):
     from dumpster.synth import synth_pages
     out = str(tmp_path_factory.mktemp("sqlfront_pages"))
     df = synth_pages(spark, 20000, seed=5)
-    encode_table(df, out, url_col="url", n_buckets=2, chunk_rows=8192,
+    encode_table(df, out, url_col="url", mode="salted",
+                 n_buckets=2, chunk_rows=8192,
                  table_id="sqlfront_pages")
     register_decoded_view(spark, out, "sf_pages", pushdown=True)
     return out

@@ -82,8 +82,7 @@ def test_stream_sink_roundtrip_and_layout(spark, tmp_path):
 
     # the stream layout feeds compact_stream unchanged
     dst = str(tmp_path / "compacted")
-    compact_stream(spark, out, dst, n_buckets=4, chunk_rows=4096,
-                   mode="local")
+    compact_stream(spark, out, dst, chunk_rows=4096, mode="local")
     from dumpster.engine import decode_table
     folded = decode_table(spark, dst)
     assert folded.count() == 600

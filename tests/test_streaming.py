@@ -25,13 +25,13 @@ def test_stream_encode_decode_roundtrip(spark, tmp_path):
               .option("maxFilesPerTrigger", "1")
               .parquet(os.path.join(src, "*")))
     q = encode_stream(stream, out, checkpoint=ckpt, url_col="url",
-                      n_buckets=4, chunk_rows=512)
+                      mode="salted", n_buckets=4, chunk_rows=512)
     q.awaitTermination(120)
 
     # second micro-batch arrives later; availableNow query restarts
     b.write.mode("overwrite").parquet(os.path.join(src, "p2"))
     q2 = encode_stream(stream, out, checkpoint=ckpt, url_col="url",
-                       n_buckets=4, chunk_rows=512)
+                       mode="salted", n_buckets=4, chunk_rows=512)
     q2.awaitTermination(120)
 
     dec = decode_stream_table(spark, out)
@@ -53,7 +53,7 @@ def test_stream_manifest_batch_id_ignores_parent_batch_dir(spark, tmp_path):
     pages = synth_pages(spark, 200, seed=3)
     for bid in (0, 1):
         encode_table(pages, str(out / f"batch={bid}"), url_col="url",
-                     n_buckets=2, table_id=f"b{bid}")
+                     mode="salted", n_buckets=2, table_id=f"b{bid}")
     man = stream_manifest(spark, str(out))
     got = {r["batch_id"]: r["rows"] for r in
            man.groupBy("batch_id").agg(F.sum("n_rows").alias("rows"))
@@ -185,13 +185,15 @@ def test_compact_stream_merges_chunklets(spark, tmp_path):
                   .option("maxFilesPerTrigger", "1")
                   .parquet(os.path.join(src, "*")))
         encode_stream(stream, out, checkpoint=ckpt, url_col="url",
-                      n_buckets=4, chunk_rows=256).awaitTermination(120)
+                      mode="salted", n_buckets=4,
+                      chunk_rows=256).awaitTermination(120)
 
     small = _glob.glob(os.path.join(out, "batch=*", "chunks", "*.dmc"))
     assert len(small) > 8
 
     dst = str(tmp_path / "compacted")
-    man = compact_stream(spark, out, dst, url_col="url", n_buckets=2,
+    man = compact_stream(spark, out, dst, url_col="url", mode="salted",
+                         n_buckets=2,
                          chunk_rows=65536)
     big = _glob.glob(os.path.join(dst, "chunks", "*.dmc"))
     assert len(big) < len(small) / 2

@@ -293,7 +293,7 @@ def test_concurrent_bucket_col_writers_serialize(spark, tmp_path):
 
 def test_bucket_col_prep_local_hostsorted_roundtrip(spark, tmp_path):
     """The zero-shuffle host-grouped sink path benched as
-    encode_pages_sink_salted (r3 next-round #3): prep_for_encode_local
+    encode_pages_sink_local (r3 next-round #3): prep_for_encode_local
     host-sorts each split, the writer takes __bucket = partition id.
     Round-trip must be exact and the routing column must not be stored."""
     from dumpster.synth import synth_pages

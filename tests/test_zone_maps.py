@@ -16,7 +16,8 @@ from dumpster.synth import synth_pages
 def test_zone_maps_present_in_manifest(spark, tmp_path):
     pages = synth_pages(spark, 1000, seed=3)
     out = str(tmp_path / "enc")
-    man = encode_table(pages, out, url_col="url", n_buckets=4, chunk_rows=256,
+    man = encode_table(pages, out, url_col="url", mode="salted",
+                       n_buckets=4, chunk_rows=256,
                        order_cols=("warc_ts",))
     stats = json.loads(man.limit(1).collect()[0]["col_stats"])
     by_col = {s["column"]: s for s in stats}
@@ -28,7 +29,8 @@ def test_zone_maps_present_in_manifest(spark, tmp_path):
 def test_zone_filter_prunes_and_preserves_results(spark, tmp_path):
     pages = synth_pages(spark, 4000, seed=5).cache()
     out = str(tmp_path / "enc")
-    encode_table(pages, out, url_col="url", n_buckets=4, chunk_rows=256,
+    encode_table(pages, out, url_col="url", mode="salted",
+                 n_buckets=4, chunk_rows=256,
                  order_cols=("warc_ts",), host_major=False)
     lo = datetime.datetime(2026, 1, 1, 0, 10)
     hi = datetime.datetime(2026, 1, 1, 0, 20)
@@ -50,7 +52,8 @@ def test_zone_filter_prunes_and_preserves_results(spark, tmp_path):
 def test_zone_filter_conservative_on_missing_stats(spark, tmp_path):
     pages = synth_pages(spark, 300, seed=6)
     out = str(tmp_path / "enc")
-    encode_table(pages, out, url_col="url", n_buckets=2, chunk_rows=128)
+    encode_table(pages, out, url_col="url", mode="salted",
+                 n_buckets=2, chunk_rows=128)
     rows = read_manifest(spark, out).select("file", "col_stats").collect()
     # filtering on a var column (no stats) keeps everything
     kept = prune_manifest_files(rows, ("text", 0, 1))

@@ -57,7 +57,7 @@ def main() -> None:
 
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     out = tempfile.mkdtemp(prefix="pyfiles_demo_")
-    man = encode_table(docs, out, n_buckets=8, chunk_rows=2048,
+    man = encode_table(docs, out, chunk_rows=2048,
                        table_id="pyfiles_demo")
     dec = decode_table(spark, out)
     mismatch = docs.exceptAll(dec).count() + dec.exceptAll(docs).count()
