@@ -703,7 +703,7 @@ def q_compact_stream_roundtrip(spark, sf):
                      n_buckets=2, chunk_rows=32,
                      table_id=f"compact_src_{b}")
     dst = tempfile.mkdtemp(prefix="dumpster_q_compact_dst_")
-    compact_stream(spark, src, dst, chunk_rows=65536,
+    compact_stream(spark, src, dst, chunk_rows=65536, mode="local",
                    table_id="compacted_docs")
     return decode_table(spark, dst).select(
         "doc_id", "text", "lang", "source", "n_chars")

@@ -186,6 +186,16 @@ def done_buckets(out_dir: str) -> set[int]:
 
 
 _LAYOUT_FILE = "_layout.json"
+# plan leaves whose RDD is built without running a Spark job
+_LAZY_LEAVES = frozenset({"FileSourceScanExec", "RDDScanExec", "RangeExec",
+                          "LocalTableScanExec"})
+
+
+def _plan_nodes(plan):
+    yield plan
+    kids = plan.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
 
 
 def _split_plan(df: DataFrame) -> dict:
@@ -199,20 +209,30 @@ def _split_plan(df: DataFrame) -> dict:
     fingerprinted by its partition count plus DataFrame.semanticHash()
     (stable for one DataFrame, so a resume from another process or
     another DataFrame over the same data raises rather than guesses).
+
+    The partition count is the executed RDD's when the plan has only
+    lazy leaves, no exchange and no subquery, because executing such a
+    plan only builds RDDs.  Anything else (an adaptive plan, an
+    exchange, a subquery, a cached relation) could run a job when
+    executed, so its count is the planned one (outputPartitioning; 0
+    where Spark leaves it unknown).
     """
     plan = df._jdf.queryExecution().executedPlan()
-    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
-        # executing an adaptive plan would run its shuffle stages
+    nodes = list(_plan_nodes(plan))
+    kinds = [p.getClass().getSimpleName() for p in nodes]
+    leaves = {k for p, k in zip(nodes, kinds) if p.children().isEmpty()}
+    if (leaves <= _LAZY_LEAVES and plan.subqueriesAll().isEmpty()
+            and not any("Exchange" in k for k in kinds)):
+        n = plan.execute().getNumPartitions()
+    elif kinds[0] == "AdaptiveSparkPlanExec":
         n = plan.executedPlan().outputPartitioning().numPartitions()
     else:
-        n = plan.execute().getNumPartitions()
-    leaves = plan.collectLeaves()
-    leaves = [leaves.apply(i) for i in range(leaves.size())]
-    if leaves and all(leaf.getClass().getSimpleName() == "FileSourceScanExec"
-                      for leaf in leaves):
+        n = plan.outputPartitioning().numPartitions()
+    if leaves == {"FileSourceScanExec"}:
         splits = [[[f.filePath().toString(), f.start(), f.length()]
                    for f in part.files()]
-                  for leaf in leaves for part in leaf.inputRDD().partitions()]
+                  for p, k in zip(nodes, kinds) if k == "FileSourceScanExec"
+                  for part in p.inputRDD().partitions()]
         digest = hashlib.sha256(json.dumps(splits).encode()).hexdigest()
         return {"partitions": n, "splits_sha256": digest}
     return {"partitions": n, "semantic_hash": df.semanticHash()}

@@ -66,15 +66,18 @@ def encode_iceberg(spark: SparkSession, table: str, out_dir: str, *,
                    snapshot_id: int | None = None,
                    as_of_timestamp: int | None = None,
                    columns: list[str] | None = None,
-                   loader=None,
+                   loader=None, mode: str = "salted",
                    **encode_kw) -> DataFrame:
     """Encode an Iceberg table into a dumpster store: the north-star
     pipeline in one call (Iceberg snapshot scan → encode →
-    chunk manifests).  Returns the manifest DataFrame.  ``encode_kw`` is
-    passed to engine.encode_table, so the default layout is split-local
-    (one bucket per scan split, no shuffle) and ``mode="salted"`` opts
-    into the shuffled global layout; resuming needs the same snapshot
-    split plan.
+    chunk manifests).  Returns the manifest DataFrame.  ``mode`` and
+    ``encode_kw`` are passed to engine.encode_table, but ``mode``
+    defaults to ``"salted"`` here, not to encode_table's split-local
+    layout: an Iceberg scan is not a file scan, so a split-local encode
+    would be fingerprinted by its semantic hash, which Spark does not
+    promise to keep across processes, and a crashed encode could then
+    refuse to resume.  ``mode="local"`` opts into the shuffle-free
+    layout for a one-shot encode.
 
     ``loader`` (spark, table) -> DataFrame overrides the Iceberg reader —
     the jarless-test seam, and open for any other table provider.
@@ -89,4 +92,4 @@ def encode_iceberg(spark: SparkSession, table: str, out_dir: str, *,
                           as_of_timestamp=as_of_timestamp)
     if columns:
         df = df.select(*columns)
-    return encode_table(df, out_dir, **encode_kw)
+    return encode_table(df, out_dir, mode=mode, **encode_kw)

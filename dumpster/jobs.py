@@ -26,8 +26,6 @@ Example config::
                                      # input split, no shuffle; resume
                                      # needs the same split plan) |
                                      # salted | hourly
-      n_buckets: 64                  # salted tables only
-      salt_k: 4                      # salted tables only
       chunk_rows: 65536
     catalog:
       register_views: true
@@ -35,8 +33,12 @@ Example config::
     tables:
       - name: pages
         input: /data/pages.parquet
-        url_col: url                 # host sort (local) or salted
-                                     # host bucketing (salted)
+        mode: salted                 # global host-major layout
+        url_col: url                 # salted host bucketing (a host
+                                     # sort within each split in local)
+        n_buckets: 64                # salted only, like salt_k: a local
+        salt_k: 4                    # table given either (here or under
+                                     # output) is refused
       - name: events
         input: /data/events.parquet
         mode: hourly                 # dt=/hr= reference tree
@@ -94,6 +96,10 @@ class JobConfig:
     tables: list[TableJob] = field(default_factory=list)
 
 
+def _int_or_none(v):
+    return None if v is None else int(v)
+
+
 def load_config(path: str) -> JobConfig:
     import yaml
     with open(path) as f:
@@ -103,8 +109,8 @@ def load_config(path: str) -> JobConfig:
     cfg = JobConfig(
         out_path=out["path"],
         mode=out.get("mode", "local"),
-        n_buckets=out.get("n_buckets"),
-        salt_k=out.get("salt_k"),
+        n_buckets=_int_or_none(out.get("n_buckets")),
+        salt_k=_int_or_none(out.get("salt_k")),
         chunk_rows=int(out.get("chunk_rows", 65536)),
         register_views=bool(cat.get("register_views", False)),
         view_prefix=cat.get("prefix", "dumpster_"),
@@ -133,6 +139,19 @@ def run_jobs(spark: SparkSession, cfg: JobConfig) -> list[dict]:
     Returns one summary dict per table."""
     from .engine import (encode_summary, encode_table,
                          encode_table_partitioned, register_decoded_view)
+
+    for t in cfg.tables:
+        # salted-only sizing is refused up front, before any table is
+        # encoded, rather than silently dropped for a split-local table
+        sizing = [k for k in ("n_buckets", "salt_k")
+                  if t.mode == "local" and (getattr(t, k) is not None
+                                            or getattr(cfg, k) is not None)]
+        if sizing:
+            raise ValueError(
+                f"table {t.name}: {', '.join(sizing)} size the salted "
+                f"layout, but the table uses the split-local layout (one "
+                f"bucket per input split); set mode: salted on the table "
+                f"or the output, or drop {', '.join(sizing)}")
 
     results = []
     for t in cfg.tables:
@@ -185,14 +204,10 @@ def run_jobs(spark: SparkSession, cfg: JobConfig) -> list[dict]:
                 df, out_dir, ts_col=t.ts_col, chunk_rows=chunk_rows,
                 table_id=t.name)
         else:
-            # the output-level sizing is a default for salted tables; a
-            # table-level one is passed as given, so a local table that
-            # sets it fails loudly instead of ignoring it
-            salted = t.mode == "salted"
             man = encode_table(
                 df, out_dir, url_col=t.url_col,
-                n_buckets=t.n_buckets or (cfg.n_buckets if salted else None),
-                salt_k=t.salt_k or (cfg.salt_k if salted else None),
+                n_buckets=t.n_buckets or cfg.n_buckets,
+                salt_k=t.salt_k or cfg.salt_k,
                 chunk_rows=chunk_rows, table_id=t.name, mode=t.mode)
         s = encode_summary(man)
         summary = {"table": t.name, "mode": t.mode, "out": out_dir,

@@ -28,15 +28,10 @@ from .engine import decode_table, encode_table, table_schema
 
 def encode_stream(stream_df: DataFrame, out_dir: str, *,
                   checkpoint: str, url_col: str | None = None,
-                  bucket_expr=None, n_buckets: int | None = None,
-                  salt_k: int | None = None, mode: str = "local",
+                  bucket_expr=None, n_buckets: int = 32, salt_k: int = 4,
                   chunk_rows: int = 65536, trigger_available_now: bool = True,
                   trigger_seconds: int | None = None):
     """Stream → encoded chunks: one ``batch=N`` table per micro-batch.
-
-    Layout arguments are engine.encode_table's: by default each
-    micro-batch split is encoded in place; ``mode="salted"`` (with
-    ``n_buckets``/``salt_k``) or ``bucket_expr`` choose a shuffled one.
 
     Exactly-once story (mirrors the reference's upload→commit ordering,
     HourlyBasedPartitioner.java:160-182 then TopicStreamer.java:65):
@@ -44,18 +39,17 @@ def encode_stream(stream_df: DataFrame, out_dir: str, *,
     the streaming checkpoint commits the batch only after foreachBatch
     returns, and a re-delivered batch re-enters the same ``batch=N``
     directory where the manifest resume logic skips completed buckets.
-    In the split-local layout that resume needs the same split plan, and
-    a micro-batch DataFrame is RDD-backed, so only the process that
-    started a batch can vouch for it: a batch partly committed by a
-    crashed process raises on redelivery instead of resuming (see
-    encode_table).  Pass ``mode="salted"`` or ``bucket_expr`` for batches
-    that must resume across restarts.
+    That is why every batch is encoded with the salted layout (or
+    ``bucket_expr``'s), never encode_table's split-local default: a
+    micro-batch DataFrame is RDD-backed, so the process that redelivers
+    a batch after a crash cannot prove its splits match the crashed
+    run's, and a split-local resume would refuse the batch forever.
     """
     def sink(batch_df: DataFrame, batch_id: int):
         target = os.path.join(out_dir, f"batch={batch_id:06d}")
         encode_table(batch_df, target, url_col=url_col,
                      bucket_expr=bucket_expr, n_buckets=n_buckets,
-                     salt_k=salt_k, mode=mode, chunk_rows=chunk_rows,
+                     salt_k=salt_k, mode="salted", chunk_rows=chunk_rows,
                      table_id=f"stream_b{batch_id}", resume=True)
 
     writer = (stream_df.writeStream
@@ -274,7 +268,7 @@ def decode_stream_table(spark: SparkSession, out_dir: str,
 def compact_stream(spark: SparkSession, out_dir: str, dst_dir: str, *,
                    url_col: str | None = None,
                    n_buckets: int | None = None,
-                   chunk_rows: int = 65536, mode: str = "local",
+                   chunk_rows: int = 65536, mode: str = "salted",
                    table_id: str | None = None) -> DataFrame:
     """Compact many micro-batch chunklets into one well-chunked table.
 
@@ -286,12 +280,14 @@ def compact_stream(spark: SparkSession, out_dir: str, dst_dir: str, *,
     re-encode into ``dst_dir`` with full-size chunks and the chosen
     layout — the same two primitives composed, so it inherits round-trip
     exactness and resume (an interrupted compaction redoes only missing
-    buckets).  The default split-local layout numbers buckets by the
-    decode's splits, which encode_table can only vouch for within one
-    DataFrame, so a compaction resumed from a new process raises; pass
-    ``mode="salted"`` (with ``n_buckets``) for one that resumes across
-    processes.  The source is left untouched; swap directories after
-    verifying, mirroring the reference's upload-then-commit ordering.
+    buckets).  The default is the salted layout (``n_buckets`` 32 unless
+    given), because resume needs bucket ids that mean the same rows in a
+    new process.  ``mode="local"`` skips the shuffle, but its buckets
+    number the decode's splits, which encode_table can vouch for only
+    within one DataFrame: a local compaction resumed from a new process
+    raises, so rerun it into a fresh ``dst_dir``.  The source is left
+    untouched; swap directories after verifying, mirroring the
+    reference's upload-then-commit ordering.
     """
     df = decode_stream_table(spark, out_dir)
     return encode_table(df, dst_dir, url_col=url_col, n_buckets=n_buckets,

@@ -96,3 +96,41 @@ def test_stream_hourly_mode(spark, tmp_path):
     counts = spark.read.parquet(str(tmp_path / "out" / "ev" / "_hourly_counts"))
     got = {(r["hour_start"].hour): r["n"] for r in counts.collect()}
     assert got == {0: 10}
+
+
+def test_salted_sizing_is_refused_for_split_local_tables(tmp_path):
+    """n_buckets/salt_k only size the salted layout.  A config that sets
+    them where a table resolves to the split-local default is refused
+    before any table is encoded (so no Spark session is needed), not
+    silently run with one bucket per input split; output-level values
+    are cast to int, and are fine when every table they reach is
+    salted."""
+    import pytest
+
+    from dumpster.jobs import TableJob
+
+    cfg_path = tmp_path / "job.yml"
+    cfg_path.write_text(f"""
+output:
+  path: {tmp_path / "enc"}
+  n_buckets: "64"
+  salt_k: "2"
+tables:
+  - name: pages
+    input: {SF}/documents.parquet
+    mode: salted
+  - name: docs
+    input: {SF}/documents.parquet
+""")
+    cfg = load_config(str(cfg_path))
+    assert (cfg.n_buckets, cfg.salt_k) == (64, 2)
+    with pytest.raises(ValueError, match="docs: n_buckets, salt_k .*"
+                                         "mode: salted"):
+        run_jobs(None, cfg)
+
+    cfg.n_buckets = cfg.salt_k = None
+    cfg.tables[1] = TableJob(name="docs", input=cfg.tables[1].input,
+                             n_buckets=8)
+    with pytest.raises(ValueError, match="docs: n_buckets size"):
+        run_jobs(None, cfg)
+    assert not (tmp_path / "enc").exists()

@@ -25,13 +25,13 @@ def test_stream_encode_decode_roundtrip(spark, tmp_path):
               .option("maxFilesPerTrigger", "1")
               .parquet(os.path.join(src, "*")))
     q = encode_stream(stream, out, checkpoint=ckpt, url_col="url",
-                      mode="salted", n_buckets=4, chunk_rows=512)
+                      n_buckets=4, chunk_rows=512)
     q.awaitTermination(120)
 
     # second micro-batch arrives later; availableNow query restarts
     b.write.mode("overwrite").parquet(os.path.join(src, "p2"))
     q2 = encode_stream(stream, out, checkpoint=ckpt, url_col="url",
-                       mode="salted", n_buckets=4, chunk_rows=512)
+                       n_buckets=4, chunk_rows=512)
     q2.awaitTermination(120)
 
     dec = decode_stream_table(spark, out)
@@ -42,6 +42,73 @@ def test_stream_encode_decode_roundtrip(spark, tmp_path):
     man = stream_manifest(spark, out)
     assert man.select("batch_id").distinct().count() >= 2
     assert man.agg(F.sum("n_rows")).collect()[0][0] == 1200
+
+
+def test_stream_resumes_partly_committed_batch_after_restart(spark, tmp_path):
+    """A process that dies after some of batch 0's buckets published
+    their manifests, but before the checkpoint committed the batch,
+    leaves exactly this on disk: offsets/0 without commits/0, and a
+    partial batch=000000 store.  The restarted query redelivers batch 0
+    as a new RDD-backed DataFrame; it must finish the batch, once."""
+    import glob as _glob
+
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "enc")
+    ckpt = str(tmp_path / "ckpt")
+    pages = synth_pages(spark, 600, seed=13)
+    pages.write.parquet(os.path.join(src, "p1"))
+    stream = (spark.readStream.schema(pages.schema)
+              .parquet(os.path.join(src, "*")))
+    encode_stream(stream, out, checkpoint=ckpt, url_col="url",
+                  n_buckets=4, chunk_rows=128).awaitTermination(120)
+
+    mans = sorted(_glob.glob(os.path.join(out, "batch=000000", "manifest",
+                                          "b*.parquet")))
+    assert len(mans) > 1
+    for m in mans[1:]:
+        os.remove(m)
+    for f in ("0", ".0.crc"):
+        if os.path.exists(os.path.join(ckpt, "commits", f)):
+            os.remove(os.path.join(ckpt, "commits", f))
+
+    q = encode_stream(stream, out, checkpoint=ckpt, url_col="url",
+                      n_buckets=4, chunk_rows=128)
+    q.awaitTermination(120)
+    assert q.exception() is None
+    dec = decode_stream_table(spark, out)
+    assert dec.count() == 600
+    assert pages.exceptAll(dec).count() == 0
+    assert dec.exceptAll(pages).count() == 0
+
+
+def test_compact_stream_default_resumes_interrupted_compaction(spark,
+                                                               tmp_path):
+    """compact_stream's default layout resumes from a new decode of the
+    source: a compaction cut after some buckets committed finishes on the
+    rerun without duplicating or dropping a row."""
+    import glob as _glob
+
+    from dumpster.engine import decode_table, encode_table
+    from dumpster.streaming import compact_stream
+
+    out = str(tmp_path / "enc")
+    dst = str(tmp_path / "compacted")
+    pages = synth_pages(spark, 400, seed=17)
+    for bid in (0, 1):
+        encode_table(pages.filter(F.pmod(F.xxhash64("url"), F.lit(2)) == bid),
+                     os.path.join(out, f"batch={bid:06d}"), url_col="url",
+                     mode="salted", n_buckets=2, chunk_rows=64)
+    compact_stream(spark, out, dst, url_col="url")
+    mans = sorted(_glob.glob(os.path.join(dst, "manifest", "b*.parquet")))
+    assert len(mans) > 1
+    for m in mans[1:]:
+        os.remove(m)
+
+    compact_stream(spark, out, dst, url_col="url")
+    dec = decode_table(spark, dst)
+    assert dec.count() == 400
+    assert pages.exceptAll(dec).count() == 0
+    assert dec.exceptAll(pages).count() == 0
 
 
 def test_stream_manifest_batch_id_ignores_parent_batch_dir(spark, tmp_path):
@@ -185,15 +252,13 @@ def test_compact_stream_merges_chunklets(spark, tmp_path):
                   .option("maxFilesPerTrigger", "1")
                   .parquet(os.path.join(src, "*")))
         encode_stream(stream, out, checkpoint=ckpt, url_col="url",
-                      mode="salted", n_buckets=4,
-                      chunk_rows=256).awaitTermination(120)
+                      n_buckets=4, chunk_rows=256).awaitTermination(120)
 
     small = _glob.glob(os.path.join(out, "batch=*", "chunks", "*.dmc"))
     assert len(small) > 8
 
     dst = str(tmp_path / "compacted")
-    man = compact_stream(spark, out, dst, url_col="url", mode="salted",
-                         n_buckets=2,
+    man = compact_stream(spark, out, dst, url_col="url", n_buckets=2,
                          chunk_rows=65536)
     big = _glob.glob(os.path.join(dst, "chunks", "*.dmc"))
     assert len(big) < len(small) / 2
