@@ -23,6 +23,13 @@ Layout (SURVEY.md §7.1):
   synth.py   deterministic Common-Crawl-style `pages` generator
   textops.py / dedup.py / simsearch.py / multimodal.py
              training-data-pipeline operators over documents/embeddings
+  zipcache.py  stat-keyed zip-archive cache invalidation, installed on
+             import so every Python worker that runs dumpster code skips
+             PySpark's per-task re-read of unchanged archives
 """
 
+from dumpster.zipcache import install_zip_invalidation
+
 __version__ = "0.1.0"
+
+install_zip_invalidation()
