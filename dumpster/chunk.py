@@ -21,8 +21,7 @@ footer, the header, and ONLY the byte ranges of requested columns
 Iceberg split offsets.  At 100-TB scale a one-column scan therefore reads
 ~the column's share of the bytes, not the whole table; integrity is
 per-section crc32 so ranged reads stay verifiable without touching the
-rest of the file.  (v1 "DMC1" blobs — single trailing whole-file crc —
-remain readable for compatibility.)
+rest of the file.
 
 Codec shapes (codecs/base.py): integer-family columns (ints, bool,
 timestamp, date) normalise to int64 — frame-of-reference bit-packing
@@ -45,9 +44,7 @@ import pyarrow as pa
 
 from .codecs import (CODEC_NAMES, decode_fixed, decode_var,
                      select_encode_fixed, select_encode_var, stable_seed)
-from .codecs import PLAIN as PLAIN_ID
 
-MAGIC = b"DMC1"          # v1: single whole-file trailing crc (read-only)
 MAGIC2 = b"DMC2"         # v2: per-section crc + footer column index
 TAIL_MAGIC = b"2DMC"
 _TAIL_LEN = 12           # u32 footer_len | u32 footer_crc | b"2DMC"
@@ -242,9 +239,11 @@ def _pieces(payload) -> list:
 
 def encode_chunk_pieces(batch: pa.RecordBatch, *, table_id: str = "t",
                         bucket: int = 0, chunk_seq: int = 0,
-                        allow_zlib: bool = True,
                         plain_only: bool = False) -> tuple[list, list[dict]]:
     """Encode one RecordBatch → (list of buffers, per-column stats).
+
+    ``plain_only`` stores every column PLAIN with no byte stage, string
+    bounds or bloom (see select_encode_fixed's ``plain``).
 
     The container is produced as a list of buffers (zero-copy where the
     codec allows, e.g. PLAIN passthrough of binary columns) with the CRC
@@ -289,13 +288,9 @@ def encode_chunk_pieces(batch: pa.RecordBatch, *, table_id: str = "t",
             data, offsets, valid = _var_parts_validity(arr)
             n_valid = len(offsets) - 1
             raw_bytes = len(data) + 8 * n_valid
-            if plain_only:
-                from .codecs.plain import encode_plain_var
-                codec, zl = PLAIN_ID, False
-                payload, meta = encode_plain_var(data, offsets)
-            else:
-                codec, zl, payload, meta, _ = select_encode_var(
-                    data, offsets, seed, allow_zlib)
+            codec, zl, payload, meta, _ = select_encode_var(
+                data, offsets, seed, plain_only)
+            if not plain_only:
                 from .bloom import MAX_AVG_LEN, bloom_build, want_bloom
                 if n_valid and len(data) <= 8 * MAX_AVG_LEN * n_valid:
                     # avg ≤ 1 KiB: skip the min/max scan on html-sized
@@ -319,13 +314,8 @@ def encode_chunk_pieces(batch: pa.RecordBatch, *, table_id: str = "t",
                 cvals = np.asarray(child)
             from .codecs.base import pack_lengths
             lp, lmeta = pack_lengths(lengths)
-            if plain_only:
-                from .codecs.plain import encode_plain_fixed
-                codec, zl = PLAIN_ID, False
-                cpayload, cmeta = encode_plain_fixed(cvals)
-            else:
-                codec, zl, cpayload, cmeta, _ = select_encode_fixed(
-                    cvals, seed, allow_zlib)
+            codec, zl, cpayload, cmeta, _ = select_encode_fixed(
+                cvals, seed, plain_only)
             payload = [lp, *_pieces(cpayload)]
             meta = {"lens": lmeta, "lpn": len(lp), "child": cmeta,
                     "cn": int(len(cvals))}
@@ -334,17 +324,10 @@ def encode_chunk_pieces(batch: pa.RecordBatch, *, table_id: str = "t",
             n_valid = len(dense)
             raw_bytes = _raw_size(dense, kind)
             lo, hi = _decimal_parts(dense)
-            if plain_only:
-                from .codecs.plain import encode_plain_fixed
-                codec, zl = PLAIN_ID, False
-                lop, lometa = encode_plain_fixed(lo)
-                hic, hizl = PLAIN_ID, False
-                hip, himeta = encode_plain_fixed(hi)
-            else:
-                codec, zl, lop, lometa, _ = select_encode_fixed(
-                    np.ascontiguousarray(lo), seed, allow_zlib)
-                hic, hizl, hip, himeta, _ = select_encode_fixed(
-                    np.ascontiguousarray(hi), seed + 1, allow_zlib)
+            codec, zl, lop, lometa, _ = select_encode_fixed(
+                np.ascontiguousarray(lo), seed, plain_only)
+            hic, hizl, hip, himeta, _ = select_encode_fixed(
+                np.ascontiguousarray(hi), seed + 1, plain_only)
             lop_pieces, hip_pieces = _pieces(lop), _pieces(hip)
             payload = [*lop_pieces, *hip_pieces]
             meta = {"lo": lometa, "lon": sum(len(p) for p in lop_pieces),
@@ -357,13 +340,8 @@ def encode_chunk_pieces(batch: pa.RecordBatch, *, table_id: str = "t",
             cdata, coffs = _var_parts(child)
             from .codecs.base import pack_lengths
             lp, lmeta = pack_lengths(lengths)
-            if plain_only:
-                from .codecs.plain import encode_plain_var
-                codec, zl = PLAIN_ID, False
-                cpayload, cmeta = encode_plain_var(cdata, coffs)
-            else:
-                codec, zl, cpayload, cmeta, _ = select_encode_var(
-                    cdata, coffs, seed, allow_zlib)
+            codec, zl, cpayload, cmeta, _ = select_encode_var(
+                cdata, coffs, seed, plain_only)
             payload = [lp, *_pieces(cpayload)]
             meta = {"lens": lmeta, "lpn": len(lp), "child": cmeta,
                     "cn": int(len(child))}
@@ -375,13 +353,8 @@ def encode_chunk_pieces(batch: pa.RecordBatch, *, table_id: str = "t",
                 vals = _int_bridge_values(dense)
             else:
                 vals = np.asarray(dense)
-            if plain_only:
-                from .codecs.plain import encode_plain_fixed
-                codec, zl = PLAIN_ID, False
-                payload, meta = encode_plain_fixed(vals)
-            else:
-                codec, zl, payload, meta, _ = select_encode_fixed(
-                    vals, seed, allow_zlib)
+            codec, zl, payload, meta, _ = select_encode_fixed(
+                vals, seed, plain_only)
         pieces = _pieces(payload)
         plen = sum(len(p) for p in pieces)
         # zone maps: per-chunk min/max for numeric-family columns — the
@@ -455,12 +428,10 @@ def encode_chunk_pieces(batch: pa.RecordBatch, *, table_id: str = "t",
 
 
 def encode_chunk(batch: pa.RecordBatch, *, table_id: str = "t",
-                 bucket: int = 0, chunk_seq: int = 0,
-                 allow_zlib: bool = True) -> tuple[bytes, list[dict]]:
+                 bucket: int = 0, chunk_seq: int = 0) -> tuple[bytes, list[dict]]:
     """Encode one RecordBatch → (container bytes, per-column stats)."""
     pieces, stats = encode_chunk_pieces(
-        batch, table_id=table_id, bucket=bucket, chunk_seq=chunk_seq,
-        allow_zlib=allow_zlib)
+        batch, table_id=table_id, bucket=bucket, chunk_seq=chunk_seq)
     return b"".join(bytes(p) if isinstance(p, memoryview) else p
                     for p in pieces), stats
 
@@ -483,32 +454,24 @@ def _assemble(arrays, names, schema, columns) -> pa.RecordBatch:
                                       schema=pa.schema(fields))
 
 
-def _decode_v1(blob, columns) -> pa.RecordBatch:
-    """v1 "DMC1" container: single trailing whole-file crc."""
-    body = blob[4:-4]
-    (crc,) = struct.unpack("<I", blob[-4:])
-    if zlib.crc32(body) & 0xFFFFFFFF != crc:
-        raise ValueError("chunk crc mismatch")
-    pos = 0
-    (schema_len,) = struct.unpack_from("<I", body, pos); pos += 4
-    schema = pa.ipc.read_schema(pa.BufferReader(body[pos:pos + schema_len]))
-    pos += schema_len
-    n_cols, n_rows = struct.unpack_from("<IQ", body, pos); pos += 12
-    arrays, names = [], []
-    for _ in range(n_cols):
-        (dlen,) = struct.unpack_from("<I", body, pos); pos += 4
-        desc = json.loads(body[pos:pos + dlen]); pos += dlen
-        (vlen,) = struct.unpack_from("<I", body, pos); pos += 4
-        vbm = body[pos:pos + vlen]; pos += vlen
-        (plen,) = struct.unpack_from("<Q", body, pos); pos += 8
-        if columns is not None and desc["name"] not in columns:
-            pos += plen
-            continue
-        payload = body[pos:pos + plen]; pos += plen
-        field = schema.field(desc["name"])
-        arrays.append(_decode_column(desc, vbm, payload, n_rows, field.type))
-        names.append(desc["name"])
-    return _assemble(arrays, names, schema, columns)
+def _read_footer(read, size: int) -> dict:
+    """Parse and verify the footer through ``read(off, n)``: tail magic,
+    a footer length that fits inside the container, footer crc.  Every
+    failure is a ValueError (a format error) — an unchecked length would
+    otherwise send a negative offset into a file seek and surface as an
+    I/O error."""
+    if size < 4 + _TAIL_LEN:
+        raise ValueError("chunk too short")
+    tail = read(size - _TAIL_LEN, _TAIL_LEN)
+    if bytes(tail[8:]) != TAIL_MAGIC:
+        raise ValueError("bad chunk tail magic")
+    flen, fcrc = struct.unpack_from("<II", tail, 0)
+    if flen > size - _TAIL_LEN - 4:
+        raise ValueError(f"chunk footer length {flen} out of range")
+    foot_b = read(size - _TAIL_LEN - flen, flen)
+    if zlib.crc32(foot_b) & 0xFFFFFFFF != fcrc:
+        raise ValueError("chunk footer crc mismatch")
+    return json.loads(bytes(foot_b))
 
 
 def _decode_v2(read, size: int, columns) -> pa.RecordBatch:
@@ -516,14 +479,7 @@ def _decode_v2(read, size: int, columns) -> pa.RecordBatch:
     code path serves in-memory blobs and ranged file/object-store reads.
     ``read`` may return memoryview (zero-copy in-memory path) or bytes;
     only the small JSON/schema pieces are materialized."""
-    tail = read(size - _TAIL_LEN, _TAIL_LEN)
-    if bytes(tail[8:]) != TAIL_MAGIC:
-        raise ValueError("bad chunk tail magic")
-    flen, fcrc = struct.unpack_from("<II", tail, 0)
-    foot_b = read(size - _TAIL_LEN - flen, flen)
-    if zlib.crc32(foot_b) & 0xFFFFFFFF != fcrc:
-        raise ValueError("chunk footer crc mismatch")
-    footer = json.loads(bytes(foot_b))
+    footer = _read_footer(read, size)
     hdr_len, hdr_crc = footer["h"]
     hdr = read(4, hdr_len)
     if zlib.crc32(hdr) & 0xFFFFFFFF != hdr_crc:
@@ -557,8 +513,6 @@ def decode_chunk(blob: bytes, columns: list[str] | None = None) -> pa.RecordBatc
     """Decode a chunk container; ``columns`` prunes decode work per column
     (non-requested payloads are skipped without decompression).  For
     on-disk chunks prefer decode_chunk_file, which also prunes the I/O."""
-    if blob[:4] == MAGIC:
-        return _decode_v1(blob, columns)
     if blob[:4] != MAGIC2:
         raise ValueError("bad chunk magic")
     # memoryview slicing keeps every section/payload zero-copy over the
@@ -573,6 +527,24 @@ def decode_chunk(blob: bytes, columns: list[str] | None = None) -> pa.RecordBatc
 TAIL_PREFETCH = 64 * 1024  # one ranged GET usually covers tail+footer
 
 
+def _ranged_reader(f, size: int, n_read: list):
+    """``read(off, n)`` over an open chunk file: one prefetched tail block
+    serves the tail and (usually) the footer, every other range is its
+    own seek + read.  ``n_read[0]`` accumulates the bytes read."""
+    tail_off = max(0, size - TAIL_PREFETCH)
+    f.seek(tail_off)
+    tb = memoryview(f.read())
+    n_read[0] += len(tb)
+
+    def read(off: int, n: int):
+        if off >= tail_off:
+            return tb[off - tail_off:off - tail_off + n]
+        f.seek(off)
+        n_read[0] += n
+        return memoryview(f.read(n))
+    return read
+
+
 def decode_chunk_file(path: str, columns: list[str] | None = None,
                       *, bytes_read: list | None = None) -> pa.RecordBatch:
     """Decode a chunk file; with ``columns`` only the footer, header, and
@@ -583,79 +555,38 @@ def decode_chunk_file(path: str, columns: list[str] | None = None,
     import os as _os
     with open(path, "rb") as f:
         size = _os.fstat(f.fileno()).st_size
-        if columns is None or size < _TAIL_LEN + 4:
+        if columns is None:
             blob = f.read()
             if bytes_read is not None:
                 bytes_read.append(len(blob))
             return decode_chunk(blob, columns)
-        # serve tail + footer from one prefetched block; column sections
-        # via individual ranged reads
-        tail_off = max(0, size - TAIL_PREFETCH)
-        f.seek(tail_off)
-        tail_block = f.read()
-        if tail_block[-4:] != TAIL_MAGIC:     # v1 file: no index, full read
-            f.seek(0)
-            blob = f.read()
-            if bytes_read is not None:
-                bytes_read.append(len(blob))
-            return decode_chunk(blob, columns)
-        n_read = [len(tail_block)]
-        tb = memoryview(tail_block)
-
-        def read(off: int, n: int):
-            if off >= tail_off:
-                return tb[off - tail_off:off - tail_off + n]
-            f.seek(off)
-            n_read[0] += n
-            return memoryview(f.read(n))
-
-        batch = _decode_v2(read, size, columns)
-        if bytes_read is not None:
-            bytes_read.append(n_read[0])
-        return batch
+        n_read = [0]
+        batch = _decode_v2(_ranged_reader(f, size, n_read), size, columns)
+    if bytes_read is not None:
+        bytes_read.append(n_read[0])
+    return batch
 
 
 def read_blooms(path: str, cols: list[str] | None = None,
                 *, bytes_read: list | None = None) -> dict:
     """→ {column: (desc, bitmap)} for the chunk's bloom sections, via
     ranged reads only (tail prefetch + one read per requested bloom —
-    never the column data).  Missing blooms / v1 files → {}.  This is the
-    task-side point-lookup gate: a negative membership test proves a
+    never the column data).  Missing blooms or an unverifiable footer
+    → {}.  This is the task-side point-lookup gate: a negative membership test proves a
     ``col = value`` predicate matches nothing in the chunk, so the whole
     decode is skipped (Parquet bloom-filter semantics)."""
     import os as _os
     out: dict = {}
+    n_read = [0]
     with open(path, "rb") as f:
         size = _os.fstat(f.fileno()).st_size
-        if size < _TAIL_LEN + 4:
+        read = _ranged_reader(f, size, n_read)
+        try:
+            footer = _read_footer(read, size)
+        except ValueError:
+            # an unverifiable footer means "cannot prune here", not a
+            # failed scan: the column data may still be readable
             return out
-        tail_off = max(0, size - TAIL_PREFETCH)
-        f.seek(tail_off)
-        tail_block = f.read()
-        if tail_block[-4:] != TAIL_MAGIC:
-            return out
-        n_read = [len(tail_block)]
-        tb = memoryview(tail_block)
-
-        def read(off: int, n: int):
-            if off >= tail_off:
-                return tb[off - tail_off:off - tail_off + n]
-            f.seek(off)
-            n_read[0] += n
-            return memoryview(f.read(n))
-
-        tail = read(size - _TAIL_LEN, _TAIL_LEN)
-        flen, fcrc = struct.unpack_from("<II", tail, 0)
-        if flen > size - _TAIL_LEN:
-            return out       # corrupt tail length — no pruning, no crash
-        foot_b = read(size - _TAIL_LEN - flen, flen)
-        # a bit-flipped tail with intact magic would otherwise send a
-        # garbage offset into read() and arbitrary bytes into json.loads —
-        # failing a scan whose COLUMN data is perfectly readable; an
-        # unverifiable footer just means "cannot prune here"
-        if zlib.crc32(foot_b) & 0xFFFFFFFF != fcrc:
-            return out
-        footer = json.loads(bytes(foot_b))
         for name, off, ln, crc in footer["cols"]:
             if not name.startswith("__bloom:"):
                 continue
@@ -668,8 +599,8 @@ def read_blooms(path: str, cols: list[str] | None = None,
             (dlen,) = struct.unpack_from("<I", sec, 0)
             desc = json.loads(bytes(sec[4:4 + dlen]))
             out[col] = (desc, bytes(sec[4 + dlen:]))
-        if bytes_read is not None:
-            bytes_read.append(n_read[0])
+    if bytes_read is not None:
+        bytes_read.append(n_read[0])
     return out
 
 

@@ -14,14 +14,13 @@ plays in the reference sink (reference: RecordWriter.java:29
 lightweight encodings, applied only when it actually shrinks the payload
 by ≥ 1/8.  The compressor is Zstandard level 3 through pyarrow's bundled
 codec (measured on the web-page fixture: 2.5× the compression speed of
-zlib-1 AND a better ratio on text, 3× its decompression speed); the
-stored flag is versioned (1 = legacy zlib, 2 = size-prefixed zstd) so
-chunks written by earlier rounds keep decoding.
+zlib-1 AND a better ratio on text, 3× its decompression speed).  The
+stored flag is 0 (no byte stage) or 2 (size-prefixed zstd); any other
+flag — 1 marked the zlib stage of early chunks — is refused with
+ValueError rather than handed to a codec decoder as raw bytes.
 """
 
 from __future__ import annotations
-
-import zlib
 
 import numpy as np
 
@@ -44,11 +43,6 @@ from .rle import (decode_rle_fixed, decode_rle_var, encode_rle_fixed,
 # the zlib-aware estimate picks it only when transpose+zlib beats the
 # alternatives' final stored size.
 FIXED_INT_CODECS = (PLAIN, DICT, RLE, FOR, DELTA_FOR, BSS)
-# NOTE: unreachable through select_encode_fixed (floats are re-dispatched
-# as their integer bit pattern before candidates are chosen — see its
-# docstring); kept only for direct codec-API callers encoding float
-# arrays without the bit-view bridge.
-FIXED_FLOAT_CODECS = (PLAIN, DICT, RLE, BSS)
 VAR_CODECS = (PLAIN, DICT, RLE, FSST)
 
 _ENC_FIXED = {PLAIN: encode_plain_fixed, DICT: encode_dict_fixed,
@@ -66,10 +60,9 @@ SAMPLE_ROWS = 1024
 SAMPLE_ROWS_VAR = 512    # var-width sample encodes pay per byte; keep lean
 SAMPLE_BYTES_VAR = 128 * 1024  # and cache-resident: wide rows (html) shrink
 MIN_SAMPLE_ROWS_VAR = 48       # the row count, never below this floor
-ZLIB_LEVEL = 1           # legacy decode path only (comp flag == 1)
 ZSTD_LEVEL = 3
 ZLIB_MIN_GAIN = 0.875    # keep the byte stage only if it shrinks below 7/8
-COMP_ZLIB, COMP_ZSTD = 1, 2
+COMP_ZSTD = 2
 
 
 def _zstd():
@@ -106,14 +99,14 @@ def stable_seed(*parts) -> int:
     return h
 
 
-def _est_stored(payload, allow_zlib: bool) -> int:
+def _est_stored(payload) -> int:
     """Estimated FINAL stored size of a candidate's sample payload: the
     smaller of raw and byte-stage-compressed.  Matching the real storage
     decision (_maybe_zlib runs on the winner) is what lets transform-style
     codecs like BSS — size-neutral before the byte stage — win selection
     exactly when they should."""
     raw = _plen(payload)
-    if not allow_zlib or raw < 64:
+    if raw < 64:
         return raw
     z = len(_zstd_compress(_as_bytes(payload)))
     # mirror _maybe_zlib's acceptance rule: a byte-stage pass that doesn't
@@ -130,15 +123,13 @@ def _sample_idx(n: int, seed: int, k: int = SAMPLE_ROWS) -> np.ndarray:
     return np.sort(rng.choice(n, size=k, replace=False))
 
 
-def _candidates_fixed(vals: np.ndarray) -> tuple[int, ...]:
-    if vals.dtype.kind in "iu" or vals.dtype == np.int64:
-        return FIXED_INT_CODECS
-    return FIXED_FLOAT_CODECS
-
-
 def select_encode_fixed(vals: np.ndarray, seed: int,
-                        allow_zlib: bool = True) -> tuple[int, bool, bytes, dict, dict]:
+                        plain: bool = False) -> tuple[int, bool, bytes, dict, dict]:
     """Returns (codec_id, zlibbed, payload, meta, selection_info).
+
+    ``plain=True`` stores PLAIN with no sampling, no trial encodes and no
+    byte stage (the engine's fallback after a codec failure); a float
+    column then keeps its native payload, with no ``__f`` bit view.
 
     Float arrays are encoded as their IEEE-754 bit pattern viewed as
     integers: value-level float codecs collapse distinct NaN payloads
@@ -147,19 +138,20 @@ def select_encode_fixed(vals: np.ndarray, seed: int,
     payloads, signed zeros, infinities — and opens the integer codec menu
     (FOR keeps float32 bits at ≤ 4 bytes/value despite the int64 bridge).
     """
+    if plain:
+        payload, meta = encode_plain_fixed(vals)
+        return PLAIN, False, payload, meta, {"est": {}, "n": len(vals)}
     if vals.dtype.kind == "f":
         fstr = vals.dtype.str
         if vals.dtype.itemsize == 8:
             bits = vals.view(np.int64)
         else:
             bits = vals.view(f"u{vals.dtype.itemsize}").astype(np.int64)
-        codec, zl, payload, meta, info = select_encode_fixed(
-            bits, seed, allow_zlib)
+        codec, zl, payload, meta, info = select_encode_fixed(bits, seed)
         meta = dict(meta)
         meta["__f"] = fstr
         return codec, zl, payload, meta, info
     n = len(vals)
-    cands = _candidates_fixed(vals)
     idx = _sample_idx(n, seed)
     sample = vals[idx]
     # ORDER-SENSITIVE codecs (delta, RLE) must be estimated on a contiguous
@@ -172,12 +164,11 @@ def select_encode_fixed(vals: np.ndarray, seed: int,
         start = seed % (n - SAMPLE_ROWS)
         run = vals[start:start + SAMPLE_ROWS]
     ests = {}
-    for c in cands:
+    for c in FIXED_INT_CODECS:
         try:
             src = run if c in (DELTA_FOR, RLE) else sample
             p, _ = _ENC_FIXED[c](src)
-            ests[c] = int(_est_stored(p, allow_zlib)
-                          * (n / max(len(src), 1)))
+            ests[c] = int(_est_stored(p) * (n / max(len(src), 1)))
         except Exception:
             continue
     winner = min(ests, key=lambda c: (ests[c], c))
@@ -191,7 +182,7 @@ def select_encode_fixed(vals: np.ndarray, seed: int,
         plain_size = np.ascontiguousarray(vals).nbytes
         if plain_size < len(payload):
             winner, (payload, meta) = PLAIN, encode_plain_fixed(vals)
-    payload, zlibbed = _maybe_zlib(payload, allow_zlib)
+    payload, zlibbed = _maybe_zlib(payload)
     return winner, zlibbed, payload, meta, {"est": ests, "n": n}
 
 
@@ -202,10 +193,14 @@ def _plen(payload) -> int:
 
 
 def select_encode_var(data, offsets: np.ndarray, seed: int,
-                      allow_zlib: bool = True) -> tuple[int, bool, object, dict, dict]:
+                      plain: bool = False) -> tuple[int, bool, object, dict, dict]:
     """``data`` may be bytes or a zero-copy memoryview of the Arrow buffer;
-    the returned payload may be a piece list (see plain.encode_plain_var)."""
+    the returned payload may be a piece list (see plain.encode_plain_var).
+    ``plain=True`` as in select_encode_fixed."""
     n = len(offsets) - 1
+    if plain:
+        payload, meta = encode_plain_var(data, offsets)
+        return PLAIN, False, payload, meta, {"est": {}, "n": n}
     # trial encodes are multi-pass over the sample; with multi-KiB rows
     # (html) a row-count-only sample is MBs and the passes become DRAM-bound
     # — measured 14× per-chunk inflation at 32 concurrent workers.  Cap the
@@ -221,9 +216,7 @@ def select_encode_var(data, offsets: np.ndarray, seed: int,
     for c in VAR_CODECS:
         try:
             p, _ = _ENC_VAR[c](s_data, s_offs)
-            ests[c] = int(_est_stored(p, allow_zlib) * scale)
-        except FsstInapplicable:
-            continue
+            ests[c] = int(_est_stored(p) * scale)
         except Exception:
             continue
     winner = min(ests, key=lambda c: (ests[c], c))
@@ -244,7 +237,7 @@ def select_encode_var(data, offsets: np.ndarray, seed: int,
         if plain_size <= _plen(payload):
             payload, meta = encode_plain_var(data, offsets)
             winner = PLAIN
-    payload, zlibbed = _maybe_zlib(payload, allow_zlib)
+    payload, zlibbed = _maybe_zlib(payload)
     return winner, zlibbed, payload, meta, {"est": ests, "n": n}
 
 
@@ -256,20 +249,28 @@ def _as_bytes(payload) -> bytes:
     return payload
 
 
-def decode_fixed(codec: int, zlibbed, payload, meta: dict,
-                 n: int) -> np.ndarray:
-    """``zlibbed`` is the stored comp flag: falsy = none, True/1 = legacy
-    zlib chunks from earlier rounds, 2 = size-prefixed zstd."""
+def _undo_byte_stage(zlibbed, codec: int, payload):
+    """Payload as the codec decoder takes it.  ``zlibbed`` is the stored
+    comp flag: 0/False = none, 2 = size-prefixed zstd; any other value
+    (1 was the zlib stage of early chunks) raises, because decoding its
+    compressed bytes as codec bytes would be a silent wrong answer."""
     if zlibbed == COMP_ZSTD:
-        payload = _zstd_decompress(payload)
-    elif zlibbed:
-        payload = zlib.decompress(payload)
-    elif codec != PLAIN or isinstance(payload, list):
+        return _zstd_decompress(payload)
+    if zlibbed != 0:
+        raise ValueError(f"unsupported byte-stage flag {zlibbed!r} "
+                         f"(expected 0 or {COMP_ZSTD})")
+    if codec != PLAIN or isinstance(payload, list):
         # PLAIN reads a contiguous buffer in place (np.frombuffer on bytes
         # or memoryview, zero-copy); the other codecs' decoders assume
         # bytes, and piece-list payloads always need joining
-        payload = _as_bytes(payload)
-    out = _DEC_FIXED[codec](payload, meta, n)
+        return _as_bytes(payload)
+    return payload
+
+
+def decode_fixed(codec: int, zlibbed, payload, meta: dict,
+                 n: int) -> np.ndarray:
+    out = _DEC_FIXED[codec](_undo_byte_stage(zlibbed, codec, payload),
+                            meta, n)
     fstr = meta.get("__f")
     if fstr:  # restore the float bit pattern (see select_encode_fixed)
         dt = np.dtype(fstr)
@@ -282,18 +283,12 @@ def decode_fixed(codec: int, zlibbed, payload, meta: dict,
 
 def decode_var(codec: int, zlibbed, payload, meta: dict,
                n: int) -> tuple[bytes, np.ndarray]:
-    if zlibbed == COMP_ZSTD:
-        payload = _zstd_decompress(payload)
-    elif zlibbed:
-        payload = zlib.decompress(payload)
-    elif codec != PLAIN or isinstance(payload, list):
-        payload = _as_bytes(payload)   # see decode_fixed
-    return _DEC_VAR[codec](payload, meta, n)
+    return _DEC_VAR[codec](_undo_byte_stage(zlibbed, codec, payload), meta, n)
 
 
-def _maybe_zlib(payload, allow: bool) -> tuple[object, bool]:
+def _maybe_zlib(payload) -> tuple[object, bool]:
     total = _plen(payload)
-    if not allow or total < 64:
+    if total < 64:
         return payload, False
     probe_src = payload[-1] if isinstance(payload, list) else payload
     # probe before the full pass: skip it when the payload is

@@ -399,8 +399,7 @@ class DumpsterWriter(DataSourceArrowWriter):
     identical bytes.
 
     Options: ``path`` (required), ``bucket_col``, ``chunk_rows``,
-    ``chunk_bytes``, ``allow_zlib`` ("false" to disable the byte stage),
-    ``table_id``.  Modes: append | overwrite.
+    ``chunk_bytes``, ``table_id``.  Modes: append | overwrite.
 
     Overwrite truncates INSIDE ``commit()``, not at writer creation
     (round-5 review finding — truncate-at-planning meant any failed
@@ -597,7 +596,6 @@ def _init_writer_common(w, options: dict, schema: StructType) -> None:
                          f"the frame being written")
     w.chunk_rows = int(options.get("chunk_rows", DEFAULT_CHUNK_ROWS))
     w.chunk_bytes = int(options.get("chunk_bytes", DEFAULT_CHUNK_BYTES))
-    w.allow_zlib = str(options.get("allow_zlib", "true")).lower() != "false"
     w.table_id = options.get("table_id") or os.path.basename(
         os.path.normpath(w.out_dir))
     w.payload_schema = StructType(
@@ -638,7 +636,7 @@ def _encode_task(w, iterator, out_dir: str, bucket_base: int) \
     # chunk_seq at 0 (name collision); deferred finalisation keeps one
     # monotone seq per bucket per task
     encoder = _make_encoder(out_dir, w.table_id, w.chunk_rows,
-                            w.chunk_bytes, w.allow_zlib, frozenset(),
+                            w.chunk_bytes, frozenset(),
                             sorted_input=False, publish_manifest=False,
                             bucket_subdirs=subdirs)
     rows: list = []

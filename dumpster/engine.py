@@ -267,7 +267,7 @@ def _check_layout(out_dir: str, record: dict, resume: bool) -> None:
 
 
 def _make_encoder(out_dir: str, table_id: str, chunk_rows: int,
-                  chunk_bytes: int, allow_zlib: bool, skip: frozenset,
+                  chunk_bytes: int, skip: frozenset,
                   sorted_input: bool = True,
                   bucket_subdirs: dict | None = None,
                   fs=None,
@@ -310,19 +310,20 @@ def _make_encoder(out_dir: str, table_id: str, chunk_rows: int,
             seq = st["seq"]
             try:
                 pieces, stats = encode_chunk_pieces(
-                    batch, table_id=table_id, bucket=bucket, chunk_seq=seq,
-                    allow_zlib=allow_zlib)
-            except Exception:
+                    batch, table_id=table_id, bucket=bucket, chunk_seq=seq)
+            except Exception as e:
                 # S3-parity dead-letter semantics, minus the data loss: a
                 # codec/selector failure downgrades the chunk to PLAIN
                 # instead of killing a 100-TB job (the reference captures
                 # decode errors inline rather than crashing,
-                # AvroSchemaRegistryDeserializer.java:32-41)
+                # AvroSchemaRegistryDeserializer.java:32-41); the reason
+                # is kept in the manifest's col_stats
                 pieces, stats = encode_chunk_pieces(
                     batch, table_id=table_id, bucket=bucket, chunk_seq=seq,
-                    allow_zlib=False, plain_only=True)
+                    plain_only=True)
+                why = f"{type(e).__name__}: {e}"[:200]
                 for cs in stats:
-                    cs["fallback"] = True
+                    cs["fallback"] = why
             path = _chunk_path(out_dir, bucket, seq, bucket_subdirs)
             os.makedirs(os.path.dirname(path), exist_ok=True)
             _fs_write_atomic(path, pieces, fs)
@@ -400,9 +401,8 @@ def encode_table(df: DataFrame, out_dir: str, *, url_col: str | None = None,
                  salt_k: int | None = None,
                  chunk_rows: int = DEFAULT_CHUNK_ROWS,
                  chunk_bytes: int = DEFAULT_CHUNK_BYTES,
-                 table_id: str | None = None, allow_zlib: bool = True,
+                 table_id: str | None = None,
                  resume: bool = True,
-                 host_major: bool = True,
                  order_cols: tuple[str, ...] = (),
                  mode: str = "local",
                  bucket_col: str | None = None,
@@ -535,7 +535,6 @@ def encode_table(df: DataFrame, out_dir: str, *, url_col: str | None = None,
         prepped = prep_for_encode_local(df, url_col, order_cols)
     elif layout == "salted" and url_col is not None:
         prepped = prep_for_encode(df, url_col, n_buckets, salt_k, order_cols,
-                                  host_major=host_major,
                                   num_partitions=num_partitions)
     else:
         if bucket_expr is None:
@@ -549,7 +548,7 @@ def encode_table(df: DataFrame, out_dir: str, *, url_col: str | None = None,
         prepped = prepped.filter(~F.col("__bucket").isin([int(b) for b in done]))
 
     encoder = _make_encoder(out_dir, table_id, chunk_rows, chunk_bytes,
-                            allow_zlib, frozenset(done),
+                            frozenset(done),
                             bucket_subdirs=bucket_subdirs, fs=fs)
     metrics = prepped.mapInArrow(encoder, schema=MANIFEST_DDL)
     # count() is the action: it aggregates executor-side, so manifest rows
@@ -566,8 +565,7 @@ def encode_table_multischema(df: DataFrame, out_dir: str, *,
                              n_buckets: int = 32, salt_k: int = 4,
                              chunk_rows: int = DEFAULT_CHUNK_ROWS,
                              table_id: str | None = None,
-                             resume: bool = True,
-                             allow_zlib: bool = True) -> DataFrame:
+                             resume: bool = True) -> DataFrame:
     """G2 STRICT parity: route a single batch carrying several schema
     generations into one store, in one call.
 
@@ -646,7 +644,7 @@ def encode_table_multischema(df: DataFrame, out_dir: str, *,
         bexpr = (bexpr + F.lit(g * n_buckets)).cast("int")
         encode_table(sub, out_dir, bucket_expr=bexpr, n_buckets=n_buckets,
                      chunk_rows=chunk_rows, table_id=f"{tid}_s{sid}",
-                     resume=resume, allow_zlib=allow_zlib)
+                     resume=resume)
     # encode_table returns the whole store's manifest; one read at the
     # end covers every generation
     return read_manifest(df.sparkSession, out_dir)
@@ -656,7 +654,6 @@ def encode_table_partitioned(df: DataFrame, out_dir: str, *,
                              ts_col: str = "warc_ts",
                              chunk_rows: int = DEFAULT_CHUNK_ROWS,
                              table_id: str | None = None,
-                             allow_zlib: bool = True,
                              resume: bool = True) -> DataFrame:
     """Reference output-layout parity: event-time hourly partitioning.
 
@@ -752,7 +749,7 @@ def encode_table_partitioned(df: DataFrame, out_dir: str, *,
     return encode_table(
         withb, out_dir, bucket_col="__hour_bucket",
         n_buckets=max(next_id, 1), chunk_rows=chunk_rows,
-        table_id=table_id, allow_zlib=allow_zlib, resume=resume,
+        table_id=table_id, resume=resume,
         bucket_subdirs=subdirs)
 
 

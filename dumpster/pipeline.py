@@ -240,14 +240,17 @@ def prep_for_encode_local(df: DataFrame, url_col: str | None,
 
 def prep_for_encode(df: DataFrame, url_col: str, n_buckets: int,
                     salt_k: int = 4, order_cols: tuple[str, ...] = (),
-                    host_major: bool = True,
                     num_partitions: int | None = None) -> DataFrame:
     """Full prep: salted bucket → explicit repartition → locality sort.
 
     One shuffle, keyed by the salted bucket.  The host is materialised
     once and reused by both the bucket expression and the
     sortWithinPartitions (a local sort, no extra exchange) that restores
-    host-major locality inside each partition so RLE/FSST/dict see runs.
+    host-major locality inside each partition so RLE/FSST/dict see runs:
+    the sort key is ``(__bucket, __host, *order_cols)``.  A layout whose
+    zone maps are tight on ``order_cols`` (e.g. a timestamp) instead
+    encodes without ``url_col`` — encode_table(mode="salted") then sorts
+    each hash bucket by ``order_cols`` alone.
 
     ``num_partitions`` decouples TASK granularity from BUCKET granularity
     (default 2× cluster parallelism, capped at n_buckets): buckets stay
@@ -264,12 +267,6 @@ def prep_for_encode(df: DataFrame, url_col: str, n_buckets: int,
     if num_partitions is None:
         par = df.sparkSession.sparkContext.defaultParallelism
         num_partitions = max(1, min(n_buckets, 2 * par))
-    # host-major: host-vocabulary runs maximise RLE/FSST/dict ratio;
-    # order-major (host_major=False with order_cols=(ts,)): tight
-    # per-chunk zone maps for predicate-pruned decode — a layout
-    # tradeoff knob, like choosing a sort key at table-write time
-    sort_keys = (("__host", *order_cols) if host_major
-                 else (*order_cols, "__host"))
     out = (out.repartition(num_partitions, "__bucket")
-           .sortWithinPartitions("__bucket", *sort_keys))
+           .sortWithinPartitions("__bucket", "__host", *order_cols))
     return out.drop("__host")

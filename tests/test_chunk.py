@@ -132,6 +132,31 @@ def test_corruption_detected_in_pruned_column_only(tmp_path):
         decode_chunk_file(str(fp), columns=["html"])
 
 
+@pytest.mark.parametrize("columns", [None, ["lang"]],
+                         ids=["full", "projected"])
+def test_corrupt_footer_length_is_a_format_error(tmp_path, columns):
+    """A bit-flipped footer length (intact tail magic) is a ValueError on
+    both the full and the ranged read — never an I/O error from seeking
+    to a negative offset."""
+    import struct
+
+    from dumpster.chunk import _TAIL_LEN, decode_chunk_file
+
+    n = 500
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([f"https://h{i % 7}.example.com/{i}" for i in range(n)]),
+         pa.array([["pt", "en"][i % 2] for i in range(n)])],
+        names=["url", "lang"])
+    blob, _ = encode_chunk(batch)
+    raw = bytearray(blob)
+    (flen,) = struct.unpack_from("<I", raw, len(raw) - _TAIL_LEN)
+    struct.pack_into("<I", raw, len(raw) - _TAIL_LEN, flen ^ (1 << 30))
+    fp = tmp_path / "c.dmc"
+    fp.write_bytes(bytes(raw))
+    with pytest.raises(ValueError):
+        decode_chunk_file(str(fp), columns)
+
+
 def test_encoding_is_deterministic():
     n = 3000
     batch = pa.RecordBatch.from_arrays(

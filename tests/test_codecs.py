@@ -258,33 +258,42 @@ def test_bss_wins_on_embedding_like_floats():
     assert stored < 4 * len(f32), "bss+zlib should beat 4 B/value raw"
 
 
-def test_legacy_zlib_chunks_still_decode(monkeypatch):
-    """Round-2 chunks stored the byte stage as zlib with flag True/1; the
-    zstd upgrade (flag 2) must keep decoding them bit-identically."""
+def test_legacy_zlib_and_dmc1_chunks_are_refused(monkeypatch):
+    """Only the DMC2 container and byte-stage flags 0 (none) and 2 (zstd)
+    are readable.  A payload with the zlib flag 1 of early chunks, or a
+    DMC1 head, raises ValueError: decoding either as current bytes would
+    be a silent wrong answer."""
     import zlib as _z
-
-    import dumpster.codecs.selector as sel
-
-    def legacy_maybe_zlib(payload, allow):
-        total = sel._plen(payload)
-        if not allow or total < 64:
-            return payload, False
-        joined = sel._as_bytes(payload)
-        z = _z.compress(joined, 1)
-        if len(z) < sel.ZLIB_MIN_GAIN * total:
-            return z, True
-        return payload, False
 
     import pyarrow as pa
 
+    import dumpster.codecs.selector as sel
     from dumpster.chunk import decode_chunk, encode_chunk
+
+    def legacy_maybe_zlib(payload):
+        total = sel._plen(payload)
+        if total < 64:
+            return payload, False
+        z = _z.compress(sel._as_bytes(payload), 1)
+        if len(z) < sel.ZLIB_MIN_GAIN * total:
+            return z, 1
+        return payload, False
+
     batch = pa.RecordBatch.from_arrays(
         [pa.array([f"the quick brown fox {i % 7}" for i in range(4000)]),
          pa.array(list(range(4000)), type=pa.int64())],
         names=["text", "n"])
     monkeypatch.setattr(sel, "_maybe_zlib", legacy_maybe_zlib)
     blob, stats = encode_chunk(batch, table_id="legacy")
-    assert any(s["zlib"] in (True, 1) for s in stats), stats
+    flagged = [s["column"] for s in stats if s["zlib"] == 1]
+    assert flagged, stats
     monkeypatch.undo()  # decode runs on CURRENT code
-    out = decode_chunk(blob)
-    assert out.equals(batch)
+    with pytest.raises(ValueError, match="byte-stage flag 1"):
+        decode_chunk(blob)
+    with pytest.raises(ValueError, match="byte-stage flag 1"):
+        decode_chunk(blob, flagged[:1])
+
+    good, _ = encode_chunk(batch, table_id="legacy")
+    assert decode_chunk(good).equals(batch)
+    with pytest.raises(ValueError, match="magic"):
+        decode_chunk(b"DMC1" + good[4:])

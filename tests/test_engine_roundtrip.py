@@ -326,9 +326,8 @@ def test_verify_chunks_and_skip_on_error(spark, pages, out_dir):
 def test_zone_filter_conjunction(spark, pages, out_dir):
     """AND of two zone ranges prunes at least as hard as either alone and
     never loses a matching row."""
-    encode_table(pages, out_dir, url_col="url", mode="salted",
-                 n_buckets=4, chunk_rows=256,
-                 order_cols=("warc_ts",), host_major=False)
+    encode_table(pages, out_dir, mode="salted", n_buckets=4, chunk_rows=256,
+                 order_cols=("warc_ts",))
     man_rows = read_manifest(spark, out_dir).select("file", "col_stats").collect()
     from dumpster.engine import prune_manifest_files
     lo, hi = pages.agg(F.min("warc_ts"), F.max("warc_ts")).collect()[0]
@@ -449,9 +448,8 @@ def test_concurrent_duplicate_encode_is_safe(spark, pages, out_dir):
 def test_all_decode_knobs_compose(spark, pages, out_dir):
     """zone_filter + columns + path_glob + on_error='skip' in one decode:
     the pruning layers and the error guard must compose, not interact."""
-    encode_table(pages, out_dir, url_col="url", mode="salted",
-                 n_buckets=4, chunk_rows=256,
-                 order_cols=("warc_ts",), host_major=False)
+    encode_table(pages, out_dir, mode="salted", n_buckets=4, chunk_rows=256,
+                 order_cols=("warc_ts",))
     lo, hi = pages.agg(F.min("warc_ts"), F.max("warc_ts")).collect()[0]
     cutoff = lo + (hi - lo) / 4
 

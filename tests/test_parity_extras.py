@@ -32,17 +32,109 @@ def test_register_decoded_view_sql(spark, tmp_path):
     assert per_lang == docs.select("lang").distinct().count()
 
 
+def _ipc_bytes(batch: pa.RecordBatch) -> bytes:
+    sink = pa.BufferOutputStream()
+    with pa.ipc.new_stream(sink, batch.schema) as w:
+        w.write_batch(batch)
+    return sink.getvalue().to_pybytes()
+
+
+def _every_kind_batch(n: int = 1200) -> pa.RecordBatch:
+    """One column per chunk kind, with nulls and NaNs; n is above the
+    bloom threshold so a selected encode would build blooms and bounds."""
+    import decimal
+    ts = [None if i % 11 == 0 else 1767225600_000_000 + i * 1000
+          for i in range(n)]
+    return pa.RecordBatch.from_arrays(
+        [pa.array(["aa", "bb", "aa"] * (n // 3)),
+         pa.array(list(range(n)), type=pa.int64()),
+         pa.array([None if i % 7 == 0 else i % 5 for i in range(n)],
+                  type=pa.int32()),
+         pa.array(ts, type=pa.timestamp("us")),
+         pa.array([float("nan") if i % 9 == 0 else i / 4 for i in range(n)],
+                  type=pa.float32()),
+         pa.array([float("nan") if i % 13 == 0 else i * 0.1
+                   for i in range(n)], type=pa.float64()),
+         pa.array([decimal.Decimal(i) / 100 for i in range(n)],
+                  type=pa.decimal128(12, 2)),
+         pa.array([bytes([i % 256, 0, 255]) for i in range(n)],
+                  type=pa.binary()),
+         pa.array([list(range(i % 4)) for i in range(n)],
+                  type=pa.list_(pa.int64())),
+         pa.array([[f"t{i % 3}", "x"] for i in range(n)],
+                  type=pa.list_(pa.string()))],
+        names=["s", "i", "i_null", "ts", "f32", "f64", "dec", "bin",
+               "l_int", "l_str"])
+
+
+def _assert_all_plain(blob: bytes, stats: list):
+    """Every stat and stored descriptor is PLAIN with no byte stage,
+    no string bounds, no bloom, and floats keep their native payload."""
+    import json
+    import struct
+
+    from dumpster.chunk import _read_footer
+    from dumpster.codecs import PLAIN
+    for s in stats:
+        assert s["codec"] == "plain" and s["zlib"] == 0, s
+        assert "bloom" not in s and "smin" not in s, s
+    mv = memoryview(blob)
+    footer = _read_footer(lambda off, n: mv[off:off + n], len(blob))
+    names = [name for name, _, _, _ in footer["cols"]]
+    assert names == [s["column"] for s in stats]   # no __bloom: sections
+    for name, off, _, _ in footer["cols"]:
+        (dlen,) = struct.unpack_from("<I", blob, off)
+        desc = json.loads(blob[off + 4:off + 4 + dlen])
+        assert desc["codec"] == PLAIN and desc["zlib"] == 0, desc
+        assert "__f" not in json.dumps(desc["meta"]), desc
+        if desc["kind"] == "d":
+            assert desc["meta"]["hic"] == PLAIN and desc["meta"]["hizl"] == 0
+
+
 def test_plain_only_chunk_roundtrips():
-    batch = pa.RecordBatch.from_arrays(
-        [pa.array(["aa", "bb", "aa"] * 100), pa.array(list(range(300)),
-                                                      type=pa.int64())],
-        names=["s", "i"])
+    batch = _every_kind_batch()
     from dumpster.chunk import encode_chunk_pieces
     pieces, stats = encode_chunk_pieces(batch, plain_only=True)
-    assert all(s["codec"] == "plain" for s in stats)
     blob = b"".join(bytes(p) for p in pieces)
+    _assert_all_plain(blob, stats)
     out = decode_chunk(blob)
-    assert out.equals(batch)
+    assert _ipc_bytes(out) == _ipc_bytes(batch)
+
+
+def test_encoder_fallback_records_the_reason(tmp_path, monkeypatch):
+    """A codec failure downgrades the chunk to PLAIN and the manifest's
+    col_stats say why (class and message), not just that it happened."""
+    import json
+
+    import dumpster.codecs.selector as sel
+    from dumpster.chunk import decode_chunk_file
+    from dumpster.engine import _make_encoder
+
+    def boom(payload):
+        raise RuntimeError("boom")
+
+    batch = _every_kind_batch()
+    routed = batch.append_column(
+        "__bucket", pa.array([0] * batch.num_rows, type=pa.int32()))
+    monkeypatch.setattr(sel, "_maybe_zlib", boom)
+    cpus, io_threads = pa.cpu_count(), pa.io_thread_count()
+    try:   # the encoder pins both Arrow pools to one thread
+        encoder = _make_encoder(str(tmp_path), "t", 10_000, 1 << 30,
+                                frozenset(), publish_manifest=False)
+        rows = [r for mb in encoder(iter([routed])) for r in mb.to_pylist()]
+    finally:
+        pa.set_cpu_count(cpus)
+        pa.set_io_thread_count(io_threads)
+    assert len(rows) == 1
+    stats = json.loads(rows[0]["col_stats"])
+    assert [s["column"] for s in stats] == batch.schema.names
+    for s in stats:
+        assert s["codec"] == "plain" and s["zlib"] == 0, s
+        assert "RuntimeError: boom" in s["fallback"], s
+    blob = open(rows[0]["file"], "rb").read()
+    _assert_all_plain(blob, stats)
+    out = decode_chunk_file(rows[0]["file"])
+    assert _ipc_bytes(out) == _ipc_bytes(batch)
 
 
 def test_codec_selection_report_query(spark):

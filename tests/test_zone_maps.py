@@ -29,9 +29,8 @@ def test_zone_maps_present_in_manifest(spark, tmp_path):
 def test_zone_filter_prunes_and_preserves_results(spark, tmp_path):
     pages = synth_pages(spark, 4000, seed=5).cache()
     out = str(tmp_path / "enc")
-    encode_table(pages, out, url_col="url", mode="salted",
-                 n_buckets=4, chunk_rows=256,
-                 order_cols=("warc_ts",), host_major=False)
+    encode_table(pages, out, mode="salted", n_buckets=4, chunk_rows=256,
+                 order_cols=("warc_ts",))
     lo = datetime.datetime(2026, 1, 1, 0, 10)
     hi = datetime.datetime(2026, 1, 1, 0, 20)
 
