@@ -23,10 +23,11 @@ place Spark's own FileSourceScan does its file listing + packing.  At
 10^12 docs that is ~10^7 manifest rows of (file, stats); columnar-read of
 just those two columns keeps it in the low GBs, and the listing cost is
 paid once per query, against a scan that would otherwise decode the full
-table.  ``engine.decode_table`` runs the same scan — driver-side listing
-(engine._manifest_files), the one zone-map rule
-(engine._chunk_may_match), task-side decode (engine._scan_chunk_files) —
-and differs only in how it feeds files to tasks.
+table.  ``engine.decode_table`` runs the same scan — the same stores
+(engine._resolve_stores), the one chunk planner (engine._plan_chunks:
+manifest listing plus the zone-map rule), task-side decode
+(engine._scan_chunk_files) — and differs only in how it feeds files to
+tasks (here a ``target_bytes`` bin-pack, there a file-index range).
 
 Column pruning: the Python DataSource API (4.1) has no
 SupportsPushDownRequiredColumns hook yet, so a plain ``SELECT lang``
@@ -70,11 +71,10 @@ from . import fs as fslib
 from .bloom import bloom_rejects_file
 from .engine import (DEFAULT_CHUNK_BYTES, DEFAULT_CHUNK_ROWS, FLAT_SEP,
                      _MANIFEST_ARROW, _arrow_schema, _as_bytes,
-                     _chunk_may_match, _col_stats, _evolve_schema,
                      _fs_write_atomic, _has_structs, _make_encoder,
-                     _manifest_files, _manifest_path, _publish_table_schema,
-                     _scan_chunk_files, _stat_value, done_buckets,
-                     table_schema)
+                     _manifest_path, _plan_chunks, _publish_table_schema,
+                     _resolve_stores, _scan_chunk_files, _stat_value,
+                     _union_schema, done_buckets)
 
 _DEFAULT_TARGET_BYTES = 64 * 1024 * 1024
 
@@ -82,31 +82,6 @@ _DEFAULT_TARGET_BYTES = 64 * 1024 * 1024
 class ChunkFilesPartition(InputPartition):
     def __init__(self, files: list[str]):
         self.files = files
-
-
-def _resolve_stores(path: str) -> list[str]:
-    """A path is either ONE encoded store (has ``_schema.json``) or a
-    streaming-sink root whose ``batch=N`` children are stores — the
-    format reads both, so SQL users can point straight at a
-    ``writeStream`` output without knowing the layout."""
-    import glob as _glob
-    if os.path.exists(os.path.join(path, "_schema.json")):
-        return [path]
-    batches = sorted(d for d in _glob.glob(os.path.join(path, "batch=*"))
-                     if os.path.exists(os.path.join(d, "_schema.json")))
-    if batches:
-        return batches
-    raise ValueError(
-        f"{path!r} is neither an encoded table (no _schema.json) nor a "
-        f"stream-sink root (no batch=*/ stores); pass the store directory "
-        f"written by encode_table / the dumpster sink")
-
-
-def _union_schema(stores: list[str]) -> StructType:
-    out = table_schema(stores[0])
-    for d in stores[1:]:
-        out = _evolve_schema(out, table_schema(d))
-    return out
 
 
 class DumpsterDataSource(DataSource):
@@ -133,7 +108,7 @@ class DumpsterDataSource(DataSource):
         out_dir = self.options.get("path")
         if not out_dir:
             raise ValueError("dumpster datasource requires .option('path', out_dir)")
-        full = _union_schema(_resolve_stores(out_dir))
+        full = _union_schema(_resolve_stores(out_dir, required=True))
         # every field reports nullable: old-generation chunks null-fill
         # evolved columns, and a nullable report is always a safe
         # relaxation — it also keeps the pushdown-view sentinel filter
@@ -165,7 +140,7 @@ class DumpsterDataSource(DataSource):
 class DumpsterReader(DataSourceReader):
     def __init__(self, options: dict, schema: StructType):
         self.out_dir = options["path"]
-        self.stores = _resolve_stores(self.out_dir)
+        self.stores = _resolve_stores(self.out_dir, required=True)
         # planning-time-static: resolved ONCE on the driver — read()
         # runs per partition executor-side, and re-deriving the union
         # schema there would re-open every store's _schema.json for
@@ -280,41 +255,14 @@ class DumpsterReader(DataSourceReader):
             z[1] = hi if z[1] is None else min(z[1], hi)
 
     def partitions(self) -> list[ChunkFilesPartition]:
-        import pyarrow.dataset as ds
-        mfiles = _manifest_files(self.stores)
-        files_sizes: list[tuple[str, int]] = []
-        if mfiles:
-            tbl = ds.dataset(mfiles).to_table(
-                columns=["file", "encoded_bytes", "col_stats", "n_rows"])
-            zones = [(c, lo, hi) for c, (lo, hi) in self.zones.items()]
-            prune = bool(zones or self.null_preds)
-            for fp, nb, cs, nr in zip(tbl.column(0).to_pylist(),
-                                      tbl.column(1).to_pylist(),
-                                      tbl.column(2).to_pylist(),
-                                      tbl.column(3).to_pylist()):
-                stats = _col_stats(cs) if prune or self.sentinel else None
-                if self.sentinel is not None and int(nr) > 0:
-                    s = (stats or {}).get(self.sentinel)
-                    nn = None if s is None else s.get("n_nulls")
-                    if nn is None or nn > 0:
-                        raise RuntimeError(
-                            f"pushdown view over {self.out_dir!r}: the "
-                            f"never-null sentinel column "
-                            f"{self.sentinel!r} now has NULLs (or is "
-                            f"missing) in chunk {fp!r} — a later append "
-                            f"broke the invariant the registration "
-                            f"verified.  The view's IS NOT NULL filter "
-                            f"would silently drop those rows; "
-                            f"re-register it with "
-                            f"register_decoded_view(..., pushdown=True) "
-                            f"to pick a valid sentinel or fall back to "
-                            f"the exact decode view.")
-                if prune and not _chunk_may_match(stats, int(nr), zones,
-                                                  self.null_preds):
-                    continue
-                files_sizes.append((fp, int(nb)))
-        # deterministic order, then greedy bin-pack to target_bytes
-        files_sizes.sort()
+        zones = [(c, lo, hi) for c, (lo, hi) in self.zones.items()]
+        try:
+            files_sizes = _plan_chunks(self.stores, zones, self.null_preds,
+                                       sentinel=self.sentinel)
+        except RuntimeError as e:   # the sentinel check: name the view
+            raise RuntimeError(
+                f"pushdown view over {self.out_dir!r}: {e}") from None
+        # greedy bin-pack of the file-sorted plan to target_bytes
         parts, cur, cur_b = [], [], 0
         for fp, nb in files_sizes:
             if cur and cur_b + nb > self.target_bytes:

@@ -37,6 +37,7 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import numbers
@@ -159,11 +160,40 @@ def _is_manifest_name(f: str) -> bool:
             and f[1:-len(".parquet")].isdigit())
 
 
+def batch_dirs(out_dir: str) -> list[str]:
+    """COMMITTED micro-batch stores only: a ``batch=N`` dir without
+    ``_schema.json`` is an in-flight or failed V2-sink batch (the stream
+    sink publishes schema + manifests at commit) — readers must not see
+    it, or every decode racing a live stream would crash on the missing
+    schema.  The foreachBatch path publishes its schema before chunks,
+    so its dirs always qualify."""
+    return sorted(d for d in glob.glob(os.path.join(out_dir, "batch=*"))
+                  if os.path.exists(os.path.join(d, "_schema.json")))
+
+
+def _resolve_stores(path: str, required: bool = False) -> list[str]:
+    """The one answer to "which stores does this path name": ``[path]``
+    for ONE encoded store (has ``_schema.json``), the committed
+    ``batch=N`` stores of a streaming-sink root, ``[]`` otherwise (raised
+    as ``ValueError`` when ``required``).  Every reader goes through it,
+    so SQL users, decode_table, read_manifest and verify_chunks can point
+    straight at a ``writeStream`` output and all see the same chunks."""
+    if os.path.exists(os.path.join(path, "_schema.json")):
+        return [path]
+    stores = batch_dirs(path)
+    if required and not stores:
+        raise ValueError(
+            f"{path!r} is neither an encoded table (no _schema.json) nor a "
+            f"stream-sink root (no batch=*/ stores); pass the store "
+            f"directory written by encode_table / the dumpster sink")
+    return stores
+
+
 def _manifest_files(stores: list[str]) -> list[str]:
     """Every committed per-bucket manifest file across the stores, in
-    deterministic order — the one manifest lister behind decode_tables,
-    the dumpster DataSource planner and the pushdown-sentinel scan, so
-    they can never disagree on which chunks exist."""
+    deterministic order — the one manifest lister behind _plan_chunks,
+    read_manifest and the pushdown-sentinel scan, so they can never
+    disagree on which chunks exist."""
     out = []
     for store in stores:
         mdir = os.path.join(store, "manifest")
@@ -754,17 +784,26 @@ def encode_table_partitioned(df: DataFrame, out_dir: str, *,
 
 
 def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
-    if not _manifest_files([out_dir]):
+    """The lineage/metrics rows (one per chunk) of a store, or of every
+    committed ``batch=N`` store when ``out_dir`` is a stream-sink root;
+    the empty frame when there are none."""
+    return _read_manifests(spark, _resolve_stores(out_dir))
+
+
+def _read_manifests(spark: SparkSession, stores: list[str]) -> DataFrame:
+    mfiles = _manifest_files(stores)
+    if not mfiles:
         return spark.createDataFrame([], MANIFEST_DDL)
-    mdir = os.path.join(out_dir, "manifest")
-    # one directory listing, not N file paths: planning N separate relations
-    # dominates decode setup once buckets number in the hundreds; the glob
-    # filter keeps half-written *.tmp files (crash leftovers) out
-    # the Hadoop glob can only require the FIRST char to be a digit;
-    # the rlike guard drops foreign names like b12x.parquet that the
-    # listing-side _is_manifest_name also rejects (they must agree)
+    # one multi-path scan of the manifest DIRECTORIES, not N file paths:
+    # planning N separate relations dominates decode setup once buckets
+    # number in the hundreds; the glob filter keeps half-written *.tmp
+    # files (crash leftovers) out.  The Hadoop glob can only require the
+    # FIRST char to be a digit; the rlike guard drops foreign names like
+    # b12x.parquet that the listing-side _is_manifest_name also rejects
+    # (they must agree)
+    mdirs = sorted({os.path.dirname(f) for f in mfiles})
     return (spark.read.option("pathGlobFilter", "b[0-9]*.parquet")
-            .schema(MANIFEST_DDL).parquet(mdir)
+            .schema(MANIFEST_DDL).parquet(*mdirs)
             .filter(F.input_file_name().rlike(r"/b[0-9]+\.parquet$")))
 
 
@@ -833,6 +872,17 @@ def _evolve_schema(old: StructType, new: StructType) -> StructType:
     added = [StructField(f.name, f.dataType, nullable=True)
              for f in new.fields if f.name not in by_name]
     return StructType(list(old.fields) + added)
+
+
+def _union_schema(stores: list[str]) -> StructType:
+    """Add-only union of the stores' table schemas (same contract as
+    write-side evolution): a stream whose schema widened across restarts
+    still reads as ONE table, older batches null-filled; genuine type
+    conflicts raise."""
+    out = table_schema(stores[0])
+    for d in stores[1:]:
+        out = _evolve_schema(out, table_schema(d))
+    return out
 
 
 def _stat_value(v):
@@ -916,6 +966,54 @@ def prune_manifest_files(manifest_rows, zone_filter) -> list[str]:
     return sorted({r["file"] for r in manifest_rows
                    if _chunk_may_match(_col_stats(r["col_stats"]), 0,
                                        zones)})
+
+
+def _plan_chunks(stores: list[str], zones=(), null_preds=(),
+                 path_glob: str | None = None,
+                 sentinel: str | None = None) -> list[tuple[str, int]]:
+    """The one chunk planner behind decode_tables and the dumpster
+    DataSource: ``(file, encoded_bytes)`` of every committed chunk of the
+    stores that survives ``path_glob`` and the zone-map rule
+    (_chunk_may_match over ``zones`` and ``null_preds``), sorted by file.
+    Runs driver-side, where Spark's own FileSourceScan lists too;
+    ``col_stats`` is read only when a zone, a null predicate or a
+    sentinel needs it.
+
+    ``sentinel`` (register_decoded_view's stale-scan-cache workaround):
+    its IS NOT NULL filter must stay a semantic no-op forever, so every
+    planning re-verifies that the column has no NULLs in any non-empty
+    chunk and raises RuntimeError if a later append broke that (ADVICE
+    r3: silent row loss until someone happened to re-register)."""
+    import fnmatch
+    import pyarrow.dataset as ds
+    mfiles = _manifest_files(stores)
+    if not mfiles:
+        return []
+    need_stats = bool(zones or null_preds or sentinel)
+    cols = ds.dataset(mfiles).to_table(
+        columns=["file", "encoded_bytes", "n_rows"]
+        + (["col_stats"] if need_stats else [])).to_pydict()
+    out = []
+    for i, fp in enumerate(cols["file"]):
+        if path_glob is not None and not fnmatch.fnmatch(fp, path_glob):
+            continue
+        n_rows = cols["n_rows"][i]
+        stats = _col_stats(cols["col_stats"][i]) if need_stats else {}
+        if sentinel is not None and n_rows > 0:
+            s = stats.get(sentinel)
+            if s is None or s.get("n_nulls") is None or s["n_nulls"] > 0:
+                raise RuntimeError(
+                    f"the never-null sentinel column {sentinel!r} now has "
+                    f"NULLs (or is missing) in chunk {fp!r} — a later "
+                    f"append broke the invariant the registration "
+                    f"verified.  The view's IS NOT NULL filter would "
+                    f"silently drop those rows; re-register it with "
+                    f"register_decoded_view(..., pushdown=True) to pick "
+                    f"a valid sentinel or fall back to the exact decode "
+                    f"view.")
+        if _chunk_may_match(stats, n_rows, zones, null_preds):
+            out.append((fp, cols["encoded_bytes"][i]))
+    return sorted(out)
 
 
 def _str_zone_overlaps(s: dict, lo, hi) -> bool:
@@ -1027,8 +1125,17 @@ def clean_orphans(spark: SparkSession, out_dir: str, *,
 
     Safety rails: if the manifest references nothing but .dmc files
     exist, refuses to delete (a missing/unreadable manifest must not
-    nuke a table); returns {"tmp": n, "orphans": n, "bytes": n}.
+    nuke a table); returns {"tmp": n, "orphans": n, "bytes": n}.  A
+    stream-sink root is refused with ValueError: sweep each of its
+    ``batch=N`` stores on its own.
     """
+    stores = _resolve_stores(out_dir)
+    if stores and stores != [out_dir]:
+        raise ValueError(
+            f"clean_orphans: {out_dir!r} is a stream-sink root, not a "
+            f"store; sweep its {len(stores)} batch store(s) "
+            f"(batch_dirs(out_dir)) one by one: {stores[:8]}"
+            f"{' ...' if len(stores) > 8 else ''}")
     chunks_root = os.path.realpath(os.path.join(out_dir, "chunks"))
     dirs = [chunks_root]
     for root, subdirs, _files in os.walk(chunks_root):
@@ -1157,7 +1264,8 @@ def verify_chunks(spark: SparkSession, out_dir: str) -> DataFrame:
     KafkaException record instead of crashing): corruption is surfaced as
     data (file, ok, error, n_rows), never as a job failure.  Run it before
     trusting a resumed/transferred table; pair with
-    ``decode_table(on_error="skip")`` to scan around damage.
+    ``decode_table(on_error="skip")`` to scan around damage.  A
+    stream-sink root sweeps every committed ``batch=N`` store.
     """
     manifest = read_manifest(spark, out_dir)
     par = max(spark.sparkContext.defaultParallelism, 1)
@@ -1188,9 +1296,12 @@ def decode_table(spark: SparkSession, out_dir: str,
                  zone_filter: tuple | None = None,
                  path_glob: str | None = None,
                  on_error: str = "raise") -> DataFrame:
-    return decode_tables(spark, [out_dir], columns=columns,
-                         zone_filter=zone_filter, path_glob=path_glob,
-                         on_error=on_error)
+    """decode_tables over the stores ``out_dir`` names: one encoded store,
+    or a stream-sink root, whose committed ``batch=N`` stores decode as
+    one table (a path that is neither raises ValueError)."""
+    return decode_tables(spark, _resolve_stores(out_dir, required=True),
+                         columns=columns, zone_filter=zone_filter,
+                         path_glob=path_glob, on_error=on_error)
 
 
 def decode_tables(spark: SparkSession, dirs: list[str], *,
@@ -1200,11 +1311,11 @@ def decode_tables(spark: SparkSession, dirs: list[str], *,
                   on_error: str = "raise") -> DataFrame:
     """Inverse of encode_table: manifest → DataFrame, bit-identical.
 
-    The same chunk scan as the dumpster DataSource: the driver lists the
-    manifests and prunes the file list (``path_glob``, zone maps), tasks
-    decode the surviving chunk files (_scan_chunk_files) — no data
-    shuffle at all.  Column pruning reaches the chunk container so
-    unselected payloads are never read or decompressed.
+    The same chunk scan as the dumpster DataSource: the driver plans the
+    file list (_plan_chunks: ``path_glob``, zone maps), tasks decode the
+    surviving chunk files (_scan_chunk_files) — no data shuffle at all.
+    Column pruning reaches the chunk container so unselected payloads
+    are never read or decompressed.
     ``zone_filter=(col, lo, hi)`` — or a list of such tuples, ANDed —
     prunes whole chunks via the manifest zone maps before any file is
     opened — the reference's dt=/hr= partition pruning, generalised;
@@ -1218,15 +1329,7 @@ def decode_tables(spark: SparkSession, dirs: list[str], *,
     together, so the plan stays constant-size however many tables are
     unioned — no per-table unionByName chain.
     """
-    full = table_schema(dirs[0])
-    for d in dirs[1:]:
-        other = table_schema(d)
-        if other != full:
-            # add-only union across tables (same contract as write-side
-            # schema evolution): a stream whose schema widened across
-            # restarts still decodes as ONE table, older batches
-            # null-filled; genuine type conflicts raise
-            full = _evolve_schema(full, other)
+    full = _union_schema(dirs)
     logical = None
     with_logical = [d for d in dirs
                     if os.path.exists(os.path.join(d,
@@ -1284,24 +1387,12 @@ def decode_tables(spark: SparkSession, dirs: list[str], *,
     schema = StructType(fields)
     names = [f.name for f in fields]
 
-    # driver-side listing (where Spark's FileSourceScan lists too), then
-    # an exchange-free file feed: a JVM-only Range scan carries chunk
-    # INDICES and the file list rides the task closure
+    # driver-side planning, then an exchange-free file feed: a JVM-only
+    # Range scan carries chunk INDICES and the file list rides the task
+    # closure
     zones = _zone_filters(zone_filter)
-    mfiles = _manifest_files(dirs)
-    kept: set = set()
-    if mfiles:
-        import fnmatch
-        import pyarrow.dataset as _ds
-        tbl = _ds.dataset(mfiles).to_table(
-            columns=["file", "col_stats"] if zones else ["file"])
-        fps = tbl.column(0).to_pylist()
-        css = tbl.column(1).to_pylist() if zones else [None] * len(fps)
-        kept = {fp for fp, cs in zip(fps, css)
-                if (path_glob is None or fnmatch.fnmatch(fp, path_glob))
-                and (not zones or _chunk_may_match(_col_stats(cs), 0,
-                                                   zones))}
-    file_list = sorted(kept)
+    file_list = [fp for fp, _nb in _plan_chunks(dirs, zones,
+                                                path_glob=path_glob)]
     par = max(spark.sparkContext.defaultParallelism, 1)
     fdf = spark.range(0, len(file_list),
                       numPartitions=max(1, min(par * 2, len(file_list))))
@@ -1334,11 +1425,7 @@ def _pushdown_sentinel(out_dir: str,
     old-generation chunks null-fills on decode, so it cannot carry the
     sentinel).  Returns None when no column qualifies."""
     import pyarrow.dataset as ds
-    from .datasource import _resolve_stores, _union_schema
-    try:
-        stores = _resolve_stores(out_dir)
-    except ValueError:
-        return None
+    stores = _resolve_stores(out_dir)
     mfiles = _manifest_files(stores)
     if not mfiles:
         return None
@@ -1361,15 +1448,29 @@ def _pushdown_sentinel(out_dir: str,
     return None
 
 
-def _decode_any_root(spark: SparkSession, out_dir: str,
-                     columns: list[str] | None = None) -> DataFrame:
-    """Exact decode of a single store OR a stream-sink root (batch=N
-    stores) — the pushdown path accepts both shapes, so its fallback
-    must too."""
-    if os.path.exists(os.path.join(out_dir, "_schema.json")):
-        return decode_table(spark, out_dir, columns)
-    from .streaming import decode_stream_table
-    return decode_stream_table(spark, out_dir, columns=columns)
+def _pushdown_view_df(spark: SparkSession, out_dir: str, sentinel: str,
+                      columns: list[str] | None) -> DataFrame:
+    """The one ``spark.read.format("dumpster")`` relation behind a
+    pushdown view (register_decoded_view and sqlfront's narrow swaps):
+    ``columns`` (None = all) plus the never-null ``sentinel`` and its
+    IS NOT NULL filter (see register_decoded_view)."""
+    from .datasource import register_dumpster_source
+    register_dumpster_source(spark)
+    r = (spark.read.format("dumpster").option("path", out_dir)
+         # the reader re-verifies the sentinel's never-null invariant on
+         # EVERY planning (_plan_chunks) and raises loudly if an append
+         # broke it — the IS NOT NULL below must stay a semantic no-op
+         # or rows would silently vanish
+         .option("sentinel_col", sentinel))
+    if columns:
+        cols = list(columns)
+        if sentinel not in cols:
+            cols.append(sentinel)
+        r = r.option("columns", ",".join(cols))
+    tr = spark.conf.get("dumpster.io_trace", None)
+    if tr:
+        r = r.option("io_trace", tr)
+    return r.load().filter(F.col(sentinel).isNotNull())
 
 
 def register_decoded_view(spark: SparkSession, out_dir: str, name: str,
@@ -1415,40 +1516,20 @@ def register_decoded_view(spark: SparkSession, out_dir: str, name: str,
     every planning (``sentinel_col`` option) and raises with a
     re-register instruction when it no longer holds.
     """
-    if pushdown:
-        from .datasource import register_dumpster_source
-        sentinel = _pushdown_sentinel(out_dir, columns)
-        if sentinel is None:
-            import warnings
-            warnings.warn(
-                f"register_decoded_view({name!r}, pushdown=True): no "
-                f"column is provably never-null in the manifest, so the "
-                f"stale-scan-cache workaround (see docstring) cannot be "
-                f"applied safely; registering the exact decode view "
-                f"without planning-time pruning instead")
-            df = _decode_any_root(spark, out_dir, columns)
-        else:
-            register_dumpster_source(spark)
-            r = (spark.read.format("dumpster").option("path", out_dir)
-                 # the reader re-verifies the sentinel's never-null
-                 # invariant on EVERY planning (partitions() reads
-                 # col_stats anyway) and raises loudly if an append
-                 # broke it — the IS NOT NULL below must stay a
-                 # semantic no-op or rows would silently vanish
-                 .option("sentinel_col", sentinel))
-            if columns:
-                r = r.option("columns", ",".join(columns))
-            tr = spark.conf.get("dumpster.io_trace", None)
-            if tr:
-                r = r.option("io_trace", tr)
-            df = r.load().filter(F.col(sentinel).isNotNull())
-    else:
-        sentinel = None
-        # _decode_any_root, not decode_table: a stream-sink root
-        # (batch=N stores, no root _schema.json) must register the same
-        # way it already does on the pushdown fallback path (round-5
-        # review finding — the default mode crashed on stream roots)
-        df = _decode_any_root(spark, out_dir, columns)
+    sentinel = _pushdown_sentinel(out_dir, columns) if pushdown else None
+    if pushdown and sentinel is None:
+        import warnings
+        warnings.warn(
+            f"register_decoded_view({name!r}, pushdown=True): no "
+            f"column is provably never-null in the manifest, so the "
+            f"stale-scan-cache workaround (see docstring) cannot be "
+            f"applied safely; registering the exact decode view "
+            f"without planning-time pruning instead")
+    # decode_table accepts a stream-sink root (batch=N stores, no root
+    # _schema.json) like the pushdown reader does (round-5 review
+    # finding — the default mode crashed on stream roots)
+    df = decode_table(spark, out_dir, columns) if sentinel is None \
+        else _pushdown_view_df(spark, out_dir, sentinel, columns)
     # record for the column-pruning SQL front door (dumpster.sqlfront):
     # narrow re-registrations rebuild from this metadata with no
     # manifest re-scan; sqlfront.sql(spark, query) then decodes only the
@@ -1460,9 +1541,8 @@ def register_decoded_view(spark: SparkSession, out_dir: str, name: str,
     from .sqlfront import _record_registration
     with _sqlfront_lock:
         df.createOrReplaceTempView(name)
-        _record_registration(spark, name, out_dir, columns,
-                             sentinel if pushdown else None, pushdown,
-                             df.columns)
+        _record_registration(spark, name, out_dir, columns, sentinel,
+                             pushdown, df.columns)
     return df
 
 

@@ -217,12 +217,7 @@ def run_jobs(spark: SparkSession, cfg: JobConfig) -> list[dict]:
                    "ratio": round(float(s.get("ratio", 0)), 4)}
         if cfg.register_views:
             view = cfg.view_prefix + t.name
-            if t.mode == "stream_hourly":
-                from .streaming import decode_stream_table
-                decode_stream_table(spark, out_dir) \
-                    .createOrReplaceTempView(view)
-            else:
-                register_decoded_view(spark, out_dir, view)
+            register_decoded_view(spark, out_dir, view)
             summary["view"] = view
         results.append(summary)
     return results

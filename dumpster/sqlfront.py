@@ -73,7 +73,6 @@ from __future__ import annotations
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 # (session java id, lowercased view name) -> registration metadata
 _REGISTRY: dict[tuple[int, str], dict] = {}
@@ -201,29 +200,13 @@ def _register_from_meta(spark: SparkSession, meta: dict,
     optional column subset — no manifest scan (the sentinel was proven
     never-null at register_decoded_view time and the reader re-verifies
     it at every planning anyway)."""
+    from .engine import _pushdown_view_df, decode_table
     name, out_dir = meta["name"], meta["out_dir"]
+    cols = list(columns) if columns else meta["columns"]
     if meta["pushdown"] and meta["sentinel"] is not None:
-        from .datasource import register_dumpster_source
-        register_dumpster_source(spark)
-        sentinel = meta["sentinel"]
-        r = (spark.read.format("dumpster").option("path", out_dir)
-             .option("sentinel_col", sentinel))
-        if columns:
-            cols = list(columns)
-            if sentinel not in cols:
-                cols.append(sentinel)
-            r = r.option("columns", ",".join(cols))
-        elif meta["columns"]:
-            r = r.option("columns", ",".join(meta["columns"]))
-        tr = spark.conf.get("dumpster.io_trace", None)
-        if tr:
-            r = r.option("io_trace", tr)
-        df = r.load().filter(F.col(sentinel).isNotNull())
+        df = _pushdown_view_df(spark, out_dir, meta["sentinel"], cols)
     else:
-        from .engine import _decode_any_root
-        df = _decode_any_root(spark, out_dir,
-                              list(columns) if columns
-                              else meta["columns"])
+        df = decode_table(spark, out_dir, cols)
     df.createOrReplaceTempView(name)
 
 

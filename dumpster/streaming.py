@@ -17,13 +17,31 @@ deployment the one-line swap is ``readStream.format("kafka")`` +
 
 from __future__ import annotations
 
-import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .engine import decode_table, encode_table, table_schema
+# batch_dirs lives with the engine's one store resolver; re-exported here
+from .engine import _read_manifests, batch_dirs, encode_table
+
+
+def _start_foreach_batch(stream_df: DataFrame, sink, checkpoint: str,
+                         trigger_available_now: bool,
+                         trigger_seconds: int | None = None):
+    """Start ``stream_df`` into ``sink(batch_df, batch_id)`` under
+    ``checkpoint``: ``availableNow`` drains what is there, otherwise
+    ``trigger_seconds`` sets the processing-time cadence (jobs.yaml
+    ``trigger_seconds`` — the reference's partitionForget tuning
+    surface)."""
+    writer = (stream_df.writeStream
+              .foreachBatch(sink)
+              .option("checkpointLocation", checkpoint))
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    elif trigger_seconds:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    return writer.start()
 
 
 def encode_stream(stream_df: DataFrame, out_dir: str, *,
@@ -52,14 +70,8 @@ def encode_stream(stream_df: DataFrame, out_dir: str, *,
                      salt_k=salt_k, mode="salted", chunk_rows=chunk_rows,
                      table_id=f"stream_b{batch_id}", resume=True)
 
-    writer = (stream_df.writeStream
-              .foreachBatch(sink)
-              .option("checkpointLocation", checkpoint))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start_foreach_batch(stream_df, sink, checkpoint,
+                                trigger_available_now, trigger_seconds)
 
 
 def encode_stream_partitioned(stream_df: DataFrame, out_dir: str, *,
@@ -87,17 +99,8 @@ def encode_stream_partitioned(stream_df: DataFrame, out_dir: str, *,
                                  chunk_rows=chunk_rows,
                                  table_id=f"stream_hp_b{batch_id}")
 
-    writer = (stream_df.writeStream
-              .foreachBatch(sink)
-              .option("checkpointLocation", checkpoint))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        # the per-table cadence (jobs.yaml trigger_seconds — the
-        # reference's partitionForget tuning surface) must actually
-        # reach the writer; it was previously dropped on the floor
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return _start_foreach_batch(stream_df, sink, checkpoint,
+                                trigger_available_now, trigger_seconds)
 
 
 class CapabilityMissing(RuntimeError):
@@ -228,23 +231,8 @@ def encode_stream_multischema(stream_df: DataFrame, out_dir: str, *,
                                  n_buckets=n_buckets, chunk_rows=chunk_rows,
                                  table_id=f"stream_ms_b{batch_id}")
 
-    writer = (stream_df.writeStream
-              .foreachBatch(sink)
-              .option("checkpointLocation", checkpoint))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def batch_dirs(out_dir: str) -> list[str]:
-    """COMMITTED micro-batch stores only: a ``batch=N`` dir without
-    ``_schema.json`` is an in-flight or failed V2-sink batch (the stream
-    sink publishes schema + manifests at commit) — readers must not see
-    it, or every decode racing a live stream would crash on the missing
-    schema.  The foreachBatch path publishes its schema before chunks,
-    so its dirs always qualify."""
-    return sorted(d for d in glob.glob(os.path.join(out_dir, "batch=*"))
-                  if os.path.exists(os.path.join(d, "_schema.json")))
+    return _start_foreach_batch(stream_df, sink, checkpoint,
+                                trigger_available_now)
 
 
 def decode_stream_table(spark: SparkSession, out_dir: str,
@@ -298,27 +286,20 @@ def compact_stream(spark: SparkSession, out_dir: str, dst_dir: str, *,
 def stream_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
     """All batches' lineage/metrics rows with their batch id.
 
-    ONE multi-path parquet scan with the batch id parsed from the file
-    path (anchored to the store's own ``batch=N/manifest/`` components,
-    so a ``batch=`` directory higher up the root path is not taken for
-    the id) — the same constant-size-plan discipline decode_stream_table
-    documents (a per-batch read_manifest chained through unionByName
+    read_manifest's ONE multi-path scan (engine._read_manifests) over the
+    committed batch stores (a per-batch read chained through unionByName
     grew the plan linearly with batch count: a day of 1-minute
-    micro-batches = 1440 relations and 1439 union nodes — round-5
-    review finding)."""
-    from .engine import MANIFEST_DDL
+    micro-batches = 1440 relations and 1439 union nodes — round-5 review
+    finding), with the batch id parsed from the file path, anchored to
+    the store's own ``batch=N/manifest/`` components so a ``batch=``
+    directory higher up the root path is not taken for the id."""
     dirs = batch_dirs(out_dir)
     if not dirs:
         raise FileNotFoundError(f"no batch=* tables under {out_dir}")
-    mdirs = [os.path.join(d, "manifest") for d in dirs]
-    mdirs = [m for m in mdirs if os.path.isdir(m)]
-    return (spark.read.option("pathGlobFilter", "b[0-9]*.parquet")
-            .schema(MANIFEST_DDL).parquet(*mdirs)
-            .filter(F.input_file_name().rlike(r"/b[0-9]+\.parquet$"))
-            .withColumn("batch_id",
-                        F.regexp_extract(F.input_file_name(),
-                                         r"batch=(\d+)/manifest/[^/]+$",
-                                         1).cast("long")))
+    return _read_manifests(spark, dirs).withColumn(
+        "batch_id", F.regexp_extract(F.input_file_name(),
+                                     r"batch=(\d+)/manifest/[^/]+$",
+                                     1).cast("long"))
 
 
 def _dedup_group(last: int, pdfs, partition_col: str, offset_col: str):

@@ -188,6 +188,31 @@ def test_uncommitted_batch_dirs_invisible(spark, tmp_path):
     assert decode_stream_table(spark, out).count() == 100
     assert spark.read.format("dumpster").option("path", out) \
         .load().count() == 100
-    # the fallback decode helper accepts the stream root too
-    from dumpster.engine import _decode_any_root
-    assert _decode_any_root(spark, out).count() == 100
+    # every reader resolves the stream root to the same committed stores
+    from dumpster.engine import clean_orphans, decode_table, \
+        read_manifest, verify_chunks
+    assert decode_table(spark, out).count() == 100
+    n_man = read_manifest(spark, out).count()
+    assert n_man == stream_manifest(spark, out).count() > 0
+    committed = sorted(r.file for r in
+                       read_manifest(spark, out).select("file").collect())
+    v = {r.file: r.ok for r in verify_chunks(spark, out).collect()}
+    assert sorted(v) == committed and all(v.values())
+    assert not any(f.endswith("junk.dmc") for f in v)
+    # a stream root is not one store: the orphan sweep refuses it, names
+    # the batch stores and deletes nothing
+    before = sorted(os.path.join(d, f) for d, _s, fs in os.walk(out)
+                    for f in fs)
+    with pytest.raises(ValueError, match="batch=000000"):
+        clean_orphans(spark, out)
+    assert sorted(os.path.join(d, f) for d, _s, fs in os.walk(out)
+                  for f in fs) == before
+    # damage one committed chunk: the root-level sweep names exactly it
+    bad = committed[0]
+    with open(bad, "r+b") as f:
+        f.seek(os.path.getsize(bad) // 2)
+        b = f.read(1)
+        f.seek(-1, 1)
+        f.write(bytes([b[0] ^ 0xFF]))
+    assert [r.file for r in verify_chunks(spark, out)
+            .filter(~F.col("ok")).collect()] == [bad]
