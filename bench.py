@@ -248,11 +248,11 @@ def main():
         timings["encode_pages_sink"] = best
 
         # HOST-GROUPED layout through the sink (VERDICT r3 next-round #3):
-        # prep_for_encode_local sorts each input split by url host (no
-        # shuffle — splits are byte-uniform, so there is no skew for the
-        # salt to break) and the writer takes __bucket as the bucket
-        # column.  Measured equivalence to the global salted layout:
-        # encoded bytes differ by <0.01% at sf0.1 AND sf1 (r3:
+        # each input split is sorted by url host (no shuffle — splits are
+        # byte-uniform, so there is no skew for the salt to break) and the
+        # plain sink makes each write task one bucket, the same layout
+        # as prep_for_encode_local.  Measured equivalence to the global
+        # salted layout: encoded bytes differ by <0.01% at sf0.1 AND sf1 (r3:
         # 2,018,640,074 local vs 2,018,786,063 salted), i.e. host-major
         # runs WITHIN a split already deliver the full compression
         # locality — the full-row shuffle only buys global grouping,
@@ -261,15 +261,16 @@ def main():
         # instead of the shuffle REGRESSES (measured 5.1 s vs 3.9 s at
         # sf0.1: unsorted buckets make the encoder buffer every bucket
         # per task), so this path keeps the sort and drops the shuffle.
-        from dumpster.pipeline import prep_for_encode_local
+        from dumpster.pipeline import host_of
         best = None
         sink_local_bytes = None
         for _ in range(2):
             sink_root = tempfile.mkdtemp(prefix="dumpster_bench_sinks_")
             tdir = os.path.join(sink_root, "t")
             t0 = time.perf_counter()
-            (prep_for_encode_local(pages, "url")
-             .write.format("dumpster").option("bucket_col", "__bucket")
+            (pages.withColumn("__host", host_of("url"))
+             .sortWithinPartitions("__host").drop("__host")
+             .write.format("dumpster")
              .option("chunk_rows", "65536")
              .option("table_id", "bench_pages_sink_local")
              .mode("append").save(tdir))

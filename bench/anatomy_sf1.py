@@ -139,18 +139,19 @@ def main():
         shutil.rmtree(out_l, ignore_errors=True)
 
         # host-grouped layout via the native sink, zero shuffle (r3
-        # next-round #3): prep_for_encode_local host-sorts each split,
-        # the V2 writer takes __bucket — the ≤2×-bar candidate for the
+        # next-round #3): each split is host-sorted in place and each V2
+        # write task is one bucket — the ≤2×-bar candidate for the
         # host-grouped write at sf1
-        from dumpster.pipeline import prep_for_encode_local
+        from dumpster.pipeline import host_of
         from dumpster.datasource import register_dumpster_source
         from dumpster.engine import read_manifest
         register_dumpster_source(spark)
         out_s = tempfile.mkdtemp(prefix="anat_sink_")
         tdir = os.path.join(out_s, "t")
         t0 = time.perf_counter()
-        (prep_for_encode_local(pages, "url")
-         .write.format("dumpster").option("bucket_col", "__bucket")
+        (pages.withColumn("__host", host_of("url"))
+         .sortWithinPartitions("__host").drop("__host")
+         .write.format("dumpster")
          .option("chunk_rows", "65536")
          .option("table_id", "anat_sink_local")
          .mode("append").save(tdir))

@@ -47,6 +47,12 @@ partition list — rows silently vanish.  ``engine.register_decoded_view
 ``IS NOT NULL`` sentinel (every query then re-plans); raw DataFrames
 reused across filtered and unfiltered queries should do the same or be
 recreated per query.
+
+Write side: ``df.write`` / ``df.writeStream.format("dumpster")`` are plain
+sinks — each write task encodes one bucket through the engine's one
+task-side encoder (engine._make_encoder) and the driver publishes the
+manifests at commit.  Choosing a layout (salted host buckets, a
+caller's bucket column or expression) is engine.encode_table's job.
 """
 
 from __future__ import annotations
@@ -68,13 +74,12 @@ from pyspark.sql.datasource import (DataSource, DataSourceArrowWriter,
 from pyspark.sql.types import StructType
 
 from . import fs as fslib
-from .bloom import bloom_rejects_file
 from .engine import (DEFAULT_CHUNK_BYTES, DEFAULT_CHUNK_ROWS, FLAT_SEP,
                      _MANIFEST_ARROW, _arrow_schema, _as_bytes,
                      _fs_write_atomic, _has_structs, _make_encoder,
                      _manifest_path, _plan_chunks, _publish_table_schema,
-                     _resolve_stores, _scan_chunk_files, _stat_value,
-                     _union_schema, done_buckets)
+                     _refuse_mixed_root, _resolve_stores, _scan_chunk_files,
+                     _stat_value, _union_schema, done_buckets)
 
 _DEFAULT_TARGET_BYTES = 64 * 1024 * 1024
 
@@ -286,13 +291,6 @@ class DumpsterReader(DataSourceReader):
                                  _arrow_schema(self.schema.fields), columns,
                                  self.eq_sets, self.on_error, self.io_trace)
 
-    def _bloom_rejects(self, fp: str) -> bool:
-        """True iff some pushed membership predicate's ENTIRE value set is
-        provably absent from this chunk's bloom section (the gate
-        _scan_chunk_files applies).  Costs one tail ranged read per file,
-        never the column data."""
-        return bloom_rejects_file(fp, self.eq_sets)
-
 
 # -- write path --------------------------------------------------------------
 
@@ -303,9 +301,8 @@ class DumpsterCommitMessage(WriterCommitMessage):
     FileBatchWrite, whose tasks each report their written files to the
     driver-side committer."""
 
-    def __init__(self, rows: list, partition_id: int):
+    def __init__(self, rows: list):
         self.rows = rows
-        self.partition_id = partition_id
 
 
 class DumpsterWriter(DataSourceArrowWriter):
@@ -325,29 +322,20 @@ class DumpsterWriter(DataSourceArrowWriter):
       (failed tasks) are manifest-less orphans that ``clean_orphans``
       sweeps, exactly like a crashed ``encode_table`` run.
 
-    Bucketing: a writer cannot introduce a shuffle, so the default is
-    local-mode semantics — bucket = write-task partition id (appends get
-    fresh ids past the store's current max).  For the salted host-grouped
-    layout, prep the frame first and point the writer at the prepped
-    bucket column::
+    Bucketing: a writer cannot introduce a shuffle, so each write task is
+    one bucket, ``bucket_base + partition id``, where ``bucket_base``
+    starts a range reserved for this job past the store's current max
+    (see _reserve_bucket_range).  Rows keep their order within a task, so
+    a frame sorted within partitions (e.g. by url host) keeps that
+    locality.  A salted or hand-chosen layout is encode_table's job (see
+    its layout list); the sink has no layout option.  Task retries and
+    speculation are safe: a retry re-encodes the same input partition to
+    the same deterministic chunk names with identical bytes.
 
-        prepped = pipeline.prep_for_encode(df, "url", n_buckets=128)
-        prepped.write.format("dumpster").option("path", d) \\
-               .option("bucket_col", "__bucket").mode("append").save()
-
-    ``commit()`` refuses (before any manifest is published, so nothing
-    becomes visible) if one bucket's chunks came from two tasks — that
-    means the input was not partitioned by the bucket column and chunk
-    names may have collided.  ``prep_for_encode`` output is always
-    hash-partitioned by ``__bucket``, so this only trips hand-rolled
-    bucket columns.
-
-    Task retries/speculation are safe in both modes: a retry re-encodes
-    the same input partition to the same deterministic chunk names with
-    identical bytes.
-
-    Options: ``path`` (required), ``bucket_col``, ``chunk_rows``,
-    ``chunk_bytes``, ``table_id``.  Modes: append | overwrite.
+    Options: ``path`` (required), ``chunk_rows``, ``chunk_bytes``,
+    ``table_id``.  Modes: append | overwrite.  An append into a
+    stream-sink root (``batch=N`` stores) raises before writing anything;
+    an overwrite replaces the root.
 
     Overwrite truncates INSIDE ``commit()``, not at writer creation
     (round-5 review finding — truncate-at-planning meant any failed
@@ -380,39 +368,14 @@ class DumpsterWriter(DataSourceArrowWriter):
     def __init__(self, options: dict, schema: StructType, overwrite: bool):
         _init_writer_common(self, options, schema)
         self.overwrite = overwrite
+        if not overwrite:
+            _refuse_mixed_root(self.out_dir, stream=False)
         os.makedirs(os.path.join(self.out_dir, "chunks"), exist_ok=True)
         os.makedirs(os.path.join(self.out_dir, "manifest"), exist_ok=True)
         # appends land in an atomically reserved bucket-id range, so two
         # CONCURRENT appends into one store can never collide (see
         # _reserve_bucket_range)
-        self.bucket_base = 0
-        self.chunk_subdir = None
-        if self.bucket_col is None:
-            self.bucket_base = _reserve_bucket_range(self.out_dir)
-        else:
-            # two CONCURRENT bucket_col writers both see an empty store at
-            # init, so their chunks are namespaced by a reserved job id
-            # (no file clobbering); the commit-time existing-manifest check
-            # then serializes them fail-loud (first commit wins)
-            self.chunk_subdir = \
-                f"w{_reserve_bucket_range(self.out_dir):09d}"
-            existing = done_buckets(self.out_dir) \
-                if not overwrite else set()
-            if existing:
-                # a hand-bucketed frame's ids can collide with committed
-                # buckets, and task-side chunk writes would CLOBBER the
-                # old bucket's files before any commit-time check could
-                # refuse — so the unsafe shape is rejected before a
-                # single task runs
-                raise ValueError(
-                    f"bucket_col append into a store with "
-                    f"{len(existing)} committed bucket(s): user bucket "
-                    f"ids may collide with existing chunks (silent "
-                    f"corruption). Use mode('overwrite'), a fresh "
-                    f"out_dir, or the default partition-id bucketing "
-                    f"(which reserves a disjoint range); for "
-                    f"resume-into-existing-bucket semantics use "
-                    f"engine.encode_table(resume=True).")
+        self.bucket_base = _reserve_bucket_range(self.out_dir)
 
     # executor-side ---------------------------------------------------------
 
@@ -440,10 +403,7 @@ class DumpsterWriter(DataSourceArrowWriter):
                     os.path.abspath(f) for f in files))
                 os.makedirs(os.path.join(self.out_dir, "manifest"),
                             exist_ok=True)
-            _publish_batch(self.out_dir, messages, self.bucket_col,
-                           self.payload_schema,
-                           refuse_existing=(self.bucket_col is not None
-                                            and not self.overwrite))
+            _publish_batch(self.out_dir, messages, self.schema)
 
     def abort(self, messages) -> None:
         _delete_reported_chunks(messages)
@@ -468,18 +428,14 @@ class DumpsterStreamWriter(DataSourceStreamArrowWriter):
     The task learns its micro-batch from the ``streaming.sql.batchId``
     task-local property (set by Spark's MicroBatchExecution and verified
     against the ``batchId`` passed to commit).  Same options as the batch
-    writer minus ``bucket_col`` (bucket = task partition id within the
-    batch namespace; repartition upstream to shape tasks).
+    writer; each write task is one bucket, its partition id within the
+    batch (repartition upstream to shape tasks).  A root that already
+    holds a store is refused.
     """
 
     def __init__(self, options: dict, schema: StructType):
         _init_writer_common(self, options, schema)
-        if self.bucket_col is not None:
-            raise ValueError(
-                "bucket_col is not supported on the streaming sink "
-                "(bucket = task partition within each batch=N namespace); "
-                "repartition the stream upstream to shape write tasks")
-        self.out_root = self.out_dir
+        _refuse_mixed_root(self.out_dir, stream=True)
 
     @staticmethod
     def _batch_dir(root: str, batch_id: int) -> str:
@@ -496,7 +452,7 @@ class DumpsterStreamWriter(DataSourceStreamArrowWriter):
                 "dumpster stream sink requires micro-batch execution "
                 "(it is unset under continuous processing)")
         msg = _encode_task(self, iterator,
-                           self._batch_dir(self.out_root, int(bid)), 0)
+                           self._batch_dir(self.out_dir, int(bid)), 0)
         msg.batch_id = int(bid)
         return msg
 
@@ -506,9 +462,9 @@ class DumpsterStreamWriter(DataSourceStreamArrowWriter):
                 raise RuntimeError(
                     f"task wrote into batch={m.batch_id} but the driver is "
                     f"committing batch={batchId}; refusing to publish")
-        target = self._batch_dir(self.out_root, batchId)
+        target = self._batch_dir(self.out_dir, batchId)
         if any(m is not None and m.rows for m in messages):
-            _publish_batch(target, messages, None, self.payload_schema)
+            _publish_batch(target, messages, self.schema)
 
     def abort(self, messages, batchId: int) -> None:  # noqa: N803
         _delete_reported_chunks(messages)
@@ -521,6 +477,12 @@ def _init_writer_common(w, options: dict, schema: StructType) -> None:
     if not w.out_dir:
         raise ValueError("dumpster sink requires .option('path', out_dir) "
                          "or .save(out_dir)")
+    if "bucket_col" in options:
+        raise ValueError(
+            "the dumpster sink has no bucket_col option: each write task "
+            "is one bucket. Encode a salted or hand-bucketed layout with "
+            "dumpster.engine.encode_table(df, out_dir, mode='salted' | "
+            "bucket_expr=... | bucket_col=...)")
     if _has_structs(schema):
         raise ValueError(
             "struct-typed columns are not supported on the df.write path "
@@ -530,136 +492,57 @@ def _init_writer_common(w, options: dict, schema: StructType) -> None:
         raise ValueError(
             f"column names containing {FLAT_SEP!r} collide with the "
             f"struct-flattening separator; rename before writing")
-    w.bucket_col = options.get("bucket_col")
-    reserved = {"__bucket", "__host"} - {w.bucket_col}
-    clash = reserved & {f.name for f in schema.fields}
+    clash = {"__bucket", "__host"} & {f.name for f in schema.fields}
     if clash:
         raise ValueError(
             f"column name(s) {sorted(clash)} are reserved by the encode "
-            f"pipeline; rename them or pass .option('bucket_col', ...) "
-            f"to claim one as routing")
-    if w.bucket_col is not None \
-            and w.bucket_col not in {f.name for f in schema.fields}:
-        raise ValueError(f"bucket_col {w.bucket_col!r} is not a column of "
-                         f"the frame being written")
+            f"pipeline; rename them, or encode a prep_for_encode* layout "
+            f"with dumpster.engine.encode_table instead")
     w.chunk_rows = int(options.get("chunk_rows", DEFAULT_CHUNK_ROWS))
     w.chunk_bytes = int(options.get("chunk_bytes", DEFAULT_CHUNK_BYTES))
     w.table_id = options.get("table_id") or os.path.basename(
         os.path.normpath(w.out_dir))
-    w.payload_schema = StructType(
-        [f for f in schema.fields if f.name != w.bucket_col])
+    w.schema = schema
 
 
 def _encode_task(w, iterator, out_dir: str, bucket_base: int) \
         -> DumpsterCommitMessage:
-    """Executor-side half of both sinks: encode Arrow batches into durable
-    chunk files under ``out_dir`` WITHOUT publishing manifests."""
+    """Executor-side half of both sinks: encode the task's Arrow batches
+    as ONE bucket, ``bucket_base + partition id``, into durable chunk
+    files under ``out_dir`` WITHOUT publishing manifests."""
     import numpy as np
     from pyspark import TaskContext
     tc = TaskContext.get()
     pid = tc.partitionId() if tc is not None else 0
-    if w.bucket_col is None and pid >= _BUCKET_STRIDE:
+    if pid >= _BUCKET_STRIDE:
         raise RuntimeError(
             f"write task {pid} exceeds the reserved bucket range "
             f"({_BUCKET_STRIDE} per job); coalesce the input or raise "
             f"_BUCKET_STRIDE")
     bucket = bucket_base + pid
-    sub = getattr(w, "chunk_subdir", None)
-    subdirs = _ConstSubdir(sub) if sub else None
-
-    def routed(batches):
-        for b in batches:
-            if w.bucket_col is not None:
-                if w.bucket_col != "__bucket":
-                    idx = b.schema.get_field_index(w.bucket_col)
-                    col = b.column(idx)
-                    b = b.remove_column(idx).append_column("__bucket", col)
-            else:
-                b = b.append_column("__bucket", pa.array(
-                    np.full(b.num_rows, bucket, dtype=np.int32)))
-            yield b
-
-    # sorted_input=False: a hand-bucketed frame need not arrive
-    # bucket-contiguous, and reopening a closed bucket would restart
-    # chunk_seq at 0 (name collision); deferred finalisation keeps one
-    # monotone seq per bucket per task
+    routed = (b.append_column("__bucket", pa.array(
+        np.full(b.num_rows, bucket, dtype=np.int32))) for b in iterator)
     encoder = _make_encoder(out_dir, w.table_id, w.chunk_rows,
                             w.chunk_bytes, frozenset(),
-                            sorted_input=False, publish_manifest=False,
-                            bucket_subdirs=subdirs)
-    rows: list = []
-    for mb in encoder(routed(iterator)):
-        rows.extend(mb.to_pylist())
-    return DumpsterCommitMessage(rows, pid)
+                            publish_manifest=False)
+    return DumpsterCommitMessage(
+        [r for mb in encoder(routed) for r in mb.to_pylist()])
 
 
-class _ConstSubdir(dict):
-    """bucket→subdir map answering the same subdir for EVERY bucket —
-    the job-namespace for bucket_col-mode chunk files (engine._chunk_path
-    checks membership, so the empty-dict falsiness must be overridden)."""
-
-    def __init__(self, sub: str):
-        super().__init__()
-        self.sub = sub
-
-    def __contains__(self, k):
-        return True
-
-    def __getitem__(self, k):
-        return self.sub
-
-    def __bool__(self):
-        return True
-
-    def __reduce__(self):
-        return (_ConstSubdir, (self.sub,))
-
-
-def _publish_batch(out_dir: str, messages, bucket_col,
-                   payload_schema: StructType,
-                   refuse_existing: bool = False) -> None:
+def _publish_batch(out_dir: str, messages, schema: StructType) -> None:
     """Driver-side committer shared by both sinks: schema first
     (create-or-evolve under the store lock), then the per-bucket
     manifests — a reader never sees a manifest row whose columns the
-    stored schema cannot describe, and nothing at all until commit.
-
-    ``refuse_existing`` (bucket_col mode): a manifest already on disk
-    for one of this job's buckets means a CONCURRENT bucket_col writer
-    committed first (both saw an empty store at init; chunks are
-    job-namespaced so nothing clobbered) — the second job fails loud
-    BEFORE publishing anything instead of silently replacing the
-    winner's manifests."""
+    stored schema cannot describe, and nothing at all until commit."""
     import pyarrow.parquet as pq
     by_bucket: dict[int, list] = {}
-    owner: dict[int, int] = {}
     for m in messages:
         if m is None:
             continue
         for r in m.rows:
-            b = int(r["bucket"])
-            prev = owner.setdefault(b, m.partition_id)
-            if prev != m.partition_id:
-                raise RuntimeError(
-                    f"bucket {b} received chunks from two write tasks "
-                    f"({prev} and {m.partition_id}): the input is not "
-                    f"partitioned by {bucket_col!r} and chunk names may "
-                    f"have collided. Nothing was published (no manifests "
-                    f"written); repartition by the bucket column — "
-                    f"pipeline.prep_for_encode does this — and rewrite.")
-            by_bucket.setdefault(b, []).append(r)
-    if refuse_existing:
-        clashes = [b for b in by_bucket
-                   if os.path.exists(_manifest_path(out_dir, b))]
-        if clashes:
-            raise RuntimeError(
-                f"bucket(s) {sorted(clashes)[:8]} already have committed "
-                f"manifests: a concurrent bucket_col writer finished "
-                f"first. Nothing was published by this job (its chunks "
-                f"are namespaced and clean_orphans will sweep them); "
-                f"retry against the store's current state or use "
-                f"overwrite.")
+            by_bucket.setdefault(int(r["bucket"]), []).append(r)
     os.makedirs(os.path.join(out_dir, "manifest"), exist_ok=True)
-    _publish_table_schema(out_dir, payload_schema)
+    _publish_table_schema(out_dir, schema)
     for b, rows in sorted(by_bucket.items()):
         rows.sort(key=lambda r: int(r["chunk_seq"]))
         mb = pa.RecordBatch.from_pylist(rows, schema=_MANIFEST_ARROW)

@@ -189,6 +189,27 @@ def _resolve_stores(path: str, required: bool = False) -> list[str]:
     return stores
 
 
+def _refuse_mixed_root(out_dir: str, stream: bool) -> None:
+    """A path is one store or one stream-sink root, never both: a root
+    ``_schema.json`` makes _resolve_stores read that store alone and hide
+    every ``batch=N`` store.  So a table writer refuses a root holding
+    ``batch=*`` dirs and a stream writer a root holding a store, before
+    either writes anything."""
+    if stream and os.path.exists(os.path.join(out_dir, "_schema.json")):
+        raise ValueError(
+            f"{out_dir!r} holds an encoded table (_schema.json): its readers "
+            f"would never see the batch=N stores a stream writes there; "
+            f"stream into a fresh root")
+    if not stream and os.path.isdir(out_dir) and any(
+            n.startswith("batch=") for n in os.listdir(out_dir)):
+        raise ValueError(
+            f"{out_dir!r} is a stream-sink root (batch=N stores): a table "
+            f"written there would hide every batch from its readers; write "
+            f"to a fresh out_dir, fold the batches with compact_stream, or "
+            f"replace the root with df.write.format('dumpster')"
+            f".mode('overwrite')")
+
+
 def _manifest_files(stores: list[str]) -> list[str]:
     """Every committed per-bucket manifest file across the stores, in
     deterministic order — the one manifest lister behind _plan_chunks,
@@ -298,19 +319,19 @@ def _check_layout(out_dir: str, record: dict, resume: bool) -> None:
 
 def _make_encoder(out_dir: str, table_id: str, chunk_rows: int,
                   chunk_bytes: int, skip: frozenset,
-                  sorted_input: bool = True,
                   bucket_subdirs: dict | None = None,
                   fs=None,
                   publish_manifest: bool = True):
-    """Per-task encoder over Arrow batches.
+    """Per-task encoder over Arrow batches whose ``__bucket`` column is
+    contiguous: every encode_table layout sorts each task by
+    ``__bucket``, and each DataSource sink task is one bucket.
 
-    Buckets need not be contiguous: state is kept per bucket, chunks flush
-    eagerly at the row/byte thresholds, and each bucket's manifest file is
-    written exactly once, after all its chunks are durable.  With
-    ``sorted_input`` (the locality-sorted pipeline) a bucket is finalised
-    as soon as the next bucket appears, which keeps at most one open
-    buffer and the finest resume granularity; unsorted input defers
-    finalisation to end-of-task.
+    Chunks flush eagerly at the row/byte thresholds.  A bucket is
+    finalised — its manifest file written exactly once, after all its
+    chunks are durable — as soon as the next bucket appears, so one
+    buffer is open at a time and resume granularity is the bucket.  A
+    bucket that reappeared would restart its chunk sequence and
+    overwrite its committed chunks.
     """
     def encode_partition(batches):
         from pyspark import TaskContext
@@ -325,14 +346,6 @@ def _make_encoder(out_dir: str, table_id: str, chunk_rows: int,
             pa.set_io_thread_count(1)
         except Exception:
             pass
-
-        buckets: dict[int, dict] = {}
-
-        def _state(bucket: int) -> dict:
-            if bucket not in buckets:
-                buckets[bucket] = {"tables": [], "rows": 0, "bytes": 0,
-                                   "seq": 0, "rows_out": []}
-            return buckets[bucket]
 
         def emit_chunk(bucket: int, st: dict, tbl: pa.Table):
             t0 = time.perf_counter()
@@ -380,8 +393,7 @@ def _make_encoder(out_dir: str, table_id: str, chunk_rows: int,
                 st["rows"] = rest.num_rows
                 st["bytes"] = rest.nbytes if rest.num_rows else 0
 
-        def close_bucket(bucket: int):
-            st = buckets.pop(bucket)
+        def close_bucket(bucket: int, st: dict):
             drain(bucket, st, final=True)
             mb = pa.RecordBatch.from_pylist(st["rows_out"],
                                             schema=_MANIFEST_ARROW)
@@ -398,7 +410,7 @@ def _make_encoder(out_dir: str, table_id: str, chunk_rows: int,
                                  sink.getvalue().to_pybytes(), fs)
             return mb
 
-        last_bucket = None
+        cur, st = None, None
         for batch in batches:
             tbl = pa.Table.from_batches([batch])
             bcol = tbl.column("__bucket").to_numpy()
@@ -411,17 +423,17 @@ def _make_encoder(out_dir: str, table_id: str, chunk_rows: int,
                 b = int(bcol[s])
                 if b in skip:
                     continue
-                if sorted_input and last_bucket is not None \
-                        and b != last_bucket and last_bucket in buckets:
-                    yield close_bucket(last_bucket)
-                last_bucket = b
-                st = _state(b)
+                if b != cur:
+                    if st is not None:
+                        yield close_bucket(cur, st)
+                    cur, st = b, {"tables": [], "rows": 0, "bytes": 0,
+                                  "seq": 0, "rows_out": []}
                 st["tables"].append(data.slice(s, e - s))
                 st["rows"] += e - s
                 st["bytes"] += st["tables"][-1].nbytes
                 drain(b, st, final=False)
-        for b in sorted(buckets):
-            yield close_bucket(b)
+        if st is not None:
+            yield close_bucket(cur, st)
 
     return encode_partition
 
@@ -472,7 +484,8 @@ def encode_table(df: DataFrame, out_dir: str, *, url_col: str | None = None,
     ValueError before any task runs.  A store written before the record
     existed resumes only under ``mode="salted"``, ``bucket_expr`` or
     ``bucket_col``.  The remedy is to rerun with the original settings,
-    or ``resume=False`` into a fresh ``out_dir``.
+    or ``resume=False`` into a fresh ``out_dir``.  A stream-sink root
+    (``batch=N`` stores) is refused before anything is written.
     """
     spark = df.sparkSession
     if mode not in ("salted", "local"):
@@ -509,6 +522,7 @@ def encode_table(df: DataFrame, out_dir: str, *, url_col: str | None = None,
         record.update(url_col=url_col, n_buckets=n_buckets, salt_k=salt_k)
     elif layout == "local":
         record.update(_split_plan(df))
+    _refuse_mixed_root(out_dir, stream=False)
     os.makedirs(os.path.join(out_dir, "chunks"), exist_ok=True)
     os.makedirs(os.path.join(out_dir, "manifest"), exist_ok=True)
     _check_layout(out_dir, record, resume)
@@ -650,6 +664,7 @@ def encode_table_multischema(df: DataFrame, out_dir: str, *,
             f"never be dropped silently)")
     from .pipeline import salted_bucket
     tid = table_id or os.path.basename(os.path.normpath(out_dir))
+    _refuse_mixed_root(out_dir, stream=False)
     os.makedirs(out_dir, exist_ok=True)
     gen_path = os.path.join(out_dir, "_schema_gen.json")
     with fslib.file_lock(gen_path + ".lock"):
@@ -703,6 +718,7 @@ def encode_table_partitioned(df: DataFrame, out_dir: str, *,
     """
     from .pipeline import hour_partition
     spark = df.sparkSession
+    _refuse_mixed_root(out_dir, stream=False)
     os.makedirs(out_dir, exist_ok=True)
     hp = hour_partition(df, ts_col)
     # one scan: distinct hour keys AND per-hour row counts (the counts

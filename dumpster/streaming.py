@@ -23,17 +23,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # batch_dirs lives with the engine's one store resolver; re-exported here
-from .engine import _read_manifests, batch_dirs, encode_table
+from .engine import _read_manifests, _refuse_mixed_root, batch_dirs, \
+    encode_table
 
 
-def _start_foreach_batch(stream_df: DataFrame, sink, checkpoint: str,
-                         trigger_available_now: bool,
+def _start_foreach_batch(stream_df: DataFrame, sink, out_dir: str,
+                         checkpoint: str, trigger_available_now: bool,
                          trigger_seconds: int | None = None):
     """Start ``stream_df`` into ``sink(batch_df, batch_id)`` under
     ``checkpoint``: ``availableNow`` drains what is there, otherwise
     ``trigger_seconds`` sets the processing-time cadence (jobs.yaml
     ``trigger_seconds`` — the reference's partitionForget tuning
-    surface)."""
+    surface).  Refuses an ``out_dir`` that already holds a store."""
+    _refuse_mixed_root(out_dir, stream=True)
     writer = (stream_df.writeStream
               .foreachBatch(sink)
               .option("checkpointLocation", checkpoint))
@@ -70,7 +72,7 @@ def encode_stream(stream_df: DataFrame, out_dir: str, *,
                      salt_k=salt_k, mode="salted", chunk_rows=chunk_rows,
                      table_id=f"stream_b{batch_id}", resume=True)
 
-    return _start_foreach_batch(stream_df, sink, checkpoint,
+    return _start_foreach_batch(stream_df, sink, out_dir, checkpoint,
                                 trigger_available_now, trigger_seconds)
 
 
@@ -99,7 +101,7 @@ def encode_stream_partitioned(stream_df: DataFrame, out_dir: str, *,
                                  chunk_rows=chunk_rows,
                                  table_id=f"stream_hp_b{batch_id}")
 
-    return _start_foreach_batch(stream_df, sink, checkpoint,
+    return _start_foreach_batch(stream_df, sink, out_dir, checkpoint,
                                 trigger_available_now, trigger_seconds)
 
 
@@ -231,7 +233,7 @@ def encode_stream_multischema(stream_df: DataFrame, out_dir: str, *,
                                  n_buckets=n_buckets, chunk_rows=chunk_rows,
                                  table_id=f"stream_ms_b{batch_id}")
 
-    return _start_foreach_batch(stream_df, sink, checkpoint,
+    return _start_foreach_batch(stream_df, sink, out_dir, checkpoint,
                                 trigger_available_now)
 
 

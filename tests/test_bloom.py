@@ -24,8 +24,8 @@ import pyspark.sql.functions as F
 import pytest
 
 from dumpster.bloom import (MAX_AVG_LEN, MIN_ROWS, bloom_build,
-                            bloom_might_contain, poly_hash_one,
-                            poly_hash_rows, want_bloom)
+                            bloom_might_contain, bloom_rejects_file,
+                            poly_hash_one, poly_hash_rows, want_bloom)
 from dumpster.chunk import (_inc_bytes, _var_bounds, decode_chunk_file,
                             encode_chunk_pieces, read_blooms)
 from dumpster.engine import _str_zone_overlaps, encode_table, \
@@ -216,7 +216,7 @@ def test_datasource_bloom_rejects_absent_value(encoded_urls):
     assert rd.eq_sets == [("url", frozenset({absent.encode()}))]
     files = [f for p in rd.partitions() for f in p.files]
     assert files  # string zones alone can't prune an in-range absent url...
-    rejected = sum(rd._bloom_rejects(f) for f in files)
+    rejected = sum(bloom_rejects_file(f, rd.eq_sets) for f in files)
     # ...but the blooms prove absence for (almost) every chunk — allow the
     # designed ~2%/chunk false-positive rate, which only costs a decode,
     # never correctness (Spark re-applies the row predicate)
@@ -225,7 +225,7 @@ def test_datasource_bloom_rejects_absent_value(encoded_urls):
     rd2 = DumpsterReader({"path": out}, table_schema(out))
     list(rd2.pushFilters([EqualTo(("url",), "https://h3.example/p/42")]))
     survivors = [f for p in rd2.partitions() for f in p.files]
-    assert any(not rd2._bloom_rejects(f) for f in survivors)
+    assert any(not bloom_rejects_file(f, rd2.eq_sets) for f in survivors)
 
 
 def test_planning_prunes_on_string_range(spark, encoded_urls):

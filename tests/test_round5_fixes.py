@@ -576,7 +576,7 @@ def _fake_commit_message(out, bucket):
     return DumpsterCommitMessage([{
         "bucket": bucket, "chunk_seq": 0, "file": path, "n_rows": 1,
         "raw_bytes": 8, "encoded_bytes": 5, "n_cols": 1, "encode_ms": 0.0,
-        "partition_id": 0, "col_stats": "[]"}], 0)
+        "partition_id": 0, "col_stats": "[]"}])
 
 
 def test_overwrite_commit_never_strands_concurrent_writers(tmp_path):

@@ -164,6 +164,48 @@ def test_stream_sink_rejects_bucket_col(spark, tmp_path):
         q.awaitTermination(60)
 
 
+def test_store_and_stream_root_never_mix(spark, tmp_path):
+    """A root _schema.json makes every reader see that store alone, so a
+    table written into a stream-sink root used to hide its batches (two
+    30-row batches plus a 5-row append read back as 5 rows).  Every
+    writer now refuses the other kind of root before writing anything."""
+    from dumpster.engine import decode_table, encode_table
+    from dumpster.streaming import encode_stream
+    src = str(tmp_path / "s6src")
+    out = str(tmp_path / "s6out")
+    _write_batch_files(spark, src, 0, 30)
+    _write_batch_files(spark, src, 30, 60)
+    stream = (spark.readStream
+              .schema("doc_id long, lang string, text string")
+              .option("maxFilesPerTrigger", "1").parquet(src))
+    q = (stream.writeStream.format("dumpster").option("path", out)
+         .option("checkpointLocation", str(tmp_path / "s6ck"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(120)
+    assert len(batch_dirs(out)) == 2
+    extra = spark.read.parquet(src).limit(5)
+    before = sorted(os.listdir(out))
+    with pytest.raises(Exception, match="stream-sink root"):
+        extra.write.format("dumpster").mode("append").save(out)
+    with pytest.raises(ValueError, match="stream-sink root"):
+        encode_table(extra, out)
+    assert sorted(os.listdir(out)) == before   # no chunks/, manifest/ ...
+    assert decode_table(spark, out).count() == 60
+    assert spark.read.format("dumpster").option("path", out) \
+        .load().count() == 60
+    # the other way round: a stream into a store's root
+    store = str(tmp_path / "s6store")
+    extra.write.format("dumpster").mode("append").save(store)
+    with pytest.raises(ValueError, match="holds an encoded table"):
+        encode_stream(stream, store, checkpoint=str(tmp_path / "s6ck2"))
+    with pytest.raises(Exception, match="holds an encoded table"):
+        q = (stream.writeStream.format("dumpster").option("path", store)
+             .option("checkpointLocation", str(tmp_path / "s6ck3"))
+             .trigger(availableNow=True).start())
+        q.awaitTermination(60)
+    assert not [n for n in os.listdir(store) if n.startswith("batch=")]
+
+
 def test_uncommitted_batch_dirs_invisible(spark, tmp_path):
     """A batch=N dir without _schema.json (in-flight or failed sink
     batch) must be invisible to every stream reader and to the format's

@@ -8,10 +8,10 @@ Semantics under test:
 * append allocates fresh bucket ids past the committed max (no chunk
   collisions), overwrite truncates including schema history,
 * schema evolution on append (new column null-fills on old chunks),
-* bucket_col mode consumes a prep_for_encode frame (salted host layout
-  through the write API), and commit() refuses hand-bucketed input that
-  was not partitioned by the bucket column,
-* guard rails: reserved names, struct columns, unknown bucket_col.
+* each write task is one bucket; a host-sorted frame keeps its locality,
+* guard rails: reserved names, struct columns, and no layout option
+  (``bucket_col`` and prep_for_encode frames are refused, pointing at
+  engine.encode_table).
 
 Reference parity: the commit ordering (chunks durable, then the manifest
 flip) is the reference's data-upload-before-offset-commit contract,
@@ -135,62 +135,6 @@ def test_append_evolves_schema(spark, tmp_path):
     assert got.filter(F.col("n_chars").isNotNull()).count() == df.count()
 
 
-def test_bucket_col_salted_layout(spark, tmp_path):
-    out = str(tmp_path / "w5")
-    pages = spark.range(0, 600).select(
-        F.concat(F.lit("https://h"), (F.col("id") % 7).cast("string"),
-                 F.lit(".example.com/p"), F.col("id").cast("string"))
-        .alias("url"),
-        F.col("id").alias("doc_id"))
-    prepped = pipeline.prep_for_encode(pages, "url", n_buckets=8, salt_k=2)
-    prepped.write.format("dumpster").option("path", out) \
-        .option("bucket_col", "__bucket").mode("append").save()
-    got = spark.read.format("dumpster").option("path", out).load()
-    assert set(got.columns) == {"url", "doc_id"}  # routing col not stored
-    assert got.exceptAll(pages).count() == 0
-    assert pages.exceptAll(got).count() == 0
-    assert set(done_buckets(out)) <= set(range(8))
-
-
-def test_bucket_col_append_into_existing_store_refused(spark, tmp_path):
-    """User bucket ids can collide with committed buckets and task-side
-    writes would clobber the old chunks BEFORE commit — the writer must
-    refuse at creation, before any task runs (and overwrite must still
-    work)."""
-    out = str(tmp_path / "wbc")
-    df = _docs(spark)
-    df.write.format("dumpster").mode("append").save(out)
-    prepped = pipeline.prep_for_encode(
-        df.withColumn("url", F.concat(F.lit("https://h.example/"),
-                                      F.col("doc_id").cast("string"))),
-        "url", n_buckets=4)
-    with pytest.raises(Exception, match="committed bucket"):
-        prepped.write.format("dumpster").option("path", out) \
-            .option("bucket_col", "__bucket").mode("append").save()
-    # the committed store is untouched by the refused write
-    assert spark.read.format("dumpster").option("path", out) \
-        .load().count() == df.count()
-    # overwrite remains the sanctioned route
-    prepped.write.format("dumpster").option("path", out) \
-        .option("bucket_col", "__bucket").mode("overwrite").save()
-    assert spark.read.format("dumpster").option("path", out) \
-        .load().count() == df.count()
-
-
-def test_bucket_col_unpartitioned_refused(spark, tmp_path):
-    out = str(tmp_path / "w6")
-    # bucket constant 0 across MANY input partitions, never repartitioned:
-    # every task claims bucket 0 → commit must refuse before publishing
-    df = (spark.range(0, 64, numPartitions=8)
-          .select(F.col("id").alias("doc_id"),
-                  F.lit(0).cast("int").alias("b")))
-    with pytest.raises(Exception, match="two write tasks"):
-        df.write.format("dumpster").option("path", out) \
-            .option("bucket_col", "b").mode("append").save()
-    # nothing became visible: no manifests, reader sees an empty table
-    assert done_buckets(out) == set()
-
-
 def test_task_failure_leaves_store_invisible(spark, tmp_path):
     out = str(tmp_path / "w7")
     _docs(spark).limit(50).write.format("dumpster").mode("append").save(out)
@@ -226,9 +170,16 @@ def test_guard_rails(spark, tmp_path):
         "doc_id", F.struct("lang", "n_chars").alias("meta"))
     with pytest.raises(Exception, match="struct"):
         nested.write.format("dumpster").mode("append").save(out)
-    with pytest.raises(Exception, match="not a column"):
+    # layouts live in encode_table: the sink refuses a layout option and
+    # a prepped frame's routing columns, and names the way out
+    with pytest.raises(Exception, match="(?s)bucket_col.*encode_table"):
         _docs(spark).write.format("dumpster") \
-            .option("bucket_col", "nope").mode("append").save(out)
+            .option("bucket_col", "lang").mode("append").save(out)
+    prepped = pipeline.prep_for_encode(
+        _docs(spark).withColumn("url", F.lit("https://h.example/")),
+        "url", n_buckets=4)
+    with pytest.raises(Exception, match="(?s)reserved.*encode_table"):
+        prepped.write.format("dumpster").mode("append").save(out)
     assert not os.path.exists(os.path.join(out, "manifest")) \
         or done_buckets(out) == set()
 
@@ -247,70 +198,34 @@ def test_written_store_supports_pushdown(spark, tmp_path):
     assert got.collect() == want.collect()
 
 
-def test_concurrent_bucket_col_writers_serialize(spark, tmp_path):
-    """Two bucket_col writers racing on a FRESH store: chunks are
-    job-namespaced (no clobber) and the second commit fails loud on the
-    first's manifests — the winner's data stays exact."""
-    import threading
-    out = str(tmp_path / "wcc")
-    pages = spark.range(0, 200).select(
-        F.concat(F.lit("https://h"), (F.col("id") % 5).cast("string"),
-                 F.lit(".example/"), F.col("id").cast("string"))
-        .alias("url"), F.col("id").alias("doc_id"))
-    prepped = pipeline.prep_for_encode(pages, "url", n_buckets=4)
-    results = {}
-
-    def job(tag):
-        try:
-            spark._jvm.org.apache.spark.sql.classic.SparkSession \
-                .setActiveSession(spark._jsparkSession)
-            prepped.write.format("dumpster").option("path", out) \
-                .option("bucket_col", "__bucket").mode("append").save()
-            results[tag] = "ok"
-        except Exception as e:
-            results[tag] = e
-
-    ts = [threading.Thread(target=job, args=(t,)) for t in ("a", "b")]
-    [t.start() for t in ts]
-    [t.join() for t in ts]
-    outcomes = sorted("ok" if v == "ok" else "err" for v in results.values())
-    # at least one commits; if both raced to commit, exactly one wins
-    assert outcomes in (["err", "ok"], ["ok", "ok"])
-    if outcomes == ["err", "ok"]:
-        err = next(v for v in results.values() if v != "ok")
-        # either refusal is the correct serialization outcome, depending
-        # on when the loser arrived: commit-time ("concurrent bucket_col
-        # writer finished first" — both saw an empty store) or init-time
-        # ("bucket_col append into a store with N committed bucket(s)" —
-        # the loser's writer was created after the winner's whole
-        # commit, which a loaded host makes possible)
-        assert ("concurrent bucket_col writer" in str(err)
-                or "bucket_col append into a store" in str(err)), err
-    got = spark.read.format("dumpster").option("path", out).load()
-    assert got.count() == 200          # winner's rows, exact — no mixing
-    assert got.exceptAll(pages).count() == 0
-
-
-def test_bucket_col_prep_local_hostsorted_roundtrip(spark, tmp_path):
+def test_hostsorted_frame_through_plain_sink_roundtrip(spark, tmp_path):
     """The zero-shuffle host-grouped sink path benched as
-    encode_pages_sink_local (r3 next-round #3): prep_for_encode_local
-    host-sorts each split, the writer takes __bucket = partition id.
-    Round-trip must be exact and the routing column must not be stored."""
+    encode_pages_sink_local: the frame is host-sorted within each split
+    and written through the plain sink, so each write task is one bucket
+    and its chunks land directly under chunks/.  Round-trip must be exact
+    through both readers."""
     from dumpster.synth import synth_pages
 
     out = str(tmp_path / "whs")
     pages = synth_pages(spark, 2500, seed=21)
-    (pipeline.prep_for_encode_local(pages, "url")
-     .write.format("dumpster").option("bucket_col", "__bucket")
-     .option("chunk_rows", "256").option("table_id", "whs")
-     .mode("append").save(out))
+    n_tasks = pages.rdd.getNumPartitions()
+    (pages.withColumn("__host", pipeline.host_of("url"))
+     .sortWithinPartitions("__host").drop("__host")
+     .write.format("dumpster").option("chunk_rows", "256")
+     .option("table_id", "whs").mode("append").save(out))
+    # a fresh store's range starts at 0: bucket == the write task's id
+    assert done_buckets(out) == set(range(n_tasks))
+    assert read_manifest(spark, out) \
+        .filter(F.col("bucket") != F.col("partition_id")).count() == 0
+    chunks = os.listdir(os.path.join(out, "chunks"))
+    assert chunks and all(c.endswith(".dmc") for c in chunks)
     got = spark.read.format("dumpster").option("path", out).load()
     assert set(got.columns) == set(pages.columns)
     assert got.exceptAll(pages).count() == 0
     assert pages.exceptAll(got).count() == 0
-    # the engine front door reads the same store
-    from dumpster.engine import decode_table
-    assert decode_table(spark, out).count() == 2500
+    via_engine = decode_table(spark, out)
+    assert via_engine.exceptAll(pages).count() == 0
+    assert pages.exceptAll(via_engine).count() == 0
 
 
 def test_failed_overwrite_preserves_existing_table(spark, tmp_path):
