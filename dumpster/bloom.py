@@ -21,6 +21,8 @@ the encoder already holds — no per-row Python, no extra materialization.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 # The 61-bit polynomial hash kernel lives HERE (Spark-free) and
 # textops.doc_fingerprint imports it — textops pulls in pyspark.sql at
@@ -153,8 +155,19 @@ def bloom_build(data, offsets: np.ndarray) -> tuple[bytes, dict]:
     """→ (bitmap bytes, desc).  desc = {"m": m_bits, "k": k, "v": 2}.
     The bitmap is sized by DISTINCT hashes, not row count — a 64 Ki-row
     chunk of a 5-value language column gets a 4 Kib bitmap, not 512 Kib
-    (same fp rate: only distinct values set bits)."""
-    hashes = np.unique(poly_hash_rows(data, offsets))
+    (same fp rate: only distinct values set bits).  Only the distinct
+    values are hashed (``pc.unique``): equal rows hash equally, so the
+    hash set — and the bitmap — is the one every row would give, at a
+    fraction of the cost on low-cardinality columns."""
+    offs = np.ascontiguousarray(offsets, dtype=np.int64)
+    uniq = pc.unique(pa.Array.from_buffers(
+        pa.large_binary(), len(offs) - 1,
+        [None, pa.py_buffer(offs), pa.py_buffer(data)]))
+    ubufs = uniq.buffers()
+    uoffs = np.frombuffer(ubufs[1], dtype=np.int64)[
+        uniq.offset:uniq.offset + len(uniq) + 1]
+    udata = ubufs[2] if ubufs[2] is not None else b""
+    hashes = np.unique(poly_hash_rows(udata, uoffs))
     m_bits = choose_m_bits(len(hashes))
     pos = _positions(hashes, m_bits)
     bits = np.zeros(m_bits, dtype=bool)

@@ -237,6 +237,19 @@ def _pieces(payload) -> list:
     return payload if isinstance(payload, list) else [payload]
 
 
+def _stages(meta: dict) -> dict:
+    """The exact integer stages a fixed-width codec meta records, for
+    col_stats: ``dec`` (float64 stored as int / 10^e) and ``scale`` (FOR
+    residuals divided by their common factor)."""
+    out = {}
+    if "__d" in meta:
+        out["dec"] = meta["__d"]
+        meta = meta["in"]
+    if "scale" in meta:
+        out["scale"] = meta["scale"]
+    return out
+
+
 def encode_chunk_pieces(batch: pa.RecordBatch, *, table_id: str = "t",
                         bucket: int = 0, chunk_seq: int = 0,
                         plain_only: bool = False) -> tuple[list, list[dict]]:
@@ -279,7 +292,7 @@ def encode_chunk_pieces(batch: pa.RecordBatch, *, table_id: str = "t",
         arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
         kind = _kind_of(arr.type)
         seed = stable_seed(table_id, bucket, chunk_seq, name)
-        vals = None
+        vals = fmeta = None
         smin = smax = None
         bloom_sec = None
         if kind == _KIND_VAR:
@@ -319,6 +332,7 @@ def encode_chunk_pieces(batch: pa.RecordBatch, *, table_id: str = "t",
             payload = [lp, *_pieces(cpayload)]
             meta = {"lens": lmeta, "lpn": len(lp), "child": cmeta,
                     "cn": int(len(cvals))}
+            fmeta = cmeta
         elif kind == _KIND_DECIMAL:
             dense, valid = _dense_and_validity(arr)
             n_valid = len(dense)
@@ -332,6 +346,7 @@ def encode_chunk_pieces(batch: pa.RecordBatch, *, table_id: str = "t",
             payload = [*lop_pieces, *hip_pieces]
             meta = {"lo": lometa, "lon": sum(len(p) for p in lop_pieces),
                     "hi": himeta, "hic": hic, "hizl": int(hizl)}
+            fmeta = lometa
         elif kind == _KIND_LISTVAR:
             dense, valid = _dense_and_validity(arr)
             n_valid = len(dense)
@@ -355,6 +370,7 @@ def encode_chunk_pieces(batch: pa.RecordBatch, *, table_id: str = "t",
                 vals = np.asarray(dense)
             codec, zl, payload, meta, _ = select_encode_fixed(
                 vals, seed, plain_only)
+            fmeta = meta
         pieces = _pieces(payload)
         plen = sum(len(p) for p in pieces)
         # zone maps: per-chunk min/max for numeric-family columns — the
@@ -403,6 +419,8 @@ def encode_chunk_pieces(batch: pa.RecordBatch, *, table_id: str = "t",
               "encoded_bytes": plen + len(desc_b) + len(vbm) + 16,
               "n_nulls": int(arr.null_count),
               "vmin": vmin, "vmax": vmax}
+        if fmeta is not None:
+            st.update(_stages(fmeta))
         if smin is not None:
             # string zone map: base64 of truncated byte bounds (Parquet
             # truncation semantics — smin ≤ true min; smax ≥ true max or

@@ -8,6 +8,12 @@ extrapolate to the full chunk, encode the full chunk with the winner, and
 guard the floor: if the winner somehow exceeds PLAIN's size the chunk falls
 back to PLAIN, so encoded size is never worse than raw + O(1) header.
 
+Two exact integer stages ride on the fixed-width menu without adding a
+codec: FOR divides out its residuals' common factor (forpack.py), and a
+float64 chunk whose every value is an exact decimal ``k / 10^e`` offers
+its integers ``k`` to the same trial round as its bit pattern
+(select_encode_fixed).
+
 A final optional byte-level pass plays the role Snappy page compression
 plays in the reference sink (reference: RecordWriter.java:29
 ``CompressionCodecName.SNAPPY``): a general stage layered over the
@@ -63,6 +69,14 @@ MIN_SAMPLE_ROWS_VAR = 48       # the row count, never below this floor
 ZSTD_LEVEL = 3
 ZLIB_MIN_GAIN = 0.875    # keep the byte stage only if it shrinks below 7/8
 COMP_ZSTD = 2
+# decimal stage: float64 values that are int64 / 10^e, e ≤ DEC_MAX_EXP;
+# every power is exact in float64 (10^15 < 2^53), and so is every integer
+# below DEC_LIMIT, so int64 → float64 / 10^e is one correctly rounded op
+DEC_MAX_EXP = 15
+DEC_LIMIT = float(2 ** 53)
+_POW10 = np.array([float(10 ** e) for e in range(DEC_MAX_EXP + 1)])
+# PLAIN of the integers is never smaller than PLAIN of the bit pattern
+DEC_CODECS = tuple(c for c in FIXED_INT_CODECS if c != PLAIN)
 
 
 def _zstd():
@@ -123,6 +137,37 @@ def _sample_idx(n: int, seed: int, k: int = SAMPLE_ROWS) -> np.ndarray:
     return np.sort(rng.choice(n, size=k, replace=False))
 
 
+def _decimal_survivors(v: np.ndarray, pow10: np.ndarray) -> np.ndarray:
+    """Mask (per value, per exponent): does ``v`` come back bit-exactly
+    from ``int64(rint(v·10^e)) → float64 / 10^e`` — the decimal stage's
+    decode — with the integer below 2^53?  False for NaN, ±inf and -0.0
+    (its integer is +0)."""
+    with np.errstate(over="ignore", invalid="ignore"):
+        x = np.rint(v * pow10)
+        back = x.astype(np.int64).astype(np.float64) / pow10
+    return (np.abs(x) < DEC_LIMIT) & (back.view(np.int64) == v.view(np.int64))
+
+
+def _decimal_ints(vals: np.ndarray, sample: np.ndarray):
+    """→ (e, int64 values) for the smallest e in 0..DEC_MAX_EXP at which
+    every float64 value is an exact decimal, else None.  The sample picks
+    or rejects e before the full chunk is touched; a full-chunk failure
+    moves e up to what the failing values need, and re-checks."""
+    if not len(vals):
+        return None
+    cols = _POW10[None, :]
+    ok = _decimal_survivors(sample[:, None], cols).all(axis=0)
+    while ok.any():
+        e = int(ok.argmax())
+        bad = ~_decimal_survivors(vals, _POW10[e])
+        if not bad.any():
+            with np.errstate(over="ignore", invalid="ignore"):
+                return e, np.rint(vals * _POW10[e]).astype(np.int64)
+        ok = _decimal_survivors(vals[bad][:, None], cols).all(axis=0)
+        ok[:e + 1] = False
+    return None
+
+
 def select_encode_fixed(vals: np.ndarray, seed: int,
                         plain: bool = False) -> tuple[int, bool, bytes, dict, dict]:
     """Returns (codec_id, zlibbed, payload, meta, selection_info).
@@ -137,51 +182,66 @@ def select_encode_fixed(vals: np.ndarray, seed: int,
     round-trip contract.  The bit view is exact for every float — NaN
     payloads, signed zeros, infinities — and opens the integer codec menu
     (FOR keeps float32 bits at ≤ 4 bytes/value despite the int64 bridge).
+
+    Decimal stage (float64 only, after ALP / BtrBlocks' pseudodecimals):
+    when every value of the chunk is ``k / 10^e`` bit-exactly for int64
+    ``k`` below 2^53 and some e ≤ DEC_MAX_EXP, the integers ``k`` compete
+    with the bit pattern in the same trial round; a decimal winner stores
+    ``{"__d": e, "in": <codec meta>}``, which a reader that predates the
+    stage refuses on a missing key.  Any value that fails the check
+    (-0.0, NaN, ±inf, too many digits) keeps the whole chunk on the bit
+    pattern, whose bytes do not change.
     """
     if plain:
         payload, meta = encode_plain_fixed(vals)
         return PLAIN, False, payload, meta, {"est": {}, "n": len(vals)}
-    if vals.dtype.kind == "f":
-        fstr = vals.dtype.str
-        if vals.dtype.itemsize == 8:
-            bits = vals.view(np.int64)
-        else:
-            bits = vals.view(f"u{vals.dtype.itemsize}").astype(np.int64)
-        codec, zl, payload, meta, info = select_encode_fixed(bits, seed)
-        meta = dict(meta)
-        meta["__f"] = fstr
-        return codec, zl, payload, meta, info
     n = len(vals)
     idx = _sample_idx(n, seed)
-    sample = vals[idx]
+    bits, dec = vals, None
+    if vals.dtype.kind == "f":
+        if vals.dtype.itemsize == 8:
+            bits = vals.view(np.int64)
+            dec = _decimal_ints(vals, vals[idx])
+        else:
+            bits = vals.view(f"u{vals.dtype.itemsize}").astype(np.int64)
+    streams = [(None, bits, FIXED_INT_CODECS)]
+    if dec is not None:
+        streams.append((*dec, DEC_CODECS))
     # ORDER-SENSITIVE codecs (delta, RLE) must be estimated on a contiguous
     # run: a scattered sample inflates deltas ~n/k× and shatters runs, so
     # they lose selection on exactly the data they are best at (sorted
     # timestamps, host-major lang runs)
-    if n <= SAMPLE_ROWS:
-        run = vals
-    else:
-        start = seed % (n - SAMPLE_ROWS)
-        run = vals[start:start + SAMPLE_ROWS]
-    ests = {}
-    for c in FIXED_INT_CODECS:
-        try:
-            src = run if c in (DELTA_FOR, RLE) else sample
-            p, _ = _ENC_FIXED[c](src)
-            ests[c] = int(_est_stored(p) * (n / max(len(src), 1)))
-        except Exception:
-            continue
-    winner = min(ests, key=lambda c: (ests[c], c))
-    payload, meta = _ENC_FIXED[winner](vals)
+    start = 0 if n <= SAMPLE_ROWS else seed % (n - SAMPLE_ROWS)
+    ests, trials = {}, []
+    for e, src, menu in streams:
+        sample, run = src[idx], src[start:start + SAMPLE_ROWS]
+        for c in menu:
+            try:
+                part = run if c in (DELTA_FOR, RLE) else sample
+                p, _ = _ENC_FIXED[c](part)
+                est = int(_est_stored(p) * (n / max(len(part), 1)))
+            except Exception:
+                continue
+            if e is None:
+                ests[c] = est
+            # ties go to the bit pattern (no stage to undo on decode)
+            trials.append((est, e is not None, c, e, src))
+    _, _, winner, e, src = min(trials, key=lambda t: t[:3])
+    payload, meta = _ENC_FIXED[winner](src)
     if winner != PLAIN:
         # floor: never store worse than PLAIN.  PLAIN's payload size is the
         # raw buffer — computable without encoding (the round-1 bench showed
         # the unconditional re-encode here as a top encode-wall sink).
         # STRICT comparison — a size-neutral transform (BSS) must survive
         # to the zlib stage, which is where its win materialises.
-        plain_size = np.ascontiguousarray(vals).nbytes
+        plain_size = np.ascontiguousarray(bits).nbytes
         if plain_size < len(payload):
-            winner, (payload, meta) = PLAIN, encode_plain_fixed(vals)
+            winner, e, (payload, meta) = \
+                PLAIN, None, encode_plain_fixed(bits)
+    if e is not None:
+        meta = {"__d": e, "in": meta}
+    elif vals.dtype.kind == "f":
+        meta = {**meta, "__f": vals.dtype.str}
     payload, zlibbed = _maybe_zlib(payload)
     return winner, zlibbed, payload, meta, {"est": ests, "n": n}
 
@@ -269,8 +329,11 @@ def _undo_byte_stage(zlibbed, codec: int, payload):
 
 def decode_fixed(codec: int, zlibbed, payload, meta: dict,
                  n: int) -> np.ndarray:
+    e = meta.get("__d")
     out = _DEC_FIXED[codec](_undo_byte_stage(zlibbed, codec, payload),
-                            meta, n)
+                            meta if e is None else meta["in"], n)
+    if e is not None:   # decimal stage (see select_encode_fixed)
+        return out.astype(np.float64) / _POW10[e]
     fstr = meta.get("__f")
     if fstr:  # restore the float bit pattern (see select_encode_fixed)
         dt = np.dtype(fstr)

@@ -595,10 +595,12 @@ def encode_table(df: DataFrame, out_dir: str, *, url_col: str | None = None,
                             frozenset(done),
                             bucket_subdirs=bucket_subdirs, fs=fs)
     metrics = prepped.mapInArrow(encoder, schema=MANIFEST_DDL)
-    # count() is the action: it aggregates executor-side, so manifest rows
-    # (one per chunk — 10^7 at target scale) never funnel through the
-    # driver; the durable manifest is the per-bucket files the tasks wrote
-    metrics.count()
+    # the action drains the encoder into Spark's no-op sink: one stage
+    # with no exchange (an aggregate such as count() adds one), manifest
+    # rows (one per chunk — 10^7 at target scale) never reach the driver,
+    # and a failed task still fails the job; the durable manifest is the
+    # per-bucket files the tasks wrote
+    metrics.write.format("noop").mode("overwrite").save()
     return read_manifest(spark, out_dir)
 
 

@@ -72,6 +72,35 @@ def test_bloom_unknown_version_never_prunes():
     assert bloom_might_contain(bitmap, {**desc, "v": 99}, b"zz")
 
 
+def _bloom_per_row(data, offs):
+    """The bitmap built by hashing every row (the pre-distinct build)."""
+    from dumpster.bloom import _K, _positions, choose_m_bits
+    hashes = np.unique(poly_hash_rows(data, offs))
+    m_bits = choose_m_bits(len(hashes))
+    bits = np.zeros(m_bits, dtype=bool)
+    bits[_positions(hashes, m_bits).reshape(-1)] = True
+    return np.packbits(bits, bitorder="little").tobytes(), \
+        {"m": m_bits, "k": _K, "v": 2}
+
+
+def test_bloom_from_distinct_values_equals_per_row_build():
+    from dumpster.chunk import _var_parts_validity
+    rng = np.random.default_rng(3)
+    low = [[b"AIR", b"RAIL", b"SHIP", b"TRUCK"][i] for i in
+           rng.integers(0, 4, 5000)]
+    high = [f"https://h{i}.example/p/{rng.integers(1 << 40)}".encode()
+            for i in range(3000)]
+    empties = [b"", b"x", b"", b""] * 300
+    cases = [_varbuf(v) for v in (low, high, empties, [b""] * 50, [])]
+    # null-compacted offsets over a sliced array, as the encoder holds them
+    arr = pa.array([None if i % 7 == 0 else low[i] for i in range(2000)],
+                   type=pa.binary()).slice(13, 1500)
+    data, offs, _ = _var_parts_validity(arr)
+    cases.append((data, offs))
+    for data, offs in cases:
+        assert bloom_build(data, offs) == _bloom_per_row(data, offs)
+
+
 def test_want_bloom_gating():
     assert want_bloom(MIN_ROWS, MIN_ROWS * MAX_AVG_LEN)
     assert not want_bloom(MIN_ROWS - 1, 10)            # too few rows
