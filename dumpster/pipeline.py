@@ -20,12 +20,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# ONE host-extraction definition for the whole engine (textops owns it):
-# the previous local copy accepted only lowercase schemes and let the
-# userinfo group swallow '?'/'#' — host_of('http://e.com?next=a@b.com')
-# returned 'b.com' and uppercase-scheme URLs returned '' (round-5 review
-# finding; wrong salted buckets for those rows)
-from .textops import _URL_HOST_RE as HOST_PATTERN  # noqa: E402
+# ONE host-extraction definition for the whole engine (textops imports
+# it; it lives here so the engine's import chain stays free of pandas):
+# an earlier copy accepted only lowercase schemes and let the userinfo
+# group swallow '?'/'#' — host_of('http://e.com?next=a@b.com') returned
+# 'b.com' and uppercase-scheme URLs returned '' (wrong salted buckets
+# for those rows)
+HOST_PATTERN = r"^[A-Za-z][A-Za-z0-9+.-]*://(?:[^/?#@]*@)?([^/?#:]*)"
 
 
 def host_of(url: Column | str) -> Column:

@@ -19,6 +19,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from .pipeline import HOST_PATTERN
+
 # crude per-language marker words for the n-gram/stopword heuristic;
 # counts are computed portably via length arithmetic (same trick works in
 # any SQL dialect, so the DuckDB oracle matches exactly)
@@ -361,13 +363,10 @@ def canonical_url_sql(url_expr: str) -> str:
             f"ELSE {low} || {rest2} END")
 
 
-_URL_HOST_RE = r"^[A-Za-z][A-Za-z0-9+.-]*://(?:[^/?#@]*@)?([^/?#:]*)"
-
-
 def url_host(url: Column) -> Column:
     """Lowercased registrable host of a URL (userinfo/port stripped);
     empty string for scheme-less input.  Pure Column expression."""
-    return F.lower(F.regexp_extract(url, _URL_HOST_RE, 1))
+    return F.lower(F.regexp_extract(url, HOST_PATTERN, 1))
 
 
 def host_suffix_matches(df: DataFrame, blocklist: DataFrame,

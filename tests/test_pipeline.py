@@ -1,9 +1,13 @@
 """Relational-prep operator semantics (reference parity edge cases §5.2.5)."""
 
 import datetime
+import os
+import subprocess
+import sys
 
 from pyspark.sql import Row, functions as F
 
+import dumpster
 from dumpster import pipeline
 
 
@@ -14,6 +18,19 @@ def test_host_extraction(spark):
          ("not a url",)], "url string")
     out = [r[0] for r in df.select(pipeline.host_of("url")).collect()]
     assert out == ["h1.example.com", "h2.example.net", ""]
+
+
+def test_engine_import_chain_leaves_pandas_out():
+    # every DataSource planner process imports dumpster.datasource; pandas
+    # would add a few hundred ms to each of them for one regex
+    root = os.path.dirname(os.path.dirname(os.path.abspath(dumpster.__file__)))
+    env = dict(os.environ, PYTHONPATH=os.pathsep.join(
+        filter(None, [root, os.environ.get("PYTHONPATH")])))
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import sys, dumpster.datasource; print('pandas' in sys.modules)"],
+        env=env, cwd=root, capture_output=True, text=True, check=True)
+    assert out.stdout.strip() == "False", out.stdout + out.stderr
 
 
 def test_salted_bucket_range_and_determinism(spark):
