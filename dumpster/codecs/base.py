@@ -18,6 +18,11 @@ Codec contract (duck-typed, see each module):
     encode_*(...) -> (payload: bytes, meta: dict)
     decode_*(payload, meta, n) -> values in the same shape
 ``meta`` must be JSON-serialisable and small (scalars only).
+
+Every frame-of-reference in the layer (FOR and delta-FOR values, RLE run
+lengths, var-width lengths) goes through :func:`for_frame`, which picks
+the narrower of the unsigned and the signed base, so mixed-sign integers
+pack at the width of their signed range.
 """
 
 from __future__ import annotations
@@ -118,8 +123,32 @@ def bitunpack(buf: bytes, n: int, width: int) -> np.ndarray:
 
 # --- frame-of-reference on raw uint64 (modular, exact for any int64) ------
 
+_SIGN = 1 << 63
+
+
+def for_frame(v: np.ndarray) -> tuple[int, int]:
+    """(base, top) of the narrower exact frame over a uint64 array.
+
+    The unsigned frame's base is the uint64 minimum; the signed frame's is
+    the int64 minimum, stored as its uint64 image.  Residuals are
+    ``v - base`` (mod 2^64) in ``[0, top]`` under either, so one modular
+    decoder (``resid + uint64(base)``) serves both.  The frames differ only
+    when values straddle 2^63 as uint64 (mixed signs as int64); then the
+    narrower wins and a tie keeps the unsigned frame, so data that never
+    mixes signs packs exactly as it did before the signed frame.
+    """
+    lo, hi = int(v.min()), int(v.max())
+    if lo < _SIGN <= hi:
+        s = v.view(np.int64)
+        slo, shi = int(s.min()), int(s.max())
+        if shi - slo < hi - lo:
+            return slo % (1 << 64), shi - slo
+    return lo, hi - lo
+
+
 def for_pack_u64(vals_u64: np.ndarray) -> tuple[bytes, int, int]:
-    """FOR-pack a uint64 array: subtract min (mod 2^64), bit-pack residuals.
+    """FOR-pack a uint64 array: subtract the frame base (mod 2^64), bit-pack
+    the residuals (see :func:`for_frame`).
 
     Returns (payload, base_as_python_int, width).  Exact for any int64
     column viewed as uint64 because subtraction/addition are modular.
@@ -127,10 +156,9 @@ def for_pack_u64(vals_u64: np.ndarray) -> tuple[bytes, int, int]:
     v = np.ascontiguousarray(vals_u64, dtype=np.uint64)
     if len(v) == 0:
         return b"", 0, 0
-    base = int(v.min())
-    resid = v - np.uint64(base)
-    width = bit_width(int(resid.max()))
-    return bitpack(resid, width), base, width
+    base, top = for_frame(v)
+    width = bit_width(top)
+    return bitpack(v - np.uint64(base), width), base, width
 
 
 def for_unpack_u64(payload: bytes, n: int, base: int, width: int) -> np.ndarray:

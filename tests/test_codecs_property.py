@@ -6,10 +6,12 @@ float array (NaN/±inf included), any list of byte strings (non-UTF8,
 empty, long) must survive select→encode→decode bit-identically, under
 every seed (codec choice must never affect correctness).
 
-The generators also aim at the two exact integer stages: ints of the form
-``base + g·k`` (FOR's common factor) and float64 values that are exact
-decimals, mixed with the values that must keep a chunk off the decimal
-stage (-0.0, NaN payloads, ±inf, subnormals, |v·10^e| near 2^53).
+The generators also aim at the exact integer stages: ints of the form
+``base + g·k`` (the common factor of FOR and delta-FOR), mixed-sign values
+and deltas (the signed frame), uint64-style values straddling 2^63 (which
+keep the unsigned frame), and float64 values that are exact decimals,
+mixed with the values that must keep a chunk off the decimal stage (-0.0,
+NaN payloads, ±inf, subnormals, |v·10^e| near 2^53).
 """
 
 import hashlib
@@ -24,7 +26,8 @@ from dumpster.chunk import decode_chunk, encode_chunk
 from dumpster.codecs import (decode_fixed, decode_var, select_encode_fixed,
                              select_encode_var)
 from dumpster.codecs.base import offsets_from_lengths
-from dumpster.codecs.forpack import decode_for, encode_for
+from dumpster.codecs.forpack import (decode_delta_for, decode_for,
+                                     encode_delta_for, encode_for)
 from dumpster.codecs.selector import (_ENC_FIXED, DEC_CODECS, _decimal_ints,
                                       _sample_idx)
 
@@ -49,9 +52,54 @@ def scaled_ints(draw):
     return np.array([_wrap64(base + g * k) for k in ks], dtype=np.int64)
 
 
+@st.composite
+def mixed_sign_ints(draw):
+    """Small-to-wide ranges around zero, optionally on a stride."""
+    lim = draw(st.sampled_from([1, 100, 2**31, 2**62]))
+    g = draw(st.sampled_from([1, 1, 3, 10**6]))
+    ks = draw(st.lists(st.integers(-lim, lim), max_size=300))
+    return np.array([_wrap64(g * k) for k in ks], dtype=np.int64)
+
+
+@st.composite
+def straddling_u64(draw):
+    """uint64-style values on both sides of 2^63, viewed as int64."""
+    lim = draw(st.sampled_from([1, 1000, 2**40]))
+    ks = draw(st.lists(st.integers(-lim, lim), min_size=1, max_size=300))
+    return np.array([k + 2**63 for k in ks], dtype=np.uint64).view(np.int64)
+
+
 INT_ARRAYS = st.one_of(st.lists(I64, max_size=300)
                        .map(lambda v: np.array(v, dtype=np.int64)),
-                       scaled_ints())
+                       scaled_ints(), mixed_sign_ints(), straddling_u64())
+
+
+@st.composite
+def delta_cases(draw):
+    """Sequences whose deltas exercise delta-FOR's frame and factor:
+    cumulative sums of mixed-sign steps, ``first + g·k`` with g up to
+    10^12 and negative starts, unsorted µs timestamps, and jumps whose
+    delta range reaches 2^63 (these must not scale)."""
+    kind = draw(st.sampled_from(["steps", "stride", "ts", "jumps"]))
+    if kind == "steps":
+        lo, hi = draw(st.sampled_from([(-7, 39), (-1, 1), (-2**40, 2**20)]))
+        first = draw(I64)
+        steps = draw(st.lists(st.integers(lo, hi), max_size=300))
+        vals = np.cumsum([first] + steps, dtype=object)
+    elif kind == "stride":
+        first = draw(st.integers(-10**18, 10**18))
+        g = draw(st.integers(1, 10**12))
+        ks = draw(st.lists(st.integers(-10**6, 10**6), max_size=300))
+        vals = [first + g * k for k in ks]
+    elif kind == "ts":
+        base = draw(st.integers(0, 4 * 10**15))
+        ks = draw(st.lists(st.integers(0, 10**8), max_size=300))
+        vals = [base + 10**6 * k for k in ks]
+    else:
+        vals = draw(st.lists(st.sampled_from(
+            [-2**63, -2**62, -2, 0, 2, 2**62, 2**63 - 2]), max_size=300))
+    return np.array([_wrap64(int(x)) for x in vals], dtype=np.int64)
+
 
 # values that keep a chunk off the decimal stage, or sit at its edges
 _SPECIAL_BITS = [0x8000000000000000,            # -0.0
@@ -115,24 +163,110 @@ def test_fixed_int_roundtrip(arr, seed):
     assert np.array_equal(out, arr)
 
 
+def _frame_oracle(u: list) -> tuple[int, int, int]:
+    """(base, top, g) of the frame FOR and delta-FOR must pick over the
+    uint64 values ``u``: the narrower of the unsigned and the signed range
+    (a tie keeps the unsigned frame), the base as its uint64 image, and
+    the residuals' common factor when 0 < top < 2^63, else 1."""
+    s = [_wrap64(x) for x in u]
+    if max(s) - min(s) < max(u) - min(u):
+        base, resid = min(s) % 2**64, [x - min(s) for x in s]
+    else:
+        base, resid = min(u), [x - min(u) for x in u]
+    top = max(resid)
+    return base, top, math.gcd(*resid) if 0 < top < 2**63 else 1
+
+
+def _assert_frame(meta: dict, u: list) -> None:
+    base, top, g = _frame_oracle(u)
+    if g > 1:
+        assert meta["scale"] == g and "base" not in meta
+        assert meta["sbase"] == base
+        assert meta["swidth"] == (top // g).bit_length()
+    else:
+        assert "scale" not in meta and meta["base"] == base
+        assert meta["width"] == top.bit_length()
+
+
 @settings(max_examples=60, deadline=None)
 @given(INT_ARRAYS)
 def test_for_common_factor_roundtrip(arr):
-    """FOR scales exactly when 0 < range < 2^63 and the residuals share
-    a factor g > 1, and always round-trips."""
+    """FOR packs the narrower of the unsigned and the signed frame, scales
+    exactly when 0 < range < 2^63 and that frame's residuals share a
+    factor g > 1, and always round-trips."""
     payload, meta = encode_for(arr)
     assert np.array_equal(decode_for(payload, meta, len(arr)), arr)
     if len(arr) == 0:
         return
-    u = arr.view(np.uint64)
-    resid = [int(x) for x in (u - u.min())]
-    top = max(resid)
-    g = math.gcd(*resid) if 0 < top < 2**63 else 1
-    if g > 1:
-        assert meta["scale"] == g and "base" not in meta
-        assert meta["swidth"] == (top // g).bit_length()
-    else:
-        assert "scale" not in meta and meta["width"] == top.bit_length()
+    _assert_frame(meta, [int(x) for x in arr.view(np.uint64)])
+
+
+@settings(max_examples=60, deadline=None)
+@given(delta_cases())
+def test_delta_for_frame_and_factor_roundtrip(arr):
+    """delta-FOR picks its deltas' frame and common factor by the same
+    rule as FOR, and always round-trips."""
+    payload, meta = encode_delta_for(arr)
+    out = decode_delta_for(payload, meta, len(arr))
+    assert out.dtype == np.int64 and np.array_equal(out, arr)
+    if len(arr) < 2:
+        return
+    u = [int(x) for x in arr.view(np.uint64)]
+    assert meta["first"] == u[0]
+    _assert_frame(meta, [(b - a) % 2**64 for a, b in zip(u, u[1:])])
+
+
+def test_frame_edges():
+    """Mixed signs pack at their signed width; values straddling 2^63 as
+    uint64 keep the unsigned frame; a delta range of 2^63 never scales."""
+    _, meta = encode_for(np.array([-1, 1, 2, -3], dtype=np.int64))
+    assert meta == {"base": 2**64 - 3, "width": 3}
+    straddle = np.array([2**63 - 5, 2**63, 2**63 + 6],
+                        dtype=np.uint64).view(np.int64)
+    payload, meta = encode_for(straddle)
+    assert meta == {"base": 2**63 - 5, "width": 4}
+    assert np.array_equal(decode_for(payload, meta, 3), straddle)
+    # deltas ±2^62: both frames span 2^63, every delta is even, no scale
+    jumps = np.array([0, 2**62, 0, 2**62, 0], dtype=np.int64)
+    payload, meta = encode_delta_for(jumps)
+    assert meta == {"first": 0, "base": 2**62, "width": 64}
+    assert np.array_equal(decode_delta_for(payload, meta, 5), jumps)
+    # clustered keys: deltas in [-7, 39] pack at 6 bits, not 64
+    keys = np.cumsum(np.random.default_rng(3).integers(-7, 40, 4001))
+    payload, meta = encode_delta_for(keys)
+    assert meta["width"] == 6 and len(payload) == 4000 * 6 // 8
+    assert np.array_equal(decode_delta_for(payload, meta, len(keys)), keys)
+
+
+def _codec_digest(enc, vals) -> str:
+    payload, meta = enc(vals)
+    return hashlib.sha256(bytes(payload) + json.dumps(
+        meta, sort_keys=True).encode()).hexdigest()[:16]
+
+
+def test_single_sign_columns_keep_their_bytes():
+    """Columns whose values (FOR) or deltas (delta-FOR) never mix signs
+    store the exact bytes they stored before the signed frame and
+    delta-FOR's common factor existed (digests recorded from that
+    encoder)."""
+    rng = np.random.default_rng(15)
+    nonneg = rng.integers(0, 10**6, 5000)
+    negative = rng.integers(-10**6, 0, 5000)
+    ts_up = 1_600_000_000_000_000 + np.cumsum(rng.integers(0, 5000, 5000))
+    down = -np.cumsum(rng.integers(1, 300, 5000))
+    wide = rng.integers(2**40, 2**62, 3000)
+    for_cases = {"nonneg": (nonneg, "c6cc474ef992d1e4"),
+                 "negative": (negative, "a945b19a0eaec67d"),
+                 "ts_up": (ts_up, "2d78386f96169c38"),
+                 "down": (down, "7d03c7fb17af7451"),
+                 "wide": (wide, "d29c87b256a28f55")}
+    for name, (vals, want) in for_cases.items():
+        assert _codec_digest(encode_for, vals.astype(np.int64)) == want, name
+    delta_cases = {"ts_up": (ts_up, "c84748e7ef7255de"),
+                   "down": (down, "7570a6a5771ca403")}
+    for name, (vals, want) in delta_cases.items():
+        assert _codec_digest(encode_delta_for,
+                             vals.astype(np.int64)) == want, name
 
 
 @settings(max_examples=80, deadline=None)
