@@ -168,10 +168,6 @@ def for_unpack_u64(payload: bytes, n: int, base: int, width: int) -> np.ndarray:
 
 # --- var-width (string/binary) buffer helpers -----------------------------
 
-def lengths_from_offsets(offsets: np.ndarray) -> np.ndarray:
-    return np.diff(offsets.astype(np.int64))
-
-
 def offsets_from_lengths(lengths: np.ndarray) -> np.ndarray:
     out = np.empty(len(lengths) + 1, dtype=np.int64)
     out[0] = 0

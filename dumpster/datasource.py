@@ -74,12 +74,12 @@ from pyspark.sql.datasource import (DataSource, DataSourceArrowWriter,
 from pyspark.sql.types import StructType
 
 from . import fs as fslib
-from .engine import (DEFAULT_CHUNK_BYTES, DEFAULT_CHUNK_ROWS, FLAT_SEP,
-                     _MANIFEST_ARROW, _arrow_schema, _as_bytes,
-                     _fs_write_atomic, _has_structs, _make_encoder,
-                     _manifest_path, _plan_chunks, _publish_table_schema,
-                     _refuse_mixed_root, _resolve_stores, _scan_chunk_files,
-                     _stat_value, _union_schema, done_buckets)
+from .engine import (DEFAULT_CHUNK_ROWS, FLAT_SEP, _MANIFEST_ARROW,
+                     _arrow_schema, _as_bytes, _chunk_rows, _fs_write_atomic,
+                     _has_structs, _make_encoder, _manifest_path,
+                     _plan_chunks, _publish_table_schema, _refuse_mixed_root,
+                     _resolve_stores, _scan_chunk_files, _stat_value,
+                     _union_schema, done_buckets)
 
 _DEFAULT_TARGET_BYTES = 64 * 1024 * 1024
 
@@ -332,10 +332,10 @@ class DumpsterWriter(DataSourceArrowWriter):
     speculation are safe: a retry re-encodes the same input partition to
     the same deterministic chunk names with identical bytes.
 
-    Options: ``path`` (required), ``chunk_rows``, ``chunk_bytes``,
-    ``table_id``.  Modes: append | overwrite.  An append into a
-    stream-sink root (``batch=N`` stores) raises before writing anything;
-    an overwrite replaces the root.
+    Options: ``path`` (required), ``chunk_rows``, ``table_id``.  Modes:
+    append | overwrite.  An append into a stream-sink root (``batch=N``
+    stores) raises before writing anything; an overwrite replaces the
+    root.
 
     Overwrite truncates INSIDE ``commit()``, not at writer creation
     (round-5 review finding — truncate-at-planning meant any failed
@@ -482,7 +482,7 @@ def _init_writer_common(w, options: dict, schema: StructType) -> None:
             "the dumpster sink has no bucket_col option: each write task "
             "is one bucket. Encode a salted or hand-bucketed layout with "
             "dumpster.engine.encode_table(df, out_dir, mode='salted' | "
-            "bucket_expr=... | bucket_col=...)")
+            "bucket_expr=...)")
     if _has_structs(schema):
         raise ValueError(
             "struct-typed columns are not supported on the df.write path "
@@ -498,8 +498,7 @@ def _init_writer_common(w, options: dict, schema: StructType) -> None:
             f"column name(s) {sorted(clash)} are reserved by the encode "
             f"pipeline; rename them, or encode a prep_for_encode* layout "
             f"with dumpster.engine.encode_table instead")
-    w.chunk_rows = int(options.get("chunk_rows", DEFAULT_CHUNK_ROWS))
-    w.chunk_bytes = int(options.get("chunk_bytes", DEFAULT_CHUNK_BYTES))
+    w.chunk_rows = _chunk_rows(options.get("chunk_rows", DEFAULT_CHUNK_ROWS))
     w.table_id = options.get("table_id") or os.path.basename(
         os.path.normpath(w.out_dir))
     w.schema = schema
@@ -523,7 +522,6 @@ def _encode_task(w, iterator, out_dir: str, bucket_base: int) \
     routed = (b.append_column("__bucket", pa.array(
         np.full(b.num_rows, bucket, dtype=np.int32))) for b in iterator)
     encoder = _make_encoder(out_dir, w.table_id, w.chunk_rows,
-                            w.chunk_bytes, frozenset(),
                             publish_manifest=False)
     return DumpsterCommitMessage(
         [r for mb in encoder(routed) for r in mb.to_pylist()])

@@ -289,6 +289,16 @@ def _split_plan(df: DataFrame) -> dict:
     return {"partitions": n, "semantic_hash": df.semanticHash()}
 
 
+def _chunk_rows(v) -> int:
+    """``chunk_rows`` (a sink option arrives as a string) as a positive
+    int, or a ValueError that names it: checked before a front door
+    writes anything, because 0 fails only inside the encode task."""
+    n = int(v) if isinstance(v, str) and v.strip().isdigit() else v
+    if isinstance(n, bool) or not isinstance(n, numbers.Integral) or n < 1:
+        raise ValueError(f"chunk_rows must be a positive int, got {v!r}")
+    return int(n)
+
+
 def _check_layout(out_dir: str, record: dict, resume: bool) -> None:
     """Refuse a resume whose bucket ids would not mean what they meant in
     the run that committed them, then publish ``record`` as the store's
@@ -299,6 +309,10 @@ def _check_layout(out_dir: str, record: dict, resume: bool) -> None:
         if os.path.exists(path):
             with open(path) as f:
                 old = json.load(f)
+        # encode_table's bucket_col layout was folded into bucket_expr:
+        # the hourly stores it wrote keep their caller-chosen bucket ids
+        if old == {"layout": "bucket_col"}:
+            old = {"layout": "bucket_expr"}
         # a store from before the record existed was written salted or
         # with caller-chosen bucket ids; only a split-local resume of it
         # would have to guess its split plan
@@ -318,7 +332,6 @@ def _check_layout(out_dir: str, record: dict, resume: bool) -> None:
 
 
 def _make_encoder(out_dir: str, table_id: str, chunk_rows: int,
-                  chunk_bytes: int, skip: frozenset,
                   bucket_subdirs: dict | None = None,
                   fs=None,
                   publish_manifest: bool = True):
@@ -326,12 +339,13 @@ def _make_encoder(out_dir: str, table_id: str, chunk_rows: int,
     contiguous: every encode_table layout sorts each task by
     ``__bucket``, and each DataSource sink task is one bucket.
 
-    Chunks flush eagerly at the row/byte thresholds.  A bucket is
-    finalised — its manifest file written exactly once, after all its
-    chunks are durable — as soon as the next bucket appears, so one
-    buffer is open at a time and resume granularity is the bucket.  A
-    bucket that reappeared would restart its chunk sequence and
-    overwrite its committed chunks.
+    Chunks flush eagerly at ``chunk_rows`` rows or DEFAULT_CHUNK_BYTES
+    of Arrow data.  A bucket is finalised — its manifest file written
+    exactly once, after all its chunks are durable — as soon as the next
+    bucket appears, so one buffer is open at a time and resume
+    granularity is the bucket.  A bucket that reappeared would restart
+    its chunk sequence and overwrite its committed chunks; encode_table
+    filters committed buckets out before this encoder sees a row.
     """
     def encode_partition(batches):
         from pyspark import TaskContext
@@ -384,7 +398,7 @@ def _make_encoder(out_dir: str, table_id: str, chunk_rows: int,
 
         def drain(bucket: int, st: dict, final: bool):
             while st["rows"] and (final or st["rows"] >= chunk_rows
-                                  or st["bytes"] >= chunk_bytes):
+                                  or st["bytes"] >= DEFAULT_CHUNK_BYTES):
                 tbl = pa.concat_tables(st["tables"])
                 take = min(chunk_rows, tbl.num_rows)
                 emit_chunk(bucket, st, tbl.slice(0, take))
@@ -421,8 +435,6 @@ def _make_encoder(out_dir: str, table_id: str, chunk_rows: int,
             bounds = np.concatenate(([0], change, [len(bcol)]))
             for s, e in zip(bounds[:-1], bounds[1:]):
                 b = int(bcol[s])
-                if b in skip:
-                    continue
                 if b != cur:
                     if st is not None:
                         yield close_bucket(cur, st)
@@ -442,12 +454,10 @@ def encode_table(df: DataFrame, out_dir: str, *, url_col: str | None = None,
                  bucket_expr=None, n_buckets: int | None = None,
                  salt_k: int | None = None,
                  chunk_rows: int = DEFAULT_CHUNK_ROWS,
-                 chunk_bytes: int = DEFAULT_CHUNK_BYTES,
                  table_id: str | None = None,
                  resume: bool = True,
                  order_cols: tuple[str, ...] = (),
                  mode: str = "local",
-                 bucket_col: str | None = None,
                  bucket_subdirs: dict | None = None,
                  fs=None,
                  num_partitions: int | None = None) -> DataFrame:
@@ -458,18 +468,16 @@ def encode_table(df: DataFrame, out_dir: str, *, url_col: str | None = None,
 
     Layout — the first that applies decides the bucket id:
 
-    1. ``bucket_col``: the column's int value (routing metadata, not
-       stored); ``n_buckets`` sizes the repartition.
-    2. ``bucket_expr``: any int Column; ``n_buckets`` sizes the
-       repartition.
-    3. ``mode="local"`` (default): each input split is encoded in place
+    1. ``bucket_expr``: any int Column; ``n_buckets`` sizes the
+       repartition.  A column it names is stored like any other.
+    2. ``mode="local"`` (default): each input split is encoded in place
        with NO shuffle (pipeline.prep_for_encode_local), bucket =
        spark_partition_id(); ``url_col`` adds a host sort inside each
        split.  Parallelism and resume granularity are the input split,
        tuned with spark.sql.files.maxPartitionBytes; passing
        ``n_buckets``, ``salt_k`` or ``num_partitions`` raises, because
        they only size the salted layout.
-    4. ``mode="salted"``: one shuffle on the salted host bucket of
+    3. ``mode="salted"``: one shuffle on the salted host bucket of
        ``url_col`` (pipeline.prep_for_encode; ``n_buckets`` 32,
        ``salt_k`` 4 and ``num_partitions`` auto by default) — an exact
        global host-major layout; without ``url_col`` the bucket is a
@@ -482,17 +490,17 @@ def encode_table(df: DataFrame, out_dir: str, *, url_col: str | None = None,
     resuming a store that has committed buckets under a different
     record — a changed split size or core count in local mode — raises
     ValueError before any task runs.  A store written before the record
-    existed resumes only under ``mode="salted"``, ``bucket_expr`` or
-    ``bucket_col``.  The remedy is to rerun with the original settings,
-    or ``resume=False`` into a fresh ``out_dir``.  A stream-sink root
+    existed resumes only under ``mode="salted"`` or ``bucket_expr``.  The
+    remedy is to rerun with the original settings, or ``resume=False``
+    into a fresh ``out_dir``.  A stream-sink root
     (``batch=N`` stores) is refused before anything is written.
     """
     spark = df.sparkSession
     if mode not in ("salted", "local"):
         raise ValueError(f"unknown mode {mode!r}: expected 'salted' or "
                          f"'local'")
-    reserved = {"__bucket", "__host"} - {bucket_col}
-    clash = reserved & set(df.columns)
+    chunk_rows = _chunk_rows(chunk_rows)
+    clash = {"__bucket", "__host"} & set(df.columns)
     if clash:
         raise ValueError(
             f"column name(s) {sorted(clash)} are reserved by the encode "
@@ -503,8 +511,7 @@ def encode_table(df: DataFrame, out_dir: str, *, url_col: str | None = None,
             raise ValueError(
                 f"column name(s) {bad} contain {FLAT_SEP!r}, which is the "
                 f"struct-flattening separator; rename them before encoding")
-    layout = ("bucket_col" if bucket_col is not None
-              else "bucket_expr" if bucket_expr is not None else mode)
+    layout = "bucket_expr" if bucket_expr is not None else mode
     if layout == "local":
         salted_only = [k for k, v in (("n_buckets", n_buckets),
                                       ("salt_k", salt_k),
@@ -528,19 +535,6 @@ def encode_table(df: DataFrame, out_dir: str, *, url_col: str | None = None,
     _check_layout(out_dir, record, resume)
     table_id = table_id or os.path.basename(os.path.normpath(out_dir))
 
-    if bucket_col is not None:
-        # the column IS the bucket id; it is routing metadata, not payload —
-        # excluded from the stored schema and from every chunk.  When the
-        # caller's column is literally named '__bucket' (the whitelisted
-        # name), withColumn replaces it in place and the drop would
-        # delete it entirely (round-5 review finding) — cast only
-        df = df.withColumn("__bucket", F.col(bucket_col).cast("int"))
-        if bucket_col != "__bucket":
-            df = df.drop(bucket_col)
-
-    def _payload(s: StructType) -> StructType:
-        return StructType([f for f in s.fields if f.name != "__bucket"])
-
     if _has_structs(df.schema):
         logical_path = os.path.join(out_dir, "_logical_schema.json")
         # check-then-write under the same lock discipline as
@@ -551,10 +545,9 @@ def encode_table(df: DataFrame, out_dir: str, *, url_col: str | None = None,
         # (round-5 review finding; same race class as ADVICE r2)
         with fslib.file_lock(logical_path + ".lock"):
             if not os.path.exists(logical_path):
-                _fs_write_atomic(logical_path,
-                                 _payload(df.schema).json().encode())
+                _fs_write_atomic(logical_path, df.schema.json().encode())
             elif StructType.fromJson(
-                    json.load(open(logical_path))) != _payload(df.schema):
+                    json.load(open(logical_path))) != df.schema:
                 raise ValueError(
                     "schema evolution of struct-typed tables is not "
                     "supported; encode flat columns or use a new out_dir")
@@ -568,14 +561,11 @@ def encode_table(df: DataFrame, out_dir: str, *, url_col: str | None = None,
                 f"(or named '__present') collides with the flattening "
                 f"scheme; rename the nested fields")
 
-    _publish_table_schema(out_dir, _payload(df.schema))
+    _publish_table_schema(out_dir, df.schema)
 
     done = done_buckets(out_dir) if resume else set()
 
-    if layout == "bucket_col":
-        prepped = (df.repartition(n_buckets, "__bucket")
-                   .sortWithinPartitions("__bucket", *order_cols))
-    elif layout == "local":
+    if layout == "local":
         prepped = prep_for_encode_local(df, url_col, order_cols)
     elif layout == "salted" and url_col is not None:
         prepped = prep_for_encode(df, url_col, n_buckets, salt_k, order_cols,
@@ -591,8 +581,7 @@ def encode_table(df: DataFrame, out_dir: str, *, url_col: str | None = None,
     if done:
         prepped = prepped.filter(~F.col("__bucket").isin([int(b) for b in done]))
 
-    encoder = _make_encoder(out_dir, table_id, chunk_rows, chunk_bytes,
-                            frozenset(done),
+    encoder = _make_encoder(out_dir, table_id, chunk_rows,
                             bucket_subdirs=bucket_subdirs, fs=fs)
     metrics = prepped.mapInArrow(encoder, schema=MANIFEST_DDL)
     # the action drains the encoder into Spark's no-op sink: one stage
@@ -697,6 +686,17 @@ def encode_table_multischema(df: DataFrame, out_dir: str, *,
     return read_manifest(df.sparkSession, out_dir)
 
 
+def _hour_bucket(ts_col: str, assigned: dict):
+    """Each row's bucket id: its ``"YYYY-MM-DD/HH"`` key (hour_partition's
+    dt and hr) looked up in ``assigned``, a literal map, so the hourly
+    layout needs no join."""
+    ts = F.col(ts_col)
+    key = F.format_string("%s/%02d", F.date_format(ts, "yyyy-MM-dd"),
+                          F.hour(ts))
+    return F.create_map(*[F.lit(x) for kv in sorted(assigned.items())
+                          for x in kv])[key]
+
+
 def encode_table_partitioned(df: DataFrame, out_dir: str, *,
                              ts_col: str = "warc_ts",
                              chunk_rows: int = DEFAULT_CHUNK_ROWS,
@@ -709,9 +709,9 @@ def encode_table_partitioned(df: DataFrame, out_dir: str, *,
     HourlyBasedRecordConsumer.java:125-131,155-157; README.md:48), with
     one encode bucket per event-time hour (G1,
     HourlyBasedPartitioner.java:84-109).  The hour key set is collected
-    first (tiny: distinct (dt,hr)) and broadcast-joined back as the bucket
-    id — at 10^12-doc scale that join is a map-side broadcast, no extra
-    shuffle beyond the one bucket exchange.  Decode with
+    first (tiny: distinct (dt,hr)) and looked up as a literal map in the
+    ``bucket_expr``, so the one bucket exchange is the only shuffle and no
+    join is planned.  Decode with
     ``decode_table(..., path_glob="*/dt=2026-01-01/hr=05/*")`` for
     directory-pruned scans (the reference's Hive partition pruning).
 
@@ -720,6 +720,7 @@ def encode_table_partitioned(df: DataFrame, out_dir: str, *,
     """
     from .pipeline import hour_partition
     spark = df.sparkSession
+    chunk_rows = _chunk_rows(chunk_rows)
     _refuse_mixed_root(out_dir, stream=False)
     os.makedirs(out_dir, exist_ok=True)
     hp = hour_partition(df, ts_col)
@@ -792,10 +793,8 @@ def encode_table_partitioned(df: DataFrame, out_dir: str, *,
                         f"For true appends use encode_stream_partitioned "
                         f"(per-batch namespacing) or resume=False into a "
                         f"fresh out_dir.")
-    kdf = spark.createDataFrame(pairs, "dt string, hr int, __hour_bucket int")
-    withb = (hp.join(F.broadcast(kdf), ["dt", "hr"]).drop("dt", "hr"))
     return encode_table(
-        withb, out_dir, bucket_col="__hour_bucket",
+        df, out_dir, bucket_expr=_hour_bucket(ts_col, assigned),
         n_buckets=max(next_id, 1), chunk_rows=chunk_rows,
         table_id=table_id, resume=resume,
         bucket_subdirs=subdirs)
@@ -969,21 +968,6 @@ def _chunk_may_match(stats: dict, n_rows: int, zones,
                 or (hi is not None and s["vmin"] > hi):
             return False
     return True
-
-
-def prune_manifest_files(manifest_rows, zone_filter) -> list[str]:
-    """Keep files whose per-chunk [vmin, vmax] zone maps overlap the
-    predicate range(s); chunks without stats are kept (conservative).
-
-    ``zone_filter`` is one ``(col, lo, hi)`` tuple or a list of them
-    (conjunction — a chunk survives only if every range overlaps), the
-    manifest-level analog of Parquet row-group min/max pruning under an
-    AND of predicates.
-    """
-    zones = _zone_filters(zone_filter)
-    return sorted({r["file"] for r in manifest_rows
-                   if _chunk_may_match(_col_stats(r["col_stats"]), 0,
-                                       zones)})
 
 
 def _plan_chunks(stores: list[str], zones=(), null_preds=(),

@@ -35,11 +35,6 @@ _INIT = (np.uint32(0x67452301), np.uint32(0xEFCDAB89),
 MAX_SINGLE_BLOCK = 55  # bytes: payload + 0x80 pad + 8-byte length fit in 64
 
 
-def _rotl(x: np.ndarray, c: int) -> np.ndarray:
-    c = np.uint32(c)
-    return (x << c) | (x >> (np.uint32(32) - c))
-
-
 _CHUNK = 8192  # lanes per round-loop pass: state + temporaries stay in L2
 
 

@@ -28,13 +28,6 @@ _MAGICS = [
 ]
 
 
-def sniff_format(prefix: bytes) -> str:
-    for magic, name in _MAGICS:
-        if prefix.startswith(magic):
-            return name
-    return "bin"
-
-
 def extract_media_meta(df: DataFrame, id_col: str, bin_col: str) -> DataFrame:
     """Typed metadata per media blob — pure Column expressions, whole-stage
     codegen (round-1 verdict wrong #5: the old version looped rows in

@@ -210,33 +210,6 @@ def kafka_avro_source(spark: SparkSession, bootstrap_servers: str,
         raw, avro_schema_json, confluent_wire_format=confluent_wire_format)
 
 
-def encode_stream_multischema(stream_df: DataFrame, out_dir: str, *,
-                              checkpoint: str, schema_col: str = "schema_id",
-                              schemas: dict | None = None,
-                              url_col: str | None = None,
-                              n_buckets: int = 32,
-                              chunk_rows: int = 65536,
-                              trigger_available_now: bool = True):
-    """G2 strict in the streaming front door: a micro-batch carrying
-    SEVERAL schema generations routes inside the sink — the caller never
-    pre-splits (the reference meets mixed schemas mid-poll and opens one
-    writer per schema, HourlyBasedRecordConsumer.java:20, :60-67).
-    ``schemas`` maps the generation tag (e.g. the Confluent
-    schema-registry id from decode_confluent_stream) to that
-    generation's column list; see engine.encode_table_multischema for
-    layout and evolution semantics."""
-    def sink(batch_df: DataFrame, batch_id: int):
-        from .engine import encode_table_multischema
-        target = os.path.join(out_dir, f"batch={batch_id:06d}")
-        encode_table_multischema(batch_df, target, schema_col=schema_col,
-                                 schemas=schemas, url_col=url_col,
-                                 n_buckets=n_buckets, chunk_rows=chunk_rows,
-                                 table_id=f"stream_ms_b{batch_id}")
-
-    return _start_foreach_batch(stream_df, sink, out_dir, checkpoint,
-                                trigger_available_now)
-
-
 def decode_stream_table(spark: SparkSession, out_dir: str,
                         columns: list[str] | None = None,
                         path_glob: str | None = None) -> DataFrame:
@@ -367,92 +340,6 @@ def stateful_offset_dedup(stream_df: DataFrame,
     return (stream_df.groupBy(partition_col).applyInPandasWithState(
         dedup, outputStructType=out_schema, stateStructType="last long",
         outputMode="append", timeoutConf=GroupStateTimeout.NoTimeout))
-
-
-def stateful_sessionize(stream_df: DataFrame, user_col: str = "user_id",
-                        ts_col: str = "ts", gap_seconds: int = 1800,
-                        state_ttl_seconds: int | None = None):
-    """Streaming form of :func:`dumpster.pipeline.sessionize`: gap-based
-    session ids assigned across micro-batches with managed state.
-
-    Grouped by user, the state carries ``(last event µs, session count
-    so far)``; each micro-batch's rows are sorted by (ts, row order)
-    inside the group — `applyInPandasWithState` does NOT guarantee
-    intra-group delivery order (the stateful_offset_dedup lesson) — and
-    chained against the checkpointed last timestamp, so a session that
-    spans micro-batches keeps its number and the numbering matches the
-    batch operator run over the same prefix IN ORDER.  Emits
-    ``(user, ts µs, session_id)`` rows, append mode.
-
-    Late rows older than the state's last timestamp cannot retroactively
-    split an already-numbered session; they are CONSERVATIVELY attached
-    to the current session (documented divergence from the batch op,
-    which sees all data; pair with a watermark upstream to bound it).
-
-    ``state_ttl_seconds`` bounds state on high-cardinality user streams:
-    a user idle longer than the TTL has their state evicted via a
-    processing-time timeout (the previous ``state_ttl_batches``
-    parameter was accepted but silently ignored — round-5 review
-    finding; this one is real).  Caveat: an evicted user who returns
-    restarts session numbering at 1, so set the TTL well past the
-    longest session gap you care about (≥ several × ``gap_seconds``);
-    with no TTL, state lives for the stream's lifetime and numbering
-    never repeats.  With a TTL, Spark follows every micro-batch with a
-    no-data batch so idle state can time out: a
-    ``trigger(availableNow=True)`` query never terminates on its own and
-    ``processAllAvailable()`` never returns — stop the query explicitly.
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    # the user column keeps its REAL type (a string/int32 user id used to
-    # fail at runtime against a hardcoded `long` — ADVICE r4); the batch
-    # counterpart pipeline.sessionize has always been type-agnostic
-    out_schema = StructType([
-        StructField(user_col, stream_df.schema[user_col].dataType),
-        StructField("ts_us", LongType()),
-        StructField("session_id", StringType())])
-    gap_us = int(gap_seconds) * 1_000_000
-    ttl_ms = None if state_ttl_seconds is None \
-        else int(state_ttl_seconds) * 1000
-
-    def assign(key, pdfs, state: GroupState):
-        import numpy as np
-        if ttl_ms is not None and state.hasTimedOut:
-            state.remove()               # idle past TTL — evict
-            return
-        last_us, n_sess = state.get if state.exists else (-1, 0)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            state.update((last_us, n_sess))
-            if ttl_ms is not None:
-                state.setTimeoutDuration(ttl_ms)
-            return
-        rows = pd.concat(chunks).sort_values(["__us"], kind="stable")
-        us = rows["__us"].to_numpy(dtype="int64")
-        prev = np.concatenate(([last_us], us[:-1]))
-        new = us - prev > gap_us
-        if last_us < 0:
-            new[0] = True                 # first event ever → session 1
-        sess = n_sess + np.cumsum(new)
-        state.update((max(int(us[-1]), int(last_us)), int(sess[-1])))
-        if ttl_ms is not None:
-            state.setTimeoutDuration(ttl_ms)
-        yield pd.DataFrame({user_col: rows[user_col].to_numpy(),
-                            "ts_us": us,
-                            "session_id": [f"{key[0]}-{s}" for s in sess]})
-
-    prepped = stream_df.select(
-        F.col(user_col),
-        F.unix_micros(F.col(ts_col).cast("timestamp")).alias("__us"))
-    timeout = (GroupStateTimeout.NoTimeout if ttl_ms is None
-               else GroupStateTimeout.ProcessingTimeTimeout)
-    return prepped.groupBy(user_col).applyInPandasWithState(
-        assign, outputStructType=out_schema,
-        stateStructType="last_us long, n_sess long",
-        outputMode="append", timeoutConf=timeout)
 
 
 def hourly_windowed_counts(stream_df: DataFrame, ts_col: str = "warc_ts",

@@ -108,6 +108,50 @@ def test_partitioned_resume_rejects_append_into_done_hour(spark, tmp_path):
         encode_table_partitioned(base.unionAll(more), out)
 
 
+def test_partitioned_resume_accepts_bucket_col_layout_record(spark, tmp_path):
+    """An hourly store whose _layout.json records {"layout": "bucket_col"}
+    (written before the hour ids became a bucket_expr) resumes as a
+    no-op: every hour is skipped and the rows read back unchanged."""
+    df = spark.createDataFrame(
+        [(i, f"2026-01-01 0{i % 3}:30:00") for i in range(30)],
+        "id long, ts string").select(
+        "id", F.col("ts").cast("timestamp").alias("warc_ts"))
+    out = str(tmp_path / "hp_old_layout")
+    encode_table_partitioned(df, out, chunk_rows=4)
+    with open(os.path.join(out, "_layout.json"), "w") as f:
+        json.dump({"layout": "bucket_col"}, f)
+
+    def written():
+        return {os.path.join(d, n): os.stat(os.path.join(d, n)).st_mtime_ns
+                for sub in ("chunks", "manifest")
+                for d, _, names in os.walk(os.path.join(out, sub))
+                for n in names}
+
+    before = written()
+    assert sum(p.endswith(".parquet") for p in before) == 3   # 3 hours
+    encode_table_partitioned(df, out, chunk_rows=4, resume=True)
+    assert written() == before
+    assert sorted(r["id"] for r in decode_table(spark, out).collect()) \
+        == list(range(30))
+
+
+def test_partitioned_keeps_user_dt_and_hr_columns(spark, tmp_path):
+    """The hourly layout derives its dt/hr keys without touching the
+    frame: a user column named dt or hr is stored like any other (the
+    hour-key join used to overwrite and then drop both)."""
+    df = spark.createDataFrame(
+        [(i, f"batch-{i}", i * 10, f"2026-01-01 0{i % 2}:10:00")
+         for i in range(6)],
+        "id long, dt string, hr long, ts string").select(
+        "id", "dt", "hr", F.col("ts").cast("timestamp").alias("warc_ts"))
+    out = str(tmp_path / "hp_user_dt")
+    encode_table_partitioned(df, out)
+    back = decode_table(spark, out)
+    assert back.columns == df.columns
+    assert sorted(back.select("id", "dt", "hr").collect()) \
+        == sorted(df.select("id", "dt", "hr").collect())
+
+
 def test_decode_tables_unions_evolved_schemas(spark, docs, tmp_path):
     """A stream whose schema widened across restarts decodes as ONE
     table: decode_tables applies the same add-only union as write-side

@@ -6,7 +6,8 @@ Semantics under test (VERDICT r2 missing #4):
   Spark re-applies the row predicate),
 * planning-time pruning actually engages: with a range predicate the
   reader plans strictly fewer chunk-file partitions than unfiltered, and
-  the planned files match prune_manifest_files (the zone_filter baseline),
+  the planned files match engine._plan_chunks over the zone_filter
+  translation of the same predicate (the zone_filter baseline),
 * schema evolution (older chunks missing a column) and projection
   registration both survive the DataSource path.
 """
@@ -103,12 +104,13 @@ _PARITY_CASES = {
 @pytest.mark.parametrize("case", list(_PARITY_CASES))
 def test_planning_prunes_partitions(spark, encoded_docs, case):
     """One zone-map rule behind every front door: the DataSource plan,
-    prune_manifest_files and decode_table(zone_filter=...) + the exact
-    row filter agree for each pushable predicate shape."""
+    _plan_chunks over the zone_filter translation and
+    decode_table(zone_filter=...) + the exact row filter agree for each
+    pushable predicate shape."""
     import os
     import json
     import pyarrow.dataset as ds
-    from dumpster.engine import decode_table, prune_manifest_files, \
+    from dumpster.engine import _plan_chunks, _zone_filters, decode_table, \
         table_schema
 
     filters, zone, pred = _PARITY_CASES[case]
@@ -130,7 +132,8 @@ def test_planning_prunes_partitions(spark, encoded_docs, case):
         columns=["file", "col_stats", "n_rows"])
     rows = tbl.to_pylist()
     if zone is not None:
-        want = sorted(prune_manifest_files(rows, zone))
+        want = [f for f, _ in _plan_chunks([encoded_docs],
+                                           _zone_filters(zone))]
     else:
         # no zone_filter spelling for null predicates: the oracle is the
         # manifest's per-chunk null count
@@ -140,7 +143,7 @@ def test_planning_prunes_partitions(spark, encoded_docs, case):
                              r["n_rows"]) for r in rows}
         want = sorted(f for f, (nn, n) in nulls.items()
                       if (nn > 0 if want_null else nn < n))
-        assert set(want) <= set(prune_manifest_files(rows, []))
+        assert set(want) <= {f for f, _ in _plan_chunks([encoded_docs])}
     assert pruned_files == want
 
     got = sorted(r["doc_id"] for r in decode_table(

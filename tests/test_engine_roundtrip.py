@@ -328,20 +328,24 @@ def test_zone_filter_conjunction(spark, pages, out_dir):
     never loses a matching row."""
     encode_table(pages, out_dir, mode="salted", n_buckets=4, chunk_rows=256,
                  order_cols=("warc_ts",))
-    man_rows = read_manifest(spark, out_dir).select("file", "col_stats").collect()
-    from dumpster.engine import prune_manifest_files
+    from dumpster.engine import _plan_chunks, _zone_filters
+
+    def planned(zone_filter):
+        return [f for f, _ in _plan_chunks([out_dir],
+                                           _zone_filters(zone_filter))]
+
     lo, hi = pages.agg(F.min("warc_ts"), F.max("warc_ts")).collect()[0]
     full = ("warc_ts", lo, hi)
     narrow = ("warc_ts", lo, lo + (hi - lo) / 8)
-    all_files = prune_manifest_files(man_rows, full)
-    narrowed = prune_manifest_files(man_rows, narrow)
+    all_files = planned(full)
+    narrowed = planned(narrow)
     # order_cols=('warc_ts',) gives tight zones → a 1/8 range prunes chunks
     assert 0 < len(narrowed) < len(all_files)
     # AND with the full range must not widen the narrow result
-    assert set(prune_manifest_files(man_rows, [narrow, full])) == set(narrowed)
+    assert set(planned([narrow, full])) == set(narrowed)
     # AND with a disjoint range prunes everything the narrow range kept
     disjoint = ("warc_ts", hi, hi)
-    assert prune_manifest_files(man_rows, [narrow, disjoint]) == []
+    assert planned([narrow, disjoint]) == []
 
     # end-to-end: conjunction decode + exact filter == plain WHERE
     cutoff = lo + (hi - lo) / 8
@@ -391,6 +395,20 @@ def test_unknown_mode_raises(pages, tmp_path):
     with pytest.raises(ValueError, match="unknown mode"):
         encode_table(pages, str(tmp_path / "x"), url_col="url",
                      mode="bogus")
+
+
+@pytest.mark.parametrize("chunk_rows", [0, -1, 2.5, True])
+def test_bad_chunk_rows_raises_before_writing(pages, tmp_path, chunk_rows):
+    """A chunk_rows that is not a positive int is refused by name before
+    the store is created; 0 used to fail inside the encode task with an
+    IndexError, after _layout.json and _schema.json were written."""
+    from dumpster.engine import encode_table_partitioned
+    out = str(tmp_path / "bad")
+    with pytest.raises(ValueError, match="chunk_rows must be a positive"):
+        encode_table(pages, out, url_col="url", chunk_rows=chunk_rows)
+    with pytest.raises(ValueError, match="chunk_rows must be a positive"):
+        encode_table_partitioned(pages, out, chunk_rows=chunk_rows)
+    assert not os.path.exists(out)
 
 
 def test_clean_orphans_reclaims_crash_garbage(spark, pages, out_dir):

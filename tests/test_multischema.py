@@ -83,26 +83,6 @@ def test_unknown_schema_id_raises(spark, tmp_path):
                                  schemas=SCHEMAS, n_buckets=2)
 
 
-def test_streaming_sink_routes_mixed_batches(spark, tmp_path):
-    """Micro-batches each carrying BOTH generations route inside the
-    sink — no caller-side pre-split."""
-    from dumpster.streaming import decode_stream_table, \
-        encode_stream_multischema
-
-    src = str(tmp_path / "src")
-    _mixed(spark).repartition(2).write.parquet(src)
-    stream = (spark.readStream.schema(_mixed(spark).schema)
-              .option("maxFilesPerTrigger", "1").parquet(src))
-    q = encode_stream_multischema(
-        stream, str(tmp_path / "enc"), checkpoint=str(tmp_path / "ck"),
-        schemas=SCHEMAS, n_buckets=2, chunk_rows=256)
-    q.awaitTermination(120)
-    dec = decode_stream_table(spark, str(tmp_path / "enc"))
-    assert dec.count() == 500
-    assert dec.filter("doc_id < 300 AND score IS NOT NULL").count() == 0
-    assert dec.filter("doc_id >= 300 AND score IS NULL").count() == 0
-
-
 def test_confluent_stream_plan_pinned(spark):
     """Item 9: the Kafka decode path can't run jarless, but its ANALYZED
     plan is decoder-independent everywhere except from_avro — pin the

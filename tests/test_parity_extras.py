@@ -119,8 +119,8 @@ def test_encoder_fallback_records_the_reason(tmp_path, monkeypatch):
     monkeypatch.setattr(sel, "_maybe_zlib", boom)
     cpus, io_threads = pa.cpu_count(), pa.io_thread_count()
     try:   # the encoder pins both Arrow pools to one thread
-        encoder = _make_encoder(str(tmp_path), "t", 10_000, 1 << 30,
-                                frozenset(), publish_manifest=False)
+        encoder = _make_encoder(str(tmp_path), "t", 10_000,
+                                publish_manifest=False)
         rows = [r for mb in encoder(iter([routed])) for r in mb.to_pylist()]
     finally:
         pa.set_cpu_count(cpus)

@@ -248,17 +248,16 @@ def test_float_inf_in_zone_map():
     pruning drop chunks whose only matching rows were infinities."""
     import math
     import pyarrow as pa
-    from dumpster.engine import prune_manifest_files
+    from dumpster.engine import _chunk_may_match, _col_stats, _zone_filters
     b = pa.RecordBatch.from_arrays(
         [pa.array([1.0, 2.0, math.inf, -math.inf, math.nan])],
         names=["f"])
     back, stats = _rt(b)
     assert stats[0]["vmax"] == math.inf and stats[0]["vmin"] == -math.inf
     import json as _json
-    row = {"file": "x.dmc", "n_rows": 5,
-           "col_stats": _json.dumps(stats)}
-    kept = prune_manifest_files([row], [("f", 10.0, None)])
-    assert kept == ["x.dmc"]            # the inf row matches f >= 10
+    cs = _col_stats(_json.dumps(stats))
+    # the inf row matches f >= 10
+    assert _chunk_may_match(cs, 5, _zone_filters([("f", 10.0, None)]))
 
 
 def test_timestamp_ns_zone_map_in_micros():
@@ -268,7 +267,8 @@ def test_timestamp_ns_zone_map_in_micros():
     import json
     import numpy as np
     import pyarrow as pa
-    from dumpster.engine import _stat_value, prune_manifest_files
+    from dumpster.engine import (_chunk_may_match, _col_stats, _stat_value,
+                                 _zone_filters)
     ts = pa.array(np.array(["2023-01-01T00:00:00", "2023-06-01T10:30:00"],
                            dtype="datetime64[ns]"))
     b = pa.RecordBatch.from_arrays([ts], names=["t"])
@@ -277,11 +277,11 @@ def test_timestamp_ns_zone_map_in_micros():
     assert back.column(0).to_pylist() == ts.to_pylist()
     hi = _stat_value(datetime.datetime(2024, 1, 1,
                                        tzinfo=datetime.timezone.utc))
-    row = {"file": "y.dmc", "n_rows": 2, "col_stats": json.dumps(stats)}
-    assert prune_manifest_files([row], [("t", None, hi)]) == ["y.dmc"]
+    cs = _col_stats(json.dumps(stats))
+    assert _chunk_may_match(cs, 2, _zone_filters([("t", None, hi)]))
     lo_2025 = _stat_value(datetime.datetime(2025, 1, 1,
                                             tzinfo=datetime.timezone.utc))
-    assert prune_manifest_files([row], [("t", lo_2025, None)]) == []
+    assert not _chunk_may_match(cs, 2, _zone_filters([("t", lo_2025, None)]))
 
 
 def test_date_predicate_normalizes_to_days():

@@ -6,12 +6,11 @@
 2. select_token_budget — the histogram guard bounds driver memory BEFORE
    rows land (take, not collect), and non-string strata columns work.
 3. stateful_sessionize — output schema derives the user column's real
-   type instead of hardcoding long.
+   type instead of hardcoding long (the operator and its tests are
+   gone; the sessionize_events oracle runs pipeline.sessionize).
 4. dedup_against_store — NULL-text rows always survive (NOT EXISTS
    semantics), matching the realigned DuckDB oracle.
 """
-
-import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -109,35 +108,6 @@ def test_select_token_budget_histogram_guard_fires(spark):
                             resolution=1_000_000, max_hist_groups=10)
 
 
-def test_stateful_sessionize_string_user_id(spark, tmp_path):
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from dumpster.streaming import stateful_sessionize
-
-    src = tmp_path / "ssrc5"
-    src.mkdir()
-    tbl = pa.table({
-        "user_id": pa.array(["alice", "alice", "bob"], type=pa.string()),
-        "ts": pa.array([0, 600 * 1_000_000, 100 * 1_000_000],
-                       type=pa.timestamp("us"))})
-    pq.write_table(tbl, src / "f1.parquet")
-
-    stream = (spark.readStream.schema("user_id string, ts timestamp")
-              .parquet(str(src)))
-    q = (stateful_sessionize(stream, "user_id", "ts", gap_seconds=1800)
-         .writeStream.format("memory").queryName("sess_out5")
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "sck5"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
-    got = {(r.user_id, r.ts_us, r.session_id)
-           for r in spark.table("sess_out5").collect()}
-    assert got == {("alice", 0, "alice-1"),
-                   ("alice", 600_000_000, "alice-1"),
-                   ("bob", 100_000_000, "bob-1")}
-
-
 def test_dedup_against_store_null_text_survives(spark, tmp_path):
     import tempfile
 
@@ -195,24 +165,6 @@ def test_sqlfront_respects_user_replaced_view(spark, tmp_path):
         .collect()[0]["n"] == n_en
 
 
-def test_encode_bucket_col_named_dunder_bucket(spark, tmp_path):
-    """bucket_col='__bucket' is whitelisted by the reserved-name check
-    and must actually work (the withColumn+drop sequence used to delete
-    the column and crash the encode)."""
-    from dumpster.engine import decode_table, encode_table
-
-    docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-            .withColumn("__bucket",
-                        F.pmod(F.xxhash64("doc_id"), F.lit(4)).cast("int"))
-            .repartition(4, "__bucket"))
-    d = str(tmp_path / "bkt")
-    encode_table(docs, d, bucket_col="__bucket", chunk_rows=512)
-    back = decode_table(spark, d)
-    exp = docs.drop("__bucket")
-    assert back.select(*exp.columns).exceptAll(exp).count() == 0
-    assert exp.exceptAll(back.select(*exp.columns)).count() == 0
-
-
 def test_decode_empty_columns_list_raises(spark, tmp_path):
     """columns=[] used to silently decode 0 rows (a zero-column Arrow
     batch has num_rows 0) — count(*) callers got 0 instead of the table
@@ -266,48 +218,6 @@ def test_catalog_preserves_pushdown_flag(spark, tmp_path):
     assert "dumpster" in plan.lower()
     assert spark.sql("SELECT count(*) AS n FROM r5_cat_pd") \
         .collect()[0]["n"] == docs.count()
-
-
-def test_stateful_sessionize_ttl_wires_timeout(spark, tmp_path):
-    """state_ttl_seconds must engage the ProcessingTimeTimeout path (its
-    predecessor parameter was accepted and silently ignored); with a
-    generous TTL the results are identical to the no-TTL run."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from dumpster.streaming import stateful_sessionize
-
-    src = tmp_path / "ttlsrc"
-    src.mkdir()
-    tbl = pa.table({
-        "user_id": pa.array(["u1", "u1", "u2"], type=pa.string()),
-        "ts": pa.array([0, 600 * 1_000_000, 100 * 1_000_000],
-                       type=pa.timestamp("us"))})
-    pq.write_table(tbl, src / "f1.parquet")
-    stream = (spark.readStream.schema("user_id string, ts timestamp")
-              .parquet(str(src)))
-    q = (stateful_sessionize(stream, "user_id", "ts", gap_seconds=1800,
-                             state_ttl_seconds=3600)
-         .writeStream.format("memory").queryName("sess_ttl5")
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "ttlck"))
-         .trigger(availableNow=True).start())
-    # a processing-time timeout makes Spark follow every batch with a
-    # no-data batch (so idle state can expire), so neither availableNow
-    # termination nor processAllAvailable() ever comes: wait for the
-    # input batch's progress report, then stop the query
-    deadline = time.monotonic() + 180
-    while (not any(p["numInputRows"] for p in q.recentProgress)
-           and time.monotonic() < deadline):
-        time.sleep(0.2)
-    q.stop()
-    got = {(r.user_id, r.ts_us, r.session_id)
-           for r in spark.table("sess_ttl5").collect()}
-    assert got == {("u1", 0, "u1-1"), ("u1", 600_000_000, "u1-1"),
-                   ("u2", 100_000_000, "u2-1")}
-
-
-# --- fourth review-batch regressions (round-5) ------------------------------
 
 
 def test_select_token_budget_null_stratum_kept(spark):

@@ -164,6 +164,22 @@ def test_stream_sink_rejects_bucket_col(spark, tmp_path):
         q.awaitTermination(60)
 
 
+def test_stream_sink_rejects_bad_chunk_rows(spark, tmp_path):
+    src = str(tmp_path / "s3")
+    _write_batch_files(spark, src, 0, 10)
+    stream = (spark.readStream
+              .schema("doc_id long, lang string, text string").parquet(src))
+    out = str(tmp_path / "o3")
+    with pytest.raises(Exception, match="chunk_rows must be a positive int"):
+        q = (stream.writeStream.format("dumpster")
+             .option("path", out)
+             .option("chunk_rows", "0")
+             .option("checkpointLocation", str(tmp_path / "c3"))
+             .trigger(availableNow=True).start())
+        q.awaitTermination(60)
+    assert not os.path.exists(out)
+
+
 def test_store_and_stream_root_never_mix(spark, tmp_path):
     """A root _schema.json makes every reader see that store alone, so a
     table written into a stream-sink root used to hide its batches (two

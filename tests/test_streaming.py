@@ -362,46 +362,3 @@ def test_decode_confluent_wire_format_adversarial_bytes(spark):
     assert rows["tomb"]["record_type"] == "TOMBSTONE"
     # errors are DATA: the malformed rows are all present, none raised
     assert len(rows) == 6
-
-
-def test_stateful_sessionize_across_batches(spark, tmp_path):
-    """Session numbering must chain across micro-batches (a session that
-    spans batches keeps its id), in-batch delivery order must not matter
-    (rows sort by ts), and a late row older than the state's last
-    timestamp attaches to the current session instead of renumbering."""
-    import time
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from dumpster.streaming import stateful_sessionize
-
-    def ts(seconds):
-        return pa.array([s * 1_000_000 for s in seconds],
-                        type=pa.timestamp("us"))
-
-    src = tmp_path / "ssrc"
-    src.mkdir()
-    b1 = pa.table({"user_id": pa.array([10, 10], type=pa.int64()),
-                   "ts": ts([0, 600])})                 # one session
-    b2 = pa.table({"user_id": pa.array([10, 10, 10], type=pa.int64()),
-                   "ts": ts([9000, 300, 1200])})        # late 300 + chain
-    pq.write_table(b1, src / "f1.parquet")
-    time.sleep(1.1)
-    pq.write_table(b2, src / "f2.parquet")
-
-    stream = (spark.readStream.schema("user_id long, ts timestamp")
-              .option("maxFilesPerTrigger", 1).parquet(str(src)))
-    q = (stateful_sessionize(stream, "user_id", "ts", gap_seconds=1800)
-         .writeStream.format("memory").queryName("sess_out")
-         .outputMode("append")
-         .option("checkpointLocation", str(tmp_path / "sck"))
-         .trigger(availableNow=True).start())
-    q.awaitTermination(180)
-
-    got = {(r.user_id, r.ts_us, r.session_id)
-           for r in spark.table("sess_out").collect()}
-    want = {(10, 0, "10-1"), (10, 600_000_000, "10-1"),
-            (10, 300_000_000, "10-1"), (10, 1_200_000_000, "10-1"),
-            (10, 9_000_000_000, "10-2")}
-    assert got == want

@@ -184,6 +184,18 @@ def test_guard_rails(spark, tmp_path):
         or done_buckets(out) == set()
 
 
+def test_bad_chunk_rows_raises_before_writing(spark, tmp_path):
+    """The sink refuses a chunk_rows option that is not a positive int
+    before it creates the store (0 used to fail in every write task)."""
+    out = str(tmp_path / "w_rows")
+    for bad in ("0", "-3", "many"):
+        with pytest.raises(Exception,
+                           match="chunk_rows must be a positive int"):
+            _docs(spark).write.format("dumpster") \
+                .option("chunk_rows", bad).mode("append").save(out)
+    assert not os.path.exists(out)
+
+
 def test_written_store_supports_pushdown(spark, tmp_path):
     out = str(tmp_path / "w9")
     df = _docs(spark).orderBy("doc_id")

@@ -9,7 +9,8 @@ import os
 
 from pyspark.sql import functions as F
 
-from dumpster.engine import decode_table, encode_table, prune_manifest_files, read_manifest
+from dumpster.engine import (_plan_chunks, _zone_filters, decode_table,
+                             encode_table, read_manifest)
 from dumpster.synth import synth_pages
 
 
@@ -42,8 +43,7 @@ def test_zone_filter_prunes_and_preserves_results(spark, tmp_path):
     assert exact_full.exceptAll(exact_pruned).count() == 0
 
     # pruning actually skipped chunks
-    rows = read_manifest(spark, out).select("file", "col_stats").collect()
-    kept = prune_manifest_files(rows, ("warc_ts", lo, hi))
+    kept = _plan_chunks([out], _zone_filters(("warc_ts", lo, hi)))
     total = len(glob.glob(os.path.join(out, "chunks", "*.dmc")))
     assert 0 < len(kept) < total
 
@@ -55,5 +55,5 @@ def test_zone_filter_conservative_on_missing_stats(spark, tmp_path):
                  n_buckets=2, chunk_rows=128)
     rows = read_manifest(spark, out).select("file", "col_stats").collect()
     # filtering on a var column (no stats) keeps everything
-    kept = prune_manifest_files(rows, ("text", 0, 1))
+    kept = _plan_chunks([out], _zone_filters(("text", 0, 1)))
     assert len(kept) == len({r["file"] for r in rows})

@@ -85,21 +85,18 @@ def main():
             "EvalPython" not in p,
     })
 
-    # 1c. partitioned (dt=/hr=) encode prep: hour-key join is broadcast,
-    # the only exchange is the bucket repartition
-    from dumpster.pipeline import hour_partition
-    hp = hour_partition(pages, "warc_ts")
-    kdf = spark.createDataFrame([("2026-01-01", h, h) for h in range(4)],
-                                "dt string, hr int, __hour_bucket int")
-    joined = hp.join(F.broadcast(kdf), ["dt", "hr"]).drop("dt", "hr") \
-        .withColumn("__bucket", F.col("__hour_bucket").cast("int")) \
-        .drop("__hour_bucket").repartition(8, "__bucket")
-    p = plan_of(joined)
-    ok &= section("partitioned encode prep (dt=/hr= hour buckets)", joined, {
-        "hour-key join is a BroadcastHashJoin (no shuffle join)":
-            "BroadcastHashJoin" in p and "SortMergeJoin" not in p,
-        "exactly one data Exchange (the bucket repartition; the broadcast "
-        "exchange moves only the tiny hour-key table)":
+    # 1c. partitioned (dt=/hr=) encode prep: the hour id is a literal-map
+    # bucket_expr, so no join is planned and the only exchange is the
+    # bucket repartition
+    from dumpster.engine import _hour_bucket
+    hours = {f"2026-01-01/{h:02d}": h for h in range(4)}
+    hourly = pages.withColumn("__bucket", _hour_bucket("warc_ts", hours)) \
+        .repartition(8, "__bucket").sortWithinPartitions("__bucket")
+    p = plan_of(hourly)
+    ok &= section("partitioned encode prep (dt=/hr= hour buckets)", hourly, {
+        "no join of any kind (the hour ids are a literal map)":
+            "Join" not in p and "CartesianProduct" not in p,
+        "exactly one Exchange (the bucket repartition)":
             len(re.findall(r"\(\d+\) Exchange\b", p)) == 1,
     })
 
