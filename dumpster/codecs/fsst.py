@@ -39,7 +39,6 @@ import numpy as np
 
 from .base import offsets_from_lengths, pack_lengths, unpack_lengths
 
-MAX_SYMBOL_LEN = 8
 # table build is vectorized n-gram counting (no generational re-parse needed)
 DEFAULT_SAMPLE = 16 * 1024
 # Replace-chain passes are O(buffer) each, so the cap is the encode-speed /

@@ -483,6 +483,10 @@ def _init_writer_common(w, options: dict, schema: StructType) -> None:
             "is one bucket. Encode a salted or hand-bucketed layout with "
             "dumpster.engine.encode_table(df, out_dir, mode='salted' | "
             "bucket_expr=...)")
+    if "chunk_bytes" in options:
+        raise ValueError("the dumpster sink has no chunk_bytes option: a "
+                         "chunk closes at chunk_rows rows or at dumpster."
+                         "engine.DEFAULT_CHUNK_BYTES of Arrow data")
     if _has_structs(schema):
         raise ValueError(
             "struct-typed columns are not supported on the df.write path "

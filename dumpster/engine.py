@@ -309,9 +309,12 @@ def _check_layout(out_dir: str, record: dict, resume: bool) -> None:
         if os.path.exists(path):
             with open(path) as f:
                 old = json.load(f)
-        # encode_table's bucket_col layout was folded into bucket_expr:
-        # the hourly stores it wrote keep their caller-chosen bucket ids
-        if old == {"layout": "bucket_col"}:
+        # encode_table's bucket_col layout was folded into bucket_expr.
+        # An hourly store keeps its persisted hour ids, so it resumes; a
+        # caller's bucket_col store would gain its routing column, NULL
+        # in the committed buckets, so it stays refused
+        if old == {"layout": "bucket_col"} and os.path.exists(
+                os.path.join(out_dir, "_hour_buckets.json")):
             old = {"layout": "bucket_expr"}
         # a store from before the record existed was written salted or
         # with caller-chosen bucket ids; only a split-local resume of it
@@ -686,15 +689,18 @@ def encode_table_multischema(df: DataFrame, out_dir: str, *,
     return read_manifest(df.sparkSession, out_dir)
 
 
-def _hour_bucket(ts_col: str, assigned: dict):
-    """Each row's bucket id: its ``"YYYY-MM-DD/HH"`` key (hour_partition's
-    dt and hr) looked up in ``assigned``, a literal map, so the hourly
-    layout needs no join."""
-    ts = F.col(ts_col)
-    key = F.format_string("%s/%02d", F.date_format(ts, "yyyy-MM-dd"),
-                          F.hour(ts))
-    return F.create_map(*[F.lit(x) for kv in sorted(assigned.items())
-                          for x in kv])[key]
+def _hour_bucket(h, ids: dict):
+    """Each row's bucket id: ``ids`` maps the snapshot's values of the
+    int hour index ``h`` to their bucket ids, so the hourly layout needs
+    no join.  The ids are one literal array over the snapshot's span of
+    hours, indexed in constant time per row; a snapshot whose span is over
+    8x its hour count (a stray far-off timestamp) looks its hours up in a
+    literal map instead, which Spark searches key by key."""
+    lo, hi = min(ids, default=0), max(ids, default=-1)
+    if hi - lo < 8 * len(ids):
+        return F.get(F.expr("array(%s)" % ",".join(
+            str(ids.get(i, "NULL")) for i in range(lo, hi + 1))), h - lo)
+    return F.expr("map(%s)" % ",".join(f"{k},{v}" for k, v in ids.items()))[h]
 
 
 def encode_table_partitioned(df: DataFrame, out_dir: str, *,
@@ -709,9 +715,9 @@ def encode_table_partitioned(df: DataFrame, out_dir: str, *,
     HourlyBasedRecordConsumer.java:125-131,155-157; README.md:48), with
     one encode bucket per event-time hour (G1,
     HourlyBasedPartitioner.java:84-109).  The hour key set is collected
-    first (tiny: distinct (dt,hr)) and looked up as a literal map in the
-    ``bucket_expr``, so the one bucket exchange is the only shuffle and no
-    join is planned.  Decode with
+    first (tiny: distinct (dt,hr)) and looked up by hour index in the
+    ``bucket_expr`` (``_hour_bucket``), so the one bucket exchange is the
+    only shuffle and no join is planned.  Decode with
     ``decode_table(..., path_glob="*/dt=2026-01-01/hr=05/*")`` for
     directory-pruned scans (the reference's Hive partition pruning).
 
@@ -724,10 +730,12 @@ def encode_table_partitioned(df: DataFrame, out_dir: str, *,
     _refuse_mixed_root(out_dir, stream=False)
     os.makedirs(out_dir, exist_ok=True)
     hp = hour_partition(df, ts_col)
-    # one scan: distinct hour keys AND per-hour row counts (the counts
-    # drive the resume-safety check below; the result is tiny — one row
-    # per hour, not per record)
-    key_rows = hp.groupBy("dt", "hr").count().collect()
+    # h: hours from 1970-01-01 00:00 to the row's (dt, hr), in the session
+    # time zone, an int key for the hour built without a string.  One
+    # scan: distinct hour keys AND per-hour row counts (the counts drive
+    # the resume-safety check below; one row per hour, not per record)
+    h = F.unix_date(F.to_date(ts_col)) * 24 + F.hour(ts_col)
+    key_rows = hp.groupBy("dt", "hr", h.alias("h")).count().collect()
     bad = [r for r in key_rows if r["dt"] is None or r["hr"] is None]
     if bad:
         # ADVICE r2: a NULL timestamp used to surface as a baffling
@@ -739,8 +747,7 @@ def encode_table_partitioned(df: DataFrame, out_dir: str, *,
             f"group): hourly partitioning needs a timestamp on every row. "
             f"Filter nulls or encode them separately "
             f"(e.g. df.filter(col('{ts_col}').isNotNull())).")
-    keys = sorted((r["dt"], int(r["hr"])) for r in key_rows)
-    snapshot_counts = {(r["dt"], int(r["hr"])): r["count"] for r in key_rows}
+    hours = {f"{r['dt']}/{r['hr']:02d}": r for r in key_rows}
     # The hour→bucket assignment is PERSISTED: deriving it from the current
     # snapshot would renumber buckets when a later run sees new (earlier)
     # hours, silently mis-matching the done-bucket resume set.  Existing
@@ -758,16 +765,14 @@ def encode_table_partitioned(df: DataFrame, out_dir: str, *,
             with open(map_path) as f:
                 assigned = json.load(f)
         next_id = max(assigned.values(), default=-1) + 1
-        for dt, hr in keys:
-            k = f"{dt}/{hr:02d}"
+        for k in sorted(hours):
             if k not in assigned:
                 assigned[k] = next_id
                 next_id += 1
         _fs_write_atomic(map_path,
                          json.dumps(assigned, sort_keys=True).encode())
-    pairs = [(k.split("/")[0], int(k.split("/")[1]), i)
-             for k, i in assigned.items()]
-    subdirs = {i: f"dt={dt}/hr={hr:02d}" for dt, hr, i in pairs}
+    subdirs = {i: "dt=%s/hr=%s" % tuple(k.split("/"))
+               for k, i in assigned.items()}
     if resume:
         # ADVICE r2: resume=True silently dropped rows landing in an
         # already-committed hour.  Resume assumes BYTE-IDENTICAL replay of
@@ -782,20 +787,24 @@ def encode_table_partitioned(df: DataFrame, out_dir: str, *,
                          read_manifest(spark, out_dir)
                          .groupBy("bucket").agg(F.sum("n_rows").alias("n"))
                          .collect()}
-            for dt, hr, b in pairs:
-                if b in done and (dt, hr) in snapshot_counts \
-                        and snapshot_counts[(dt, hr)] != committed.get(b):
+            for k, r in hours.items():
+                b = assigned[k]
+                if b in done and r["count"] != committed.get(b):
                     raise ValueError(
-                        f"hour dt={dt}/hr={hr:02d} is already committed "
-                        f"with {committed.get(b)} rows but the snapshot "
-                        f"now has {snapshot_counts[(dt, hr)]} — resume "
+                        f"hour dt={r['dt']}/hr={r['hr']:02d} is already "
+                        f"committed with {committed.get(b)} rows but the "
+                        f"snapshot now has {r['count']} — resume "
                         f"assumes identical replay of the same snapshot. "
                         f"For true appends use encode_stream_partitioned "
                         f"(per-batch namespacing) or resume=False into a "
                         f"fresh out_dir.")
+    # one shuffle partition per hour of this snapshot, not per hour the
+    # store has ever recorded: an old store's thousands of past hours
+    # would otherwise each cost an (empty) shuffle partition
     return encode_table(
-        df, out_dir, bucket_expr=_hour_bucket(ts_col, assigned),
-        n_buckets=max(next_id, 1), chunk_rows=chunk_rows,
+        df, out_dir, bucket_expr=_hour_bucket(
+            h, {r["h"]: assigned[k] for k, r in hours.items()}),
+        n_buckets=max(len(hours), 1), chunk_rows=chunk_rows,
         table_id=table_id, resume=resume,
         bucket_subdirs=subdirs)
 

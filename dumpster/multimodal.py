@@ -18,9 +18,6 @@ import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
-MEDIA_META_DDL = ("id long, n_bytes long, magic string, format string, "
-                  "prefix string")
-
 _MAGICS = [
     (b"\x89PNG", "png"), (b"\xff\xd8\xff", "jpeg"), (b"GIF8", "gif"),
     (b"RIFF", "riff"), (b"\x00\x00\x00", "mp4ish"), (b"ID3", "mp3"),

@@ -135,6 +135,74 @@ def test_partitioned_resume_accepts_bucket_col_layout_record(spark, tmp_path):
         == list(range(30))
 
 
+def test_bucket_col_layout_record_without_hours_refuses_resume(spark,
+                                                              tmp_path):
+    """Only an hourly store (one with _hour_buckets.json) reads a
+    {"layout": "bucket_col"} record as bucket_expr.  A caller's bucket_col
+    store did not store its routing column; resuming it with
+    bucket_expr=F.col(...) would add that column, NULL in every committed
+    bucket, so the resume is refused and nothing is rewritten."""
+    df = spark.range(12).withColumn("b", (F.col("id") % 3).cast("int"))
+    out = str(tmp_path / "bucket_col_store")
+    encode_table(df, out, bucket_expr=F.col("b"), n_buckets=3)
+    layout = os.path.join(out, "_layout.json")
+    with open(layout, "w") as f:
+        json.dump({"layout": "bucket_col"}, f)
+    with pytest.raises(ValueError, match="cannot resume"):
+        encode_table(df, out, bucket_expr=F.col("b"), n_buckets=3)
+    with open(layout) as f:
+        assert json.load(f) == {"layout": "bucket_col"}
+
+
+@pytest.mark.parametrize("stamps", [
+    # dense: three days with gap hours, looked up in the literal array
+    [f"2026-01-0{d} {h:02d}:15:00" for d in (1, 2, 3) for h in (0, 7, 23)],
+    # sparse: a stray far-off hour, looked up in the literal map
+    ["2026-01-01 05:15:00", "2026-01-01 06:15:00", "2031-07-04 00:15:00"],
+])
+def test_partitioned_routes_each_row_to_its_hour(spark, tmp_path, stamps):
+    """Every row lands in the dt=/hr= directory of its own timestamp, on
+    both lookups of the hour-id bucket expression."""
+    df = spark.createDataFrame(
+        [(i, stamps[i % len(stamps)]) for i in range(4 * len(stamps))],
+        "id long, ts string").select(
+        "id", F.col("ts").cast("timestamp").alias("warc_ts"))
+    out = str(tmp_path / "hp_route")
+    encode_table_partitioned(df, out, chunk_rows=3)
+    got = decode_table(spark, out)
+    assert sorted(r["id"] for r in got.collect()) \
+        == list(range(4 * len(stamps)))
+    for dt, hr in {(s[:10], s[11:13]) for s in stamps}:
+        part = decode_table(spark, out, path_glob=f"*/dt={dt}/hr={hr}/*")
+        want = sorted(i for i in range(4 * len(stamps))
+                      if stamps[i % len(stamps)][:13] == f"{dt} {hr}")
+        assert sorted(r["id"] for r in part.collect()) == want
+
+
+def test_partitioned_into_store_with_many_recorded_hours(spark, tmp_path):
+    """New hours get ids past every recorded one, and the shuffle is sized
+    by the snapshot's hours, so ids far above the partition count still
+    land each row in its own hour's directory and manifest."""
+    out = str(tmp_path / "hp_aged")
+    os.makedirs(out)
+    old = {f"2025-01-{d:02d}/{h:02d}": 24 * (d - 1) + h
+           for d in range(1, 11) for h in range(24)}
+    with open(os.path.join(out, "_hour_buckets.json"), "w") as f:
+        json.dump(old, f)
+    df = spark.createDataFrame(
+        [(i, f"2026-02-01 0{i % 3}:20:00") for i in range(12)],
+        "id long, ts string").select(
+        "id", F.col("ts").cast("timestamp").alias("warc_ts"))
+    mf = encode_table_partitioned(df, out)
+    assert sorted((r["bucket"], r["n_rows"]) for r in mf.collect()) \
+        == [(240, 4), (241, 4), (242, 4)]
+    for hr in range(3):
+        part = decode_table(spark, out,
+                            path_glob=f"*/dt=2026-02-01/hr=0{hr}/*")
+        assert sorted(r["id"] for r in part.collect()) \
+            == [i for i in range(12) if i % 3 == hr]
+
+
 def test_partitioned_keeps_user_dt_and_hr_columns(spark, tmp_path):
     """The hourly layout derives its dt/hr keys without touching the
     frame: a user column named dt or hr is stored like any other (the

@@ -175,6 +175,9 @@ def test_guard_rails(spark, tmp_path):
     with pytest.raises(Exception, match="(?s)bucket_col.*encode_table"):
         _docs(spark).write.format("dumpster") \
             .option("bucket_col", "lang").mode("append").save(out)
+    with pytest.raises(Exception, match="(?s)chunk_bytes.*DEFAULT_CHUNK"):
+        _docs(spark).write.format("dumpster") \
+            .option("chunk_bytes", "1024").mode("append").save(out)
     prepped = pipeline.prep_for_encode(
         _docs(spark).withColumn("url", F.lit("https://h.example/")),
         "url", n_buckets=4)

@@ -85,16 +85,18 @@ def main():
             "EvalPython" not in p,
     })
 
-    # 1c. partitioned (dt=/hr=) encode prep: the hour id is a literal-map
-    # bucket_expr, so no join is planned and the only exchange is the
-    # bucket repartition
+    # 1c. partitioned (dt=/hr=) encode prep: the hour id is a bucket_expr
+    # that indexes a literal array by hour, so no join is planned and the
+    # only exchange is the bucket repartition
     from dumpster.engine import _hour_bucket
-    hours = {f"2026-01-01/{h:02d}": h for h in range(4)}
-    hourly = pages.withColumn("__bucket", _hour_bucket("warc_ts", hours)) \
+    first = 20454 * 24                      # hour index of 2026-01-01 00h
+    hours = {first + h: h for h in range(4)}
+    h = F.unix_date(F.to_date("warc_ts")) * 24 + F.hour("warc_ts")
+    hourly = pages.withColumn("__bucket", _hour_bucket(h, hours)) \
         .repartition(8, "__bucket").sortWithinPartitions("__bucket")
     p = plan_of(hourly)
     ok &= section("partitioned encode prep (dt=/hr= hour buckets)", hourly, {
-        "no join of any kind (the hour ids are a literal map)":
+        "no join of any kind (the hour ids are a literal array)":
             "Join" not in p and "CartesianProduct" not in p,
         "exactly one Exchange (the bucket repartition)":
             len(re.findall(r"\(\d+\) Exchange\b", p)) == 1,
