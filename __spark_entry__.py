@@ -63,7 +63,7 @@ def entry(spark: SparkSession) -> DataFrame:
     man = encode_table(
         docs, out,
         bucket_expr=F.pmod(F.xxhash64("doc_id"), F.lit(8)).cast("int"),
-        n_buckets=8, chunk_rows=4096, table_id="documents_entry")
+        n_buckets=8, chunk_rows=4096)
     dec = decode_table(spark, out)
     if docs.exceptAll(dec).count() or dec.exceptAll(docs).count():
         raise AssertionError("round-trip mismatch: decode(encode(docs)) != docs")
@@ -322,7 +322,7 @@ def q_catalog_restore(spark, sf):
     out = tempfile.mkdtemp(prefix="dumpster_q_cat_")
     encode_table(docs, out,
                  bucket_expr=F.pmod(F.xxhash64("doc_id"), F.lit(4)).cast("int"),
-                 n_buckets=4, chunk_rows=4096, table_id="documents_cat")
+                 n_buckets=4, chunk_rows=4096)
     cat = os.path.join(out, "_catalog.json")
     save_catalog(cat, "dumpster_cat_docs", out)
     spark.catalog.dropTempView("dumpster_cat_docs")   # no-op when absent
@@ -342,11 +342,11 @@ def q_schema_evolution_store(spark, sf):
     out = tempfile.mkdtemp(prefix="dumpster_q_evo_")
     encode_table(docs.filter(F.col("doc_id") % 2 == 0), out,
                  bucket_expr=F.lit(0), n_buckets=1, chunk_rows=4096,
-                 resume=False, table_id="documents_evo")
+                 resume=False)
     widened = (docs.filter(F.col("doc_id") % 2 == 1)
                .withColumn("score", (F.col("doc_id") * 2).cast("long")))
     encode_table(widened, out, bucket_expr=F.lit(1), n_buckets=2,
-                 chunk_rows=4096, resume=False, table_id="documents_evo")
+                 chunk_rows=4096, resume=False)
     dec = decode_table(spark, out)
     return dec.agg(
         F.count("*").cast("long").alias("rows"),
@@ -373,7 +373,7 @@ def q_multischema_routing(spark, sf):
     encode_table_multischema(
         gen1.unionByName(gen2), out,
         schemas={1: ["doc_id", "lang"], 2: ["doc_id", "lang", "chars"]},
-        n_buckets=4, chunk_rows=4096, table_id="documents_ms")
+        n_buckets=4, chunk_rows=4096)
     dec = decode_table(spark, out)
     return dec.groupBy("lang").agg(
         F.count("*").cast("long").alias("n_docs"),
@@ -393,7 +393,7 @@ def q_encode_documents_manifest(spark, sf):
     man = encode_table(
         docs, out,
         bucket_expr=F.pmod(F.xxhash64("doc_id"), F.lit(8)).cast("int"),
-        n_buckets=8, chunk_rows=4096, table_id="documents_q")
+        n_buckets=8, chunk_rows=4096)
     s = encode_summary(man)
     return spark.createDataFrame(
         [(int(s["buckets"]), int(s["chunks"]), int(s["rows"]),
@@ -410,7 +410,7 @@ def q_codec_selection_report(spark, sf):
     man = encode_table(
         docs, out,
         bucket_expr=F.pmod(F.xxhash64("doc_id"), F.lit(8)).cast("int"),
-        n_buckets=8, chunk_rows=4096, table_id="documents_sel")
+        n_buckets=8, chunk_rows=4096)
     rows = []
     for r in man.collect():
         for cs in _json.loads(r["col_stats"]):
@@ -430,7 +430,7 @@ def q_roundtrip_zero_mismatch(spark, sf):
     out = tempfile.mkdtemp(prefix="dumpster_q_rt_")
     encode_table(docs, out,
                  bucket_expr=F.pmod(F.xxhash64("doc_id"), F.lit(8)).cast("int"),
-                 n_buckets=8, chunk_rows=4096, table_id="documents_rt")
+                 n_buckets=8, chunk_rows=4096)
     dec = decode_table(spark, out)
     a = docs.exceptAll(dec).count()
     b = dec.exceptAll(docs).count()
@@ -447,8 +447,7 @@ def q_zone_pruned_scan(spark, sf):
     out = tempfile.mkdtemp(prefix="dumpster_q_zone_")
     encode_table(docs, out,
                  bucket_expr=F.pmod(F.xxhash64("doc_id"), F.lit(4)).cast("int"),
-                 n_buckets=4, chunk_rows=64, order_cols=("doc_id",),
-                 table_id="documents_zone")
+                 n_buckets=4, chunk_rows=64, order_cols=("doc_id",))
     dec = decode_table(spark, out, zone_filter=("doc_id", 100, 199))
     return (dec.filter(F.col("doc_id").between(100, 199))
             .select("doc_id", "lang", "source"))
@@ -465,7 +464,7 @@ def q_tpch_q1_via_engine(spark, sf):
     encode_table(li, out,
                  bucket_expr=F.pmod(F.xxhash64("l_orderkey"), F.lit(8))
                  .cast("int"),
-                 n_buckets=8, chunk_rows=16384, table_id="lineitem_q1")
+                 n_buckets=8, chunk_rows=16384)
     dec = decode_table(spark, out)
     d = lambda c: F.col(c).cast("decimal(20,4)")
     return (dec.filter(F.col("l_shipdate") <= "1998-09-02")
@@ -483,8 +482,7 @@ def q_local_mode_roundtrip(spark, sf):
     table exactly; the oracle is the table itself."""
     docs = _t(spark, sf, "documents")
     out = tempfile.mkdtemp(prefix="dumpster_q_local_")
-    encode_table(docs, out, mode="local", chunk_rows=4096,
-                 table_id="documents_local")
+    encode_table(docs, out, mode="local", chunk_rows=4096)
     return decode_table(spark, out) \
         .select("doc_id", "text", "lang", "source", "n_chars")
 
@@ -503,7 +501,7 @@ def q_pruned_scan_io(spark, sf):
     man = encode_table(
         docs, out,
         bucket_expr=F.pmod(F.xxhash64("doc_id"), F.lit(8)).cast("int"),
-        n_buckets=8, chunk_rows=4096, table_id="documents_io")
+        n_buckets=8, chunk_rows=4096)
     files = [r["file"] for r in man.select("file").distinct().collect()]
     fdf = spark.createDataFrame([(f,) for f in files], "file string")
 
@@ -535,8 +533,7 @@ def q_verify_chunks_clean(spark, sf):
 
     docs = _t(spark, sf, "documents")
     out = tempfile.mkdtemp(prefix="dumpster_q_vfy_")
-    encode_table(docs, out, mode="local", chunk_rows=4096,
-                 table_id="documents_vfy")
+    encode_table(docs, out, mode="local", chunk_rows=4096)
     v = verify_chunks(spark, out)
     return v.agg(F.count("*").alias("files"),
                  F.sum(F.col("ok").cast("long")).alias("ok_files"),
@@ -553,8 +550,7 @@ def q_sql_over_encoded_table(spark, sf):
 
     docs = _t(spark, sf, "documents")
     out = tempfile.mkdtemp(prefix="dumpster_q_sql_")
-    encode_table(docs, out, mode="local", chunk_rows=4096,
-                 table_id="documents_sqlview")
+    encode_table(docs, out, mode="local", chunk_rows=4096)
     register_decoded_view(spark, out, "dumpster_docs_view")
     return spark.sql("""
         SELECT lang, COUNT(*) AS n_docs,
@@ -579,8 +575,7 @@ def q_pushdown_where_view(spark, sf):
     out = tempfile.mkdtemp(prefix="dumpster_q_push_")
     encode_table(docs, out,
                  bucket_expr=F.pmod(F.xxhash64("doc_id"), F.lit(4)).cast("int"),
-                 n_buckets=4, chunk_rows=64, order_cols=("doc_id",),
-                 table_id="documents_push")
+                 n_buckets=4, chunk_rows=64, order_cols=("doc_id",))
     register_decoded_view(spark, out, "dumpster_docs_pushdown",
                           pushdown=True)
     return spark.sql("""
@@ -606,8 +601,7 @@ def q_narrow_select_pushdown(spark, sf):
     out = tempfile.mkdtemp(prefix="dumpster_q_narrow_")
     encode_table(docs, out,
                  bucket_expr=F.pmod(F.xxhash64("doc_id"), F.lit(4)).cast("int"),
-                 n_buckets=4, chunk_rows=64, order_cols=("doc_id",),
-                 table_id="documents_narrow")
+                 n_buckets=4, chunk_rows=64, order_cols=("doc_id",))
     register_decoded_view(spark, out, "dumpster_docs_narrow",
                           pushdown=True)
     return sqlfront.sql(spark, """
@@ -641,8 +635,7 @@ def q_str_point_lookup(spark, sf):
     out = tempfile.mkdtemp(prefix="dumpster_q_ptlk_")
     encode_table(pages.orderBy("url"), out,
                  bucket_expr=F.pmod(F.xxhash64("url"), F.lit(4)).cast("int"),
-                 n_buckets=4, chunk_rows=64, order_cols=("url",),
-                 table_id="pages_ptlk")
+                 n_buckets=4, chunk_rows=64, order_cols=("url",))
     register_decoded_view(spark, out, "dumpster_pages_ptlk", pushdown=True)
     target = _pin_literal(
         pages.filter(F.col("doc_id") == 42).first()["url"], "lookup url")
@@ -671,8 +664,7 @@ def q_url_prefix_scan(spark, sf):
     out = tempfile.mkdtemp(prefix="dumpster_q_pfx_")
     encode_table(pages.orderBy("url"), out,
                  bucket_expr=F.pmod(F.xxhash64("url"), F.lit(4)).cast("int"),
-                 n_buckets=4, chunk_rows=64, order_cols=("url",),
-                 table_id="pages_pfx")
+                 n_buckets=4, chunk_rows=64, order_cols=("url",))
     register_decoded_view(spark, out, "dumpster_pages_pfx", pushdown=True)
     host = _pin_literal(docs.orderBy("doc_id").first()["source"],
                         "prefix host")
@@ -700,11 +692,9 @@ def q_compact_stream_roundtrip(spark, sf):
                      os.path.join(src, f"batch={b:06d}"),
                      bucket_expr=F.pmod(F.xxhash64("doc_id"), F.lit(2))
                      .cast("int"),
-                     n_buckets=2, chunk_rows=32,
-                     table_id=f"compact_src_{b}")
+                     n_buckets=2, chunk_rows=32)
     dst = tempfile.mkdtemp(prefix="dumpster_q_compact_dst_")
-    compact_stream(spark, src, dst, chunk_rows=65536, mode="local",
-                   table_id="compacted_docs")
+    compact_stream(spark, src, dst, chunk_rows=65536, mode="local")
     return decode_table(spark, dst).select(
         "doc_id", "text", "lang", "source", "n_chars")
 
@@ -735,8 +725,7 @@ def q_hour_partitioned_encode(spark, sf):
 
     ev = _t(spark, sf, "events")
     out = tempfile.mkdtemp(prefix="dumpster_q_hp_")
-    encode_table_partitioned(ev, out, ts_col="ts", chunk_rows=8192,
-                             table_id="events_hp")
+    encode_table_partitioned(ev, out, ts_col="ts", chunk_rows=8192)
     dec = decode_table(spark, out, path_glob="*/hr=03/*")
     return (dec.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("dt"))
             .agg(F.count("*").alias("n")))
@@ -748,7 +737,7 @@ def q_embeddings_roundtrip(spark, sf):
     out = tempfile.mkdtemp(prefix="dumpster_q_emb_")
     encode_table(emb, out,
                  bucket_expr=F.pmod(F.xxhash64("vec_id"), F.lit(8)).cast("int"),
-                 n_buckets=8, chunk_rows=4096, table_id="embeddings_rt")
+                 n_buckets=8, chunk_rows=4096)
     dec = decode_table(spark, out)
     a = emb.exceptAll(dec).count()
     b = dec.exceptAll(emb).count()
@@ -975,8 +964,7 @@ def q_dedup_against_store(spark, sf):
     ledger = docs.filter(F.col("doc_id") % 5 == 0).select(
         F.md5(F.col("text")).alias("fp"))
     out = tempfile.mkdtemp(prefix="dumpster_q_fpstore_")
-    encode_table(ledger, out, mode="local", chunk_rows=4096,
-                 table_id="fp_ledger")
+    encode_table(ledger, out, mode="local", chunk_rows=4096)
     return dedup.dedup_against_store(spark, docs, out)
 
 

@@ -98,8 +98,7 @@ def main():
     # timed runs measure steady-state throughput, not first-job compilation
     warm = tempfile.mkdtemp(prefix="dumpster_bench_warm_")
     encode_table(pages.limit(2000), warm, url_col="url", mode="salted",
-                 n_buckets=4,
-                 chunk_rows=1024, table_id="warmup")
+                 n_buckets=4, chunk_rows=1024)
     decode_table(spark, warm).count()
     shutil.rmtree(warm, ignore_errors=True)
 
@@ -132,16 +131,8 @@ def main():
             shutil.rmtree(out, ignore_errors=True)
         out = tempfile.mkdtemp(prefix="dumpster_bench_enc_")
         t0 = time.perf_counter()
-        # DUMPSTER_BENCH_NUM_PARTITIONS pins the reduce-task count; the
-        # scaling harness sets it to N_BUCKETS at EVERY level so the two
-        # cluster sizes run the IDENTICAL job DAG (work units constant,
-        # only cores vary — the two-cluster-size comparison's invariant).
-        # Headline runs keep the adaptive default (2x parallelism).
-        np_env = os.environ.get("DUMPSTER_BENCH_NUM_PARTITIONS")
         man = encode_table(pages, out, url_col="url", mode="salted",
-                           n_buckets=N_BUCKETS,
-                           salt_k=4, chunk_rows=65536, table_id="bench_pages",
-                           num_partitions=int(np_env) if np_env else None)
+                           n_buckets=N_BUCKETS, salt_k=4, chunk_rows=65536)
         enc_trials.append(time.perf_counter() - t0)
         s = encode_summary(man)
 
@@ -161,7 +152,7 @@ def main():
         local_out = tempfile.mkdtemp(prefix="dumpster_bench_encl_")
         t0 = time.perf_counter()
         man_l = encode_table(pages, local_out, url_col="url", mode="local",
-                             chunk_rows=65536, table_id="bench_pages_local")
+                             chunk_rows=65536)
         local_trials.append(time.perf_counter() - t0)
         local_bytes = int(encode_summary(man_l)["encoded_bytes"])
         shutil.rmtree(local_out, ignore_errors=True)
@@ -240,7 +231,6 @@ def main():
             t0 = time.perf_counter()
             (pages.write.format("dumpster")
              .option("chunk_rows", "65536")
-             .option("table_id", "bench_pages_sink")
              .mode("append").save(os.path.join(sink_root, "t")))
             w = time.perf_counter() - t0
             best = w if best is None else min(best, w)
@@ -272,7 +262,6 @@ def main():
              .sortWithinPartitions("__host").drop("__host")
              .write.format("dumpster")
              .option("chunk_rows", "65536")
-             .option("table_id", "bench_pages_sink_local")
              .mode("append").save(tdir))
             w = time.perf_counter() - t0
             best = w if best is None else min(best, w)

@@ -72,8 +72,7 @@ def main():
     # warmup
     warm = tempfile.mkdtemp(prefix="anat_warm_")
     encode_table(pages.limit(2000), warm, url_col="url", mode="salted",
-                 n_buckets=4,
-                 chunk_rows=1024, table_id="warmup")
+                 n_buckets=4, chunk_rows=1024)
     shutil.rmtree(warm, ignore_errors=True)
 
     trials: dict[str, list] = {k: [] for k in
@@ -118,8 +117,7 @@ def main():
         out = tempfile.mkdtemp(prefix="anat_enc_")
         t0 = time.perf_counter()
         man = encode_table(pages, out, url_col="url", mode="salted",
-                           n_buckets=N_BUCKETS,
-                           salt_k=4, chunk_rows=65536, table_id="anat_pages")
+                           n_buckets=N_BUCKETS, salt_k=4, chunk_rows=65536)
         salted = time.perf_counter() - t0
         trials["salted_encode"].append(salted)
         pair_ratios.append(salted / floor)
@@ -134,7 +132,7 @@ def main():
         out_l = tempfile.mkdtemp(prefix="anat_encl_")
         t0 = time.perf_counter()
         encode_table(pages, out_l, url_col="url", mode="local",
-                     chunk_rows=65536, table_id="anat_pages_l")
+                     chunk_rows=65536)
         trials["local_encode"].append(time.perf_counter() - t0)
         shutil.rmtree(out_l, ignore_errors=True)
 
@@ -153,7 +151,6 @@ def main():
          .sortWithinPartitions("__host").drop("__host")
          .write.format("dumpster")
          .option("chunk_rows", "65536")
-         .option("table_id", "anat_sink_local")
          .mode("append").save(tdir))
         trials["sink_local"].append(time.perf_counter() - t0)
         if sink_local_bytes is None:

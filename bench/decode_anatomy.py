@@ -66,9 +66,7 @@ def main():
 
     out = tempfile.mkdtemp(prefix="dec_anat_")
     encode_table(pages, out, url_col="url", mode="salted",
-                 n_buckets=N_BUCKETS, salt_k=4,
-                 chunk_rows=65536, table_id="dec_anat",
-                 num_partitions=N_BUCKETS)
+                 n_buckets=N_BUCKETS, salt_k=4, chunk_rows=65536)
 
     # warmup (JIT + python workers), same as bench.py
     decode_table(spark, out).count()

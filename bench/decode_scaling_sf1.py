@@ -76,8 +76,7 @@ def leg(cpus: int, store: str, logical_bytes: int, trials: int) -> None:
     # warmup: bench.py's throwaway tiny encode+decode (JIT + workers)
     warm = tempfile.mkdtemp(prefix="dec_sf1_warm_")
     encode_table(synth_pages(spark, 2000, seed=7), warm, url_col="url",
-                 mode="salted", n_buckets=4, chunk_rows=1024,
-                 table_id="warmup")
+                 mode="salted", n_buckets=4, chunk_rows=1024)
     decode_table(spark, warm).count()
     shutil.rmtree(warm, ignore_errors=True)
 
@@ -146,9 +145,7 @@ def main() -> None:
         shutil.rmtree(store, ignore_errors=True)
         t0 = time.perf_counter()
         encode_table(pages, store, url_col="url", mode="salted",
-                     n_buckets=N_BUCKETS,
-                     salt_k=4, chunk_rows=CHUNK_ROWS, table_id="dec_sf1",
-                     num_partitions=N_BUCKETS)
+                     n_buckets=N_BUCKETS, salt_k=4, chunk_rows=CHUNK_ROWS)
         print(f"encoded sf1 store in {time.perf_counter() - t0:.1f}s",
               file=sys.stderr)
         assert _store_rows() == rows, "encode produced a partial store"

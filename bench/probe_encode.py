@@ -31,15 +31,14 @@ pages = spark.read.parquet(pages_path)
 # warmup
 warm = tempfile.mkdtemp(prefix="probe_warm_")
 encode_table(pages.limit(2000), warm, url_col="url", mode="salted",
-             n_buckets=4,
-             chunk_rows=1024, table_id="warmup")
+             n_buckets=4, chunk_rows=1024)
 shutil.rmtree(warm, ignore_errors=True)
 
 out = tempfile.mkdtemp(prefix="probe_enc_")
 t0 = time.perf_counter()
 man = encode_table(pages, out, url_col="url", mode="salted",
                    n_buckets=n_buckets,
-                   salt_k=4, chunk_rows=chunk_rows, table_id="probe")
+                   salt_k=4, chunk_rows=chunk_rows)
 wall = time.perf_counter() - t0
 s = encode_summary(man)
 per_part = (man.groupBy("partition_id")

@@ -32,10 +32,7 @@ def run_bench(sf_dir: str, cpus: int, rows: int | None = None,
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir,
                SPARK_GRAFT_CPUS=str(cpus),
                DUMPSTER_BENCH_SKIP_QUERIES="1",
-               DUMPSTER_BENCH_WORKDIR="/dev/shm/dumpster_bench",
-               # identical job DAG at every level: reduce-task count pinned
-               # to the bucket count so only the core count varies
-               DUMPSTER_BENCH_NUM_PARTITIONS="128")
+               DUMPSTER_BENCH_WORKDIR="/dev/shm/dumpster_bench")
     if minimal:
         # N-level legs: headline encode+decode only — the reference write /
         # local mode / pruned decode at 1 core would multiply the wall
@@ -110,9 +107,8 @@ def main():
 Input: {r32['rows']:,} rows ({r32['logical_bytes']/1e9:.2f} GB logical),
 seed 42, identical bytes at both parallelism levels (row-index-keyed
 generator).  Each level is a fresh process/JVM (`bench.py`), n_buckets
-fixed at 128 AND the reduce-task count pinned to 128 at every level
-(DUMPSTER_BENCH_NUM_PARTITIONS — the identical job DAG runs at both
-cluster sizes; only the core count varies); best of {trials}
+fixed at 128 at every level (the reduce-task count is 2× the level's
+parallelism, capped at 128); best of {trials}
 invocation(s) per level, each invocation itself best-of-3 encode trials
 (bench.py) to reject shared-host noise windows.
 

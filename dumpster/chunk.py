@@ -250,11 +250,14 @@ def _stages(meta: dict) -> dict:
     return out
 
 
-def encode_chunk_pieces(batch: pa.RecordBatch, *, table_id: str = "t",
-                        bucket: int = 0, chunk_seq: int = 0,
+# table_id/bucket/chunk_seq are ignored; perfbench/layers.py still passes them
+def encode_chunk_pieces(batch: pa.RecordBatch, *, table_id=None, bucket=None,
+                        chunk_seq=None,
                         plain_only: bool = False) -> tuple[list, list[dict]]:
     """Encode one RecordBatch → (list of buffers, per-column stats).
 
+    Each column's selector sample is seeded from its name and the row
+    count, so the stored bytes depend on the chunk alone.
     ``plain_only`` stores every column PLAIN with no byte stage, string
     bounds or bloom (see select_encode_fixed's ``plain``).
 
@@ -291,7 +294,7 @@ def encode_chunk_pieces(batch: pa.RecordBatch, *, table_id: str = "t",
     for name, col in zip(batch.schema.names, batch.columns):
         arr = col.combine_chunks() if isinstance(col, pa.ChunkedArray) else col
         kind = _kind_of(arr.type)
-        seed = stable_seed(table_id, bucket, chunk_seq, name)
+        seed = stable_seed(name, n_rows)
         vals = fmeta = None
         smin = smax = None
         bloom_sec = None
@@ -445,11 +448,9 @@ def encode_chunk_pieces(batch: pa.RecordBatch, *, table_id: str = "t",
     return out, stats
 
 
-def encode_chunk(batch: pa.RecordBatch, *, table_id: str = "t",
-                 bucket: int = 0, chunk_seq: int = 0) -> tuple[bytes, list[dict]]:
+def encode_chunk(batch: pa.RecordBatch) -> tuple[bytes, list[dict]]:
     """Encode one RecordBatch → (container bytes, per-column stats)."""
-    pieces, stats = encode_chunk_pieces(
-        batch, table_id=table_id, bucket=bucket, chunk_seq=chunk_seq)
+    pieces, stats = encode_chunk_pieces(batch)
     return b"".join(bytes(p) if isinstance(p, memoryview) else p
                     for p in pieces), stats
 

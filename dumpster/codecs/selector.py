@@ -2,11 +2,12 @@
 
 The north_rule's "sampling-based codec auto-selector that picks the winner
 per column-chunk by estimated compressed size": draw a deterministic row
-sample (seeded from (bucket, chunk, column) so resumed runs pick identical
-codecs — SURVEY.md §7.4), encode the sample under every applicable codec,
-extrapolate to the full chunk, encode the full chunk with the winner, and
-guard the floor: if the winner somehow exceeds PLAIN's size the chunk falls
-back to PLAIN, so encoded size is never worse than raw + O(1) header.
+sample (seeded from the column name and the chunk's row count, so the same
+rows pick the same codecs in any store, bucket or run — SURVEY.md §7.4),
+encode the sample under every applicable codec, extrapolate to the full
+chunk, encode the full chunk with the winner, and guard the floor: if the
+winner somehow exceeds PLAIN's size the chunk falls back to PLAIN, so
+encoded size is never worse than raw + O(1) header.
 
 Two exact integer stages ride on the fixed-width menu without adding a
 codec: FOR divides out its residuals' common factor (forpack.py), and a

@@ -332,7 +332,8 @@ class DumpsterWriter(DataSourceArrowWriter):
     speculation are safe: a retry re-encodes the same input partition to
     the same deterministic chunk names with identical bytes.
 
-    Options: ``path`` (required), ``chunk_rows``, ``table_id``.  Modes:
+    Options: ``path`` (required) and ``chunk_rows``; any other name
+    raises before anything is written.  Modes:
     append | overwrite.  An append into a stream-sink root (``batch=N``
     stores) raises before writing anything; an overwrite replaces the
     root.
@@ -470,6 +471,9 @@ class DumpsterStreamWriter(DataSourceStreamArrowWriter):
         _delete_reported_chunks(messages)
 
 
+_SINK_OPTIONS = {"path", "chunk_rows", "checkpointlocation"}
+
+
 def _init_writer_common(w, options: dict, schema: StructType) -> None:
     """Shared option parsing + guard rails for the batch and stream sinks
     (runs on the driver at writer construction)."""
@@ -487,6 +491,11 @@ def _init_writer_common(w, options: dict, schema: StructType) -> None:
         raise ValueError("the dumpster sink has no chunk_bytes option: a "
                          "chunk closes at chunk_rows rows or at dumpster."
                          "engine.DEFAULT_CHUNK_BYTES of Arrow data")
+    unknown = sorted(k for k in options if k.lower() not in _SINK_OPTIONS)
+    if unknown:
+        raise ValueError(f"unknown dumpster sink option(s) {unknown}: the "
+                         f"options are path, chunk_rows and (for a stream) "
+                         f"checkpointLocation")
     if _has_structs(schema):
         raise ValueError(
             "struct-typed columns are not supported on the df.write path "
@@ -503,8 +512,6 @@ def _init_writer_common(w, options: dict, schema: StructType) -> None:
             f"pipeline; rename them, or encode a prep_for_encode* layout "
             f"with dumpster.engine.encode_table instead")
     w.chunk_rows = _chunk_rows(options.get("chunk_rows", DEFAULT_CHUNK_ROWS))
-    w.table_id = options.get("table_id") or os.path.basename(
-        os.path.normpath(w.out_dir))
     w.schema = schema
 
 
@@ -525,8 +532,7 @@ def _encode_task(w, iterator, out_dir: str, bucket_base: int) \
     bucket = bucket_base + pid
     routed = (b.append_column("__bucket", pa.array(
         np.full(b.num_rows, bucket, dtype=np.int32))) for b in iterator)
-    encoder = _make_encoder(out_dir, w.table_id, w.chunk_rows,
-                            publish_manifest=False)
+    encoder = _make_encoder(out_dir, w.chunk_rows, publish_manifest=False)
     return DumpsterCommitMessage(
         [r for mb in encoder(routed) for r in mb.to_pylist()])
 

@@ -334,7 +334,7 @@ def _check_layout(out_dir: str, record: dict, resume: bool) -> None:
             _fs_write_atomic(path, json.dumps(record, sort_keys=True).encode())
 
 
-def _make_encoder(out_dir: str, table_id: str, chunk_rows: int,
+def _make_encoder(out_dir: str, chunk_rows: int,
                   bucket_subdirs: dict | None = None,
                   fs=None,
                   publish_manifest: bool = True):
@@ -369,8 +369,7 @@ def _make_encoder(out_dir: str, table_id: str, chunk_rows: int,
             batch = tbl.combine_chunks().to_batches()[0]
             seq = st["seq"]
             try:
-                pieces, stats = encode_chunk_pieces(
-                    batch, table_id=table_id, bucket=bucket, chunk_seq=seq)
+                pieces, stats = encode_chunk_pieces(batch)
             except Exception as e:
                 # S3-parity dead-letter semantics, minus the data loss: a
                 # codec/selector failure downgrades the chunk to PLAIN
@@ -378,9 +377,7 @@ def _make_encoder(out_dir: str, table_id: str, chunk_rows: int,
                 # decode errors inline rather than crashing,
                 # AvroSchemaRegistryDeserializer.java:32-41); the reason
                 # is kept in the manifest's col_stats
-                pieces, stats = encode_chunk_pieces(
-                    batch, table_id=table_id, bucket=bucket, chunk_seq=seq,
-                    plain_only=True)
+                pieces, stats = encode_chunk_pieces(batch, plain_only=True)
                 why = f"{type(e).__name__}: {e}"[:200]
                 for cs in stats:
                     cs["fallback"] = why
@@ -457,13 +454,11 @@ def encode_table(df: DataFrame, out_dir: str, *, url_col: str | None = None,
                  bucket_expr=None, n_buckets: int | None = None,
                  salt_k: int | None = None,
                  chunk_rows: int = DEFAULT_CHUNK_ROWS,
-                 table_id: str | None = None,
                  resume: bool = True,
                  order_cols: tuple[str, ...] = (),
                  mode: str = "local",
                  bucket_subdirs: dict | None = None,
-                 fs=None,
-                 num_partitions: int | None = None) -> DataFrame:
+                 fs=None) -> DataFrame:
     """Encode ``df`` into chunk files + manifest under ``out_dir``.
 
     Returns the manifest as a DataFrame (one row per chunk =
@@ -478,11 +473,11 @@ def encode_table(df: DataFrame, out_dir: str, *, url_col: str | None = None,
        spark_partition_id(); ``url_col`` adds a host sort inside each
        split.  Parallelism and resume granularity are the input split,
        tuned with spark.sql.files.maxPartitionBytes; passing
-       ``n_buckets``, ``salt_k`` or ``num_partitions`` raises, because
-       they only size the salted layout.
+       ``n_buckets`` or ``salt_k`` raises, because they only size the
+       salted layout.
     3. ``mode="salted"``: one shuffle on the salted host bucket of
        ``url_col`` (pipeline.prep_for_encode; ``n_buckets`` 32,
-       ``salt_k`` 4 and ``num_partitions`` auto by default) — an exact
+       ``salt_k`` 4 by default) — an exact
        global host-major layout; without ``url_col`` the bucket is a
        hash of all columns.
 
@@ -517,9 +512,7 @@ def encode_table(df: DataFrame, out_dir: str, *, url_col: str | None = None,
     layout = "bucket_expr" if bucket_expr is not None else mode
     if layout == "local":
         salted_only = [k for k, v in (("n_buckets", n_buckets),
-                                      ("salt_k", salt_k),
-                                      ("num_partitions", num_partitions))
-                       if v is not None]
+                                      ("salt_k", salt_k)) if v is not None]
         if salted_only:
             raise ValueError(
                 f"{', '.join(salted_only)} size the salted layout, but this "
@@ -536,7 +529,6 @@ def encode_table(df: DataFrame, out_dir: str, *, url_col: str | None = None,
     os.makedirs(os.path.join(out_dir, "chunks"), exist_ok=True)
     os.makedirs(os.path.join(out_dir, "manifest"), exist_ok=True)
     _check_layout(out_dir, record, resume)
-    table_id = table_id or os.path.basename(os.path.normpath(out_dir))
 
     if _has_structs(df.schema):
         logical_path = os.path.join(out_dir, "_logical_schema.json")
@@ -571,8 +563,7 @@ def encode_table(df: DataFrame, out_dir: str, *, url_col: str | None = None,
     if layout == "local":
         prepped = prep_for_encode_local(df, url_col, order_cols)
     elif layout == "salted" and url_col is not None:
-        prepped = prep_for_encode(df, url_col, n_buckets, salt_k, order_cols,
-                                  num_partitions=num_partitions)
+        prepped = prep_for_encode(df, url_col, n_buckets, salt_k, order_cols)
     else:
         if bucket_expr is None:
             bucket_expr = F.pmod(F.xxhash64(*df.columns), F.lit(n_buckets)) \
@@ -584,7 +575,7 @@ def encode_table(df: DataFrame, out_dir: str, *, url_col: str | None = None,
     if done:
         prepped = prepped.filter(~F.col("__bucket").isin([int(b) for b in done]))
 
-    encoder = _make_encoder(out_dir, table_id, chunk_rows,
+    encoder = _make_encoder(out_dir, chunk_rows,
                             bucket_subdirs=bucket_subdirs, fs=fs)
     metrics = prepped.mapInArrow(encoder, schema=MANIFEST_DDL)
     # the action drains the encoder into Spark's no-op sink: one stage
@@ -602,7 +593,6 @@ def encode_table_multischema(df: DataFrame, out_dir: str, *,
                              url_col: str | None = None,
                              n_buckets: int = 32, salt_k: int = 4,
                              chunk_rows: int = DEFAULT_CHUNK_ROWS,
-                             table_id: str | None = None,
                              resume: bool = True) -> DataFrame:
     """G2 STRICT parity: route a single batch carrying several schema
     generations into one store, in one call.
@@ -657,7 +647,6 @@ def encode_table_multischema(df: DataFrame, out_dir: str, *,
             f"register the new generation in `schemas` (records must "
             f"never be dropped silently)")
     from .pipeline import salted_bucket
-    tid = table_id or os.path.basename(os.path.normpath(out_dir))
     _refuse_mixed_root(out_dir, stream=False)
     os.makedirs(out_dir, exist_ok=True)
     gen_path = os.path.join(out_dir, "_schema_gen.json")
@@ -682,8 +671,7 @@ def encode_table_multischema(df: DataFrame, out_dir: str, *,
             bexpr = F.pmod(F.xxhash64(*cols), F.lit(n_buckets))
         bexpr = (bexpr + F.lit(g * n_buckets)).cast("int")
         encode_table(sub, out_dir, bucket_expr=bexpr, n_buckets=n_buckets,
-                     chunk_rows=chunk_rows, table_id=f"{tid}_s{sid}",
-                     resume=resume)
+                     chunk_rows=chunk_rows, resume=resume)
     # encode_table returns the whole store's manifest; one read at the
     # end covers every generation
     return read_manifest(df.sparkSession, out_dir)
@@ -706,7 +694,6 @@ def _hour_bucket(h, ids: dict):
 def encode_table_partitioned(df: DataFrame, out_dir: str, *,
                              ts_col: str = "warc_ts",
                              chunk_rows: int = DEFAULT_CHUNK_ROWS,
-                             table_id: str | None = None,
                              resume: bool = True) -> DataFrame:
     """Reference output-layout parity: event-time hourly partitioning.
 
@@ -804,8 +791,7 @@ def encode_table_partitioned(df: DataFrame, out_dir: str, *,
     return encode_table(
         df, out_dir, bucket_expr=_hour_bucket(
             h, {r["h"]: assigned[k] for k, r in hours.items()}),
-        n_buckets=max(len(hours), 1), chunk_rows=chunk_rows,
-        table_id=table_id, resume=resume,
+        n_buckets=max(len(hours), 1), chunk_rows=chunk_rows, resume=resume,
         bucket_subdirs=subdirs)
 
 

@@ -201,14 +201,13 @@ def run_jobs(spark: SparkSession, cfg: JobConfig) -> list[dict]:
             man = stream_manifest(spark, out_dir).drop("batch_id")
         elif t.mode == "hourly":
             man = encode_table_partitioned(
-                df, out_dir, ts_col=t.ts_col, chunk_rows=chunk_rows,
-                table_id=t.name)
+                df, out_dir, ts_col=t.ts_col, chunk_rows=chunk_rows)
         else:
             man = encode_table(
                 df, out_dir, url_col=t.url_col,
                 n_buckets=t.n_buckets or cfg.n_buckets,
                 salt_k=t.salt_k or cfg.salt_k,
-                chunk_rows=chunk_rows, table_id=t.name, mode=t.mode)
+                chunk_rows=chunk_rows, mode=t.mode)
         s = encode_summary(man)
         summary = {"table": t.name, "mode": t.mode, "out": out_dir,
                    "rows": int(s["rows"]), "chunks": int(s["chunks"]),

@@ -70,7 +70,7 @@ def encode_stream(stream_df: DataFrame, out_dir: str, *,
         encode_table(batch_df, target, url_col=url_col,
                      bucket_expr=bucket_expr, n_buckets=n_buckets,
                      salt_k=salt_k, mode="salted", chunk_rows=chunk_rows,
-                     table_id=f"stream_b{batch_id}", resume=True)
+                     resume=True)
 
     return _start_foreach_batch(stream_df, sink, out_dir, checkpoint,
                                 trigger_available_now, trigger_seconds)
@@ -98,8 +98,7 @@ def encode_stream_partitioned(stream_df: DataFrame, out_dir: str, *,
         from .engine import encode_table_partitioned
         target = os.path.join(out_dir, f"batch={batch_id:06d}")
         encode_table_partitioned(batch_df, target, ts_col=ts_col,
-                                 chunk_rows=chunk_rows,
-                                 table_id=f"stream_hp_b{batch_id}")
+                                 chunk_rows=chunk_rows)
 
     return _start_foreach_batch(stream_df, sink, out_dir, checkpoint,
                                 trigger_available_now, trigger_seconds)
@@ -231,8 +230,8 @@ def decode_stream_table(spark: SparkSession, out_dir: str,
 def compact_stream(spark: SparkSession, out_dir: str, dst_dir: str, *,
                    url_col: str | None = None,
                    n_buckets: int | None = None,
-                   chunk_rows: int = 65536, mode: str = "salted",
-                   table_id: str | None = None) -> DataFrame:
+                   chunk_rows: int = 65536, mode: str = "salted") \
+        -> DataFrame:
     """Compact many micro-batch chunklets into one well-chunked table.
 
     The classic Kafka→object-store sink failure mode: each flush writes a
@@ -254,8 +253,7 @@ def compact_stream(spark: SparkSession, out_dir: str, dst_dir: str, *,
     """
     df = decode_stream_table(spark, out_dir)
     return encode_table(df, dst_dir, url_col=url_col, n_buckets=n_buckets,
-                        chunk_rows=chunk_rows, mode=mode,
-                        table_id=table_id or "compacted")
+                        chunk_rows=chunk_rows, mode=mode)
 
 
 def stream_manifest(spark: SparkSession, out_dir: str) -> DataFrame:

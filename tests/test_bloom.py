@@ -161,8 +161,7 @@ def bloomed_chunk(tmp_path_factory):
                           .tobytes().decode("latin-1") for _ in range(n)]),
     })
     out = str(tmp_path_factory.mktemp("bloomed") / "c.dmc2")
-    pieces, _stats = encode_chunk_pieces(batch, table_id="bl", bucket=0,
-                                         chunk_seq=0)
+    pieces, _stats = encode_chunk_pieces(batch)
     with open(out, "wb") as f:
         for p in pieces:
             f.write(p)
@@ -189,8 +188,7 @@ def test_chunk_bloom_roundtrip(bloomed_chunk):
 def test_chunk_without_bloom_returns_empty(tmp_path):
     batch = pa.record_batch({"u": pa.array(["a", "b", "c"])})  # < MIN_ROWS
     path = str(tmp_path / "nb.dmc2")
-    pieces, _stats = encode_chunk_pieces(batch, table_id="nb", bucket=0,
-                                         chunk_seq=0)
+    pieces, _stats = encode_chunk_pieces(batch)
     with open(path, "wb") as f:
         for p in pieces:
             f.write(p)
@@ -213,7 +211,7 @@ def encoded_urls(spark, tmp_path_factory):
                   (F.col("id") % 5).cast("string").alias("lang")))
     encode_table(df.orderBy("url"), out,
                  bucket_expr=(F.col("doc_id") % 4).cast("int"), n_buckets=4,
-                 chunk_rows=1024, order_cols=("url",), table_id="urls")
+                 chunk_rows=1024, order_cols=("url",))
     return out, n
 
 

@@ -4,7 +4,7 @@ import numpy as np
 import pyarrow as pa
 import pytest
 
-from dumpster.chunk import decode_chunk, encode_chunk
+from dumpster.chunk import decode_chunk, encode_chunk, encode_chunk_pieces
 
 RNG = np.random.default_rng(7)
 
@@ -17,7 +17,7 @@ def _ipc_bytes(batch: pa.RecordBatch) -> bytes:
 
 
 def _roundtrip(batch: pa.RecordBatch) -> pa.RecordBatch:
-    blob, stats = encode_chunk(batch, table_id="t", bucket=1, chunk_seq=2)
+    blob, stats = encode_chunk(batch)
     out = decode_chunk(blob)
     assert out.schema == batch.schema
     assert out.num_rows == batch.num_rows
@@ -163,9 +163,22 @@ def test_encoding_is_deterministic():
         [pa.array([f"u{i % 50}" for i in range(n)]),
          pa.array(np.arange(n), type=pa.int64())],
         names=["s", "i"])
-    b1, s1 = encode_chunk(batch, table_id="x", bucket=3, chunk_seq=4)
-    b2, s2 = encode_chunk(batch, table_id="x", bucket=3, chunk_seq=4)
+    b1, s1 = encode_chunk(batch)
+    b2, s2 = encode_chunk(batch)
     assert b1 == b2 and s1 == s2
+    # the bytes depend on the chunk alone: table/bucket/chunk ids that
+    # used to seed the selector sample no longer move the codec pick
+    # (these 2-decimal doubles picked bss under some ids, for under others)
+    rng = np.random.default_rng(0)
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(rng.integers(0, 11, 5000) / 100.0),
+         pa.array(rng.integers(0, 9, 5000) / 100.0)],
+        names=["l_discount", "l_tax"])
+    blobs = {b"".join(bytes(p) for p in encode_chunk_pieces(
+        batch, table_id=tid, bucket=bucket, chunk_seq=seq)[0])
+        for tid in ("a", "b", "store0", "store1", "store2")
+        for bucket in (0, 1) for seq in (0, 3)}
+    assert blobs == {encode_chunk(batch)[0]}
 
 
 def test_stats_report_codecs_and_sizes():

@@ -284,7 +284,7 @@ def test_legacy_zlib_and_dmc1_chunks_are_refused(monkeypatch):
          pa.array(list(range(4000)), type=pa.int64())],
         names=["text", "n"])
     monkeypatch.setattr(sel, "_maybe_zlib", legacy_maybe_zlib)
-    blob, stats = encode_chunk(batch, table_id="legacy")
+    blob, stats = encode_chunk(batch)
     flagged = [s["column"] for s in stats if s["zlib"] == 1]
     assert flagged, stats
     monkeypatch.undo()  # decode runs on CURRENT code
@@ -293,7 +293,7 @@ def test_legacy_zlib_and_dmc1_chunks_are_refused(monkeypatch):
     with pytest.raises(ValueError, match="byte-stage flag 1"):
         decode_chunk(blob, flagged[:1])
 
-    good, _ = encode_chunk(batch, table_id="legacy")
+    good, _ = encode_chunk(batch)
     assert decode_chunk(good).equals(batch)
     with pytest.raises(ValueError, match="magic"):
         decode_chunk(b"DMC1" + good[4:])

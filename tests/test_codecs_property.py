@@ -330,15 +330,14 @@ def test_var_bytes_roundtrip(items, seed):
     st.tuples(st.one_of(st.none(), st.binary(max_size=60)),
               st.one_of(st.none(), I64),
               st.one_of(st.none(), st.text(max_size=30))),
-    max_size=80),
-    st.integers(0, 10**6))
-def test_chunk_roundtrip_with_nulls(rows, seq):
+    max_size=80))
+def test_chunk_roundtrip_with_nulls(rows):
     batch = pa.RecordBatch.from_arrays(
         [pa.array([r[0] for r in rows], type=pa.binary()),
          pa.array([r[1] for r in rows], type=pa.int64()),
          pa.array([r[2] for r in rows], type=pa.string())],
         names=["b", "i", "s"])
-    blob, _ = encode_chunk(batch, table_id="prop", bucket=0, chunk_seq=seq)
+    blob, _ = encode_chunk(batch)
     out = decode_chunk(blob)
 
     def ipc(b):
@@ -356,9 +355,8 @@ def test_chunk_roundtrip_with_nulls(rows, seq):
               st.one_of(st.none(), I64),
               st.one_of(st.none(), st.text(max_size=30))),
     max_size=80),
-    st.sets(st.sampled_from(["b", "i", "s"]), min_size=1),
-    st.integers(0, 10**6))
-def test_ranged_file_read_equals_in_memory_pruned_decode(rows, cols, seq):
+    st.sets(st.sampled_from(["b", "i", "s"]), min_size=1))
+def test_ranged_file_read_equals_in_memory_pruned_decode(rows, cols):
     """decode_chunk_file's ranged reads must agree with the in-memory
     pruned decode for every column subset, including all-null columns."""
     import pathlib
@@ -371,7 +369,7 @@ def test_ranged_file_read_equals_in_memory_pruned_decode(rows, cols, seq):
          pa.array([r[1] for r in rows], type=pa.int64()),
          pa.array([r[2] for r in rows], type=pa.string())],
         names=["b", "i", "s"])
-    blob, _ = encode_chunk(batch, table_id="prop", bucket=0, chunk_seq=seq)
+    blob, _ = encode_chunk(batch)
     fp = pathlib.Path(tempfile.mkdtemp(prefix="dm_rng_")) / "c.dmc"
     fp.write_bytes(blob)
     want = sorted(cols)
@@ -399,9 +397,8 @@ def test_ranged_file_read_equals_in_memory_pruned_decode(rows, cols, seq):
         st.lists(st.floats(allow_nan=False, allow_infinity=False, width=32),
                  max_size=6),
         st.lists(st.binary(max_size=12), max_size=4)),
-    max_size=50),
-    st.integers(0, 10**6))
-def test_full_type_surface_chunk_roundtrip(rows, seq):
+    max_size=50))
+def test_full_type_surface_chunk_roundtrip(rows):
     """float32 (NaN/inf bits), decimal128, list<float>, list<binary> — the
     whole extended type surface through one chunk, any selector seed."""
     import decimal
@@ -414,8 +411,7 @@ def test_full_type_surface_chunk_roundtrip(rows, seq):
          pa.array([r[2] for r in rows], type=pa.list_(pa.float32())),
          pa.array([r[3] for r in rows], type=pa.list_(pa.binary()))],
         names=["f32", "dec", "emb", "blobs"])
-    blob, _ = encode_chunk(batch, table_id="prop_full", bucket=1,
-                           chunk_seq=seq)
+    blob, _ = encode_chunk(batch)
     out = decode_chunk(blob)
 
     def ipc(b):

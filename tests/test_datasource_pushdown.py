@@ -54,8 +54,7 @@ def encoded_docs(spark, tmp_path_factory):
     # order by doc_id + small chunks → tight, disjoint doc_id zones
     # (sf0.01 documents is 500 rows → 4 buckets × ~4 chunks of ≤32 rows)
     encode_table(df, out, bucket_expr=(F.col("doc_id") % 4).cast("int"),
-                 n_buckets=4, chunk_rows=32, order_cols=("doc_id",),
-                 table_id="push_docs")
+                 n_buckets=4, chunk_rows=32, order_cols=("doc_id",))
     return out
 
 
@@ -193,15 +192,14 @@ def test_pushdown_with_schema_evolution(spark, tmp_path):
     base = spark.range(0, 500).select(
         F.col("id").alias("doc_id"), F.lit("aa").alias("lang"))
     encode_table(base, out, bucket_expr=(F.col("doc_id") % 4).cast("int"),
-                 n_buckets=4, chunk_rows=128, order_cols=("doc_id",),
-                 table_id="evo1")
+                 n_buckets=4, chunk_rows=128, order_cols=("doc_id",))
     wide = spark.range(500, 1000).select(
         F.col("id").alias("doc_id"), F.lit("bb").alias("lang"),
         (F.col("id") * 2).alias("extra"))
     # disjoint bucket ids: chunk names are keyed (bucket, seq)
     encode_table(wide, out, bucket_expr=(F.col("doc_id") % 4 + 4).cast("int"),
                  n_buckets=8, chunk_rows=128, order_cols=("doc_id",),
-                 table_id="evo2", resume=False)
+                 resume=False)
     register_decoded_view(spark, out, "evo_push", pushdown=True)
     rows = spark.sql("SELECT doc_id, lang, extra FROM evo_push "
                      "WHERE doc_id IN (10, 600) ORDER BY doc_id").collect()
@@ -222,7 +220,7 @@ def test_like_prefix_pushdown_prunes_and_stays_exact(spark, tmp_path_factory):
                            F.col("id").cast("string")).alias("url")))
     encode_table(df.orderBy("url"), out,
                  bucket_expr=(F.col("doc_id") % 4).cast("int"), n_buckets=4,
-                 chunk_rows=128, order_cols=("url",), table_id="pfx")
+                 chunk_rows=128, order_cols=("url",))
     schema = table_schema(out)
     all_files = _flat_files(DumpsterReader({"path": out}, schema)
                             .partitions())
@@ -249,7 +247,7 @@ def test_null_predicates_prune_and_stay_exact(spark, tmp_path_factory):
                   .otherwise(F.col("id") * 3).alias("extra"),
                   (F.col("id") % 2).cast("int").alias("b")))
     encode_table(df, out, bucket_expr=F.col("b"), n_buckets=2,
-                 chunk_rows=64, order_cols=("doc_id",), table_id="nl")
+                 chunk_rows=64, order_cols=("doc_id",))
     schema = table_schema(out)
     all_files = _flat_files(DumpsterReader({"path": out}, schema)
                             .partitions())
@@ -296,7 +294,7 @@ def test_randomized_where_equivalence(spark, tmp_path_factory):
                   .otherwise(F.col("id") * 2).alias("score")))
     encode_table(df.orderBy("doc_id"), out,
                  bucket_expr=(F.col("doc_id") % 4).cast("int"), n_buckets=4,
-                 chunk_rows=256, order_cols=("doc_id",), table_id="rand")
+                 chunk_rows=256, order_cols=("doc_id",))
     register_decoded_view(spark, out, "rand_push", pushdown=True)
     df.createOrReplaceTempView("rand_raw")
     rng = random.Random(7)
@@ -356,8 +354,7 @@ def test_sentinel_fallback_all_nullable(spark, tmp_path):
         .alias("doc_id"),
         F.when(F.col("id") % 5 == 0, None)
         .otherwise((F.col("id") % 3).cast("string")).alias("lang"))
-    encode_table(df, out, bucket_expr=F.lit(0), n_buckets=1, chunk_rows=64,
-                 table_id="allnull")
+    encode_table(df, out, bucket_expr=F.lit(0), n_buckets=1, chunk_rows=64)
     with w.catch_warnings(record=True) as caught:
         w.simplefilter("always")
         register_decoded_view(spark, out, "allnull_v", pushdown=True)
@@ -379,7 +376,7 @@ def test_sentinel_reverified_per_planning_after_null_append(spark, tmp_path):
     df = (spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
           .limit(100))
     encode_table(df, out, bucket_expr=(F.col("doc_id") % 2).cast("int"),
-                 n_buckets=2, table_id="sent_docs")
+                 n_buckets=2)
     register_decoded_view(spark, out, "sent_push", pushdown=True)
     n0 = spark.sql("SELECT count(*) AS n FROM sent_push").collect()[0]["n"]
     assert n0 == 100

@@ -169,7 +169,7 @@ def test_local_mode_zero_shuffle_roundtrip(spark, pages, out_dir, layout):
         .executedPlan().toString()
     assert "Exchange" not in plan, plan
 
-    man = encode_table(pages, out_dir, url_col="url", table_id="lm",
+    man = encode_table(pages, out_dir, url_col="url",
                        chunk_rows=512, **layout)
     dec = decode_table(spark, out_dir)
     _assert_same(pages, dec)
@@ -179,7 +179,7 @@ def test_local_mode_zero_shuffle_roundtrip(spark, pages, out_dir, layout):
 
 
 def test_local_mode_resume_encodes_only_missing_split(spark, pages, out_dir):
-    encode_table(pages, out_dir, url_col="url", table_id="lm",
+    encode_table(pages, out_dir, url_col="url",
                  mode="local", chunk_rows=512)
     mfiles = sorted(glob.glob(os.path.join(out_dir, "manifest", "*.parquet")))
     assert len(mfiles) >= 2
@@ -188,7 +188,7 @@ def test_local_mode_resume_encodes_only_missing_split(spark, pages, out_dir):
     survivor_chunks = {f: os.path.getmtime(f) for f in
                        glob.glob(os.path.join(out_dir, "chunks", "*.dmc"))
                        if int(os.path.basename(f)[1:7]) != victim}
-    encode_table(pages, out_dir, url_col="url", table_id="lm",
+    encode_table(pages, out_dir, url_col="url",
                  mode="local", chunk_rows=512)
     for f, mt in survivor_chunks.items():
         assert os.path.getmtime(f) == mt, f"untouched chunk rewritten: {f}"
@@ -250,11 +250,10 @@ def test_default_resume_of_salted_store_raises(spark, pages, out_dir):
     _assert_same(pages, decode_table(spark, out_dir))
 
 
-@pytest.mark.parametrize("sizing", [{"n_buckets": 8}, {"salt_k": 2},
-                                    {"num_partitions": 4}])
+@pytest.mark.parametrize("sizing", [{"n_buckets": 8}, {"salt_k": 2}])
 def test_split_local_layout_rejects_salted_sizing(pages, out_dir, sizing):
-    """n_buckets / salt_k / num_partitions only size the salted layout; the
-    split-local default used to ignore them silently."""
+    """n_buckets / salt_k only size the salted layout; the split-local
+    default used to ignore them silently."""
     with pytest.raises(ValueError, match='mode="salted"'):
         encode_table(pages, out_dir, url_col="url", **sizing)
     assert not glob.glob(os.path.join(out_dir, "manifest", "*.parquet"))
@@ -267,7 +266,7 @@ def test_partitioned_encode_reference_layout(spark, pages, out_dir):
     from dumpster.engine import encode_table_partitioned
 
     man = encode_table_partitioned(pages, out_dir, ts_col="warc_ts",
-                                   chunk_rows=4096, table_id="hp")
+                                   chunk_rows=4096)
     # layout: every chunk sits under chunks/dt=YYYY-MM-DD/hr=HH/
     files = [r["file"] for r in man.select("file").collect()]
     import re
@@ -368,10 +367,10 @@ def test_partitioned_encode_append_new_earlier_hour(spark, out_dir):
     assert late.count() > 0 and early.count() > 0
 
     encode_table_partitioned(late, out_dir, ts_col="warc_ts",
-                             chunk_rows=512, table_id="inc")
+                             chunk_rows=512)
     # second run sees the full table including the new earlier hour
     encode_table_partitioned(pages, out_dir, ts_col="warc_ts",
-                             chunk_rows=512, table_id="inc")
+                             chunk_rows=512)
     dec = decode_table(spark, out_dir)
     _assert_same(pages, dec)
 
@@ -450,7 +449,7 @@ def test_concurrent_duplicate_encode_is_safe(spark, pages, out_dir):
         try:
             encode_table(pages, out_dir, url_col="url", mode="salted",
                          n_buckets=8,
-                         chunk_rows=512, table_id="race", resume=True)
+                         chunk_rows=512, resume=True)
         except Exception as e:  # noqa: BLE001 - recorded for the assert
             errs.append(repr(e))
 
@@ -550,3 +549,36 @@ def test_clean_orphans_never_collects_file_rows(spark, pages, tmp_path,
     report = clean_orphans(spark, out)
     assert report["orphans"] == 1
     assert sizes and max(sizes) <= 2
+
+
+def test_same_rows_same_bytes_under_any_store_name(spark, tmp_path):
+    """The selector seeds its sample from the chunk (column name, row
+    count), not from the store: one lineitem-shaped frame written into
+    stores with different directory names stores identical chunks,
+    through encode_table and through the df.write sink.  Seeded from the
+    directory name, these two names picked different codecs for some of
+    the 2-decimal columns of both chunks."""
+    import hashlib
+
+    from dumpster.datasource import register_dumpster_source
+    register_dumpster_source(spark)
+    h = lambda s: F.abs(F.xxhash64("id", F.lit(s)))  # noqa: E731
+    df = spark.range(10000, numPartitions=2).select(
+        (F.col("id") / 4).cast("long").alias("l_orderkey"),
+        *[(h(i) % 11 / 100.0).alias(f"d{i}") for i in range(4)],
+        *[(h(10 + i) % 9 / 100.0).alias(f"t{i}") for i in range(4)])
+
+    def digests(path):
+        return {(r["bucket"], r["chunk_seq"]):
+                hashlib.sha256(pathlib.Path(r["file"]).read_bytes())
+                .hexdigest() for r in read_manifest(spark, path).collect()}
+
+    writers = {"encode_table": lambda d: encode_table(df, d),
+               "df.write": lambda d: df.write.format("dumpster")
+               .mode("append").save(d)}
+    for door, write in writers.items():
+        got = []
+        for name in ("first", "second"):
+            write(str(tmp_path / door / name))
+            got.append(digests(str(tmp_path / door / name)))
+        assert len(got[0]) == 2 and got[0] == got[1], door

@@ -23,7 +23,7 @@ def ipc(b: pa.RecordBatch) -> bytes:
 
 
 def roundtrip(batch: pa.RecordBatch) -> None:
-    blob, stats = encode_chunk(batch, table_id="ext", bucket=0, chunk_seq=0)
+    blob, stats = encode_chunk(batch)
     out = decode_chunk(blob)
     assert ipc(out) == ipc(batch)
     return stats
@@ -88,7 +88,7 @@ def test_unsupported_type_still_raises():
         [pa.array([[[1]], [[2]]], type=pa.list_(pa.list_(pa.int64())))],
         names=["nested"])
     with pytest.raises(TypeError):
-        encode_chunk(batch, table_id="ext", bucket=0, chunk_seq=0)
+        encode_chunk(batch)
 
 
 def test_engine_roundtrip_decimal_and_string_lists(spark, tmp_path):
@@ -108,7 +108,7 @@ def test_engine_roundtrip_decimal_and_string_lists(spark, tmp_path):
                   .alias("big")))
     out = str(tmp_path / "exttab")
     encode_table(df, out, mode="salted",
-                 n_buckets=4, chunk_rows=512, table_id="ext")
+                 n_buckets=4, chunk_rows=512)
     dec = decode_table(spark, out)
     # names/types identical; decode reports every field NULLABLE by
     # design (a later shrinking-schema writer's chunks may lack any
@@ -149,7 +149,7 @@ def test_wide_adversarial_table_roundtrip(spark, tmp_path):
     out = str(tmp_path / "wide")
     encode_table(df, out,
                  bucket_expr=F.pmod(F.xxhash64("id"), F.lit(4)).cast("int"),
-                 n_buckets=4, chunk_rows=256, table_id="wide")
+                 n_buckets=4, chunk_rows=256)
     dec = decode_table(spark, out)
     assert df.exceptAll(dec).count() == 0
     assert dec.exceptAll(df).count() == 0

@@ -52,7 +52,7 @@ def _crashing_encode(spark, pages, out, fs):
     # fixed by seed=7, so the layout never varies run to run).
     with pytest.raises(Exception):
         encode_table(pages, out, url_col="url", mode="salted", n_buckets=4,
-                     chunk_rows=64, table_id="t", fs=fs)
+                     chunk_rows=64, fs=fs)
 
 
 def _final_files(out):
@@ -92,7 +92,7 @@ def test_directput_crash_then_resume_bit_identical(spark, pages, tmp_path,
     # garbage from cancelled sibling tasks (simulated multipart parts) is
     # never load-bearing and is swept by clean_orphans afterwards
     encode_table(pages, out, url_col="url", mode="salted", n_buckets=4,
-                 chunk_rows=256, table_id="t", fs=DirectPutFS())
+                 chunk_rows=256, fs=DirectPutFS())
     _assert_same(pages, decode_table(spark, out))
     # crash leftovers (run-1 chunks the resume didn't overwrite, staging
     # files from cancelled siblings) are reclaimable, never load-bearing:
@@ -115,14 +115,14 @@ def test_directput_crash_after_manifest_publish_resumes(spark, pages,
     from dumpster.engine import done_buckets
     assert done_buckets(out)   # at least one bucket committed before dying
     encode_table(pages, out, url_col="url", mode="salted", n_buckets=4,
-                 chunk_rows=256, table_id="t", fs=DirectPutFS())
+                 chunk_rows=256, fs=DirectPutFS())
     _assert_same(pages, decode_table(spark, out))
 
 
 def test_directput_clean_run_no_rename_artifacts(spark, pages, tmp_path):
     out = str(tmp_path / "enc_clean")
     encode_table(pages, out, url_col="url", mode="salted", n_buckets=4,
-                 chunk_rows=256, table_id="t", fs=DirectPutFS())
+                 chunk_rows=256, fs=DirectPutFS())
     _assert_same(pages, decode_table(spark, out))
     for root, _d, files in os.walk(out):
         for f in files:
@@ -171,7 +171,7 @@ def test_clean_orphans_sweeps_inflight_staging(spark, pages, tmp_path):
     .inflight file; clean_orphans must reclaim it like .tmp garbage."""
     out = str(tmp_path / "enc_inflight")
     encode_table(pages, out, url_col="url", mode="salted", n_buckets=4,
-                 chunk_rows=256, table_id="t", fs=DirectPutFS())
+                 chunk_rows=256, fs=DirectPutFS())
     victim = os.path.join(out, "chunks",
                           "b000001_c00000.dmc.inflight-999-1-7")
     open(victim, "wb").write(b"partial multipart upload")

@@ -39,8 +39,7 @@ SCHEMAS = {1: ["doc_id", "lang"], 2: ["doc_id", "lang", "score"]}
 def test_one_call_routes_both_generations(spark, tmp_path):
     out = str(tmp_path / "ms")
     man = encode_table_multischema(
-        _mixed(spark), out, schemas=SCHEMAS, n_buckets=4, chunk_rows=64,
-        table_id="ms")
+        _mixed(spark), out, schemas=SCHEMAS, n_buckets=4, chunk_rows=64)
     # generations land in disjoint bucket namespaces
     buckets = {r["bucket"] for r in man.select("bucket").distinct().collect()}
     assert buckets & set(range(0, 4)) and buckets & set(range(4, 8))
@@ -62,7 +61,7 @@ def test_gen1_chunks_do_not_contain_gen2_columns(spark, tmp_path):
     from dumpster.chunk import decode_chunk_file
     out = str(tmp_path / "ms2")
     encode_table_multischema(_mixed(spark), out, schemas=SCHEMAS,
-                             n_buckets=2, chunk_rows=1024, table_id="ms2")
+                             n_buckets=2, chunk_rows=1024)
     gen1 = [f for f in os.listdir(os.path.join(out, "chunks"))
             if f.startswith(("b000000", "b000001"))]
     gen2 = [f for f in os.listdir(os.path.join(out, "chunks"))

@@ -119,7 +119,7 @@ def test_encoder_fallback_records_the_reason(tmp_path, monkeypatch):
     monkeypatch.setattr(sel, "_maybe_zlib", boom)
     cpus, io_threads = pa.cpu_count(), pa.io_thread_count()
     try:   # the encoder pins both Arrow pools to one thread
-        encoder = _make_encoder(str(tmp_path), "t", 10_000,
+        encoder = _make_encoder(str(tmp_path), 10_000,
                                 publish_manifest=False)
         rows = [r for mb in encoder(iter([routed])) for r in mb.to_pylist()]
     finally:

@@ -192,8 +192,7 @@ def test_mixed_prefix_and_range_pruning_compose(spark, tmp_path):
         F.concat(F.lit("k"), F.lpad(F.col("id").cast("string"), 4, "0"))
         .alias("key"))
     encode_table(docs.orderBy("key"), out, bucket_expr=F.lit(0),
-                 n_buckets=1, chunk_rows=64, order_cols=("key",),
-                 table_id="pfx")
+                 n_buckets=1, chunk_rows=64, order_cols=("key",))
     schema = table_schema(out)
     rd_all = DumpsterReader({"path": out}, schema)
     n_all = sum(len(p.files) for p in rd_all.partitions())

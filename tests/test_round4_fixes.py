@@ -49,7 +49,7 @@ def test_done_buckets_ignores_foreign_manifest_files(spark, tmp_path):
     out = str(tmp_path / "enc")
     pages = synth_pages(spark, 300, seed=3)
     encode_table(pages, out, url_col="url", mode="salted",
-                 n_buckets=2, table_id="t")
+                 n_buckets=2)
     before = done_buckets(out)
     n_manifest = read_manifest(spark, out).count()
     # foreign droppings: a backup copy and junk that matches b*.parquet
@@ -63,7 +63,7 @@ def test_done_buckets_ignores_foreign_manifest_files(spark, tmp_path):
     assert decode_table(spark, out).count() == 300
     # resume path: all buckets done -> no-op, must not raise
     encode_table(pages, out, url_col="url", mode="salted",
-                 n_buckets=2, table_id="t",
+                 n_buckets=2,
                  resume=True)
 
 

@@ -123,8 +123,7 @@ def test_dedup_against_store_null_text_survives(spark, tmp_path):
         F.md5("text").alias("fp"))
     out = tempfile.mkdtemp(prefix="dumpster_t_fpnull_",
                            dir=str(tmp_path))
-    encode_table(ledger, out, mode="local", chunk_rows=64,
-                 table_id="fp_null")
+    encode_table(ledger, out, mode="local", chunk_rows=64)
     kept = sorted(r["doc_id"] for r in
                   dedup.dedup_against_store(spark, docs, out).collect())
     # NULL-text rows (3, 5) survive; both "seen doc" copies drop
@@ -418,7 +417,7 @@ def test_chunk_list_uint64_extremes_roundtrip():
     batch = pa.record_batch({
         "v": pa.array([[2**63, 1, 2**64 - 1], [0], None],
                       type=pa.list_(pa.uint64()))})
-    blob, _ = encode_chunk(batch, table_id="t", bucket=0, chunk_seq=0)
+    blob, _ = encode_chunk(batch)
     out = decode_chunk(blob)
     assert out.column(0).to_pylist() == \
         [[2**63, 1, 2**64 - 1], [0], None]
@@ -431,7 +430,7 @@ def test_decode_chunk_empty_columns_raises():
     from dumpster.chunk import decode_chunk, encode_chunk
 
     batch = pa.record_batch({"a": pa.array([1, 2, 3], type=pa.int64())})
-    blob, _ = encode_chunk(batch, table_id="t", bucket=0, chunk_seq=0)
+    blob, _ = encode_chunk(batch)
     with pytest.raises(ValueError, match="columns"):
         decode_chunk(blob, columns=[])
 

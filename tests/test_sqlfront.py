@@ -21,7 +21,7 @@ def docs_view(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("sqlfront"))
     df = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     encode_table(df, out, bucket_expr=(F.col("doc_id") % 4).cast("int"),
-                 n_buckets=4, chunk_rows=64, table_id="sqlfront_docs")
+                 n_buckets=4, chunk_rows=64)
     register_decoded_view(spark, out, "sf_docs", pushdown=True)
     return out
 
@@ -91,8 +91,7 @@ def pages_view(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("sqlfront_pages"))
     df = synth_pages(spark, 20000, seed=5)
     encode_table(df, out, url_col="url", mode="salted",
-                 n_buckets=2, chunk_rows=8192,
-                 table_id="sqlfront_pages")
+                 n_buckets=2, chunk_rows=8192)
     register_decoded_view(spark, out, "sf_pages", pushdown=True)
     return out
 

@@ -180,6 +180,24 @@ def test_stream_sink_rejects_bad_chunk_rows(spark, tmp_path):
     assert not os.path.exists(out)
 
 
+def test_stream_sink_rejects_unknown_options(spark, tmp_path):
+    src = str(tmp_path / "s7")
+    _write_batch_files(spark, src, 0, 10)
+    stream = (spark.readStream
+              .schema("doc_id long, lang string, text string").parquet(src))
+    out = str(tmp_path / "o7")
+    for name, value in (("chunk_row", "7"), ("table_id", "t")):
+        with pytest.raises(Exception,
+                           match=f"(?s)unknown.*{name}.*chunk_rows"):
+            q = (stream.writeStream.format("dumpster")
+                 .option("path", out)
+                 .option(name, value)
+                 .option("checkpointLocation", str(tmp_path / "c7"))
+                 .trigger(availableNow=True).start())
+            q.awaitTermination(60)
+        assert not os.path.exists(out)
+
+
 def test_store_and_stream_root_never_mix(spark, tmp_path):
     """A root _schema.json makes every reader see that store alone, so a
     table written into a stream-sink root used to hide its batches (two

@@ -120,7 +120,7 @@ def test_stream_manifest_batch_id_ignores_parent_batch_dir(spark, tmp_path):
     pages = synth_pages(spark, 200, seed=3)
     for bid in (0, 1):
         encode_table(pages, str(out / f"batch={bid}"), url_col="url",
-                     mode="salted", n_buckets=2, table_id=f"b{bid}")
+                     mode="salted", n_buckets=2)
     man = stream_manifest(spark, str(out))
     got = {r["batch_id"]: r["rows"] for r in
            man.groupBy("batch_id").agg(F.sum("n_rows").alias("rows"))

@@ -380,8 +380,7 @@ def test_dedup_against_store(spark, tmp_path):
     ledger = docs.filter("doc_id in (1, 3)").select(
         F.md5(F.col("text")).alias("fp"))
     store = str(tmp_path / "fp_store")
-    encode_table(ledger, store, mode="local", chunk_rows=1024,
-                 table_id="fp_ledger_t")
+    encode_table(ledger, store, mode="local", chunk_rows=1024)
     out = dedup.dedup_against_store(spark, docs, store)
     assert sorted(r.doc_id for r in out.collect()) == [2, 4]
     assert out.columns == docs.columns

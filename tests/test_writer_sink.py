@@ -199,6 +199,22 @@ def test_bad_chunk_rows_raises_before_writing(spark, tmp_path):
     assert not os.path.exists(out)
 
 
+def test_unknown_option_raises_before_writing(spark, tmp_path):
+    """A misspelt or removed option (``chunk_row``, ``table_id``) used to
+    be ignored silently, writing with the defaults; the sink now names
+    its options and writes nothing."""
+    out = str(tmp_path / "w_opt")
+    _docs(spark).limit(10).write.format("dumpster").mode("append").save(out)
+    before = sorted(os.listdir(out))
+    for name, value in (("chunk_row", "7"), ("table_id", "t")):
+        with pytest.raises(Exception,
+                           match=f"(?s)unknown.*{name}.*chunk_rows"):
+            _docs(spark).write.format("dumpster") \
+                .option(name, value).mode("append").save(out)
+        assert sorted(os.listdir(out)) == before
+    assert decode_table(spark, out).count() == 10
+
+
 def test_written_store_supports_pushdown(spark, tmp_path):
     out = str(tmp_path / "w9")
     df = _docs(spark).orderBy("doc_id")
@@ -227,7 +243,7 @@ def test_hostsorted_frame_through_plain_sink_roundtrip(spark, tmp_path):
     (pages.withColumn("__host", pipeline.host_of("url"))
      .sortWithinPartitions("__host").drop("__host")
      .write.format("dumpster").option("chunk_rows", "256")
-     .option("table_id", "whs").mode("append").save(out))
+     .mode("append").save(out))
     # a fresh store's range starts at 0: bucket == the write task's id
     assert done_buckets(out) == set(range(n_tasks))
     assert read_manifest(spark, out) \
