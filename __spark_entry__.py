@@ -683,7 +683,7 @@ def q_compact_stream_roundtrip(spark, sf):
     HourlyBasedRecordConsumer.java:155-157).  Returns the full compacted
     table row set so the driver hash checks content equality; the chunk
     count drop is asserted in tests/test_streaming.py."""
-    from dumpster.streaming import compact_stream, decode_stream_table
+    from dumpster.streaming import compact_stream
 
     docs = _t(spark, sf, "documents")
     src = tempfile.mkdtemp(prefix="dumpster_q_compact_src_")

@@ -968,7 +968,7 @@ def _chunk_may_match(stats: dict, n_rows: int, zones,
 def _plan_chunks(stores: list[str], zones=(), null_preds=(),
                  path_glob: str | None = None,
                  sentinel: str | None = None) -> list[tuple[str, int]]:
-    """The one chunk planner behind decode_tables and the dumpster
+    """The one chunk planner behind decode_table and the dumpster
     DataSource: ``(file, encoded_bytes)`` of every committed chunk of the
     stores that survives ``path_glob`` and the zone-map rule
     (_chunk_may_match over ``zones`` and ``null_preds``), sorted by file.
@@ -1045,7 +1045,7 @@ def _arrow_schema(fields) -> pa.Schema:
 def _scan_chunk_files(files, schema: pa.Schema,
                       columns: list[str] | None = None, eq_sets=(),
                       on_error: str = "raise", io_trace: str | None = None):
-    """The one executor-side chunk reader (decode_tables and the dumpster
+    """The one executor-side chunk reader (decode_table and the dumpster
     DataSource): per file, the bloom gate (``eq_sets`` = ``(col, byte
     values)``; a file whose blooms prove every value absent is skipped
     exactly), the decode (ranged reads of ``columns`` only when a
@@ -1293,24 +1293,14 @@ def decode_table(spark: SparkSession, out_dir: str,
                  zone_filter: tuple | None = None,
                  path_glob: str | None = None,
                  on_error: str = "raise") -> DataFrame:
-    """decode_tables over the stores ``out_dir`` names: one encoded store,
-    or a stream-sink root, whose committed ``batch=N`` stores decode as
-    one table (a path that is neither raises ValueError)."""
-    return decode_tables(spark, _resolve_stores(out_dir, required=True),
-                         columns=columns, zone_filter=zone_filter,
-                         path_glob=path_glob, on_error=on_error)
-
-
-def decode_tables(spark: SparkSession, dirs: list[str], *,
-                  columns: list[str] | None = None,
-                  zone_filter: tuple | None = None,
-                  path_glob: str | None = None,
-                  on_error: str = "raise") -> DataFrame:
     """Inverse of encode_table: manifest → DataFrame, bit-identical.
 
-    The same chunk scan as the dumpster DataSource: the driver plans the
-    file list (_plan_chunks: ``path_glob``, zone maps), tasks decode the
-    surviving chunk files (_scan_chunk_files) — no data shuffle at all.
+    ``out_dir`` is one encoded store, or a stream-sink root whose
+    committed ``batch=N`` stores decode as one table (a path that is
+    neither raises ValueError).  The same chunk scan as the dumpster
+    DataSource: the driver plans the file list (_plan_chunks:
+    ``path_glob``, zone maps), tasks decode the surviving chunk files
+    (_scan_chunk_files) — no data shuffle at all.
     Column pruning reaches the chunk container so unselected payloads
     are never read or decompressed.
     ``zone_filter=(col, lo, hi)`` — or a list of such tuples, ANDed —
@@ -1321,11 +1311,12 @@ def decode_tables(spark: SparkSession, dirs: list[str], *,
     zones).  ``on_error="skip"`` scans around corrupt chunk files (pair
     with verify_chunks to locate them).
 
-    Multiple ``dirs`` (same schema — e.g. the batch=N tables of a
-    streaming ingest) decode as ONE plan: their manifests are listed
-    together, so the plan stays constant-size however many tables are
-    unioned — no per-table unionByName chain.
+    A stream root's batch stores (schemas add-only unioned, older
+    batches null-filled) decode as ONE plan: their manifests are listed
+    together, so the plan stays constant-size however many batches
+    there are — no per-batch unionByName chain.
     """
+    dirs = _resolve_stores(out_dir, required=True)
     full = _union_schema(dirs)
     logical = None
     with_logical = [d for d in dirs

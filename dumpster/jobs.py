@@ -138,7 +138,8 @@ def run_jobs(spark: SparkSession, cfg: JobConfig) -> list[dict]:
     the reference's restart: completed buckets are skipped via manifests).
     Returns one summary dict per table."""
     from .engine import (encode_summary, encode_table,
-                         encode_table_partitioned, register_decoded_view)
+                         encode_table_partitioned, read_manifest,
+                         register_decoded_view)
 
     for t in cfg.tables:
         # salted-only sizing is refused up front, before any table is
@@ -160,7 +161,7 @@ def run_jobs(spark: SparkSession, cfg: JobConfig) -> list[dict]:
         chunk_rows = t.chunk_rows or cfg.chunk_rows
         if t.mode == "stream_hourly":
             from .streaming import (encode_stream_partitioned,
-                                    hourly_windowed_counts, stream_manifest)
+                                    hourly_windowed_counts)
             stream = (spark.readStream.schema(df.schema)
                       .parquet(t.input))
             if t.trigger_seconds is not None and not t.run_for_seconds:
@@ -198,7 +199,7 @@ def run_jobs(spark: SparkSession, cfg: JobConfig) -> list[dict]:
                               os.path.join(out_dir, "_hourly_counts"))
                       .start())
                 cq.awaitTermination()
-            man = stream_manifest(spark, out_dir).drop("batch_id")
+            man = read_manifest(spark, out_dir)
         elif t.mode == "hourly":
             man = encode_table_partitioned(
                 df, out_dir, ts_col=t.ts_col, chunk_rows=chunk_rows)

@@ -24,56 +24,7 @@ from pyspark.sql import functions as F
 
 # batch_dirs lives with the engine's one store resolver; re-exported here
 from .engine import _read_manifests, _refuse_mixed_root, batch_dirs, \
-    encode_table
-
-
-def _start_foreach_batch(stream_df: DataFrame, sink, out_dir: str,
-                         checkpoint: str, trigger_available_now: bool,
-                         trigger_seconds: int | None = None):
-    """Start ``stream_df`` into ``sink(batch_df, batch_id)`` under
-    ``checkpoint``: ``availableNow`` drains what is there, otherwise
-    ``trigger_seconds`` sets the processing-time cadence (jobs.yaml
-    ``trigger_seconds`` — the reference's partitionForget tuning
-    surface).  Refuses an ``out_dir`` that already holds a store."""
-    _refuse_mixed_root(out_dir, stream=True)
-    writer = (stream_df.writeStream
-              .foreachBatch(sink)
-              .option("checkpointLocation", checkpoint))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
-
-
-def encode_stream(stream_df: DataFrame, out_dir: str, *,
-                  checkpoint: str, url_col: str | None = None,
-                  bucket_expr=None, n_buckets: int = 32, salt_k: int = 4,
-                  chunk_rows: int = 65536, trigger_available_now: bool = True,
-                  trigger_seconds: int | None = None):
-    """Stream → encoded chunks: one ``batch=N`` table per micro-batch.
-
-    Exactly-once story (mirrors the reference's upload→commit ordering,
-    HourlyBasedPartitioner.java:160-182 then TopicStreamer.java:65):
-    chunk files + per-bucket manifests are written inside foreachBatch;
-    the streaming checkpoint commits the batch only after foreachBatch
-    returns, and a re-delivered batch re-enters the same ``batch=N``
-    directory where the manifest resume logic skips completed buckets.
-    That is why every batch is encoded with the salted layout (or
-    ``bucket_expr``'s), never encode_table's split-local default: a
-    micro-batch DataFrame is RDD-backed, so the process that redelivers
-    a batch after a crash cannot prove its splits match the crashed
-    run's, and a split-local resume would refuse the batch forever.
-    """
-    def sink(batch_df: DataFrame, batch_id: int):
-        target = os.path.join(out_dir, f"batch={batch_id:06d}")
-        encode_table(batch_df, target, url_col=url_col,
-                     bucket_expr=bucket_expr, n_buckets=n_buckets,
-                     salt_k=salt_k, mode="salted", chunk_rows=chunk_rows,
-                     resume=True)
-
-    return _start_foreach_batch(stream_df, sink, out_dir, checkpoint,
-                                trigger_available_now, trigger_seconds)
+    decode_table, encode_table, encode_table_partitioned
 
 
 def encode_stream_partitioned(stream_df: DataFrame, out_dir: str, *,
@@ -86,22 +37,34 @@ def encode_stream_partitioned(stream_df: DataFrame, out_dir: str, *,
     This is the reference's ACTUAL job shape (Kafka → hourly dt=/hr=
     Parquet files, README.md:48): each micro-batch writes
     ``batch=N/chunks/dt=YYYY-MM-DD/hr=HH/...`` via
-    engine.encode_table_partitioned.  The ``batch=N`` level plays the
-    role of the reference's unique ``{partition}_{firstOffset}`` file
-    names (HourlyBasedRecordConsumer.java:157): two batches can both add
-    rows to the same event-time hour without overwriting, and a
-    re-delivered batch is absorbed by the per-bucket manifest resume.
-    Read back with decode_stream_table(path_glob="*/hr=05/*") for
-    hour-pruned scans across all batches.
+    engine.encode_table_partitioned inside ``foreachBatch``.  The
+    ``batch=N`` level plays the role of the reference's unique
+    ``{partition}_{firstOffset}`` file names
+    (HourlyBasedRecordConsumer.java:157): two batches can both add rows
+    to the same event-time hour without overwriting, and a re-delivered
+    batch is absorbed by the per-bucket manifest resume.  Read back with
+    decode_table(out_dir, path_glob="*/hr=05/*") for hour-pruned scans
+    across all batches.
+
+    ``availableNow`` drains what is there, otherwise ``trigger_seconds``
+    sets the processing-time cadence (jobs.yaml ``trigger_seconds`` —
+    the reference's partitionForget tuning surface).  Refuses an
+    ``out_dir`` that already holds a store.
     """
     def sink(batch_df: DataFrame, batch_id: int):
-        from .engine import encode_table_partitioned
         target = os.path.join(out_dir, f"batch={batch_id:06d}")
         encode_table_partitioned(batch_df, target, ts_col=ts_col,
                                  chunk_rows=chunk_rows)
 
-    return _start_foreach_batch(stream_df, sink, out_dir, checkpoint,
-                                trigger_available_now, trigger_seconds)
+    _refuse_mixed_root(out_dir, stream=True)
+    writer = (stream_df.writeStream
+              .foreachBatch(sink)
+              .option("checkpointLocation", checkpoint))
+    if trigger_available_now:
+        writer = writer.trigger(availableNow=True)
+    elif trigger_seconds:
+        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    return writer.start()
 
 
 class CapabilityMissing(RuntimeError):
@@ -209,24 +172,6 @@ def kafka_avro_source(spark: SparkSession, bootstrap_servers: str,
         raw, avro_schema_json, confluent_wire_format=confluent_wire_format)
 
 
-def decode_stream_table(spark: SparkSession, out_dir: str,
-                        columns: list[str] | None = None,
-                        path_glob: str | None = None) -> DataFrame:
-    """All micro-batch tables decoded as ONE shuffle-free plan.
-
-    engine.decode_tables reads every batch's manifests in a single
-    multi-path scan, so the plan stays constant-size however many
-    ``batch=N`` tables exist — a day of 1-minute micro-batches would
-    otherwise be a 1440-way unionByName chain and a planning-time blowup.
-    ``path_glob`` prunes dt=/hr= directories inside every batch (pair
-    with encode_stream_partitioned)."""
-    from .engine import decode_tables
-    dirs = batch_dirs(out_dir)
-    if not dirs:
-        raise FileNotFoundError(f"no batch=* tables under {out_dir}")
-    return decode_tables(spark, dirs, columns=columns, path_glob=path_glob)
-
-
 def compact_stream(spark: SparkSession, out_dir: str, dst_dir: str, *,
                    url_col: str | None = None,
                    n_buckets: int | None = None,
@@ -238,7 +183,8 @@ def compact_stream(spark: SparkSession, out_dir: str, dst_dir: str, *,
     small file per hour/partition (the reference emits one parquet file
     per writer close, HourlyBasedRecordConsumer.java:155-157), and after
     a week the table is millions of KB-sized objects.  This op is the
-    engine's answer: decode every ``batch=N`` table (shuffle-free) and
+    engine's answer: decode every ``batch=N`` store of the stream-sink
+    root ``out_dir`` (or the one store it names) shuffle-free and
     re-encode into ``dst_dir`` with full-size chunks and the chosen
     layout — the same two primitives composed, so it inherits round-trip
     exactness and resume (an interrupted compaction redoes only missing
@@ -251,7 +197,7 @@ def compact_stream(spark: SparkSession, out_dir: str, dst_dir: str, *,
     untouched; swap directories after verifying, mirroring the
     reference's upload-then-commit ordering.
     """
-    df = decode_stream_table(spark, out_dir)
+    df = decode_table(spark, out_dir)
     return encode_table(df, dst_dir, url_col=url_col, n_buckets=n_buckets,
                         chunk_rows=chunk_rows, mode=mode)
 

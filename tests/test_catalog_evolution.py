@@ -222,29 +222,28 @@ def test_partitioned_keeps_user_dt_and_hr_columns(spark, tmp_path):
 
 def test_decode_tables_unions_evolved_schemas(spark, docs, tmp_path):
     """A stream whose schema widened across restarts decodes as ONE
-    table: decode_tables applies the same add-only union as write-side
-    evolution, null-filling older batches."""
-    from dumpster.engine import decode_tables
-
-    d1 = str(tmp_path / "b1")
-    d2 = str(tmp_path / "b2")
+    table: decode_table over the stream root applies the same add-only
+    union as write-side evolution, null-filling older batches."""
+    root = tmp_path / "stream"
+    d1 = str(root / "batch=000000")
+    d2 = str(root / "batch=000001")
     encode_table(docs.filter(F.col("doc_id") < 100), d1,
                  bucket_expr=F.lit(0), n_buckets=1, resume=False)
     encode_table(docs.filter(F.col("doc_id") >= 100)
                  .withColumn("score", (F.col("doc_id") * 3).cast("long")),
                  d2, bucket_expr=F.lit(0), n_buckets=1, resume=False)
-    dec = decode_tables(spark, [d1, d2])
+    dec = decode_table(spark, str(root))
     assert set(dec.columns) == {"doc_id", "text", "lang", "score"}
     assert dec.count() == docs.count()
     assert dec.filter("doc_id < 100 AND score IS NOT NULL").count() == 0
     assert dec.filter("doc_id >= 100 AND score != doc_id * 3").count() == 0
 
     # genuine type conflict still raises
-    d3 = str(tmp_path / "b3")
+    d3 = str(root / "batch=000002")
     encode_table(docs.withColumn("lang", F.lit(1).cast("long")), d3,
                  bucket_expr=F.lit(0), n_buckets=1, resume=False)
     with pytest.raises(ValueError, match="cannot change column"):
-        decode_tables(spark, [d1, d3]).count()
+        decode_table(spark, str(root)).count()
 
 
 def test_evolved_store_pruned_and_zone_filtered_decode(spark, docs, tmp_path):

@@ -442,13 +442,14 @@ def test_nested_flat_sep_collision_rejected(spark, tmp_path):
 
 
 def test_mixed_struct_flat_dirs_rejected(spark, tmp_path):
-    """decode_tables over a flat dir plus a struct-typed dir must raise,
-    not return mangled '@'-separated flat columns."""
+    """decode_table over a stream root holding a flat batch store and a
+    struct-typed one must raise, not return mangled '@'-separated flat
+    columns."""
     import pytest
     import pyspark.sql.functions as F
-    from dumpster.engine import decode_tables, encode_table
-    flat = str(tmp_path / "flatd")
-    struct = str(tmp_path / "structd")
+    from dumpster.engine import decode_table, encode_table
+    flat = str(tmp_path / "root" / "batch=000000")
+    struct = str(tmp_path / "root" / "batch=000001")
     spark.range(0, 10).select(F.col("id").alias("doc_id")) \
         .pipe = None  # noqa — keep lint quiet on unused
     encode_table(spark.range(0, 10).select(F.col("id").alias("doc_id")),
@@ -458,7 +459,7 @@ def test_mixed_struct_flat_dirs_rejected(spark, tmp_path):
         F.struct(F.col("id").alias("x")).alias("s")),
         struct, bucket_expr=F.lit(0), n_buckets=1)
     with pytest.raises(ValueError, match="struct-typed and flat"):
-        decode_tables(spark, [flat, struct]).count()
+        decode_table(spark, str(tmp_path / "root")).count()
 
 
 # --- ops-family review fixes -------------------------------------------------

@@ -1,9 +1,8 @@
 """df.writeStream.format("dumpster") — the V2 streaming sink.
 
 Contract under test:
-* each micro-batch lands as its own ``batch=N`` store (the
-  encode_stream layout), decodable with decode_stream_table and
-  foldable with compact_stream,
+* each micro-batch lands as its own ``batch=N`` store, decodable as one
+  table with decode_table on the root and foldable with compact_stream,
 * batch-atomic visibility: manifests appear only via commit(batchId),
 * the task-side batch id (streaming.sql.batchId property) matches the
   committed batchId — chunks never cross batch namespaces,
@@ -17,9 +16,8 @@ import pytest
 import pyspark.sql.functions as F
 
 from dumpster.datasource import register_dumpster_source
-from dumpster.engine import done_buckets
-from dumpster.streaming import batch_dirs, compact_stream, \
-    decode_stream_table, stream_manifest
+from dumpster.engine import decode_table, done_buckets
+from dumpster.streaming import batch_dirs, compact_stream, stream_manifest
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -58,7 +56,7 @@ def test_stream_sink_roundtrip_and_layout(spark, tmp_path):
         assert done_buckets(d)                 # manifests were committed
         assert os.path.exists(os.path.join(d, "_schema.json"))
 
-    got = decode_stream_table(spark, out)
+    got = decode_table(spark, out)
     want = spark.read.parquet(src)
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
@@ -78,21 +76,59 @@ def test_stream_sink_roundtrip_and_layout(spark, tmp_path):
           .trigger(availableNow=True).start())
     q2.awaitTermination(120)
     assert len(batch_dirs(out)) == 3
-    assert decode_stream_table(spark, out).count() == 600
+    assert decode_table(spark, out).count() == 600
 
     # the stream layout feeds compact_stream unchanged
     dst = str(tmp_path / "compacted")
     compact_stream(spark, out, dst, chunk_rows=4096, mode="local")
-    from dumpster.engine import decode_table
     folded = decode_table(spark, dst)
     assert folded.count() == 600
     assert folded.exceptAll(spark.read.parquet(src)).count() == 0
 
 
+def test_replayed_batch_with_fewer_tasks_keeps_rows_once(spark, tmp_path):
+    """A crash after commit(batchId) published but before Spark logged
+    the commit replays the batch; a restart that splits it into fewer
+    write tasks (another core count, another maxPartitionBytes) must not
+    leave the crashed run's extra bucket manifests beside the replay's,
+    or every row they hold reads back twice."""
+    from dumpster.engine import clean_orphans
+    src = str(tmp_path / "s8src")
+    out = str(tmp_path / "s8out")
+    ckpt = str(tmp_path / "s8ck")
+    _write_batch_files(spark, src, 0, 400)
+
+    def run(n_tasks):
+        q = (spark.readStream
+             .schema("doc_id long, lang string, text string").parquet(src)
+             .repartition(n_tasks)
+             .writeStream.format("dumpster").option("path", out)
+             .option("checkpointLocation", ckpt)
+             .trigger(availableNow=True).start())
+        q.awaitTermination(120)
+        assert q.exception() is None
+
+    run(4)
+    batch = os.path.join(out, "batch=000000")
+    assert done_buckets(batch) == {0, 1, 2, 3}
+    for f in ("0", ".0.crc"):
+        if os.path.exists(os.path.join(ckpt, "commits", f)):
+            os.remove(os.path.join(ckpt, "commits", f))
+    run(2)
+    got = decode_table(spark, out)
+    assert got.count() == 400
+    assert got.distinct().count() == 400
+    assert done_buckets(batch) == {0, 1}
+    assert got.exceptAll(spark.read.parquet(src)).count() == 0
+    # the dropped buckets' chunk files are orphans of the batch store
+    assert clean_orphans(spark, batch)["orphans"] == 2
+    assert decode_table(spark, out).count() == 400
+
+
 def test_format_reads_stream_root(spark, tmp_path):
     """spark.read.format("dumpster") pointed at a writeStream output root
     scans every batch=N store as one table — SQL users need not know the
-    layout or switch to decode_stream_table."""
+    layout or call a stream-specific reader."""
     src = str(tmp_path / "s3src")
     out = str(tmp_path / "s3out")
     _write_batch_files(spark, src, 0, 120)
@@ -203,8 +239,8 @@ def test_store_and_stream_root_never_mix(spark, tmp_path):
     table written into a stream-sink root used to hide its batches (two
     30-row batches plus a 5-row append read back as 5 rows).  Every
     writer now refuses the other kind of root before writing anything."""
-    from dumpster.engine import decode_table, encode_table
-    from dumpster.streaming import encode_stream
+    from dumpster.engine import encode_table
+    from dumpster.streaming import encode_stream_partitioned
     src = str(tmp_path / "s6src")
     out = str(tmp_path / "s6out")
     _write_batch_files(spark, src, 0, 30)
@@ -231,7 +267,8 @@ def test_store_and_stream_root_never_mix(spark, tmp_path):
     store = str(tmp_path / "s6store")
     extra.write.format("dumpster").mode("append").save(store)
     with pytest.raises(ValueError, match="holds an encoded table"):
-        encode_stream(stream, store, checkpoint=str(tmp_path / "s6ck2"))
+        encode_stream_partitioned(stream, store,
+                                  checkpoint=str(tmp_path / "s6ck2"))
     with pytest.raises(Exception, match="holds an encoded table"):
         q = (stream.writeStream.format("dumpster").option("path", store)
              .option("checkpointLocation", str(tmp_path / "s6ck3"))
@@ -261,13 +298,11 @@ def test_uncommitted_batch_dirs_invisible(spark, tmp_path):
               "wb") as f:
         f.write(b"partial")
     assert len(batch_dirs(out)) == 1           # committed batch only
-    assert decode_stream_table(spark, out).count() == 100
+    assert decode_table(spark, out).count() == 100
     assert spark.read.format("dumpster").option("path", out) \
         .load().count() == 100
     # every reader resolves the stream root to the same committed stores
-    from dumpster.engine import clean_orphans, decode_table, \
-        read_manifest, verify_chunks
-    assert decode_table(spark, out).count() == 100
+    from dumpster.engine import clean_orphans, read_manifest, verify_chunks
     n_man = read_manifest(spark, out).count()
     assert n_man == stream_manifest(spark, out).count() > 0
     committed = sorted(r.file for r in

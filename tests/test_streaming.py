@@ -6,50 +6,18 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from dumpster.streaming import (decode_stream_table, encode_stream,
+from dumpster.engine import decode_table
+from dumpster.streaming import (encode_stream_partitioned,
                                 hourly_windowed_counts, stream_manifest)
 from dumpster.synth import synth_pages
 
 
-def test_stream_encode_decode_roundtrip(spark, tmp_path):
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "enc")
-    ckpt = str(tmp_path / "ckpt")
-    pages = synth_pages(spark, 1200, seed=9).cache()
-    a = pages.filter(F.col("warc_ts") < "2026-01-01 00:05:00")
-    b = pages.exceptAll(a)
-
-    a.write.mode("overwrite").parquet(os.path.join(src, "p1"))
-    schema = spark.read.parquet(os.path.join(src, "p1")).schema
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1")
-              .parquet(os.path.join(src, "*")))
-    q = encode_stream(stream, out, checkpoint=ckpt, url_col="url",
-                      n_buckets=4, chunk_rows=512)
-    q.awaitTermination(120)
-
-    # second micro-batch arrives later; availableNow query restarts
-    b.write.mode("overwrite").parquet(os.path.join(src, "p2"))
-    q2 = encode_stream(stream, out, checkpoint=ckpt, url_col="url",
-                       n_buckets=4, chunk_rows=512)
-    q2.awaitTermination(120)
-
-    dec = decode_stream_table(spark, out)
-    assert dec.count() == 1200
-    assert pages.exceptAll(dec).count() == 0
-    assert dec.exceptAll(pages).count() == 0
-
-    man = stream_manifest(spark, out)
-    assert man.select("batch_id").distinct().count() >= 2
-    assert man.agg(F.sum("n_rows")).collect()[0][0] == 1200
-
-
 def test_stream_resumes_partly_committed_batch_after_restart(spark, tmp_path):
-    """A process that dies after some of batch 0's buckets published
-    their manifests, but before the checkpoint committed the batch,
-    leaves exactly this on disk: offsets/0 without commits/0, and a
-    partial batch=000000 store.  The restarted query redelivers batch 0
-    as a new RDD-backed DataFrame; it must finish the batch, once."""
+    """A process that dies after some of batch 0's hour buckets
+    published their manifests, but before the checkpoint committed the
+    batch, leaves exactly this on disk: offsets/0 without commits/0, and
+    a partial batch=000000 store.  The restarted query redelivers batch
+    0 as a new RDD-backed DataFrame; it must finish the batch, once."""
     import glob as _glob
 
     src = str(tmp_path / "src")
@@ -59,23 +27,23 @@ def test_stream_resumes_partly_committed_batch_after_restart(spark, tmp_path):
     pages.write.parquet(os.path.join(src, "p1"))
     stream = (spark.readStream.schema(pages.schema)
               .parquet(os.path.join(src, "*")))
-    encode_stream(stream, out, checkpoint=ckpt, url_col="url",
-                  n_buckets=4, chunk_rows=128).awaitTermination(120)
+    encode_stream_partitioned(stream, out, checkpoint=ckpt,
+                              chunk_rows=128).awaitTermination(120)
 
     mans = sorted(_glob.glob(os.path.join(out, "batch=000000", "manifest",
                                           "b*.parquet")))
-    assert len(mans) > 1
+    assert len(mans) > 1                       # one manifest per hour
     for m in mans[1:]:
         os.remove(m)
     for f in ("0", ".0.crc"):
         if os.path.exists(os.path.join(ckpt, "commits", f)):
             os.remove(os.path.join(ckpt, "commits", f))
 
-    q = encode_stream(stream, out, checkpoint=ckpt, url_col="url",
-                      n_buckets=4, chunk_rows=128)
+    q = encode_stream_partitioned(stream, out, checkpoint=ckpt,
+                                  chunk_rows=128)
     q.awaitTermination(120)
     assert q.exception() is None
-    dec = decode_stream_table(spark, out)
+    dec = decode_table(spark, out)
     assert dec.count() == 600
     assert pages.exceptAll(dec).count() == 0
     assert dec.exceptAll(pages).count() == 0
@@ -88,7 +56,7 @@ def test_compact_stream_default_resumes_interrupted_compaction(spark,
     rerun without duplicating or dropping a row."""
     import glob as _glob
 
-    from dumpster.engine import decode_table, encode_table
+    from dumpster.engine import encode_table
     from dumpster.streaming import compact_stream
 
     out = str(tmp_path / "enc")
@@ -193,8 +161,6 @@ def test_stream_partitioned_reference_tree(spark, tmp_path):
     a plain hour filter on the union."""
     import glob as _glob
 
-    from dumpster.streaming import encode_stream_partitioned
-
     src = str(tmp_path / "psrc")
     out = str(tmp_path / "penc")
     ckpt = str(tmp_path / "pckpt")
@@ -220,11 +186,11 @@ def test_stream_partitioned_reference_tree(spark, tmp_path):
                                     "dt=*", "hr=*", "*.dmc"))
     assert files, "no dt=/hr= chunk files written by the stream"
 
-    dec = decode_stream_table(spark, out)
+    dec = decode_table(spark, out)
     assert dec.count() == 1000
     assert pages.exceptAll(dec).count() == 0
 
-    pruned = decode_stream_table(spark, out, path_glob="*/hr=00/*")
+    pruned = decode_table(spark, out, path_glob="*/hr=00/*")
     expect = pages.filter(F.hour("warc_ts") == 0)
     assert expect.exceptAll(pruned).count() == 0
     assert pruned.exceptAll(expect).count() == 0
@@ -235,8 +201,8 @@ def test_compact_stream_merges_chunklets(spark, tmp_path):
     bit-identical content, fewer files."""
     import glob as _glob
 
-    from dumpster.engine import decode_table, read_manifest
-    from dumpster.streaming import compact_stream, encode_stream
+    from dumpster.datasource import register_dumpster_source
+    from dumpster.streaming import compact_stream
 
     src = str(tmp_path / "csrc")
     out = str(tmp_path / "cenc")
@@ -246,13 +212,16 @@ def test_compact_stream_merges_chunklets(spark, tmp_path):
     parts = [pages.filter(F.pmod(F.xxhash64("url"), F.lit(4)) == i)
              for i in range(4)]
     schema = pages.schema
+    register_dumpster_source(spark)
     for i, p in enumerate(parts):
         p.write.mode("overwrite").parquet(os.path.join(src, f"p{i}"))
         stream = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", "1")
                   .parquet(os.path.join(src, "*")))
-        encode_stream(stream, out, checkpoint=ckpt, url_col="url",
-                      n_buckets=4, chunk_rows=256).awaitTermination(120)
+        (stream.writeStream.format("dumpster")
+         .option("path", out).option("chunk_rows", "64")
+         .option("checkpointLocation", ckpt)
+         .trigger(availableNow=True).start().awaitTermination(120))
 
     small = _glob.glob(os.path.join(out, "batch=*", "chunks", "*.dmc"))
     assert len(small) > 8

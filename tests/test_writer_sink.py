@@ -296,25 +296,21 @@ def test_failed_overwrite_preserves_existing_table(spark, tmp_path):
 
 def test_overwrite_clears_stream_batches(spark, tmp_path):
     """Round-5 review finding: overwrite on a stream-sink root left the
-    old batch=* sub-stores on disk, so decode_stream_table/compact_stream
-    resurrected supposedly-overwritten rows."""
+    old batch=* sub-stores on disk, so readers of the root resurrected
+    supposedly-overwritten rows."""
     import glob
-
-    from dumpster.streaming import decode_stream_table
 
     out = str(tmp_path / "ow2")
     # simulate a stream store: two batch=N sub-stores
     for i in range(2):
         _docs(spark).limit(20).write.format("dumpster").mode("append") \
             .save(os.path.join(out, f"batch={i:06d}"))
-    assert decode_stream_table(spark, out).count() == 40
+    assert decode_table(spark, out).count() == 40
     _docs(spark).limit(5).write.format("dumpster").mode("overwrite") \
         .save(out)
     assert glob.glob(os.path.join(out, "batch=*")) == []
-    # the root is now a plain store: the stream reader refuses loudly
-    # instead of resurrecting overwritten batches
-    with pytest.raises(FileNotFoundError, match="batch"):
-        decode_stream_table(spark, out)
+    # the root is now a plain store holding the overwritten rows only
+    assert decode_table(spark, out).count() == 5
     assert spark.read.format("dumpster").option("path", out).load() \
         .count() == 5
 
