@@ -15,7 +15,7 @@ Python DataSource whose reader
 * returns every filter back to Spark (chunk-granularity pruning is
   conservative, not exact — Spark re-applies the row-level predicate, so
   answers stay exact no matter how coarse the zones are),
-* bin-packs surviving chunk files into ~``target_bytes`` input partitions
+* bin-packs surviving chunk files into ~64 MiB input partitions
   (small-chunk streams don't become task-per-file storms).
 
 Scale note: ``partitions()`` reads the manifest driver-side — the same
@@ -27,7 +27,7 @@ table.  ``engine.decode_table`` runs the same scan — the same stores
 (engine._resolve_stores), the one chunk planner (engine._plan_chunks:
 manifest listing plus the zone-map rule), task-side decode
 (engine._scan_chunk_files) — and differs only in how it feeds files to
-tasks (here a ``target_bytes`` bin-pack, there a file-index range).
+tasks (here a 64 MiB bin-pack, there a file-index range).
 
 Column pruning: the Python DataSource API (4.1) has no
 SupportsPushDownRequiredColumns hook yet, so a plain ``SELECT lang``
@@ -101,7 +101,10 @@ class DumpsterDataSource(DataSource):
       path          — encoded table directory or stream root (required)
       columns       — comma-separated projection (optional)
       on_error      — "raise" (default) | "skip" corrupt chunk files
-      target_bytes  — encoded bytes per input partition (default 64 MiB)
+      io_trace      — directory that collects per-chunk bytes-read lines
+
+    Input partitions hold about ``_DEFAULT_TARGET_BYTES`` (64 MiB) of
+    encoded chunk files each.
     """
 
     @classmethod
@@ -144,6 +147,11 @@ class DumpsterDataSource(DataSource):
 
 class DumpsterReader(DataSourceReader):
     def __init__(self, options: dict, schema: StructType):
+        if "target_bytes" in options:
+            raise ValueError(
+                "the dumpster reader has no target_bytes option: input "
+                "partitions hold about dumpster.datasource."
+                "_DEFAULT_TARGET_BYTES (64 MiB) of encoded chunk files")
         self.out_dir = options["path"]
         self.stores = _resolve_stores(self.out_dir, required=True)
         # planning-time-static: resolved ONCE on the driver — read()
@@ -164,13 +172,9 @@ class DumpsterReader(DataSourceReader):
         # row loss until someone happened to re-register)
         self.sentinel = options.get("sentinel_col")
         # diagnostic: spool per-chunk "<bytes_read> <file_bytes>" lines
-        # into this directory (option wins over the DUMPSTER_IO_TRACE
-        # env var — options travel with the pickled reader into worker
-        # processes, env only works when set before the JVM starts)
-        self.io_trace = options.get("io_trace") \
-            or os.environ.get("DUMPSTER_IO_TRACE")
-        self.target_bytes = int(options.get("target_bytes",
-                                            _DEFAULT_TARGET_BYTES))
+        # into this directory (an option, so it travels with the pickled
+        # reader into worker processes)
+        self.io_trace = options.get("io_trace")
         self.schema = schema
         self.names = [f.name for f in schema.fields]
         # col -> [lo, hi] closed interval implied by the pushed predicates
@@ -267,10 +271,10 @@ class DumpsterReader(DataSourceReader):
         except RuntimeError as e:   # the sentinel check: name the view
             raise RuntimeError(
                 f"pushdown view over {self.out_dir!r}: {e}") from None
-        # greedy bin-pack of the file-sorted plan to target_bytes
+        # greedy bin-pack of the file-sorted plan to _DEFAULT_TARGET_BYTES
         parts, cur, cur_b = [], [], 0
         for fp, nb in files_sizes:
-            if cur and cur_b + nb > self.target_bytes:
+            if cur and cur_b + nb > _DEFAULT_TARGET_BYTES:
                 parts.append(ChunkFilesPartition(cur))
                 cur, cur_b = [], 0
             cur.append(fp)

@@ -220,14 +220,6 @@ def simhash_groups(df: DataFrame, text_col: str = "text",
             .filter(F.col("cnt") > 1))
 
 
-def dedup_keep_first(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
-    """Exact dedup that keeps the smallest-id representative per text."""
-    w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(F.col(id_col))
-    return (df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1).drop("__rn"))
-
-
 def contamination_overlap(df: DataFrame, benchmark: DataFrame,
                           n: int = 13, id_col: str = "doc_id",
                           text_col: str = "text") -> DataFrame:

@@ -587,6 +587,25 @@ def encode_table(df: DataFrame, out_dir: str, *, url_col: str | None = None,
     return read_manifest(spark, out_dir)
 
 
+def _append_ids(path: str, keys: list[str]) -> dict[str, int]:
+    """The append-only key → id map stored as JSON at ``path``, after
+    adding ``keys``: under the file's lock, keys not yet mapped take the
+    next free ids in the order given, and the file is rewritten only when
+    one was added.  Ids never change once given, so a later run that
+    meets a key sorting earlier renumbers nothing."""
+    with fslib.file_lock(path + ".lock"):
+        ids: dict[str, int] = {}
+        if os.path.exists(path):
+            with open(path) as f:
+                ids = json.load(f)
+        new = [k for k in keys if k not in ids]
+        for i, k in enumerate(new, max(ids.values(), default=-1) + 1):
+            ids[k] = i
+        if new:
+            _fs_write_atomic(path, json.dumps(ids, sort_keys=True).encode())
+    return ids
+
+
 def encode_table_multischema(df: DataFrame, out_dir: str, *,
                              schema_col: str = "schema_id",
                              schemas: dict | None = None,
@@ -649,18 +668,8 @@ def encode_table_multischema(df: DataFrame, out_dir: str, *,
     from .pipeline import salted_bucket
     _refuse_mixed_root(out_dir, stream=False)
     os.makedirs(out_dir, exist_ok=True)
-    gen_path = os.path.join(out_dir, "_schema_gen.json")
-    with fslib.file_lock(gen_path + ".lock"):
-        gens: dict = {}
-        if os.path.exists(gen_path):
-            with open(gen_path) as f:
-                gens = json.load(f)
-        new = [sid for sid in known if str(sid) not in gens]
-        for sid in new:
-            gens[str(sid)] = len(gens)
-        if new:
-            _fs_write_atomic(gen_path,
-                             json.dumps(gens, sort_keys=True).encode())
+    gens = _append_ids(os.path.join(out_dir, "_schema_gen.json"),
+                       [str(sid) for sid in known])
     for sid in known:
         g = int(gens[str(sid)])
         cols = list(schemas[sid])
@@ -735,29 +744,15 @@ def encode_table_partitioned(df: DataFrame, out_dir: str, *,
             f"Filter nulls or encode them separately "
             f"(e.g. df.filter(col('{ts_col}').isNotNull())).")
     hours = {f"{r['dt']}/{r['hr']:02d}": r for r in key_rows}
-    # The hour→bucket assignment is PERSISTED: deriving it from the current
-    # snapshot would renumber buckets when a later run sees new (earlier)
-    # hours, silently mis-matching the done-bucket resume set.  Existing
-    # hours keep their ids forever; new hours append at the next free id —
-    # the same append-only contract as the reference's ADD PARTITION
-    # (HiveClient.java:88-94).
-    # the read-modify-write runs under the store lock (same rationale as
-    # _publish_table_schema): two concurrent partitioned encodes would
-    # otherwise assign ONE bucket id to two different hours and the later
-    # hour's manifest would silently replace the earlier one
-    map_path = os.path.join(out_dir, "_hour_buckets.json")
-    with fslib.file_lock(map_path + ".lock"):
-        assigned: dict[str, int] = {}
-        if os.path.exists(map_path):
-            with open(map_path) as f:
-                assigned = json.load(f)
-        next_id = max(assigned.values(), default=-1) + 1
-        for k in sorted(hours):
-            if k not in assigned:
-                assigned[k] = next_id
-                next_id += 1
-        _fs_write_atomic(map_path,
-                         json.dumps(assigned, sort_keys=True).encode())
+    # The hour→bucket assignment is PERSISTED and append-only, the
+    # contract of the reference's ADD PARTITION (HiveClient.java:88-94):
+    # deriving it from the current snapshot would renumber buckets when a
+    # later run sees new (earlier) hours, silently mis-matching the
+    # done-bucket resume set, and without the map's lock two concurrent
+    # encodes could give one bucket id to two hours (the later hour's
+    # manifest would silently replace the earlier one)
+    assigned = _append_ids(os.path.join(out_dir, "_hour_buckets.json"),
+                           sorted(hours))
     subdirs = {i: "dt=%s/hr=%s" % tuple(k.split("/"))
                for k, i in assigned.items()}
     if resume:
@@ -1087,17 +1082,6 @@ def _scan_chunk_files(files, schema: pa.Schema,
         yield pa.RecordBatch.from_arrays(cols, schema=schema)
 
 
-def _chunks_relpath(path: str, marker: str = f"{os.sep}chunks{os.sep}") -> str:
-    """Path suffix after the LAST '/chunks/' — the table-internal identity
-    of a chunk file.  Matching on this (not the absolute string) makes
-    orphan detection invariant to out_dir spelling, symlinks, and table
-    moves (round-2 ADVICE: absolute-string matching deletes every
-    committed chunk when the caller spells out_dir differently than the
-    encode did)."""
-    i = path.rfind(marker)
-    return path[i + len(marker):] if i >= 0 else os.path.basename(path)
-
-
 def clean_orphans(spark: SparkSession, out_dir: str, *,
                   dry_run: bool = False) -> dict:
     """Remove crash leftovers: ``*.tmp`` partials and chunk files not
@@ -1118,7 +1102,9 @@ def clean_orphans(spark: SparkSession, out_dir: str, *,
     rows at target scale) never collects to the driver.  The driver walks
     only DIRECTORY names; per-directory listing, the anti-join against
     the manifest, and the deletes all run in tasks.  Matching is on the
-    path RELATIVE to chunks/ (see _chunks_relpath).
+    path RELATIVE to chunks/: the manifest's text after its last
+    ``/chunks/`` against each listed file's ``os.path.relpath`` from the
+    resolved chunks dir.
 
     Safety rails: if the manifest references nothing but .dmc files
     exist, refuses to delete (a missing/unreadable manifest must not

@@ -175,7 +175,6 @@ def run_jobs(spark: SparkSession, cfg: JobConfig) -> list[dict]:
                 stream, out_dir,
                 checkpoint=t.checkpoint or os.path.join(out_dir, "_ckpt"),
                 ts_col=t.ts_col, chunk_rows=chunk_rows,
-                trigger_available_now=t.trigger_seconds is None,
                 trigger_seconds=t.trigger_seconds)
             if t.trigger_seconds is None:
                 q.awaitTermination()

@@ -1,20 +1,17 @@
 """Multimodal column plumbing: opaque binary media + typed metadata.
 
 Images/audio/video ride as ``binary`` columns exactly like ``html`` does in
-the pages table.  The Spark-side plumbing — schema, partition-parallel
-Arrow batches, UDF signatures, batch shapes — is real and tested; the
-actual pixel/sample decoding is stubbed behind ``decode_media`` because no
-image/audio libraries ship in this container (NotImplementedError, or a
-deterministic fake feature vector with ``fake=True``).
-
-The metadata extractor sniffs container formats from magic bytes, the way
-a crawl pipeline would route media before decode fan-out.
+the pages table.  ``extract_media_meta`` types each blob (size, magic,
+container format sniffed from magic bytes, the way a crawl pipeline
+routes media before decode) with pure Column expressions.  Pixel/sample
+decoding is a gate: ``decode_media`` raises NotImplementedError because
+it needs image/audio libraries this package does not depend on
+(``fake=True`` returns a deterministic hash-derived vector).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
 
 from pyspark.sql import DataFrame
 
@@ -67,83 +64,3 @@ def decode_media(blob: bytes, kind: str = "image", *, fake: bool = False,
             "run with fake=True for deterministic plumbing tests")
     h = np.frombuffer(blob[:dim * 8].ljust(dim * 8, b"\0"), dtype=np.uint64)
     return (h % np.uint64(10_000)).astype(np.float32) / 10_000.0
-
-
-def _fake_features(arr: pa.Array, dim: int) -> pa.Array:
-    """The vectorized fake-feature kernel over one binary/large_binary
-    Arrow array: gather each blob's first dim*8 bytes into a zero-padded
-    (n, dim*8) matrix (no per-blob Python), view as uint64 lanes,
-    hash-normalize; NULL rows come back null.  Module-level (not a
-    closure) so the large_binary/int64-offset leg is directly testable
-    — the round-5 review found that path untestable through Spark alone
-    (Spark delivers regular binary unless useLargeVarTypes is on)."""
-    n = len(arr)
-    # offset width follows the ACTUAL type: large_binary carries int64
-    # offsets (spark.sql.execution.arrow.useLargeVarTypes) and reading
-    # them as int32 interleaves low/high words — garbage lengths
-    # (round-5 review finding)
-    odt = (np.int64 if pa.types.is_large_binary(arr.type)
-           or pa.types.is_large_string(arr.type) else np.int32)
-    osz = 8 if odt is np.int64 else 4
-    offs = np.frombuffer(arr.buffers()[1], dtype=odt,
-                         count=n + 1,
-                         offset=arr.offset * osz).astype(np.int64)
-    dbuf = arr.buffers()[2]
-    data = (np.frombuffer(dbuf, dtype=np.uint8)
-            if dbuf is not None else np.empty(0, np.uint8))
-    lens = np.minimum(np.diff(offs), dim * 8)
-    M = np.zeros((n, dim * 8), dtype=np.uint8)
-    total = int(lens.sum())
-    if total:
-        within = np.arange(total, dtype=np.int64) - np.repeat(
-            np.concatenate(([0], np.cumsum(lens)[:-1])), lens)
-        M[np.repeat(np.arange(n), lens), within] = \
-            data[np.repeat(offs[:-1], lens) + within]
-    h = M.view("<u8")
-    vals = ((h % np.uint64(10_000)).astype(np.float32)
-            / np.float32(10_000.0))
-    feats_arr = pa.FixedSizeListArray.from_arrays(
-        pa.array(vals.ravel(), type=pa.float32()), dim) \
-        .cast(pa.list_(pa.float32()))
-    if arr.null_count:
-        # stay in Arrow: if_else nulls the masked rows without
-        # round-tripping every feature vector through Python lists
-        # (round-5 review finding)
-        import pyarrow.compute as pc
-        feats_arr = pc.if_else(
-            arr.is_null(),
-            pa.nulls(n, type=pa.list_(pa.float32())),
-            feats_arr)
-    return feats_arr
-
-
-def media_features(df: DataFrame, id_col: str, bin_col: str,
-                   dim: int = 8, fake: bool = True) -> DataFrame:
-    """Feature-extraction fan-out: binary → fixed-dim float vector.
-
-    Partition-parallel mapInArrow; at scale this is where the GPU/decoder
-    pool would sit — the Spark plumbing (schema out: id + array<float>)
-    stays identical.
-    """
-    def feats(batches):
-        for batch in batches:
-            ids, blobs = batch.column(0), batch.column(1)
-            if not fake:
-                # real decode is per-item by nature (a C decoder call per
-                # image); the stub path below is fully vectorized
-                out = [None if b is None
-                       else decode_media(bytes(b), fake=fake, dim=dim).tolist()
-                       for b in blobs.to_pylist()]
-                yield pa.RecordBatch.from_arrays(
-                    [ids.cast(pa.int64()),
-                     pa.array(out, type=pa.list_(pa.float32()))],
-                    names=["id", "features"])
-                continue
-            arr = blobs.combine_chunks() if isinstance(
-                blobs, pa.ChunkedArray) else blobs
-            yield pa.RecordBatch.from_arrays(
-                [ids.cast(pa.int64()), _fake_features(arr, dim)],
-                names=["id", "features"])
-
-    return df.select(id_col, bin_col).mapInArrow(
-        feats, "id long, features array<float>")

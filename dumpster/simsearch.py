@@ -233,8 +233,7 @@ def centroids_first_k(emb: DataFrame, n_cells: int, id_col: str = "vec_id",
                       vec_col: str = "embedding") -> tuple[np.ndarray, np.ndarray]:
     """Deterministic IVF coarse quantizer: the n_cells lowest-id vectors.
     No kmeans fit — reproducible across runs/engines, which is what the
-    oracle parity needs; refine with train_centroids_minibatch or swap in
-    trained centroids in production."""
+    oracle parity needs."""
     if not 0 < n_cells <= MAX_IVF_CELLS:
         raise ValueError(
             f"n_cells={n_cells} out of range (1..{MAX_IVF_CELLS}): "
@@ -250,85 +249,6 @@ def centroids_first_k(emb: DataFrame, n_cells: int, id_col: str = "vec_id",
     return ids, mat / norms[:, None]
 
 
-def train_centroids_minibatch(emb: DataFrame, n_cells: int = 16,
-                              n_iter: int = 5, sample_frac: float = 0.25,
-                              seed: int = 42, id_col: str = "vec_id",
-                              vec_col: str = "embedding"
-                              ) -> tuple[np.ndarray, np.ndarray]:
-    """Optional k-means refinement of the first-K coarse quantizer —
-    mini-batch Lloyd iterations as a broadcast-update loop.
-
-    Per iteration: a deterministic hash-sampled mini-batch is assigned to
-    the current (broadcast) centroids map-side (one matmul per Arrow
-    batch, no shuffle of the vectors), per-cell partial sums/counts are
-    emitted per batch, reduced by a (cell, pos) groupBy, and only the
-    cells × dim sum matrix returns to the driver (bounded by
-    MAX_IVF_CELLS, same ceiling as centroids_first_k).  Spherical update:
-    new centroid = normalized mean; empty cells keep their previous
-    centroid.
-
-    The default IVF path stays the deterministic first-K quantizer
-    (oracle parity); this trainer is opt-in via the ``centroids=``
-    parameter of ivf_cells / ivf_topk.  Assignment inside training rounds
-    sims to 6 dp like ivf_cells; the reduced sums are floating-point and
-    may differ in last-ulp across cluster layouts — acceptable for a
-    trainer, NOT used by any oracle-checked query.
-    """
-    cids, cmat = centroids_first_k(emb, n_cells, id_col, vec_col)
-    src = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    for it in range(n_iter):
-        cur = cmat  # rebind for closure capture per iteration
-        thresh = int(sample_frac * 4294967296)
-        batch_df = src.filter(
-            F.crc32(F.concat(F.col("id").cast("string"),
-                             F.lit(f"#{seed}#{it}"))) < F.lit(thresh))
-
-        def partials(batches, _c=cur):
-            for b in batches:
-                mat = _as_matrix(b.column(1))
-                if mat.shape[0] == 0:
-                    continue
-                norms = np.linalg.norm(mat, axis=1)
-                norms[norms == 0] = 1.0
-                sims = np.round((mat / norms[:, None]) @ _c.T, 6)
-                best = np.argmax(sims, axis=1)
-                cells, inv = np.unique(best, return_inverse=True)
-                cnt = np.bincount(inv)
-                sums = np.zeros((len(cells), mat.shape[1]))
-                np.add.at(sums, inv, mat)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(cells.astype(np.int64)),
-                     pa.array(cnt.astype(np.int64)),
-                     pa.array(list(sums), type=pa.list_(pa.float64()))],
-                    names=["cell", "cnt", "s"])
-
-        part = batch_df.mapInArrow(
-            partials, "cell long, cnt long, s array<double>")
-        from pyspark import StorageLevel
-        part = part.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            counts = {r["cell"]: r["n"] for r in
-                      part.groupBy("cell").agg(F.sum("cnt").alias("n"))
-                      .collect()}
-            sums = (part.select("cell", F.posexplode("s"))
-                    .groupBy("cell", "pos").agg(F.sum("col").alias("v"))
-                    .collect())
-        finally:
-            part.unpersist()
-        new = cmat.copy()
-        acc = np.zeros_like(cmat)
-        for r in sums:
-            acc[r["cell"], r["pos"]] = r["v"]
-        for c, n in counts.items():
-            if n > 0:
-                m = acc[c] / n
-                nv = np.linalg.norm(m)
-                if nv > 0:
-                    new[c] = m / nv
-        cmat = new
-    return cids, cmat
-
-
 def ivf_cells(emb: DataFrame, n_cells: int = 16, id_col: str = "vec_id",
               vec_col: str = "embedding",
               centroids: tuple[np.ndarray, np.ndarray] | None = None
@@ -339,8 +259,8 @@ def ivf_cells(emb: DataFrame, n_cells: int = 16, id_col: str = "vec_id",
     One broadcast matmul per Arrow batch; no shuffle at all — the 10^12-row
     side never moves, which is the IVF point.  Sims are rounded to 6 dp
     BEFORE the argmax so the assignment is reproducible across engines.
-    ``centroids`` overrides the deterministic first-K quantizer (e.g. the
-    output of train_centroids_minibatch).
+    ``centroids`` overrides the deterministic first-K quantizer: ivf_topk
+    passes the ones it already collected.
     """
     cids, cmat = centroids if centroids is not None else \
         centroids_first_k(emb, n_cells, id_col, vec_col)
@@ -372,9 +292,7 @@ def ivf_cells(emb: DataFrame, n_cells: int = 16, id_col: str = "vec_id",
 
 def ivf_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
              n_cells: int = 16, n_probe: int = 4, id_col: str = "vec_id",
-             vec_col: str = "embedding",
-             centroids: tuple[np.ndarray, np.ndarray] | None = None
-             ) -> DataFrame:
+             vec_col: str = "embedding") -> DataFrame:
     """Approximate cosine top-k: probe only each query's n_probe nearest
     IVF cells, exact cosine within the probed candidates.
 
@@ -383,8 +301,7 @@ def ivf_topk(emb: DataFrame, query_ids: list[int], k: int = 5,
     1.0 at n_probe = n_cells.
     """
     spark = emb.sparkSession
-    cids, cmat = centroids if centroids is not None else \
-        centroids_first_k(emb, n_cells, id_col, vec_col)
+    cids, cmat = centroids_first_k(emb, n_cells, id_col, vec_col)
     qrows = (emb.filter(F.col(id_col).isin(query_ids)
                         & F.col(vec_col).isNotNull())
              .select(id_col, vec_col).collect())

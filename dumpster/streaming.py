@@ -30,7 +30,6 @@ from .engine import _read_manifests, _refuse_mixed_root, batch_dirs, \
 def encode_stream_partitioned(stream_df: DataFrame, out_dir: str, *,
                               checkpoint: str, ts_col: str = "warc_ts",
                               chunk_rows: int = 65536,
-                              trigger_available_now: bool = True,
                               trigger_seconds: int | None = None):
     """Stream → the reference's event-time tree, incrementally.
 
@@ -46,9 +45,10 @@ def encode_stream_partitioned(stream_df: DataFrame, out_dir: str, *,
     decode_table(out_dir, path_glob="*/hr=05/*") for hour-pruned scans
     across all batches.
 
-    ``availableNow`` drains what is there, otherwise ``trigger_seconds``
-    sets the processing-time cadence (jobs.yaml ``trigger_seconds`` —
-    the reference's partitionForget tuning surface).  Refuses an
+    With ``trigger_seconds`` None the query drains what is there
+    (``availableNow``) and stops; otherwise it runs on, one micro-batch
+    every ``trigger_seconds`` (jobs.yaml ``trigger_seconds`` — the
+    reference's partitionForget tuning surface).  Refuses an
     ``out_dir`` that already holds a store.
     """
     def sink(batch_df: DataFrame, batch_id: int):
@@ -60,11 +60,10 @@ def encode_stream_partitioned(stream_df: DataFrame, out_dir: str, *,
     writer = (stream_df.writeStream
               .foreachBatch(sink)
               .option("checkpointLocation", checkpoint))
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    if trigger_seconds is None:
+        return writer.trigger(availableNow=True).start()
+    return writer.trigger(
+        processingTime=f"{trigger_seconds} seconds").start()
 
 
 class CapabilityMissing(RuntimeError):

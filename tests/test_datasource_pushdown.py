@@ -168,6 +168,20 @@ def test_equality_and_in_filters_prune(encoded_docs):
     assert set(eq_files) <= set(in_files)
 
 
+def test_target_bytes_option_refused(spark, encoded_docs):
+    """Input partitions are a fixed ~64 MiB bin-pack; a target_bytes
+    read option is refused by name instead of being honoured."""
+    from dumpster.datasource import register_dumpster_source
+    from dumpster.engine import table_schema
+    with pytest.raises(ValueError, match="target_bytes"):
+        DumpsterReader({"path": encoded_docs, "target_bytes": "1024"},
+                       table_schema(encoded_docs))
+    register_dumpster_source(spark)
+    with pytest.raises(Exception, match="target_bytes"):
+        (spark.read.format("dumpster").option("path", encoded_docs)
+         .option("target_bytes", "1024").load().count())
+
+
 def test_string_filter_stays_exact(spark, encoded_docs):
     # string predicates may prune via smin/smax zones and blooms
     # (tests/test_bloom.py); whatever survives must answer exactly

@@ -6,8 +6,6 @@
 * lsh_signatures / lsh_bucket_candidates: empty input returns an empty
   typed frame instead of a TypeError (ADVICE r2, low).
 * centroids_first_k: out-of-range n_cells fails loudly (VERDICT r2 #4).
-* train_centroids_minibatch: opt-in refinement improves ivf_topk recall
-  on data where the first-K quantizer is degenerate.
 """
 
 import numpy as np
@@ -68,46 +66,6 @@ def test_ivf_n_cells_cap(spark):
         simsearch.centroids_first_k(emb, simsearch.MAX_IVF_CELLS + 1)
     with pytest.raises(ValueError, match="out of range"):
         simsearch.centroids_first_k(emb, 0)
-
-
-@pytest.fixture(scope="module")
-def clustered_emb(spark):
-    """4 tight clusters in 8-d; the 4 lowest ids all live in cluster 0,
-    so the first-K quantizer is degenerate (all centroids in one
-    cluster) and partial-probe recall suffers until training moves
-    them."""
-    rng = np.random.default_rng(3)
-    centers = np.eye(4, 8) * 10.0
-    rows = []
-    vid = 0
-    for c in range(4):
-        for _ in range(40):
-            v = centers[c] + rng.normal(0, 0.05, 8)
-            rows.append((vid, [float(x) for x in v]))
-            vid += 1
-    # ids 0..39 are all cluster 0 → first-4 centroids degenerate
-    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-
-def test_minibatch_training_improves_recall(clustered_emb):
-    queries = [5, 45, 85, 125]
-    brute = {(r["query_id"], r["neighbor_id"])
-             for r in simsearch.brute_topk(clustered_emb, queries, k=5)
-             .collect()}
-
-    def recall(cent):
-        got = {(r["query_id"], r["neighbor_id"])
-               for r in simsearch.ivf_topk(
-                   clustered_emb, queries, k=5, n_cells=4, n_probe=1,
-                   centroids=cent).collect()}
-        return len(got & brute) / len(brute)
-
-    first_k = simsearch.centroids_first_k(clustered_emb, 4)
-    trained = simsearch.train_centroids_minibatch(
-        clustered_emb, n_cells=4, n_iter=4, sample_frac=0.8)
-    r0, r1 = recall(first_k), recall(trained)
-    assert r1 > r0, (r0, r1)
-    assert r1 >= 0.95
 
 
 # --- round-3 continuation review fixes ------------------------------------

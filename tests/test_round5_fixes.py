@@ -435,37 +435,6 @@ def test_decode_chunk_empty_columns_raises():
         decode_chunk(blob, columns=[])
 
 
-def test_media_features_large_binary_and_nulls(spark):
-    """large_binary input (int64 offsets) must not be misread as int32,
-    and null rows must come back null without a Python round-trip."""
-    import pandas as pd
-    import pyarrow as pa
-
-    from dumpster.multimodal import media_features
-
-    payloads = [b"\x01" * 64, None, b"\x02" * 100]
-    pdf = pd.DataFrame({"id": [1, 2, 3], "blob": payloads})
-    df = spark.createDataFrame(pdf)
-    out = {r["id"]: r["features"]
-           for r in media_features(df, "id", "blob", dim=4).collect()}
-    assert out[2] is None
-    assert len(out[1]) == 4 and len(out[3]) == 4
-    # large-offsets leg: drive the kernel directly with large_binary
-    # (Spark delivers regular binary, so THIS is the only way the int64
-    # branch executes in tests) — values must be identical to the int32
-    # leg, and a sliced array must respect the byte offset
-    from dumpster.multimodal import _fake_features
-    small = pa.array(payloads, type=pa.binary())
-    large = pa.array(payloads, type=pa.large_binary())
-    f_small = _fake_features(small, 4).to_pylist()
-    f_large = _fake_features(large, 4).to_pylist()
-    assert f_small == f_large
-    assert f_large[1] is None and len(f_large[0]) == 4
-    # and the Spark-path values agree with the kernel values
-    assert [out[1], out[2], out[3]] == f_small
-    assert _fake_features(large.slice(2, 1), 4).to_pylist() == [f_large[2]]
-
-
 # --- ADVICE r5: concurrent overwrite, overflow remedy, id-type union --------
 
 

@@ -49,6 +49,28 @@ def test_stream_resumes_partly_committed_batch_after_restart(spark, tmp_path):
     assert dec.exceptAll(pages).count() == 0
 
 
+def test_stream_trigger_seconds_keeps_query_running(spark, tmp_path):
+    """``trigger_seconds`` alone sets a processing-time cadence: after
+    its first micro-batch the query is still up, waiting for the next
+    one, instead of draining once and stopping."""
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "enc")
+    pages = synth_pages(spark, 200, seed=17)
+    pages.write.parquet(os.path.join(src, "p1"))
+    stream = (spark.readStream.schema(pages.schema)
+              .parquet(os.path.join(src, "*")))
+    q = encode_stream_partitioned(stream, out,
+                                  checkpoint=str(tmp_path / "ckpt"),
+                                  chunk_rows=128, trigger_seconds=1)
+    try:
+        q.processAllAvailable()
+        assert q.awaitTermination(5) is False
+        assert q.isActive
+        assert decode_table(spark, out).count() == 200
+    finally:
+        q.stop()
+
+
 def test_compact_stream_default_resumes_interrupted_compaction(spark,
                                                                tmp_path):
     """compact_stream's default layout resumes from a new decode of the
