@@ -43,7 +43,6 @@ def parse_sf(sf_dir: str) -> float:
 
 
 def main():
-    run_start = time.time()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     cache = os.environ.get("DUMPSTER_BENCH_CACHE", "/tmp/dumpster_bench_cache")
@@ -334,44 +333,6 @@ def main():
         result["encoded_bytes_sink_local"] = sink_local_bytes
         result["sink_local_size_ratio_vs_reference"] = round(
             sink_local_bytes / ref_bytes, 4)
-        # sf1 same-window anatomy (bench/anatomy_sf1.py) is summarized in
-        # the printed line and written IN FULL to bench/BENCH_full_latest
-        # .json — round 4 embedded the whole anatomy object here and the
-        # driver's tail capture truncated the line mid-object, leaving
-        # BENCH_r04.json unparsed (VERDICT r4 #2).  The printed line must
-        # stay compact.  Only an anatomy stamped with its host nproc and
-        # measured during THIS run is embedded: an unstamped or older file
-        # is a figure from another window, possibly another host
-        # (VERDICT r5 #3).
-        bench_dir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                                 "bench")
-        anat = os.path.join(bench_dir, "anatomy_sf1_latest.json")
-        full = dict(result)
-        try:
-            with open(anat) as f:
-                a = json.load(f)
-        except (OSError, ValueError):
-            a = {}
-        if "nproc" in a and a.get("measured_at", 0) >= run_start:
-            full["sf1_anatomy"] = a
-            best = a.get("best", {})
-            result["sf1_summary"] = {
-                "nproc": a["nproc"],
-                "ref_write_sec": best.get("ref_write"),
-                "salted_encode_sec": best.get("salted_encode"),
-                "local_encode_sec": best.get("local_encode"),
-                "sink_local_sec": best.get("sink_local"),
-                "size_ratio_vs_reference":
-                    a.get("size_ratio_vs_reference"),
-                "encode_sink_local_gb_per_sec":
-                    a.get("encode_sink_local_gb_per_sec"),
-            }
-        try:
-            with open(os.path.join(bench_dir,
-                                   "BENCH_full_latest.json"), "w") as f:
-                json.dump(full, f, indent=1)
-        except Exception:
-            pass
     shutil.rmtree(out, ignore_errors=True)
     spark.stop()
     print(json.dumps(result))

@@ -16,8 +16,8 @@ import os
 def logical_bytes_of(pages) -> int:
     """Logical (uncompressed, null-aware) byte size of a pages frame —
     the denominator of every GB/s figure the benches report; must be
-    identical across bench.py / scaling.py / decode_scaling_sf1.py or
-    their throughputs stop being comparable."""
+    identical across bench.py and scaling.py or their throughputs stop
+    being comparable."""
     from pyspark.sql import functions as F
     return int(pages.select(
         (F.octet_length("url") + F.octet_length("text")

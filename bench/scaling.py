@@ -151,8 +151,9 @@ single-socket shared-host VM with two hard limits a real cluster does not
 have:
 
 1. **Shared DRAM controller.** A pure `np.copyto` memcpy control
-   (`bench/memcpy_control.py`, barrier-synchronized since round 5 —
-   nothing of ours in the loop) scales 1→4 near-linearly (0.86-1.22
+   (round 5, barrier-synchronized; its script `bench/memcpy_control.py`
+   is historical, deleted after commit f1fc705 — nothing of ours in the
+   loop) scales 1→4 near-linearly (0.86-1.22
    across runs) but 8→32 at **0.18-0.38** (aggregate 58-62 GB/s at 8
    procs vs 45-89 GB/s at 32 across runs) — past ~8 concurrent copiers
    the shared bus saturates, so no byte-moving engine can scale linearly
@@ -220,9 +221,9 @@ Other local-mode engineering notes (dumpster/session.py):
     if bench_md is not None:
         with open(bench_md, "w") as f:
             f.write(md + tail)
-    # merge, don't overwrite: other runners record their own keys here
-    # (decode_scaling_sf1.py writes "decode_sf1") and a refresh of the
-    # encode pair must not silently drop them
+    # merge, don't overwrite: the file also keeps records whose runners
+    # were deleted (the historical "decode_sf1" leg), and a refresh of
+    # the encode pair must not silently drop them
     from benchutil import merge_results
     merge_results(os.path.join(REPO, "bench", "scaling_results.json"),
                   {"levels": list(levels), f"local{n_lo}": r8,

@@ -14,9 +14,10 @@ checkpointed manifest.
 Layout (SURVEY.md §7.1):
   codecs/    pure-NumPy codecs + selector (no Spark dependency)
   chunk.py   on-disk chunk container format (serialization + CRC)
-  manifest.py manifest schema + resume bookkeeping
+  fs.py      publish backends (rename / S3-style put) + file_lock
   pipeline.py relational prep (dedup, hour bucketing, host/salt, metadata)
-  engine.py  encode_table / decode_table (mapInArrow drivers)
+  engine.py  encode_table / decode_table (mapInArrow drivers), manifest
+             schema + resume bookkeeping
   datasource.py  Python DataSource "dumpster": pushdown reader + native
              batch/stream sinks (df.write / df.writeStream)
   iceberg.py capability-gated Iceberg front door (snapshot-pinned encode)

@@ -75,11 +75,11 @@ from pyspark.sql.types import StructType
 
 from . import fs as fslib
 from .engine import (DEFAULT_CHUNK_ROWS, FLAT_SEP, _MANIFEST_ARROW,
-                     _arrow_schema, _as_bytes, _chunk_rows, _fs_write_atomic,
-                     _has_structs, _make_encoder, _manifest_path,
-                     _plan_chunks, _publish_table_schema, _refuse_mixed_root,
-                     _resolve_stores, _scan_chunk_files, _stat_value,
-                     _union_schema, done_buckets)
+                     _arrow_schema, _as_bytes, _check_layout, _chunk_rows,
+                     _fs_write_atomic, _has_structs, _make_encoder,
+                     _manifest_path, _plan_chunks, _publish_table_schema,
+                     _refuse_mixed_root, _resolve_stores, _scan_chunk_files,
+                     _stat_value, _union_schema, done_buckets)
 
 _DEFAULT_TARGET_BYTES = 64 * 1024 * 1024
 
@@ -562,6 +562,9 @@ def _publish_batch(out_dir: str, messages, schema: StructType) -> None:
         for r in m.rows:
             by_bucket.setdefault(int(r["bucket"]), []).append(r)
     os.makedirs(os.path.join(out_dir, "manifest"), exist_ok=True)
+    # a sink's bucket ids are per-job partition ids: the record makes an
+    # encode_table resume refuse the store instead of skipping its rows
+    _check_layout(out_dir, {"layout": "sink"}, resume=False)
     _publish_table_schema(out_dir, schema)
     for b, rows in sorted(by_bucket.items()):
         rows.sort(key=lambda r: int(r["chunk_seq"]))
@@ -622,10 +625,7 @@ def _reserve_bucket_range(out_dir: str,
                 f"a range too, so it fails the same way. Write to a "
                 f"fresh out_dir or compact into one (compact_stream / "
                 f"decode + re-encode).")
-        tmp = alloc + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"next": base + stride}, f)
-        os.replace(tmp, alloc)
+        _fs_write_atomic(alloc, json.dumps({"next": base + stride}).encode())
     return base
 
 

@@ -324,12 +324,19 @@ def _check_layout(out_dir: str, record: dict, resume: bool) -> None:
             why = (f"it was written with layout {old}, this run resolves "
                    f"to {record}" if old is not None else
                    "it has no layout record, so its split plan is unknown")
+            fix = ("Rerun with the original split settings (files, "
+                   "spark.sql.files.maxPartitionBytes, core count, "
+                   "mode/n_buckets/salt_k), or use resume=False into a "
+                   "fresh out_dir")
+            if old == {"layout": "sink"}:
+                # sink bucket ids are partition ids of each write job
+                why = "the df.write/writeStream dumpster sink wrote it"
+                fix = ("Encode into a fresh out_dir, or append to this "
+                       "store with df.write.format(\"dumpster\")"
+                       ".mode(\"append\")")
             raise ValueError(
                 f"cannot resume {out_dir}: {why}, so its committed bucket "
-                f"ids would name different rows.  Rerun with the original "
-                f"split settings (files, spark.sql.files.maxPartitionBytes, "
-                f"core count, mode/n_buckets/salt_k), or use resume=False "
-                f"into a fresh out_dir")
+                f"ids would name different rows.  {fix}")
         if old != record:
             _fs_write_atomic(path, json.dumps(record, sort_keys=True).encode())
 
@@ -815,7 +822,7 @@ def _read_manifests(spark: SparkSession, stores: list[str]) -> DataFrame:
 
 
 def _publish_table_schema(out_dir: str, new: StructType) -> None:
-    """Create-or-evolve the stored table schema, serialized by a lock file.
+    """Create-or-evolve the stored table schema, serialized by fs.file_lock.
 
     ALTER-parity schema evolution (reference: HiveUtil.java:37-52
     re-issues DDL when the Avro schema widens): common columns must keep
@@ -1528,11 +1535,12 @@ def save_catalog(catalog_path: str, name: str, out_dir: str,
     re-register every table without re-deriving paths.  The reference
     gets this from the Hive Metastore surviving restarts
     (HiveClient.java:100-115); here the catalog is a JSON file of
-    {view name → {path, columns}}.  The read-modify-write runs under a
-    lock file (fs.file_lock) so two concurrent jobs registering different
-    tables both survive — the reference's metastore serializes this
-    (HiveClient.java:27-37); last-writer-wins JSON silently dropped one
-    registration (VERDICT r2 missing #3).
+    {view name → {path, columns}}.  The read-modify-write runs under
+    fs.file_lock (a kernel flock on ``catalog_path + ".lock"``) so two
+    concurrent jobs registering different tables both survive — the
+    reference's metastore serializes this (HiveClient.java:27-37);
+    last-writer-wins JSON silently dropped one registration (VERDICT r2
+    missing #3).
     """
     with fslib.file_lock(catalog_path + ".lock"):
         cat = {}

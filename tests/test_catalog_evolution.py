@@ -340,22 +340,60 @@ def test_concurrent_schema_evolution_keeps_both_columns(tmp_path):
     assert names[0] == "id" and set(names) == {"id", "x", "y", "z", "w"}
 
 
-def test_file_lock_breaks_stale_and_times_out(tmp_path):
+def test_file_lock_crashed_holder_never_blocks(tmp_path):
+    """A lock is held exactly while its holder's process lives: a leftover
+    file, however fresh, and a holder killed mid-section leave the lock
+    free; a live holder (a thread here) still makes a waiter time out,
+    and the timeout names it."""
+    import os
+    import signal
+    import subprocess
+    import sys
+    import threading
+
     import pytest
     from dumpster import fs as fslib
 
     lock = str(tmp_path / "x.lock")
-    # stale lock from a crashed holder is broken
     with open(lock, "w") as f:
-        f.write("dead@host")
-    import os
-    old = os.path.getmtime(lock) - 1000
-    os.utime(lock, (old, old))
-    with fslib.file_lock(lock, timeout=1.0, stale=120.0):
+        f.write("dead@host")               # fresh mtime, no live holder
+    with fslib.file_lock(lock, timeout=1.0):
         pass
-    # fresh (non-stale) lock times out
-    with open(lock, "w") as f:
-        f.write("alive@host")
-    with pytest.raises(TimeoutError):
-        with fslib.file_lock(lock, timeout=0.3, stale=9999):
-            pass
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = ("import sys, time\n"
+              "from dumpster import fs\n"
+              "with fs.file_lock(sys.argv[1], timeout=5):\n"
+              "    print('held', flush=True)\n"
+              "    time.sleep(60)\n")
+    p = subprocess.Popen([sys.executable, "-c", script, lock],
+                         stdout=subprocess.PIPE, text=True,
+                         env=dict(os.environ, PYTHONPATH=repo))
+    try:
+        assert p.stdout.readline() == "held\n"
+    finally:
+        p.send_signal(signal.SIGKILL)
+        p.wait()
+        p.stdout.close()
+    assert os.path.exists(lock)            # killed: no release ran
+    with fslib.file_lock(lock, timeout=1.0):
+        pass
+
+    held, release = threading.Event(), threading.Event()
+
+    def holder():
+        with fslib.file_lock(lock, timeout=5):
+            held.set()
+            release.wait(30)
+
+    t = threading.Thread(target=holder)
+    t.start()
+    try:
+        assert held.wait(10)
+        with pytest.raises(TimeoutError, match=f"{os.getpid()}@"):
+            with fslib.file_lock(lock, timeout=0.3):
+                pass
+    finally:
+        release.set()
+        t.join(30)
+    assert not t.is_alive()

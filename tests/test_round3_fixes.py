@@ -98,24 +98,6 @@ def test_bloom_namespace_column_rejected():
         encode_chunk(b)
 
 
-def test_file_lock_release_only_own_token(tmp_path):
-    """A holder whose lock was stale-broken must NOT unlink the next
-    holder's fresh lock on exit."""
-    import os
-    from dumpster import fs as fslib
-    lock = str(tmp_path / "l.lock")
-    ctx = fslib.file_lock(lock, timeout=2, stale=120)
-    ctx.__enter__()
-    # simulate a waiter breaking the lock and becoming the new holder
-    os.unlink(lock)
-    with open(lock, "w") as f:
-        f.write("someone-else")
-    ctx.__exit__(None, None, None)
-    assert os.path.exists(lock)            # new holder's lock survives
-    assert open(lock).read() == "someone-else"
-    os.unlink(lock)
-
-
 def test_read_blooms_corrupt_tail_returns_empty(tmp_path):
     """A bit-flipped footer length with intact tail magic must mean
     'cannot prune', not a garbage ranged read / json crash."""

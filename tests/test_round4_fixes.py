@@ -1,7 +1,7 @@
 """Round-4 ADVICE fixes, pinned.
 
 * done_buckets / manifest listing tolerate foreign files in manifest/
-* file_lock release is TOCTOU-free (rename-claim, verify, then unlink)
+* file_lock release leaves nothing behind in the lock's directory
 * stateful_offset_dedup does not depend on intra-group delivery order
 """
 
@@ -68,24 +68,10 @@ def test_done_buckets_ignores_foreign_manifest_files(spark, tmp_path):
 
 
 def test_file_lock_release_leaves_no_residue(tmp_path):
-    """The rename-claim release must clean up after itself on the happy
-    path (no .rel.* victims left) and restore a stolen fresh lock."""
+    """Release removes the lock file and leaves no other file behind."""
     from dumpster import fs as fslib
 
     lock = str(tmp_path / "l.lock")
-    with fslib.file_lock(lock, timeout=2, stale=120):
-        pass
-    assert not os.path.exists(lock)
-    assert not [f for f in os.listdir(tmp_path) if ".rel." in f]
-
-    # stale-broken mid-section: new holder's lock must survive release
-    ctx = fslib.file_lock(lock, timeout=2, stale=120)
-    ctx.__enter__()
-    os.unlink(lock)
-    with open(lock, "w") as f:
-        f.write("someone-else")
-    ctx.__exit__(None, None, None)
-    assert os.path.exists(lock)
-    assert open(lock).read() == "someone-else"
-    assert not [f for f in os.listdir(tmp_path) if ".rel." in f]
-    os.unlink(lock)
+    with fslib.file_lock(lock, timeout=2):
+        assert os.listdir(tmp_path) == ["l.lock"]
+    assert os.listdir(tmp_path) == []

@@ -317,94 +317,96 @@ def test_host_of_hard_urls(spark):
 
 
 def test_file_lock_contended_stale_break_stays_exclusive(tmp_path):
-    """Plant a crashed holder's lock aged far past `stale` and release a
-    pack of waiters at it simultaneously — every one of them takes the
-    stale-break path at once.  The round-5 claim-verify must keep the
-    critical section mutually exclusive: the old break could steal the
-    FRESH lock the winning breaker had just created and let two holders
-    in.  `stale` stays far above the section length, so no lock held
-    here is ever legitimately stale."""
+    """Plant a crashed holder's leftover lock file, aged by its mtime, and
+    release a pack of waiters at it simultaneously.  Every critical
+    section must run, and one at a time, however abandoned the file
+    looks.  Then 4 processes x 100 locked read-increment-write cycles of
+    one counter file must count to exactly 400: the lock excludes across
+    processes, not only threads."""
     import os
+    import subprocess
+    import sys
     import threading
     import time as _t
 
     from dumpster import fs as fslib
 
     lock = str(tmp_path / "c.lock")
-    overlaps = []
+    overlaps, sections = [], []
     active = [0]
 
     for _ in range(8):
         with open(lock, "w") as f:
-            f.write("dead@crashed-host:deadbeef")
-        os.utime(lock, (1, 1))             # aged: every waiter sees stale
+            f.write("dead@crashed-host")
+        os.utime(lock, (1, 1))             # aged leftover of a dead holder
         barrier = threading.Barrier(6)
 
         def worker():
-            barrier.wait()                 # all hit the stale lock together
-            with fslib.file_lock(lock, timeout=30, stale=120):
+            barrier.wait()                 # all hit the leftover together
+            with fslib.file_lock(lock, timeout=30):
                 active[0] += 1
                 if active[0] > 1:
                     overlaps.append(1)
                 _t.sleep(0.004)
                 active[0] -= 1
+                sections.append(1)
 
         ts = [threading.Thread(target=worker) for _ in range(6)]
         [t.start() for t in ts]
-        [t.join() for t in ts]
+        [t.join(60) for t in ts]
     assert not overlaps, f"{len(overlaps)} overlapping critical sections"
+    assert len(sections) == 48, "a waiter died or hung"
+
+    counter = tmp_path / "counter"
+    counter.write_text("0")
+    script = (
+        "import sys\n"
+        "from dumpster import fs\n"
+        "lock, counter = sys.argv[1:]\n"
+        "for _ in range(100):\n"
+        "    with fs.file_lock(lock, timeout=60):\n"
+        "        n = int(open(counter).read())\n"
+        "        with open(counter, 'w') as f:\n"
+        "            f.write(str(n + 1))\n")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo)
+    procs = [subprocess.Popen([sys.executable, "-c", script, lock,
+                               str(counter)], env=env) for _ in range(4)]
+    assert [p.wait(timeout=120) for p in procs] == [0] * 4
+    assert counter.read_text() == "400"
 
 
-def test_file_lock_stale_breaker_cleanup_keeps_fresh_breaker(tmp_path,
-                                                              monkeypatch):
-    """Force the breaker-cleanup interleaving: a waiter finds a stale
-    `.breaker`, and between its age check and its removal another waiter
-    clears that breaker and creates a FRESH one.  The old stat-then-unlink
-    deleted the fresh breaker, letting a third waiter break the lock
-    concurrently; claim-by-rename must leave the fresh breaker alone."""
+def test_file_lock_live_holder_is_never_broken(tmp_path):
+    """However old the lock file looks, a live holder keeps the lock: a
+    waiter times out while it holds, and enters once it releases."""
     import os
+    import threading
 
     from dumpster import fs as fslib
 
-    lock = str(tmp_path / "b.lock")
-    breaker = lock + ".breaker"
-    for p in (lock, breaker):
-        with open(p, "w") as f:
-            f.write("dead@crashed-host:deadbeef")
-        os.utime(p, (1, 1))                # both left by a crashed holder
-    real_getmtime, real_unlink = os.path.getmtime, os.unlink
-    fresh_ino, stolen, breaker_stats = [], [], [0]
+    lock = str(tmp_path / "h.lock")
+    held, release = threading.Event(), threading.Event()
 
-    def getmtime(p):
-        if p == breaker:
-            breaker_stats[0] += 1
-            if breaker_stats[0] == 1:
-                t = real_getmtime(p)       # stale, then the race:
-                real_unlink(p)             # another waiter clears it ...
-                with open(p, "w"):         # ... and takes a fresh breaker
-                    pass
-                fresh_ino.append(os.stat(p).st_ino)
-                return t
-            if os.path.exists(p):          # that waiter finishes its break
-                real_unlink(p)
-                fresh_ino.clear()          # (its inode may be reused)
-        return real_getmtime(p)
+    def holder():
+        with fslib.file_lock(lock, timeout=5):
+            held.set()
+            release.wait(30)
 
-    def unlink(p):
-        if fresh_ino and os.path.exists(p) \
-                and os.stat(p).st_ino == fresh_ino[0]:
-            stolen.append(p)
-        real_unlink(p)
-
-    monkeypatch.setattr(os.path, "getmtime", getmtime)
-    monkeypatch.setattr(os, "unlink", unlink)
-    entered = []
-    with fslib.file_lock(lock, timeout=10, stale=120):
-        entered.append(1)
-    monkeypatch.undo()
-    assert entered
-    assert not stolen, "a fresh breaker was deleted by a stale cleanup"
-    assert not [f for f in os.listdir(tmp_path) if ".brk." in f]
+    t = threading.Thread(target=holder)
+    t.start()
+    try:
+        assert held.wait(10)
+        old = os.path.getmtime(lock) - 1000
+        os.utime(lock, (old, old))         # looks abandoned by its age
+        with pytest.raises(TimeoutError):
+            with fslib.file_lock(lock, timeout=1):
+                pass
+    finally:
+        release.set()
+        t.join(30)
+    assert not t.is_alive()
+    with fslib.file_lock(lock, timeout=1):
+        pass
 
 
 def test_chunk_list_uint64_extremes_roundtrip():

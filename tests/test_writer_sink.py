@@ -330,3 +330,27 @@ def test_bucket_reservation_exhaustion_fails_fast(spark, tmp_path):
             .save(out)
     # nothing was published by the refused job
     assert done_buckets(out) == set()
+
+
+@pytest.mark.parametrize("save_mode,layout", [
+    ("append", lambda: {"bucket_expr": F.lit(0), "n_buckets": 1}),
+    ("overwrite", lambda: {"mode": "salted", "n_buckets": 4}),
+], ids=["append-bucket_expr", "overwrite-salted"])
+def test_encode_table_refuses_to_resume_a_sink_store(spark, tmp_path,
+                                                      save_mode, layout):
+    """A sink's bucket ids are the partition ids of each write job, so an
+    encode_table resume into a sink store would skip the new rows whose
+    bucket ids the sink already committed, silently.  The sink records
+    ``{"layout": "sink"}`` and the resume is refused before writing."""
+    from dumpster.engine import encode_table
+
+    out = str(tmp_path / "sr")
+    spark.range(400).repartition(4).write.format("dumpster") \
+        .mode(save_mode).save(out)
+    before = done_buckets(out)
+    with pytest.raises(ValueError, match=r"sink wrote it.*fresh out_dir"):
+        encode_table(spark.range(1000, 1100), out, **layout())
+    assert done_buckets(out) == before
+    assert decode_table(spark, out).count() == 400
+    with open(os.path.join(out, "_layout.json")) as f:
+        assert f.read() == '{"layout": "sink"}'
